@@ -140,27 +140,6 @@ def _signatures_from_base(base: DataFrame, num_hashes: int) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    k: int = 3,
-) -> DataFrame:
-    """(_id, _sig array<bigint>) via explode → seeded hash → min-agg.
-
-    One evaluation of the shingle expression per row, then one seeded
-    ``xxhash64`` row per (doc, shingle) and a groupBy(_id) min per
-    seed. All shingles of a doc live in its input partition, so the
-    partial aggregate collapses them map-side — what crosses the
-    shuffle is exactly one signature row per document. (The naive
-    all-column-expression form re-evaluated the shingle pipeline once
-    per hash inside interpreted higher-order functions — ~30× slower.)
-    """
-    base = df.select(F.col(id_col).alias("_id"), shingles(text_col, k).alias("_sh"))
-    return _signatures_from_base(base, num_hashes)
-
-
 # Cross-engine MinHash: permutations are (a*h + b) mod P over a
 # 60-bit md5-prefix base hash — md5 exists in every engine, so the
 # WHOLE signature family is nameable in ANSI SQL (unlike xxhash64,

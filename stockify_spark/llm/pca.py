@@ -501,15 +501,15 @@ def compact_gram(spark, path: str) -> int:
 
     from stockify_spark.sources import txlog
 
-    # pin the fold to ONE version: folding snapshot(head) but
-    # removing _live_rel(later head) would silently drop a partial a
+    # pin the fold to ONE state: folding snapshot(head) but removing
+    # the live files of a later head would silently drop a partial a
     # concurrent gram_update landed in between — fold and remove the
     # same pinned file set instead (the commit's own conflict check
     # covers concurrent REMOVERS; concurrent appenders land beside)
-    v = txlog.current_version(path)
-    snap = txlog.snapshot(spark, path, version=v)
+    st = txlog._replay(path)
+    snap = txlog._snapshot(spark, path, st)
     if snap.count() <= 1:
-        return v
+        return st.version
     folded = (
         snap.select(
             F.posexplode(
@@ -534,8 +534,7 @@ def compact_gram(spark, path: str) -> int:
         ],
         "n long, s array<double>, g array<double>",
     )
-    rels = txlog._live_rel(path, v)
-    actions: list[dict] = [{"remove": {"path": r}} for r in rels]
+    actions: list[dict] = [{"remove": {"path": r}} for r in st.adds]
     actions.extend(txlog._write_data_files(one.coalesce(1), path))
     return txlog._commit(path, actions)
 

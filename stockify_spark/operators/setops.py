@@ -16,10 +16,6 @@ def union_all(a: DataFrame, b: DataFrame, by_name: bool = True) -> DataFrame:
     return a.unionByName(b) if by_name else a.union(b)
 
 
-def union_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.unionByName(b).distinct()
-
-
 def intersect(a: DataFrame, b: DataFrame, keep_duplicates: bool = False) -> DataFrame:
     return a.intersectAll(b) if keep_duplicates else a.intersect(b)
 

@@ -1,30 +1,38 @@
 """Minimal ACID table format: parquet data files + JSON commit log.
 
 The lakehouse primitive the engine needs at 100 TB: concurrent
-appends, copy-on-write deletes, compaction, and time travel — all
-WITHOUT rewriting or even listing the whole table. The design is the
-public Delta-/Iceberg-style log-structured scheme (add/remove file
-actions, monotonically-versioned commits, optimistic concurrency via
-atomic create-exclusive on the next version's file); implementation
-is from scratch on stdlib + Spark.
+appends, copy-on-write and merge-on-read deletes, compaction, and time
+travel — all WITHOUT rewriting or even listing the whole table. The
+design is the public Delta-/Iceberg-style log-structured scheme
+(monotonically-versioned commits of file and metadata actions,
+optimistic concurrency via atomic create-exclusive on the next
+version's file); implementation is from scratch on stdlib + Spark.
 
 Layout:
-    <table>/data/<uuid>.parquet         immutable data files
-    <table>/_txlog/<%016d>.json         one JSON commit per version
+    <table>/data/<uuid>.parquet                immutable data files
+    <table>/dv/<uuid>.parquet                  deletion-vector sidecars
+    <table>/_txlog/<%016d>.json                one JSON commit per version
+    <table>/_txlog/checkpoint.<%016d>.json     replay base (optional)
 
-A commit is ``{"version": N, "actions": [{"add": {"path": p}} |
-{"remove": {"path": p}}]}``; paths are stored RELATIVE to the table
-root (like Delta), so a table directory can be renamed or relocated
-wholesale without invalidating its log. The live file set at
-version V is adds minus removes over commits 0..V; a snapshot read
-is ``spark.read.parquet(*live_files)`` — file-level pruning for
-free, no directory listing of data/.
+A commit is ``{"version": N, "ts": ms, "actions": [...]}`` whose
+actions are, one key each: ``add`` / ``remove`` (data files, with
+per-file stats), ``add_dv`` / ``remove_dv`` (deletion-vector
+sidecars), ``constraint``, ``rename`` / ``drop_column`` (column
+mapping), ``partitioning``, ``index`` (per-file bloom filters),
+``txn`` (idempotent-append markers) and ``mtxn`` (multi-table
+transaction markers). Paths are stored RELATIVE to the table root
+(like Delta), so a table directory can be renamed or relocated
+wholesale without invalidating its log.
 
-Scale notes: the log is O(#commits) tiny JSON files read on the
-DRIVER (Delta does the same; checkpointing the log is the known
-extension once commits number in the millions). Data operations are
-full Spark jobs; per-FILE driver loops (delete's copy-on-write file
-rewrite selection) iterate over the file LIST, never rows.
+:func:`_replay` is the one definition of table state: it folds the
+log up to a version into a :class:`_TableState`, and every read and
+write of the current table goes through one replay. A checkpoint is
+that state written back as actions (:func:`_emit`), so replay cost is
+O(commits since the newest checkpoint). A snapshot read is
+``spark.read.parquet(*live_files)`` — file-level pruning for free, no
+directory listing of data/. Faces that need per-commit history
+(history, changes, vacuum, log retention, the stream sources) read the
+commit files themselves.
 """
 
 from __future__ import annotations
@@ -33,6 +41,7 @@ import json
 import os
 import time
 import uuid
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -112,91 +121,154 @@ def _read_log(path: str, version: int | None = None) -> list[dict]:
     return commits
 
 
+@dataclass
+class _TableState:
+    """The table as of one version — everything a reader or writer
+    needs, folded from the log by :func:`_replay`.
+
+    - ``adds``: live data files, log-form path -> add entry, in log
+      order.
+    - ``dvs``: live deletion-vector sidecars, path -> add_dv entry
+      (``add_dv`` registers, ``remove_dv`` — committed by
+      :func:`restore` — retires). Staleness (targets since rewritten)
+      is filtered at READ time against ``adds``.
+    - ``constraints``: CHECK constraints, in registration order.
+    - ``schema``: the ordered ``rename`` / ``drop_column`` actions.
+    - ``partitioning``: the partition spec, or None.
+    - ``blooms``: (live file, column) -> latest bloom index entry.
+    - ``txns``: app id -> highest idempotent-append version.
+    - ``mtxns``: multi-table transaction ids applied to this table.
+    """
+
+    version: int = -1
+    adds: dict = field(default_factory=dict)
+    dvs: dict = field(default_factory=dict)
+    constraints: list = field(default_factory=list)
+    schema: list = field(default_factory=list)
+    partitioning: dict | None = None
+    blooms: dict = field(default_factory=dict)
+    txns: dict = field(default_factory=dict)
+    mtxns: set = field(default_factory=set)
+
+    def files(self, path: str) -> list[str]:
+        """Absolute paths of the live data files."""
+        return [_abs(path, p) for p in self.adds]
+
+    def fold_schema(self) -> tuple[dict, set]:
+        """Fold the ordered rename/drop stream into (logical ->
+        physical mapping, tombstoned physical names). A dropped
+        column's physical name is TOMBSTONED: its bytes stay in old
+        files (time travel still sees them pre-drop) but current
+        reads exclude it and re-adding a column with that physical
+        name is rejected — without unique column ids, re-adding would
+        resurrect the old values on old files (Delta solves this with
+        field ids; the tombstone is the honest no-ids equivalent).
+        Identity columns are omitted from the mapping."""
+        m: dict[str, str] = {}
+        dropped: set = set()
+        for a in self.schema:
+            if "rename" in a:
+                r = a["rename"]
+                m[r["to"]] = m.pop(r["from"], r["from"])
+            else:
+                d = a["drop_column"]
+                m.pop(d["logical"], None)
+                dropped.add(d["physical"])
+        return {k: v for k, v in m.items() if k != v}, dropped
+
+
+def _replay(path: str, version: int | None = None) -> _TableState:
+    """Fold the log up to ``version`` (default: head) into one
+    :class:`_TableState` — the single definition of table state. One
+    :func:`_read_log` walk; a table that does not exist yet replays to
+    the empty state at version -1.
+
+    Every action kind is state, not only the file actions, because a
+    checkpoint and a clone are this state written back
+    (:func:`_emit`) and a kind the fold dropped would be lost there:
+
+    - DVs: losing add_dv would silently UNDELETE every MOR-deleted
+      row; the LIVE set (add_dv minus remove_dv) is carried, so a
+      restore-retired sidecar does not resurrect either.
+    - constraints: losing them would let later writes skip
+      enforcement registered before the collapse.
+    - renames/drops: losing them would revert every logical name to
+      its physical one (and resurrect dropped columns). The fold is
+      order-sensitive across both kinds, so the list keeps log order.
+    - partitioning: a reader must still know to reconstitute the
+      partition columns from partitionValues.
+    - bloom indexes: losing them degrades snapshot_point from
+      skip-by-filter to open-every-file (results stay correct).
+      Latest entry per (file, column) wins; an index on a removed
+      file is dead metadata and is dropped.
+    - txn markers: losing them would let a replayed streaming batch
+      (append_idempotent) re-apply and duplicate rows. The latest
+      version per app suffices — replays are monotone.
+    - mtxn markers: recover_multi probes the log for them, and losing
+      one would let recovery RE-APPLY a completed transaction.
+    """
+    st = _TableState()
+    for c in _read_log(path, version):
+        st.version = c["version"]
+        for a in c["actions"]:
+            if "add" in a:
+                st.adds[a["add"]["path"]] = a["add"]
+            elif "remove" in a:
+                st.adds.pop(a["remove"]["path"], None)
+            elif "add_dv" in a:
+                st.dvs[a["add_dv"]["path"]] = a["add_dv"]
+            elif "remove_dv" in a:
+                st.dvs.pop(a["remove_dv"]["path"], None)
+            elif "constraint" in a:
+                st.constraints.append(a["constraint"])
+            elif "rename" in a or "drop_column" in a:
+                st.schema.append(a)
+            elif "partitioning" in a:
+                st.partitioning = a["partitioning"]
+            elif "index" in a:
+                st.blooms[(a["index"]["path"], a["index"]["column"])] = a["index"]
+            elif "txn" in a:
+                t = a["txn"]
+                st.txns[t["app"]] = max(st.txns.get(t["app"], t["version"]), t["version"])
+            elif "mtxn" in a:
+                st.mtxns.add(a["mtxn"])
+    st.blooms = {k: v for k, v in st.blooms.items() if k[0] in st.adds}
+    return st
+
+
+def _emit(st: _TableState, rebase=lambda p: p) -> list[dict]:
+    """The inverse of :func:`_replay`: actions that replay to ``st``
+    (version aside). ``rebase`` maps every file path — data files,
+    DV sidecars and the files bloom indexes key on — into the target
+    table's log form (identity for a checkpoint; a shallow clone
+    passes ``../``-relative references to the source's files)."""
+    def moved(entry: dict) -> dict:
+        return {**entry, "path": rebase(entry["path"])}
+
+    return (
+        ([{"partitioning": st.partitioning}] if st.partitioning else [])
+        + [{"constraint": c} for c in st.constraints]
+        + [{"add_dv": moved(d)} for d in st.dvs.values()]
+        + list(st.schema)
+        + [{"index": moved(i)} for _, i in sorted(st.blooms.items())]
+        + [{"txn": {"app": a, "version": v}} for a, v in sorted(st.txns.items())]
+        + [{"mtxn": m} for m in sorted(st.mtxns)]
+        + [{"add": moved(a)} for a in st.adds.values()]
+    )
+
+
 def checkpoint_log(path: str) -> int:
-    """Write a log checkpoint at the current version: the full
-    live-adds set (with stats) in one file. Subsequent reads replay
+    """Write a log checkpoint at the current version: the replayed
+    table state (:func:`_emit`) in one file. Subsequent reads replay
     from here; all commit files are left in place so time travel to
     pre-checkpoint versions still works (those reads ignore the
     checkpoint because it is above their version). Trimming the
     pre-checkpoint prefix is a separate, explicit act —
     :func:`expire_log` — so checkpointing alone never shrinks the
     time-travel window."""
-    commits = _read_log(path)
-    version = commits[-1]["version"]
-    adds = _live_adds(path)
-    # non-file metadata (CHECK constraints) must survive the collapse:
-    # a reader replaying from this checkpoint would otherwise lose
-    # enforcement registered before it
-    cons = [
-        {"constraint": c}
-        for commit in commits
-        for a in commit["actions"]
-        if "constraint" in a
-        for c in [a["constraint"]]
-    ]
-    # deletion vectors are metadata too: dropping add_dv actions at
-    # the collapse would silently UNDELETE every MOR-deleted row for
-    # readers replaying from the checkpoint. The LIVE set (add_dv
-    # minus remove_dv) is carried, so a restore-retired sidecar does
-    # not resurrect through the collapse either.
-    dvs = [{"add_dv": a} for a in _live_dv_adds(path)]
-    # column renames/drops are metadata too: dropping them at the
-    # collapse would silently revert every logical name to its
-    # physical one (and resurrect dropped columns) for readers
-    # replaying from the checkpoint. Order is preserved — the fold
-    # is order-sensitive across both action kinds.
-    rens = list(_renames(path))
-    # bloom indexes are metadata too: dropping ``index`` actions at
-    # the collapse silently degrades snapshot_point from skip-by-
-    # filter to open-every-file (results stay correct, skipping is
-    # lost). Latest entry per (file, column) wins, mirroring
-    # _bloom_indexes' replay rule.
-    blooms: dict[tuple, dict] = {}
-    for commit in commits:
-        for a in commit["actions"]:
-            if "index" in a:
-                idx = a["index"]
-                blooms[(idx["path"], idx["column"])] = idx
-    live_paths = {a["path"] for a in adds}
-    idxs = [
-        {"index": idx}
-        for (p, _), idx in sorted(blooms.items())
-        if p in live_paths  # an index on a removed file is dead metadata
-    ]
-    # idempotency markers are metadata too: dropping txn actions at
-    # the collapse would let a replayed streaming batch (append_
-    # idempotent) re-apply and duplicate rows. Latest version per app
-    # suffices — replays are monotone.
-    txns: dict[str, int] = {}
-    for commit in commits:
-        for a in commit["actions"]:
-            t = a.get("txn")
-            if t:
-                txns[t["app"]] = max(txns.get(t["app"], t["version"]), t["version"])
-    txn_actions = [
-        {"txn": {"app": app, "version": v}} for app, v in sorted(txns.items())
-    ]
-    # multi-table manifest markers are idempotency metadata too:
-    # recover_multi probes the log for them, and a collapse that
-    # dropped one would let recovery RE-APPLY a completed transaction
-    mtxns = sorted(
-        {a["mtxn"] for commit in commits for a in commit["actions"] if "mtxn" in a}
-    )
-    txn_actions += [{"mtxn": m} for m in mtxns]
-    # the partition spec is metadata too: a reader replaying from the
-    # checkpoint must still know to reconstitute partition columns
-    partmeta = _partitioning(path)
-    part_actions = [{"partitioning": partmeta}] if partmeta else []
-    ck = {
-        "version": version,
-        "actions": part_actions
-        + cons
-        + dvs
-        + rens
-        + idxs
-        + txn_actions
-        + [{"add": a} for a in adds],
-    }
+    st = _replay(path)
+    if st.version < 0:
+        raise FileNotFoundError(f"no txlog table at {path}")
     # tmp name must NOT match the reader's checkpoint pattern: a
     # concurrent _latest_checkpoint listing the log dir mid-write
     # would otherwise json.load a half-written file (the same
@@ -205,9 +277,9 @@ def checkpoint_log(path: str) -> int:
         _log_dir(path), f"_ckpt_tmp_{uuid.uuid4().hex}"
     )
     with open(tmp, "w") as f:
-        json.dump(ck, f)
-    os.rename(tmp, _checkpoint_path(path, version))
-    return version
+        json.dump({"version": st.version, "actions": _emit(st)}, f)
+    os.rename(tmp, _checkpoint_path(path, st.version))
+    return st.version
 
 
 def current_version(path: str) -> int:
@@ -425,51 +497,51 @@ def maintain(spark: SparkSession, path: str, policy: dict) -> list[dict]:
             }
         )
 
+    # checkpoint and small-file decisions read one state: a checkpoint
+    # does not change it
+    st = _replay(path)
     if "checkpoint_commits" in policy:
+        if st.version < 0:
+            raise FileNotFoundError(f"no txlog table at {path}")
         n = int(policy["checkpoint_commits"])
-        head = current_version(path)
         ck = _latest_checkpoint(path)
-        since = head - ck["version"] if ck is not None else head + 1
+        since = st.version - ck["version"] if ck is not None else st.version + 1
         trig = since > n
         record("checkpoint", since, n, trig, checkpoint_log(path) if trig else -1)
 
     if "small_file_bytes" in policy:
         b = int(policy["small_file_bytes"])
         f_thr = float(policy.get("small_file_fraction", 0.5))
-        rels = _live_rel(path)
-        small = [r for r in rels if os.path.getsize(_abs(path, r)) < b]
-        frac = len(small) / len(rels) if rels else 0.0
+        small = [r for r in st.adds if os.path.getsize(_abs(path, r)) < b]
+        frac = len(small) / len(st.adds) if st.adds else 0.0
         tp = int(policy.get("compact_target_partitions", 1))
         clustered = "compact_sort_by" in policy or "compact_zorder_by" in policy
-        trig = frac > f_thr and len(small) >= 2 and not _has_active_dvs(path)
+        trig = frac > f_thr and len(small) >= 2 and not _has_active_dvs(path, st)
         if clustered:
             # convergence gate for the full rewrite: once the table is
             # at (or under) the target layout width, re-clustering the
             # same file set is a no-gain rewrite — the policy must be
             # a fixpoint at any scale, incl. toy tables whose
             # compacted files never outgrow small_file_bytes
-            trig = trig and len(rels) > tp
-        part = _partitioning(path)
-        if part is not None and "compact_zorder_by" in policy:
+            trig = trig and len(st.adds) > tp
+        if st.partitioning is not None and "compact_zorder_by" in policy:
             raise NotImplementedError(
                 "z-ordered compaction on partitioned tables is not supported"
             )
-        if part is not None:
+        groups = _group_adds_by_partition(st.adds.values())
+        if st.partitioning is not None:
             # a partitioned table converges when no PARTITION is wider
             # than the target — the table-wide width gate would loop
-            trig = trig and any(
-                len(v) > tp
-                for v in _group_adds_by_partition(_live_adds(path)).values()
-            )
+            trig = trig and any(len(v) > tp for v in groups.values())
         res = -1
         if trig:
-            if part is not None:
+            if st.partitioning is not None:
                 # partitioned tables compact PER PARTITION (the unit
                 # compact_partition defines); only fragmented
                 # partitions are rewritten, so the cost tracks the
                 # fragmentation exactly as in the flat case
                 for key, adds in sorted(
-                    _group_adds_by_partition(_live_adds(path)).items(),
+                    groups.items(),
                     key=lambda kv: [(c, v is None, v or "") for c, v in kv[0]],
                 ):
                     if len(adds) > tp:
@@ -562,21 +634,8 @@ def _abs(path: str, p: str) -> str:
     return p if os.path.isabs(p) else os.path.normpath(os.path.join(path, p))
 
 
-def _live_rel(path: str, version: int | None = None) -> list[str]:
-    """Live file set as CANONICAL (log-form, table-relative) paths —
-    the form remove actions must use to match their adds."""
-    files: list[str] = []
-    for c in _read_log(path, version):
-        for a in c["actions"]:
-            if "add" in a:
-                files.append(a["add"]["path"])
-            elif "remove" in a:
-                files.remove(a["remove"]["path"])
-    return files
-
-
 def live_files(path: str, version: int | None = None) -> list[str]:
-    return [_abs(path, p) for p in _live_rel(path, version)]
+    return _replay(path, version).files(path)
 
 
 def _file_stats(fpath: str) -> dict:
@@ -707,21 +766,16 @@ class CommitConflict(RuntimeError):
 def _commit(path: str, actions: list[dict]) -> int:
     removes = [a["remove"]["path"] for a in actions if "remove" in a]
     while True:
-        commits = _read_log(path)
-        version = commits[-1]["version"] + 1 if commits else 0
+        # replay afresh on every attempt: a lost race means the state
+        # the caller derived its actions from is no longer the head
+        st = _replay(path)
+        version = st.version + 1
         if removes:
             # Re-validate against the log we just read: after losing a
             # race, blindly retrying remove actions for files another
             # writer already removed (concurrent compaction/delete)
             # would double-remove and permanently corrupt the live set.
-            live: set[str] = set()
-            for c in commits:
-                for a in c["actions"]:
-                    if "add" in a:
-                        live.add(a["add"]["path"])
-                    elif "remove" in a:
-                        live.discard(a["remove"]["path"])
-            gone = [p for p in removes if p not in live]
+            gone = [p for p in removes if p not in st.adds]
             if gone:
                 raise CommitConflict(
                     f"concurrent commit removed {len(gone)} file(s) this "
@@ -739,24 +793,30 @@ def create(df: DataFrame, path: str) -> int:
 
 
 def append(df: DataFrame, path: str) -> int:
-    # constraints validate on the LOGICAL batch (renaming a
-    # constrained column is rejected, so constraint names are always
-    # identity-mapped); files are written with PHYSICAL names so
-    # every file of the table shares one footer naming scheme
-    _validate_constraints(df, path)
-    _reject_tombstoned(df, path)
-    part = _partitioning(path)
-    if part is not None:
-        missing = [c for c in part["cols"] if c not in df.columns]
-        if missing:
-            raise ValueError(f"append missing partition columns: {missing}")
-        return _commit(
-            path,
-            _write_data_files_partitioned(
-                _to_physical(df, _mapping(path)), path, part["cols"]
-            ),
-        )
-    return _commit(path, _write_data_files(_to_physical(df, _mapping(path)), path))
+    return _commit(path, _stage_append(df, path, _replay(path), "append"))
+
+
+def _stage_append(df: DataFrame, path: str, st: _TableState, op: str) -> list[dict]:
+    """Validate an append batch against the table state and write its
+    data files; returns their add actions. Constraints validate on
+    the LOGICAL batch (renaming a constrained column is rejected, so
+    constraint names are always identity-mapped); files are written
+    with PHYSICAL names so every file of the table shares one footer
+    naming scheme. Partitioned tables route through the partitioned
+    writer on every append face (append, append_idempotent,
+    commit_multi): a streaming sink or a multi-table member that
+    committed partition-LESS adds would be silently missed by every
+    pruned read."""
+    _validate_constraints(df, st)
+    _reject_tombstoned(df, st)
+    phys = _to_physical(df, st.fold_schema()[0])
+    part = st.partitioning
+    if part is None:
+        return _write_data_files(phys, path)
+    missing = [c for c in part["cols"] if c not in df.columns]
+    if missing:
+        raise ValueError(f"{op} missing partition columns for {path}: {missing}")
+    return _write_data_files_partitioned(phys, path, part["cols"])
 
 
 class ConstraintViolation(RuntimeError):
@@ -773,20 +833,11 @@ def set_constraint(path: str, name: str, predicate_sql: str) -> int:
     return _commit(path, [{"constraint": {"name": name, "predicate": predicate_sql}}])
 
 
-def _constraints(path: str, version: int | None = None) -> list[dict]:
-    out = []
-    for c in _read_log(path, version):
-        for a in c["actions"]:
-            if "constraint" in a:
-                out.append(a["constraint"])
-    return out
-
-
-def _validate_constraints(df: DataFrame, path: str) -> None:
+def _validate_constraints(df: DataFrame, st: _TableState) -> None:
     """Raise ConstraintViolation if df has any row violating a
     registered constraint. One aggregate job over the WRITE batch
     (never the table) per write — the standard enforcement cost."""
-    cons = _constraints(path)
+    cons = st.constraints
     if not cons:
         return
     checks = [
@@ -811,29 +862,15 @@ _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 def _partition_marker(path: str) -> str:
     """Fast-path marker written by create_partitioned next to the
     commits. The LOG action remains the source of truth (it must
-    survive checkpoint collapse and version replay); the marker is a
-    pure denormalization so the guard on every raw-read face — and
-    the presence probe every snapshot of an UNPARTITIONED table pays
-    — is one os.path.exists, not an O(commits) log walk. (The first
-    guard draft walked the log; the bench caught it immediately: the
-    ingest sinks call guarded faces per batch, and the near-dup sink
-    doubled its wall-clock on log re-reads alone.)"""
+    survive checkpoint collapse and version replay, and
+    ``_TableState.partitioning`` reads it); the marker is a pure
+    denormalization so the guard on every raw-read face that does
+    not replay the log is one os.path.exists, not an O(commits) log
+    walk. (The first guard draft walked the log; the bench caught it
+    immediately: the ingest sinks call guarded faces per batch, and
+    the near-dup sink doubled its wall-clock on log re-reads
+    alone.)"""
     return os.path.join(_log_dir(path), "_partitioning.json")
-
-
-def _partitioning(path: str, version: int | None = None) -> dict | None:
-    """The table's partition spec ({"cols": [...], "types": {...}}),
-    or None for an unpartitioned table. Recorded once at create; the
-    last action wins (there is no ALTER face, but replay order is the
-    contract everywhere else in this log)."""
-    if not os.path.exists(_partition_marker(path)):
-        return None  # the common (unpartitioned) case: zero log IO
-    part = None
-    for c in _read_log(path, version):
-        for a in c["actions"]:
-            if "partitioning" in a:
-                part = a["partitioning"]
-    return part
 
 
 def _require_not_partitioned(path: str, op: str) -> None:
@@ -846,7 +883,7 @@ def _require_not_partitioned(path: str, op: str) -> None:
         raise NotImplementedError(f"{op} does not support partitioned tables yet")
 
 
-def _group_adds_by_partition(adds: list[dict]) -> dict[tuple, list[dict]]:
+def _group_adds_by_partition(adds) -> dict[tuple, list[dict]]:
     """Live add actions keyed by their partitionValues tuple — the
     grouping both the partitioned read path and per-partition
     maintenance share."""
@@ -921,23 +958,20 @@ def create_partitioned(df: DataFrame, path: str, partition_by: list[str]) -> int
     return _commit(path, actions)
 
 
-def _read_partitioned(
-    spark: SparkSession, path: str, adds: list[dict], part: dict
-) -> DataFrame:
+def _read_partitioned(spark: SparkSession, path: str, adds, part: dict) -> DataFrame:
     """Union-by-name read of add actions grouped by partitionValues,
     with the partition columns re-attached as typed literals — the
     Delta read path for partitioned tables. Group count = partition
     count; each group is ONE multi-file parquet scan, so the plan
     stays a union of scans, not a per-file loop."""
-    groups: dict[tuple, list[str]] = {}
-    for a in adds:
-        key = tuple(sorted(a.get("partitionValues", {}).items()))
-        groups.setdefault(key, []).append(_abs(path, a["path"]))
     pieces = []
     # nulls (hive default partition) sort last within each column
     order = lambda key: [(c, v is None, v or "") for c, v in key]  # noqa: E731
-    for key, files in sorted(groups.items(), key=lambda kv: order(kv[0])):
-        df = spark.read.option("mergeSchema", "true").parquet(*files)
+    groups = _group_adds_by_partition(adds)
+    for key, group in sorted(groups.items(), key=lambda kv: order(kv[0])):
+        df = spark.read.option("mergeSchema", "true").parquet(
+            *[_abs(path, a["path"]) for a in group]
+        )
         for col, val in key:
             typ = part.get("types", {}).get(col, "string")
             df = df.withColumn(col, F.lit(val).cast(typ))
@@ -948,9 +982,7 @@ def _read_partitioned(
     return out
 
 
-def _normalize_partition_equals(
-    path: str, equals: dict, version: int | None = None
-) -> dict:
+def _partition_adds(path: str, st: _TableState, equals: dict) -> tuple[dict, list[dict]]:
     """Caller-supplied partition predicate -> the exact strings
     Spark's hive writer recorded in partitionValues. ``str(v)`` alone
     is wrong for booleans (directories say "true"/"false" while
@@ -960,8 +992,10 @@ def _normalize_partition_equals(
     partition. Booleans are normalized through the recorded type;
     the float/temporal types must be passed as the stored directory
     string (take one from :func:`partition_files`) — anything else
-    raises loudly instead of matching nothing."""
-    part = _partitioning(path, version)
+    raises loudly instead of matching nothing.
+
+    Returns the normalized key and the live adds in that partition."""
+    part = st.partitioning
     if part is None:
         raise ValueError(f"table at {path} is not partitioned")
     unknown = [k for k in equals if k not in part["cols"]]
@@ -999,7 +1033,12 @@ def _normalize_partition_equals(
             want[k] = v
         else:
             want[k] = str(v)
-    return want
+    adds = [
+        a
+        for a in st.adds.values()
+        if all(a.get("partitionValues", {}).get(k) == v for k, v in want.items())
+    ]
+    return want, adds
 
 
 def snapshot_partition_pruned(
@@ -1015,19 +1054,12 @@ def snapshot_partition_pruned(
     like its matching slice. Complement to snapshot_pruned's
     stats-based skipping (which still opens nothing but must keep
     stats-less files; partition pruning is exact by construction)."""
-    part = _partitioning(path, version)
-    if part is None:
-        raise ValueError(f"table at {path} is not partitioned")
-    want = _normalize_partition_equals(path, equals, version)
-    adds = [
-        a
-        for a in _live_adds(path, version)
-        if all(a.get("partitionValues", {}).get(k) == v for k, v in want.items())
-    ]
+    st = _replay(path, version)
+    _, adds = _partition_adds(path, st, equals)
     if not adds:
-        return snapshot(spark, path, version).filter(F.lit(False))
-    m, dropped = _fold_schema(path, version)
-    return _to_logical(_read_partitioned(spark, path, adds, part), m, dropped)
+        return _snapshot(spark, path, st).filter(F.lit(False))
+    m, dropped = st.fold_schema()
+    return _to_logical(_read_partitioned(spark, path, adds, st.partitioning), m, dropped)
 
 
 def compact_partition(
@@ -1049,21 +1081,17 @@ def compact_partition(
     ``equals`` must name every partition column: a partial key would
     merge files whose remaining partition values differ, and the
     rewrite could no longer carry well-defined partitionValues."""
-    part = _partitioning(path)
+    st = _replay(path)
+    part = st.partitioning
     if part is None:
         raise ValueError(f"table at {path} is not partitioned")
     if set(equals) != set(part["cols"]):
         raise ValueError(
             f"compact_partition needs the FULL partition key {part['cols']}"
         )
-    want = _normalize_partition_equals(path, equals)
-    adds = [
-        a
-        for a in _live_adds(path)
-        if all(a.get("partitionValues", {}).get(k) == v for k, v in want.items())
-    ]
+    want, adds = _partition_adds(path, st, equals)
     if len(adds) <= target_partitions:
-        return current_version(path)
+        return st.version
     df = spark.read.option("mergeSchema", "true").parquet(
         *[_abs(path, a["path"]) for a in adds]
     )
@@ -1092,12 +1120,7 @@ def compact_partition(
 def partition_files(path: str, equals: dict, version: int | None = None) -> list[str]:
     """The file list a partition-pruned read would open — the
     observability hook tests and benchmarks assert IO bounds on."""
-    want = _normalize_partition_equals(path, equals, version)
-    return [
-        a["path"]
-        for a in _live_adds(path, version)
-        if all(a.get("partitionValues", {}).get(k) == v for k, v in want.items())
-    ]
+    return [a["path"] for a in _partition_adds(path, _replay(path, version), equals)[1]]
 
 
 def history(
@@ -1199,7 +1222,8 @@ def table_stats(path: str, version: int | None = None) -> dict:
     read driver-side); min/max stay footer-derived and become
     conservative BOUNDS, since a MOR-deleted row may have held the
     true extremum (Delta's stats carry the same caveat under DVs)."""
-    adds = _live_adds(path, version)
+    st = _replay(path, version)
+    adds = list(st.adds.values())
     rows = sum(a["stats"]["rows"] for a in adds)
     # merge-on-read deletes: the per-file footer counts still include
     # MOR-deleted rows, so subtract the ACTIVE deletion-vector
@@ -1208,7 +1232,7 @@ def table_stats(path: str, version: int | None = None) -> dict:
     # path's anti-join removes. Sidecars are small (proportional to
     # deleted rows) and read driver-side with pyarrow; the common
     # no-DV case stays a pure log read.
-    dv_rels = _live_dvs(path, version)
+    dv_rels = list(st.dvs)
     if dv_rels:
         # distinct-(file,pos) count WITHOUT a Python set of tuples —
         # a set costs ~150 B/pair, so a large MOR backlog could
@@ -1266,7 +1290,7 @@ def table_stats(path: str, version: int | None = None) -> dict:
             mx = a["stats"]["max"][name]
             mins[name] = mn if name not in mins else min(mins[name], mn)
             maxs[name] = mx if name not in maxs else max(maxs[name], mx)
-    m, dropped = _fold_schema(path, version)
+    m, dropped = st.fold_schema()
     rev = {p: lg for lg, p in m.items()}
     return {
         "rows": rows,
@@ -1287,63 +1311,21 @@ def clone(src: str, dst: str, version: int | None = None) -> int:
     data dir, and the source never observes them. ``vacuum`` on
     either table cannot touch the other's files: the clone's vacuum
     skips foreign (root-escaping) references by rule, and the
-    source's vacuum only consults its own log."""
+    source's vacuum only consults its own log.
+
+    The clone's commit 0 is the source's replayed state written back
+    (:func:`_emit`), so it carries every kind of table metadata a
+    checkpoint does. DV sidecar paths are rebased like data paths
+    (read-only foreign references — the clone's vacuum never deletes
+    root-escaping paths, and materialize_dvs on the clone writes new
+    files into the CLONE's data dir, leaving the source untouched);
+    bloom indexes key on the add's logged path, so they are rebased
+    to match."""
     _require_not_partitioned(src, "clone")
-    adds = _live_adds(src, version)  # inner add dicts (path + stats)
-
-    def _rebase(p: str) -> str:
-        return os.path.relpath(_abs(src, p), dst)
-
-    actions = [{"add": {**a, "path": _rebase(a["path"])}} for a in adds]
-    # non-file metadata must survive the clone, exactly as it must
-    # survive a checkpoint collapse: dropping active add_dv actions
-    # would silently RESURRECT every MOR-deleted row in the clone
-    # (its reads would never anti-join the DVs), and dropping
-    # constraints would let writes to the clone skip enforcement.
-    # DV sidecar paths are rebased like data paths (read-only foreign
-    # references — the clone's vacuum never deletes root-escaping
-    # paths, and materialize_dvs on the clone writes new files into
-    # the CLONE's data dir, leaving the source untouched).
-    actions += [
-        {"add_dv": {**d, "path": _rebase(d["path"])}}
-        for d in _live_dv_adds(src, version)
-    ]
-    actions += [{"constraint": c} for c in _constraints(src, version)]
-    # idempotency markers survive the clone too (same rule as
-    # checkpoint_log): an exactly-once ingest resumed against a clone
-    # that dropped them would see last_txn_version()=None and
-    # re-apply every committed batch, duplicating rows (r9 advisor
-    # finding). Latest version per app suffices — replays are
-    # monotone.
-    txns: dict[str, int] = {}
-    for c in _read_log(src, version):
-        for a in c["actions"]:
-            t = a.get("txn")
-            if t:
-                txns[t["app"]] = max(txns.get(t["app"], t["version"]), t["version"])
-    actions += [
-        {"txn": {"app": app, "version": v}} for app, v in sorted(txns.items())
-    ]
-    # column renames/drops carry over IN ORDER (the fold is
-    # order-sensitive); physical file names are shared with the
-    # source, so the clone must translate identically
-    actions += list(_renames(src, version))
-    # bloom indexes key on the add's logged path — rebase to match
-    clone_paths = {a["add"]["path"] for a in actions if "add" in a}
-    seen_idx: dict[tuple, dict] = {}
-    for c in _read_log(src, version):
-        for a in c["actions"]:
-            if "index" in a:
-                idx = {**a["index"], "path": _rebase(a["index"]["path"])}
-                seen_idx[(idx["path"], idx["column"])] = idx
-    actions += [
-        {"index": idx}
-        for (p, _), idx in sorted(seen_idx.items())
-        if p in clone_paths
-    ]
+    st = _replay(src, version)
     os.makedirs(_log_dir(dst), exist_ok=True)
     os.makedirs(_data_dir(dst), exist_ok=True)
-    return _commit(dst, actions)
+    return _commit(dst, _emit(st, lambda p: os.path.relpath(_abs(src, p), dst)))
 
 
 # ---------------------------------------------------------------------------
@@ -1362,50 +1344,6 @@ def clone(src: str, dst: str, version: int | None = None) -> int:
 # Mirroring Delta, renaming a column referenced by an active CHECK
 # constraint is REJECTED (constraints therefore always bind to stable
 # names and need no translation).
-
-
-def _renames(path: str, version: int | None = None) -> list[dict]:
-    """Schema-evolution actions (rename + drop_column) in log order —
-    order matters: the fold below is order-sensitive across BOTH
-    action kinds (checkpoint-aware via _read_log; checkpoints carry
-    the combined ordered list)."""
-    out = []
-    for c in _read_log(path, version):
-        for a in c["actions"]:
-            if "rename" in a:
-                out.append({"rename": a["rename"]})
-            elif "drop_column" in a:
-                out.append({"drop_column": a["drop_column"]})
-    return out
-
-
-def _fold_schema(path: str, version: int | None = None) -> tuple[dict, set]:
-    """Fold the ordered rename/drop stream into (logical -> physical
-    mapping, tombstoned physical names). A dropped column's physical
-    name is TOMBSTONED: its bytes stay in old files (time travel
-    still sees them pre-drop) but current reads exclude it and
-    re-adding a column with that physical name is rejected — without
-    unique column ids, re-adding would resurrect the old values on
-    old files (Delta solves this with field ids; the tombstone is
-    the honest no-ids equivalent)."""
-    m: dict[str, str] = {}
-    dropped: set = set()
-    for a in _renames(path, version):
-        if "rename" in a:
-            r = a["rename"]
-            physical = m.pop(r["from"], r["from"])
-            m[r["to"]] = physical
-        else:
-            d = a["drop_column"]
-            m.pop(d["logical"], None)
-            dropped.add(d["physical"])
-    return {k: v for k, v in m.items() if k != v}, dropped
-
-
-def _mapping(path: str, version: int | None = None) -> dict:
-    """logical name -> physical name for every column whose names
-    differ (identity columns are omitted)."""
-    return _fold_schema(path, version)[0]
 
 
 def _to_logical(df: DataFrame, m: dict, dropped: set | frozenset = frozenset()) -> DataFrame:
@@ -1429,42 +1367,53 @@ def _to_physical(df: DataFrame, m: dict) -> DataFrame:
     return df.select(*[F.col(c).alias(m.get(c, c)) for c in df.columns])
 
 
+def _schema_change(path: str, name: str, verb: str, refuse) -> _TableState:
+    """Shared checks of :func:`rename_column` and :func:`drop_column`,
+    in this order: the table has files, ``name`` is a current logical
+    column, ``refuse(logical columns)`` returns no error message, and
+    no CHECK constraint references ``name`` (Delta's rule —
+    constraints bind by name and a silent retarget would change what
+    they enforce). Returns the state the checks read. Drops are
+    folded too: a tombstoned physical must neither be renameable (its
+    logical name no longer exists) nor block a rename TO its name
+    (logical names are free once the column is dropped — the physical
+    tombstone still protects the file layer via _reject_tombstoned)."""
+    import re
+
+    import pyarrow.parquet as pq
+
+    st = _replay(path)
+    if not st.adds:
+        raise FileNotFoundError(f"empty txlog table at {path}")
+    m, dropped = st.fold_schema()
+    physical_cols: set = set()
+    for f in st.files(path):
+        physical_cols.update(pq.read_schema(f).names)
+    rev = {p: lg for lg, p in m.items()}
+    logical_cols = {rev.get(p, p) for p in physical_cols if p not in dropped}
+    if name not in logical_cols:
+        raise ValueError(f"column {name!r} does not exist (have {sorted(logical_cols)})")
+    if err := refuse(logical_cols):
+        raise ValueError(err)
+    for c in st.constraints:
+        if re.search(rf"\b{re.escape(name)}\b", c["predicate"]):
+            raise ValueError(
+                f"cannot {verb} {name!r}: CHECK constraint {c['name']!r} "
+                f"references it ({c['predicate']!r}); drop or rewrite the "
+                "constraint first"
+            )
+    return st
+
+
 def rename_column(path: str, old: str, new: str) -> int:
     """Rename a column WITHOUT rewriting any data file: commits one
     ``rename`` action; all reads from this version translate the
     file-level (physical) name to ``new`` and writes translate back.
     Raises if ``old`` doesn't exist, ``new`` collides with a current
-    logical name, or an active CHECK constraint references ``old``
-    (Delta's rule — constraints bind by name and a silent retarget
-    would change what they enforce)."""
-    import pyarrow.parquet as pq
-    import re
-
-    files = live_files(path)
-    if not files:
-        raise FileNotFoundError(f"empty txlog table at {path}")
-    # fold drops too (like drop_column): a tombstoned physical must
-    # neither be renameable (its logical name no longer exists) nor
-    # block a rename TO its name (logical names are free once the
-    # column is dropped — the physical tombstone still protects the
-    # file layer via _reject_tombstoned)
-    m, dropped = _fold_schema(path)
-    physical_cols: set = set()
-    for f in files:
-        physical_cols.update(pq.read_schema(f).names)
-    rev = {p: lg for lg, p in m.items()}
-    logical_cols = {rev.get(p, p) for p in physical_cols if p not in dropped}
-    if old not in logical_cols:
-        raise ValueError(f"column {old!r} does not exist (have {sorted(logical_cols)})")
-    if new in logical_cols:
-        raise ValueError(f"column {new!r} already exists")
-    for c in _constraints(path):
-        if re.search(rf"\b{re.escape(old)}\b", c["predicate"]):
-            raise ValueError(
-                f"cannot rename {old!r}: CHECK constraint {c['name']!r} "
-                f"references it ({c['predicate']!r}); drop or rewrite the "
-                "constraint first"
-            )
+    logical name, or an active CHECK constraint references ``old``."""
+    _schema_change(
+        path, old, "rename", lambda cols: new in cols and f"column {new!r} already exists"
+    )
     return _commit(path, [{"rename": {"from": old, "to": new}}])
 
 
@@ -1476,36 +1425,16 @@ def drop_column(path: str, name: str) -> int:
     time (no field ids — re-adding would resurrect the old bytes on
     old files). Dropping a CHECK-constrained column is rejected,
     mirroring :func:`rename_column`."""
-    import re
-
-    import pyarrow.parquet as pq
-
-    files = live_files(path)
-    if not files:
-        raise FileNotFoundError(f"empty txlog table at {path}")
-    m, dropped = _fold_schema(path)
-    physical_cols: set = set()
-    for f in files:
-        physical_cols.update(pq.read_schema(f).names)
-    rev = {p: lg for lg, p in m.items()}
-    logical_cols = {rev.get(p, p) for p in physical_cols if p not in dropped}
-    if name not in logical_cols:
-        raise ValueError(f"column {name!r} does not exist (have {sorted(logical_cols)})")
-    if len(logical_cols) == 1:
-        raise ValueError("cannot drop the table's last column")
-    for c in _constraints(path):
-        if re.search(rf"\b{re.escape(name)}\b", c["predicate"]):
-            raise ValueError(
-                f"cannot drop {name!r}: CHECK constraint {c['name']!r} "
-                f"references it ({c['predicate']!r}); drop the constraint first"
-            )
-    physical = m.get(name, name)
+    st = _schema_change(
+        path, name, "drop", lambda cols: len(cols) == 1 and "cannot drop the table's last column"
+    )
+    physical = st.fold_schema()[0].get(name, name)
     return _commit(
         path, [{"drop_column": {"logical": name, "physical": physical}}]
     )
 
 
-def _reject_tombstoned(df: DataFrame, path: str) -> None:
+def _reject_tombstoned(df: DataFrame, st: _TableState) -> None:
     """Write-side guard (the no-field-ids analog of Delta's field-id
     protection), two hazards:
 
@@ -1520,7 +1449,7 @@ def _reject_tombstoned(df: DataFrame, path: str) -> None:
        untranslated are hazards: a name that is itself a logical
        name in the mapping translates away before hitting the file.
     """
-    m, dropped = _fold_schema(path)
+    m, dropped = st.fold_schema()
     if not m and not dropped:
         return
     bad = [c for c in df.columns if m.get(c, c) in dropped]
@@ -1611,29 +1540,29 @@ def snapshot(
         if version is not None:
             raise ValueError("pass version OR timestamp_ms, not both")
         version = version_at_timestamp(path, timestamp_ms)
-    part = _partitioning(path, version)
-    if part is not None:
-        if _live_dvs(path, version):
+    return _snapshot(spark, path, _replay(path, version))
+
+
+def _snapshot(spark: SparkSession, path: str, st: _TableState) -> DataFrame:
+    """:func:`snapshot` of an already replayed state."""
+    m, dropped = st.fold_schema()
+    if st.partitioning is not None:
+        if st.dvs:
             raise NotImplementedError(
                 "deletion vectors on partitioned tables are not supported"
             )
-        adds = _live_adds(path, version)
-        if not adds:
+        if not st.adds:
             raise FileNotFoundError(f"empty txlog table at {path}")
-        m, dropped = _fold_schema(path, version)
-        return _to_logical(_read_partitioned(spark, path, adds, part), m, dropped)
-    files = live_files(path, version)
-    if not files:
+        base = _read_partitioned(spark, path, st.adds.values(), st.partitioning)
+        return _to_logical(base, m, dropped)
+    if not st.adds:
         raise FileNotFoundError(f"empty txlog table at {path}")
-    base = spark.read.option("mergeSchema", "true").parquet(*files)
-    m, dropped = _fold_schema(path, version)
-    return _to_logical(_with_dvs(spark, path, base, version), m, dropped)
+    base = spark.read.option("mergeSchema", "true").parquet(*st.files(path))
+    return _to_logical(_with_dvs(spark, path, st, base), m, dropped)
 
 
-def _dv_pair_df(
-    spark: SparkSession, path: str, version: int | None
-) -> DataFrame | None:
-    """ACTIVE deletion pairs as of ``version``: distinct (file name,
+def _dv_pair_df(spark: SparkSession, path: str, st: _TableState) -> DataFrame | None:
+    """ACTIVE deletion pairs of ``st``: distinct (file name,
     row position) rows from every live sidecar, restricted to live
     target files — the single definition of "which rows are MOR-
     deleted" that every consumer (reads, CDF, new deletes,
@@ -1643,14 +1572,11 @@ def _dv_pair_df(
     A DV row is active only while its target file is live; a later
     materialize/COW rewrite removed the file and the rewrite already
     applied the deletions."""
-    dvs = _live_dvs(path, version)
-    if not dvs:
-        return None
-    live_names = {os.path.basename(f) for f in live_files(path, version)}
-    if not live_names:
+    live_names = {os.path.basename(f) for f in st.adds}
+    if not st.dvs or not live_names:
         return None
     return (
-        spark.read.parquet(*[_abs(path, p) for p in dvs])
+        spark.read.parquet(*[_abs(path, p) for p in st.dvs])
         .filter(F.col("_dv_file").isin(*sorted(live_names)))
         .select("_dv_file", "_dv_pos")
         .distinct()
@@ -1660,7 +1586,10 @@ def _dv_pair_df(
 def _tag_positions(base: DataFrame) -> DataFrame:
     """Prefix a parquet-read DataFrame with the (_dv_file, _dv_pos)
     identity columns DV pairs join on, from the scan's own
-    ``_metadata`` — no data column is touched."""
+    ``_metadata`` — no data column is touched. A file is named by its
+    base name, which is unique within a table (data files are
+    ``<uuid>.parquet``), so legacy absolute, clone-relative and
+    percent-encoded forms of the same path all name it alike."""
     return base.select(
         F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
             "_dv_file"
@@ -1670,15 +1599,37 @@ def _tag_positions(base: DataFrame) -> DataFrame:
     )
 
 
+def _touched(st: _TableState, tagged: DataFrame) -> list[str]:
+    """Log-form paths of the live files named in ``tagged._dv_file``:
+    one distinct collect, bounded by file count, never row count. An
+    unknown name means a corrupt log, and fails loud."""
+    by_name = {os.path.basename(p): p for p in st.adds}
+    names = tagged.select("_dv_file").distinct().collect()
+    return sorted(by_name[r["_dv_file"]] for r in names)
+
+
+def _hits(spark: SparkSession, path: str, st: _TableState, predicate) -> DataFrame:
+    """(_dv_file, _dv_pos) of every raw row of the live files where
+    ``predicate`` (over LOGICAL names) is TRUE — the scan both delete
+    faces share. Rows where it is FALSE or NULL are not hits."""
+    m, dropped = st.fold_schema()
+    base = spark.read.option("mergeSchema", "true").parquet(*st.files(path))
+    return (
+        _to_logical(_tag_positions(base), m, dropped)
+        .filter(predicate)
+        .select("_dv_file", "_dv_pos")
+    )
+
+
 def _with_dvs(
-    spark: SparkSession, path: str, base: DataFrame, version: int | None
+    spark: SparkSession, path: str, st: _TableState, base: DataFrame
 ) -> DataFrame:
     """Apply active deletion vectors to a DataFrame read from (any
     subset of) the live files — EVERY txlog read path must route
     through this, including the pruned/point readers: a raw read of
     a DV'd table resurrects deleted rows. Pruning composes freely:
     DV rows for files a reader skipped simply never match."""
-    dv = _dv_pair_df(spark, path, version)
+    dv = _dv_pair_df(spark, path, st)
     if dv is None:
         return base
     return _tag_positions(base).join(
@@ -1686,15 +1637,21 @@ def _with_dvs(
     ).drop("_dv_file", "_dv_pos")
 
 
-def _live_adds(path: str, version: int | None = None) -> list[dict]:
-    adds: dict[str, dict] = {}
-    for c in _read_log(path, version):
-        for a in c["actions"]:
-            if "add" in a:
-                adds[a["add"]["path"]] = a["add"]
-            elif "remove" in a:
-                adds.pop(a["remove"]["path"], None)
-    return list(adds.values())
+def _read_subset(
+    spark: SparkSession, path: str, st: _TableState, adds: list[dict], cond
+) -> DataFrame:
+    """Rows of the live files ``adds`` (a pruned subset of
+    ``st.adds``) where ``cond`` (over PHYSICAL names) holds, read
+    through ``st``'s deletion vectors and column names — the tail of
+    every pruned reader. No surviving file reads as the table's
+    schema with no rows."""
+    if not adds:
+        return _snapshot(spark, path, st).filter(F.lit(False))
+    m, dropped = st.fold_schema()
+    base = spark.read.option("mergeSchema", "true").parquet(
+        *[_abs(path, a["path"]) for a in adds]
+    )
+    return _to_logical(_with_dvs(spark, path, st, base).filter(cond), m, dropped)
 
 
 def snapshot_pruned(
@@ -1709,56 +1666,40 @@ def snapshot_pruned(
     files from the LOG's stored min/max before Spark ever lists them
     — the Delta/Iceberg data-skipping read path. Files without stats
     for the column are conservatively kept; the residual filter is
-    still applied, so the result is exact regardless of stats."""
-    _require_not_partitioned(path, "snapshot_pruned")
-    from pyspark.sql import functions as F
-
-    m, dropped = _fold_schema(path, version)
-    column = m.get(column, column)  # stats are keyed by PHYSICAL name
-    if column in dropped:
-        raise ValueError(f"column {column!r} was dropped")
-    keep = []
-    for a in _live_adds(path, version):
-        st = a.get("stats", {})
-        mn = st.get("min", {}).get(column)
-        mx = st.get("max", {}).get(column)
-        if mn is not None and mx is not None and (mx < lower or mn > upper):
-            continue  # provably disjoint — never opened
-        keep.append(_abs(path, a["path"]))
-    if not keep:
-        return snapshot(spark, path, version).filter(F.lit(False))
-    df = _with_dvs(
-        spark,
-        path,
-        spark.read.option("mergeSchema", "true").parquet(*keep),
-        version,
-    )
-    return _to_logical(
-        df.filter((F.col(column) >= lower) & (F.col(column) <= upper)), m, dropped
-    )
+    still applied, so the result is exact regardless of stats. The
+    one-column form of :func:`snapshot_pruned_multi`."""
+    return snapshot_pruned_multi(spark, path, [(column, lower, upper)], version)
 
 
 def delete_where(spark: SparkSession, path: str, predicate) -> int:
     """Copy-on-write delete: only files that actually contain
     matching rows are rewritten; untouched files stay shared between
-    the old and new snapshots."""
+    the old and new snapshots. One scan finds the touched files (the
+    hit scan :func:`delete_where_dv` records), and they are rewritten
+    together in one read and one write. A row is deleted only where
+    ``predicate`` is TRUE — rows where it is NULL survive, exactly as
+    under :func:`delete_where_dv`."""
     _require_not_partitioned(path, "delete_where")
-    _require_no_dvs(path, "delete_where")
-    m, dropped = _fold_schema(path)
-    actions: list[dict] = []
-    for rel in _live_rel(path):
-        part = spark.read.parquet(_abs(path, rel))
-        # predicate binds LOGICAL names; files carry physical ones.
-        # NOTE: the rewrite drops tombstoned physical columns, so a
-        # pre-drop time travel over rewritten rows reads them as NULL
-        # (same caveat class as vacuum breaking old time travel).
-        keep = _to_physical(_to_logical(part, m, dropped).filter(~predicate), m)
-        if keep.count() == part.count():
-            continue  # file untouched — shared with prior versions
-        actions.append({"remove": {"path": rel}})
-        actions.extend(_write_data_files(keep, path))
-    if not actions:
-        return current_version(path)
+    st = _replay(path)
+    _require_no_dvs(path, st, "delete_where")
+    if not st.adds:
+        return current_version(path)  # raises when there is no table
+    touched = _touched(st, _hits(spark, path, st, predicate))
+    if not touched:
+        return st.version
+    m, dropped = st.fold_schema()
+    part = spark.read.option("mergeSchema", "true").parquet(
+        *[_abs(path, r) for r in touched]
+    )
+    # predicate binds LOGICAL names; files carry physical ones.
+    # NOTE: the rewrite drops tombstoned physical columns, so a
+    # pre-drop time travel over rewritten rows reads them as NULL
+    # (same caveat class as vacuum breaking old time travel).
+    keep = _to_physical(
+        _to_logical(part, m, dropped).filter(~F.coalesce(predicate, F.lit(False))), m
+    )
+    actions: list[dict] = [{"remove": {"path": r}} for r in touched]
+    actions.extend(_write_data_files(keep, path))
     return _commit(path, actions)
 
 
@@ -1769,8 +1710,8 @@ def merge_upsert(
     MATCHED INSERT, as one atomic commit.
 
     Touched-file discovery is ONE distributed job, not a per-file
-    loop: the snapshot is scanned with its provenance column
-    (``input_file_name``), semi-joined against the (broadcast) source
+    loop: the snapshot is scanned with its file names (from the
+    scan's ``_metadata``), semi-joined against the (broadcast) source
     keys, and the distinct file list collected — bounded by file
     count, never row count. Only files that actually contain matched
     keys are rewritten (their non-matched rows survive via an
@@ -1782,38 +1723,22 @@ def merge_upsert(
     survivors, same as delete_where.
     """
     _require_not_partitioned(path, "merge_upsert")
-    _require_no_dvs(path, "merge_upsert")
-    from pyspark.sql import functions as F
-
-    from urllib.parse import unquote, urlparse
-
-    m, dropped = _fold_schema(path)
+    st = _replay(path)
+    _require_no_dvs(path, st, "merge_upsert")
+    m, dropped = st.fold_schema()
     # source arrives in LOGICAL names; the whole merge runs physical
-    _reject_tombstoned(source, path)
+    _reject_tombstoned(source, st)
     source = _to_physical(source, m)
     key_cols = [m.get(k, k) for k in key_cols]
-    rels = _live_rel(path)
     src = source.localCheckpoint()  # read twice: key probe + data write
-    snap = spark.read.option("mergeSchema", "true").parquet(
-        *[_abs(path, r) for r in rels]
+    snap = spark.read.option("mergeSchema", "true").parquet(*st.files(path))
+    # touched files are mapped back to the LOG-FORM paths of the live
+    # set by file name: remove actions must string-match their adds,
+    # which may be legacy ABSOLUTE paths
+    touched = _touched(
+        st,
+        _tag_positions(snap).join(F.broadcast(src.select(*key_cols)), key_cols, "leftsemi"),
     )
-    hit = (
-        snap.withColumn("_file", F.input_file_name())
-        .join(F.broadcast(src.select(*key_cols)), key_cols, "leftsemi")
-        .select("_file")
-        .distinct()
-        .collect()
-    )  # bounded: one row per touched FILE
-    # Map provenance URIs back to the LOG-FORM path of the live set
-    # (never os.path.relpath against the table root: remove actions
-    # must string-match their adds, which may be legacy ABSOLUTE
-    # paths, and input_file_name() percent-encodes special chars).
-    rel_by_abs = {os.path.realpath(_abs(path, r)): r for r in rels}
-    touched = set()
-    for r in hit:
-        u = urlparse(r["_file"])
-        p = os.path.realpath(unquote(u.path) if u.scheme else r["_file"])
-        touched.add(rel_by_abs[p])  # unknown file = corrupt log; fail loud
     # the write schema excludes tombstoned (dropped) physical columns:
     # the source batch cannot carry them, and rewritten survivors drop
     # them — same pre-drop time-travel caveat as delete_where's rewrite
@@ -1821,9 +1746,9 @@ def merge_upsert(
     actions: list[dict] = []
     if touched:
         keep = spark.read.option("mergeSchema", "true").parquet(
-            *[_abs(path, t) for t in sorted(touched)]
+            *[_abs(path, t) for t in touched]
         ).join(F.broadcast(src.select(*key_cols)), key_cols, "leftanti")
-        actions.extend({"remove": {"path": t}} for t in sorted(touched))
+        actions.extend({"remove": {"path": t}} for t in touched)
         actions.extend(_write_data_files(keep.select(*write_cols), path))
     actions.extend(_write_data_files(src.select(*write_cols), path))
     return _commit(path, actions)
@@ -1875,14 +1800,11 @@ def compact_small(
     so the maintenance cost tracks the fragmentation, not the table.
     Returns the commit version (unchanged if nothing qualifies)."""
     _require_not_partitioned(path, "compact_small")
-    _require_no_dvs(path, "compact_small")
-    small = [
-        rel
-        for rel in _live_rel(path)
-        if os.path.getsize(_abs(path, rel)) < min_bytes
-    ]
+    st = _replay(path)
+    _require_no_dvs(path, st, "compact_small")
+    small = [rel for rel in st.adds if os.path.getsize(_abs(path, rel)) < min_bytes]
     if len(small) < 2:
-        return current_version(path)  # nothing worth packing
+        return st.version  # nothing worth packing
     df = spark.read.option("mergeSchema", "true").parquet(
         *[_abs(path, r) for r in small]
     )
@@ -1912,16 +1834,16 @@ def compact(
     — the multi-dimensional data-skipping trade, measured in
     bench.py's layout experiment."""
     _require_not_partitioned(path, "compact")
-    _require_no_dvs(path, "compact")
+    st = _replay(path)
+    _require_no_dvs(path, st, "compact")
     if sort_by is not None and zorder_by is not None:
         raise ValueError("sort_by and zorder_by are mutually exclusive")
-    m = _mapping(path)
+    m = st.fold_schema()[0]
     if sort_by is not None:
         sort_by = m.get(sort_by, sort_by)  # files carry physical names
     if zorder_by is not None:
         zorder_by = [m.get(c, c) for c in zorder_by]
-    rels = _live_rel(path)
-    df = spark.read.option("mergeSchema", "true").parquet(*[_abs(path, r) for r in rels])
+    df = spark.read.option("mergeSchema", "true").parquet(*st.files(path))
     if zorder_by is not None:
         zcol = _zorder_column(spark, df, zorder_by)
         df = (
@@ -1936,7 +1858,7 @@ def compact(
         )
     else:
         df = df.coalesce(target_partitions)
-    actions: list[dict] = [{"remove": {"path": r}} for r in rels]
+    actions: list[dict] = [{"remove": {"path": r}} for r in st.adds]
     actions.extend(_write_data_files(df, path))
     return _commit(path, actions)
 
@@ -1954,40 +1876,26 @@ def snapshot_pruned_multi(
     does — same exact result either way (the residual filter runs
     regardless), different files_read."""
     _require_not_partitioned(path, "snapshot_pruned_multi")
-    from pyspark.sql import functions as F
-
-    m, dropped = _fold_schema(path, version)
+    st = _replay(path, version)
+    m, dropped = st.fold_schema()
     preds = [(m.get(c, c), lo, hi) for c, lo, hi in preds]  # physical stats keys
     if any(c in dropped for c, _, _ in preds):
         raise ValueError("predicate references a dropped column")
-    residual = None
-    keep = []
-    for a in _live_adds(path, version):
-        st = a.get("stats", {})
-        ok = True
-        for column, lower, upper in preds:
-            mn = st.get("min", {}).get(column)
-            mx = st.get("max", {}).get(column)
-            if mn is not None and mx is not None and (mx < lower or mn > upper):
-                ok = False
-                break
-        if ok:
-            keep.append(_abs(path, a["path"]))
+
+    def disjoint(stats: dict, column: str, lower, upper) -> bool:
+        mn = stats.get("min", {}).get(column)
+        mx = stats.get("max", {}).get(column)
+        return mn is not None and mx is not None and (mx < lower or mn > upper)
+
+    keep = [  # a file provably disjoint on any range is never opened
+        a
+        for a in st.adds.values()
+        if not any(disjoint(a.get("stats", {}), *p) for p in preds)
+    ]
+    residual = F.lit(True)
     for column, lower, upper in preds:
-        cond = (F.col(column) >= lower) & (F.col(column) <= upper)
-        residual = cond if residual is None else (residual & cond)
-    if not keep:
-        return snapshot(spark, path, version).filter(F.lit(False))
-    return _to_logical(
-        _with_dvs(
-            spark,
-            path,
-            spark.read.option("mergeSchema", "true").parquet(*keep),
-            version,
-        ).filter(residual),
-        m,
-        dropped,
-    )
+        residual = residual & (F.col(column) >= lower) & (F.col(column) <= upper)
+    return _read_subset(spark, path, st, keep, residual)
 
 
 def changes(spark: SparkSession, path: str, version: int) -> DataFrame:
@@ -2017,8 +1925,6 @@ def changes(spark: SparkSession, path: str, version: int) -> DataFrame:
     ('insert' | 'delete').
     """
     _require_not_partitioned(path, "changes")
-    from pyspark.sql import functions as F
-
     # read the commit FILE directly: _read_log may substitute a
     # synthetic checkpoint commit at this version, whose actions are
     # the full live set, not this commit's delta. Expired versions
@@ -2035,8 +1941,10 @@ def changes(spark: SparkSession, path: str, version: int) -> DataFrame:
     if not added and not removed and not has_dv_actions:
         raise ValueError(f"commit {version} touched no files")
 
-    dv_before = _dv_pair_df(spark, path, version - 1) if version > 0 else None
-    dv_after = _dv_pair_df(spark, path, version)
+    before = _replay(path, version - 1) if version > 0 else _TableState()
+    after = _replay(path, version)
+    dv_before = _dv_pair_df(spark, path, before)
+    dv_after = _dv_pair_df(spark, path, after)
 
     def _tagged(files: list[str]) -> DataFrame:
         return _tag_positions(
@@ -2088,11 +1996,10 @@ def changes(spark: SparkSession, path: str, version: int) -> DataFrame:
                     _abs(path, dv["path"]), columns=["_dv_file"]
                 ).column("_dv_file").to_pylist()
                 touched.update(names)
-        prev_live = set(_live_rel(path, version - 1))
         both = [
             p
-            for p in _live_rel(path, version)
-            if p in prev_live and os.path.basename(p) in touched
+            for p in after.adds
+            if p in before.adds and os.path.basename(p) in touched
         ]
         if both:
             empty = None
@@ -2132,7 +2039,7 @@ def changes(spark: SparkSession, path: str, version: int) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     # feed rows surface the LOGICAL names active at this version
-    m, dropped = _fold_schema(path, version)
+    m, dropped = after.fold_schema()
     return _to_logical(out, m, dropped)
 
 
@@ -2172,15 +2079,13 @@ def attach_bloom(
     batch. A compaction's new files are picked up the same way on
     the next call."""
     _require_not_partitioned(path, "attach_bloom")
-    from pyspark.sql import functions as F
-
     if bits is not None and bits & (bits - 1):
         raise ValueError("bits must be a power of two")
-    column = _mapping(path).get(column, column)  # index keys physical names
-    have = set(_bloom_indexes(path, column)) if missing_only else set()
+    st = _replay(path)
+    column = st.fold_schema()[0].get(column, column)  # index keys physical names
     actions = []
-    for rel in _live_rel(path):
-        if rel in have:
+    for rel in st.adds:
+        if missing_only and (rel, column) in st.blooms:
             continue
         df = spark.read.parquet(_abs(path, rel)).select(
             F.col(column).cast("string").alias("_v")
@@ -2227,19 +2132,8 @@ def attach_bloom(
             }
         )
     if not actions:
-        return current_version(path)
+        return st.version
     return _commit(path, actions)
-
-
-def _bloom_indexes(path: str, column: str, version: int | None = None) -> dict:
-    """Latest bloom entry per file for ``column`` (log replay order)."""
-    out: dict[str, dict] = {}
-    for c in _read_log(path, version):
-        for a in c["actions"]:
-            idx = a.get("index")
-            if idx and idx["column"] == column:
-                out[idx["path"]] = idx
-    return out
 
 
 def snapshot_point(
@@ -2253,48 +2147,9 @@ def snapshot_point(
     only if its filter says ``value`` MIGHT be present (or it has no
     filter — conservatively kept). Exact regardless: the residual
     equality filter always runs; the bloom can only skip files where
-    the value is provably absent."""
-    _require_not_partitioned(path, "snapshot_point")
-    import base64
-
-    from pyspark.sql import functions as F
-
-    m, dropped = _fold_schema(path, version)
-    column = m.get(column, column)  # bloom indexes key physical names
-    if column in dropped:
-        raise ValueError(f"column {column!r} was dropped")
-    blooms = _bloom_indexes(path, column, version)
-    import hashlib as _hashlib
-
-    keep = []
-    for a in _live_adds(path, version):
-        idx = blooms.get(a["path"])
-        if idx is not None:
-            bitset = base64.b64decode(idx["bloom"])
-            bits, kk = idx["bits"], idx["k"]
-            sval = str(value)
-            hit = True
-            for i in range(kk):
-                h = _hashlib.md5(f"{i}|{sval}".encode()).hexdigest()[:8]
-                p = int(h, 16) % bits
-                if not bitset[p >> 3] & (1 << (p & 7)):
-                    hit = False
-                    break
-            if not hit:
-                continue  # provably absent — never opened
-        keep.append(_abs(path, a["path"]))
-    if not keep:
-        return snapshot(spark, path, version).filter(F.lit(False))
-    return _to_logical(
-        _with_dvs(
-            spark,
-            path,
-            spark.read.option("mergeSchema", "true").parquet(*keep),
-            version,
-        ).filter(F.col(column) == value),
-        m,
-        dropped,
-    )
+    the value is provably absent. The one-key form of
+    :func:`snapshot_point_any`."""
+    return snapshot_point_any(spark, path, column, [value], version)
 
 
 def snapshot_point_any(
@@ -2319,16 +2174,12 @@ def snapshot_point_any(
     import base64
     import hashlib as _hashlib
 
-    from pyspark.sql import functions as F
-
     vals = list(values)
-    m, dropped = _fold_schema(path, version)
+    st = _replay(path, version)
+    m, dropped = st.fold_schema()
     column = m.get(column, column)  # bloom indexes key physical names
     if column in dropped:
         raise ValueError(f"column {column!r} was dropped")
-    if not vals:
-        return snapshot(spark, path, version).filter(F.lit(False))
-    blooms = _bloom_indexes(path, column, version)
     svals = [str(v) for v in vals]
     hmemo: dict[tuple[int, str], int] = {}
 
@@ -2340,38 +2191,23 @@ def snapshot_point_any(
             )
         return hmemo[key]
 
-    keep = []
-    for a in _live_adds(path, version):
-        idx = blooms.get(a["path"])
-        if idx is not None:
-            bitset = base64.b64decode(idx["bloom"])
-            bits, kk = idx["bits"], idx["k"]
-            admit = False
-            for sval in svals:
-                hit = True
-                for i in range(kk):
-                    p = _h(i, sval) % bits
-                    if not bitset[p >> 3] & (1 << (p & 7)):
-                        hit = False
-                        break
-                if hit:
-                    admit = True
-                    break
-            if not admit:
-                continue  # every probed key provably absent
-        keep.append(_abs(path, a["path"]))
-    if not keep:
-        return snapshot(spark, path, version).filter(F.lit(False))
-    return _to_logical(
-        _with_dvs(
-            spark,
-            path,
-            spark.read.option("mergeSchema", "true").parquet(*keep),
-            version,
-        ).filter(F.col(column).isin(vals)),
-        m,
-        dropped,
-    )
+    def admits(idx: dict | None) -> bool:
+        """False only when every probed key is provably absent."""
+        if idx is None:
+            return True  # no filter: conservatively kept
+        bitset = base64.b64decode(idx["bloom"])
+        return any(
+            all(
+                bitset[p >> 3] & (1 << (p & 7))
+                for p in (_h(i, sval) % idx["bits"] for i in range(idx["k"]))
+            )
+            for sval in svals
+        )
+
+    keep = [
+        a for a in st.adds.values() if vals and admits(st.blooms.get((a["path"], column)))
+    ]
+    return _read_subset(spark, path, st, keep, F.col(column).isin(vals))
 
 
 def restore(path: str, version: int) -> int:
@@ -2388,13 +2224,13 @@ def restore(path: str, version: int) -> int:
     committing a snapshot with dangling files. The change feed of
     the restore commit is the rollback's CDF: deletes of the
     rolled-back rows, inserts of the resurrected ones."""
-    cur = current_version(path)
-    if not 0 <= version <= cur:
+    now = _replay(path)
+    if not 0 <= version <= now.version:
         raise FileNotFoundError(
-            f"no committed version {version} at {path} (latest is {cur})"
+            f"no committed version {version} at {path} (latest is {now.version})"
         )
-    target = {a["path"]: a for a in _live_adds(path, version)}
-    current = {a["path"]: a for a in _live_adds(path)}
+    then = _replay(path, version)
+    target, current = then.adds, now.adds
     missing = sorted(p for p in target if not os.path.exists(_abs(path, p)))
     if missing:
         raise FileNotFoundError(
@@ -2404,11 +2240,7 @@ def restore(path: str, version: int) -> int:
     # sidecars the restore would re-register must exist too — vacuum
     # reclaims retired ones below the retention window, same contract
     # as data files
-    missing_dv = sorted(
-        d["path"]
-        for d in _live_dv_adds(path, version)
-        if not os.path.exists(_abs(path, d["path"]))
-    )
+    missing_dv = sorted(p for p in then.dvs if not os.path.exists(_abs(path, p)))
     if missing_dv:
         raise FileNotFoundError(
             f"cannot restore {path} to version {version}: "
@@ -2428,8 +2260,7 @@ def restore(path: str, version: int) -> int:
     # but retired since (a prior restore) — after this commit the
     # active-DV set equals the target's, so snapshot(head) ==
     # snapshot(target) exactly.
-    dv_target = {d["path"]: d for d in _live_dv_adds(path, version)}
-    dv_current = {d["path"]: d for d in _live_dv_adds(path)}
+    dv_target, dv_current = then.dvs, now.dvs
     actions += [
         {"remove_dv": {"path": p}} for p in sorted(dv_current) if p not in dv_target
     ]
@@ -2437,7 +2268,7 @@ def restore(path: str, version: int) -> int:
         {"add_dv": dv_target[p]} for p in sorted(dv_target) if p not in dv_current
     ]
     if not actions:
-        return current_version(path)  # already at that snapshot
+        return now.version  # already at that snapshot
     return _commit(path, actions)
 
 
@@ -2506,27 +2337,6 @@ def vacuum(path: str, keep_last: int = 1) -> list[str]:
 # Deletion vectors — merge-on-read deletes
 # ---------------------------------------------------------------------------
 
-def _live_dv_adds(path: str, version: int | None = None) -> list[dict]:
-    """Active ``add_dv`` entries (path + n) as of ``version``:
-    ``add_dv`` registers a sidecar, ``remove_dv`` (committed by
-    :func:`restore` when rolling back past a MOR delete) retires it.
-    Staleness (DVs whose target file has since been rewritten) is
-    filtered at READ time against the live file set, not here — the
-    log itself stays append-only."""
-    out: dict[str, dict] = {}
-    for c in _read_log(path, version):
-        for a in c["actions"]:
-            if "add_dv" in a:
-                out[a["add_dv"]["path"]] = a["add_dv"]
-            elif "remove_dv" in a:
-                out.pop(a["remove_dv"]["path"], None)
-    return list(out.values())
-
-
-def _live_dvs(path: str, version: int | None = None) -> list[str]:
-    return [a["path"] for a in _live_dv_adds(path, version)]
-
-
 def delete_where_dv(spark: SparkSession, path: str, predicate) -> int:
     """Merge-on-read delete: instead of rewriting every touched file
     (copy-on-write — :func:`delete_where`), record the matching rows'
@@ -2541,26 +2351,20 @@ def delete_where_dv(spark: SparkSession, path: str, predicate) -> int:
 
     Returns the commit version (unchanged if nothing matched)."""
     _require_not_partitioned(path, "delete_where_dv")
-    files = live_files(path)
-    if not files:
+    st = _replay(path)
+    if not st.adds:
         raise FileNotFoundError(f"empty txlog table at {path}")
-    base = spark.read.option("mergeSchema", "true").parquet(*files)
-    m, dropped = _fold_schema(path)
-    hits = (
-        _to_logical(_tag_positions(base), m, dropped)
-        .filter(predicate)  # predicate binds LOGICAL names
-        .select("_dv_file", "_dv_pos")
-    )
+    hits = _hits(spark, path, st, predicate)
     # rows already MOR-deleted by an earlier sidecar must not be
     # recorded again: the read path's distinct() would keep results
     # correct anyway, but the sidecar's cardinality (and the change
     # feed's add_dv delta) should describe NEWLY deleted rows only
-    prev = _dv_pair_df(spark, path, None)
+    prev = _dv_pair_df(spark, path, st)
     if prev is not None:
         hits = hits.join(F.broadcast(prev), ["_dv_file", "_dv_pos"], "left_anti")
     n = hits.count()
     if n == 0:
-        return current_version(path)
+        return st.version
     rel = os.path.join("dv", f"{uuid.uuid4().hex}.parquet")
     final = _abs(path, rel)
     os.makedirs(os.path.dirname(final), exist_ok=True)
@@ -2586,17 +2390,14 @@ def materialize_dvs(spark: SparkSession, path: str) -> int:
     rows; those ops refuse while DVs are active (_require_no_dvs).
 
     Returns the commit version (unchanged if no DVs are active)."""
-    dv = _dv_pair_df(spark, path, None)
-    if dv is None:
-        return current_version(path)
-    live_names = {os.path.basename(p): p for p in _live_rel(path)}
-    # bounded collect: one file NAME per DV-touched file
-    touched = sorted({r["_dv_file"] for r in dv.select("_dv_file").distinct().collect()})
+    st = _replay(path)
+    dv = _dv_pair_df(spark, path, st)
+    touched = [] if dv is None else _touched(st, dv)
     if not touched:
-        # sidecars are registered but none targets a live file (all
-        # targets already rewritten away — e.g. a COW delete emptied
-        # the table after the MOR delete): nothing to fold
-        return current_version(path)
+        # no sidecars, or none targets a live file (all targets
+        # already rewritten away — e.g. a COW delete emptied the
+        # table after the MOR delete): nothing to fold
+        return st.version
     # rewrite every touched file in ONE job (read together, one
     # anti-join, one write) instead of a read+write job pair PER
     # file — the per-file loop cost 16 sequential jobs on a 16-file
@@ -2605,24 +2406,20 @@ def materialize_dvs(spark: SparkSession, path: str) -> int:
     keep = _with_dvs(
         spark,
         path,
-        spark.read.option("mergeSchema", "true").parquet(
-            *[_abs(path, live_names[f]) for f in touched]
-        ),
-        None,
+        st,
+        spark.read.option("mergeSchema", "true").parquet(*[_abs(path, r) for r in touched]),
     )
-    actions: list[dict] = [
-        {"remove": {"path": live_names[f]}} for f in touched
-    ]
+    actions: list[dict] = [{"remove": {"path": r}} for r in touched]
     actions.extend(_write_data_files(keep, path))
     return _commit(path, actions)
 
 
-def _has_active_dvs(path: str) -> bool:
+def _has_active_dvs(path: str, st: _TableState) -> bool:
     """True if any deletion-vector sidecar still targets a LIVE file
     (a sidecar whose targets were all rewritten is stale metadata).
     Cheap driver probe: sidecars are deleted-row-sized."""
-    live = {os.path.basename(p) for p in _live_rel(path)}
-    for rel in _live_dvs(path):
+    live = {os.path.basename(p) for p in st.adds}
+    for rel in st.dvs:
         if os.path.exists(_abs(path, rel)):
             import pyarrow.parquet as pq
 
@@ -2632,10 +2429,10 @@ def _has_active_dvs(path: str) -> bool:
     return False
 
 
-def _require_no_dvs(path: str, op: str) -> None:
+def _require_no_dvs(path: str, st: _TableState, op: str) -> None:
     """File-rewriting ops read raw parquet; running them over a table
     with active DVs would resurrect deleted rows. Refuse loudly."""
-    if _has_active_dvs(path):
+    if _has_active_dvs(path, st):
         raise RuntimeError(
             f"{op}: table at {path} has active deletion vectors; "
             "run materialize_dvs() first (file-rewriting ops over "
@@ -2755,13 +2552,7 @@ def last_txn_version(path: str, app_id: str) -> int | None:
     """Highest transaction version committed by ``app_id`` (None if
     the app never wrote). One driver-side log replay — the same read
     the snapshot already does."""
-    best: int | None = None
-    for c in _read_log(path):
-        for a in c["actions"]:
-            t = a.get("txn")
-            if t and t["app"] == app_id:
-                best = t["version"] if best is None else max(best, t["version"])
-    return best
+    return _replay(path).txns.get(app_id)
 
 
 def append_idempotent(
@@ -2789,27 +2580,11 @@ def append_idempotent(
     # marker, still one atomic commit
     os.makedirs(_log_dir(path), exist_ok=True)
     os.makedirs(_data_dir(path), exist_ok=True)
-    known = last_txn_version(path, app_id)
+    st = _replay(path)
+    known = st.txns.get(app_id)
     if known is not None and txn_version <= known:
-        return current_version(path)
-    _validate_constraints(df, path)
-    _reject_tombstoned(df, path)
-    # partitioned tables route through the partitioned writer exactly
-    # like append() — without this, a streaming sink pointed at a
-    # partitioned table would commit partition-LESS adds that every
-    # pruned read silently misses (r13 ADVICE item 1)
-    part = _partitioning(path)
-    if part is not None:
-        missing = [c for c in part["cols"] if c not in df.columns]
-        if missing:
-            raise ValueError(
-                f"append_idempotent missing partition columns: {missing}"
-            )
-        actions = _write_data_files_partitioned(
-            _to_physical(df, _mapping(path)), path, part["cols"]
-        )
-    else:
-        actions = _write_data_files(_to_physical(df, _mapping(path)), path)
+        return st.version
+    actions = _stage_append(df, path, st, "append_idempotent")
     actions.append({"txn": {"app": app_id, "version": int(txn_version)}})
     return _commit(path, actions)
 
@@ -2968,26 +2743,7 @@ def commit_multi(
     for df, path in appends:
         os.makedirs(_log_dir(path), exist_ok=True)
         os.makedirs(_data_dir(path), exist_ok=True)
-        _validate_constraints(df, path)
-        _reject_tombstoned(df, path)
-        # same partitioned-table routing as append()/append_idempotent:
-        # a partitioned member of a multi-table transaction must stage
-        # adds that carry partitionValues (r13 ADVICE item 2)
-        part = _partitioning(path)
-        if part is not None:
-            missing = [c for c in part["cols"] if c not in df.columns]
-            if missing:
-                raise ValueError(
-                    f"commit_multi missing partition columns for "
-                    f"{path}: {missing}"
-                )
-            actions = _write_data_files_partitioned(
-                _to_physical(df, _mapping(path)), path, part["cols"]
-            )
-        else:
-            actions = _write_data_files(
-                _to_physical(df, _mapping(path)), path
-            )
+        actions = _stage_append(df, path, _replay(path), "commit_multi")
         entries.append({"table": os.path.abspath(path), "actions": actions})
     # phase 2: publish the manifest — THE atomic commit point
     tmp = os.path.join(mdir, f".{mid}.tmp")
@@ -3007,12 +2763,6 @@ def commit_multi(
     return mid
 
 
-def _has_mtxn(path: str, mid: str) -> bool:
-    return any(
-        a.get("mtxn") == mid for c in _read_log(path) for a in c["actions"]
-    )
-
-
 def _commit_mtxn(path: str, actions: list[dict], mid: str) -> None:
     """Commit a manifest entry AT MOST ONCE, race-free: a recoverer
     may run while the original writer is still alive (or two
@@ -3024,11 +2774,10 @@ def _commit_mtxn(path: str, actions: list[dict], mid: str) -> None:
     marker predicate. Entries are pure adds + marker (no removes),
     so _commit's stale-remove validation is not needed."""
     while True:
-        commits = _read_log(path)
-        if any(a.get("mtxn") == mid for c in commits for a in c["actions"]):
+        st = _replay(path)
+        if mid in st.mtxns:
             return  # already applied by the writer or another recoverer
-        version = commits[-1]["version"] + 1 if commits else 0
-        if _try_commit(path, version, actions):
+        if _try_commit(path, st.version + 1, actions):
             return
 
 

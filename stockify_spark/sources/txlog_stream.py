@@ -142,7 +142,7 @@ def _plan_commits(
     logged min/max stats are provably disjoint — the txlog's
     log-level data skipping, surfaced through the datasource
     pushdown API."""
-    m, dropped = txlog._fold_schema(path, schema_version)
+    m, dropped = txlog._replay(path, schema_version).fold_schema()
     rename = {p: lg for lg, p in m.items()}
     bounds = bounds or {}
     # a bound on _commit_version narrows the VERSION loop itself
@@ -310,7 +310,7 @@ def _plan_changes(
     Planning cost: O(commits planned) log reads plus, for DV commits
     only, this commit's sidecar name columns (deleted-rows-sized) —
     the same driver reads the batch CDF does."""
-    m, dropped = txlog._fold_schema(path, schema_version)
+    m, dropped = txlog._replay(path, schema_version).fold_schema()
     rename = {p: lg for lg, p in m.items()}
     parts: list[InputPartition] = []
     for v in range(start_after + 1, end + 1):
@@ -344,10 +344,10 @@ def _plan_changes(
             continue
         # change commit — assemble the diff spec changes() plans:
         # each side's rows are read through ITS version's active DVs
-        dv_before = [
-            txlog._abs(path, p) for p in txlog._live_dvs(path, v - 1)
-        ] if v > 0 else []
-        dv_after = [txlog._abs(path, p) for p in txlog._live_dvs(path, v)]
+        before = txlog._replay(path, v - 1) if v > 0 else txlog._TableState()
+        after = txlog._replay(path, v)
+        dv_before = [txlog._abs(path, p) for p in before.dvs]
+        dv_after = [txlog._abs(path, p) for p in after.dvs]
         both: list = []
         if dv_acts:
             import pyarrow.parquet as pq
@@ -366,11 +366,10 @@ def _plan_changes(
                     .column("_dv_file")
                     .to_pylist()
                 )
-            prev_live = set(txlog._live_rel(path, v - 1))
             both = [
                 txlog._abs(path, p)
-                for p in txlog._live_rel(path, v)
-                if p in prev_live and os.path.basename(p) in touched
+                for p in after.adds
+                if p in before.adds and os.path.basename(p) in touched
             ]
         parts.append(
             _CdfCommitPartition(
@@ -587,10 +586,11 @@ def _table_schema(
 
     import pyarrow as pa
 
-    files = txlog.live_files(path, version)
+    st = txlog._replay(path, version)
+    files = st.files(path)
     if not files:
         raise FileNotFoundError(f"empty txlog table at {path}")
-    m, dropped = txlog._fold_schema(path, version)
+    m, dropped = st.fold_schema()
     rename = {p: lg for lg, p in m.items()}
     # UNION of all live footers, not one file's: under additive
     # schema evolution the live set mixes generations and any single

@@ -233,13 +233,13 @@ class TestDropColumn:
 class TestFoldSchemaProperty:
     def test_fold_matches_reference_simulation(self, tmp_path):
         """Property: for random valid rename/drop sequences, the log
-        fold (txlog._fold_schema) equals a direct simulation over the
+        fold (_replay(path).fold_schema()) equals a direct simulation over the
         live logical schema. Pure-python (the fold never opens data),
         seeded exhaustively over many sequences."""
         import json
         import random
 
-        from stockify_spark.sources.txlog import _fold_schema, _log_dir
+        from stockify_spark.sources.txlog import _log_dir, _replay
 
         rng = random.Random(42)
         for trial in range(200):
@@ -267,7 +267,7 @@ class TestFoldSchemaProperty:
             os.makedirs(_log_dir(path))
             with open(os.path.join(_log_dir(path), f"{0:016d}.json"), "w") as f:
                 json.dump({"version": 0, "actions": actions}, f)
-            m, dropped = _fold_schema(path)
+            m, dropped = _replay(path).fold_schema()
             expect_m = {lg: p for lg, p in cols.items() if lg != p}
             assert m == expect_m, (trial, actions, m, expect_m)
             assert dropped == dropped_ref, (trial, actions)

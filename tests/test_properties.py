@@ -754,7 +754,7 @@ def test_incremental_mv_equals_recompute_under_random_histories(
             )
             next_rid += 20
         elif op == 1:
-            if txlog._live_dvs(path):
+            if txlog._replay(path).dvs:
                 txlog.materialize_dvs(spark, path)
             txlog.delete_where(spark, path, F.col("rid") % mod == 0)
         elif op == 2:

@@ -3,6 +3,7 @@ compaction, optimistic concurrency."""
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import functions as F
@@ -203,7 +204,7 @@ def test_commit_conflict_on_concurrently_removed_file(spark, tmp_path):
     path = str(tmp_path / "t")
     o = _orders(spark)
     txlog.create(o.limit(50).repartitionByRange(2, "o_orderkey"), path)
-    stale_rel = txlog._live_rel(path)  # what a slow writer captured
+    stale_rel = list(txlog._replay(path).adds)  # what a slow writer captured
     # a faster writer compacts: every captured file is now removed
     txlog.compact(spark, path, target_partitions=1)
     actions = [{"remove": {"path": r}} for r in stale_rel]
@@ -516,7 +517,7 @@ def test_snapshot_point_any_multi_key_and_incremental_bloom(spark, tmp_path):
     assert txlog.snapshot_point_any(spark, path, "l_orderkey", []).count() == 0
     # incremental blooming: append a new file, missing_only indexes
     # JUST it (one new index action), and the probe covers it
-    pre_bloomed = set(txlog._bloom_indexes(path, "l_orderkey"))
+    pre_bloomed = {p for p, c in txlog._replay(path).blooms if c == "l_orderkey"}
     txlog.append(
         spark.createDataFrame(
             [(top + 7, 1)], "l_orderkey long, l_partkey long"
@@ -624,7 +625,7 @@ def test_rewriting_ops_refuse_active_dvs_until_materialized(spark, tmp_path):
     assert sorted(r.k for r in txlog.snapshot(spark, path).collect()) == before
     # stale sidecars (files rewritten) are inert: no resurrection,
     # no double-delete
-    assert txlog._live_dvs(path)  # sidecars still logged
+    assert txlog._replay(path).dvs  # sidecars still logged
 
 
 def test_pruned_and_point_readers_apply_dvs(spark, tmp_path):
@@ -693,9 +694,10 @@ def test_clone_carries_bloom_indexes(spark, tmp_path):
     txlog.attach_bloom(spark, path, "k")
     dst = str(tmp_path / "clone")
     txlog.clone(path, dst)
-    idx = txlog._bloom_indexes(dst, "k")
-    live = set(txlog._live_rel(dst))
-    assert set(idx) == live and len(idx) == 4  # rebased keys match adds
+    st = txlog._replay(dst)
+    idx = {p for p, c in st.blooms if c == "k"}
+    live = set(st.adds)
+    assert idx == live and len(idx) == 4  # rebased keys match adds
     assert txlog.snapshot_point(spark, dst, "k", 150).count() == 1
 
 
@@ -753,7 +755,7 @@ def test_checkpoint_carries_bloom_indexes(spark, tmp_path):
     txlog.attach_bloom(spark, path, "k")
     txlog.checkpoint_log(path)
     txlog.append(spark.range(200, 210).select(F.col("id").alias("k")), path)
-    idx = txlog._bloom_indexes(path, "k")
+    idx = {p for p, c in txlog._replay(path).blooms if c == "k"}
     assert len(idx) == 4  # replay starts at the checkpoint; indexes intact
     # absent key: only the unindexed appended file may open
     assert txlog.snapshot_point(spark, path, "k", 205).count() == 1
@@ -925,7 +927,7 @@ def test_vacuum_reclaims_retired_dv_sidecars(spark, tmp_path):
 
     path = _dv_fixture(spark, tmp_path)                 # v0
     v_dv = txlog.delete_where_dv(spark, path, F.col("k") < 50)   # v1
-    sidecar = txlog._live_dvs(path)[0]
+    sidecar = next(iter(txlog._replay(path).dvs))
     txlog.restore(path, 0)                              # v2 retires it
     txlog.append(spark.range(100, 110).select(
         F.col("id").alias("k"), F.lit(0.0).alias("v")), path)    # v3
@@ -1010,3 +1012,136 @@ def test_concurrent_idempotent_appends_dedup(spark, tmp_path):
     for v in (0, 1, 2):  # full replay of the history
         txlog.append_idempotent(b, path, "app", v)
     assert txlog.snapshot(spark, path).count() == n
+
+
+def test_cow_and_dv_deletes_keep_rows_whose_predicate_is_null(spark, tmp_path):
+    """Both delete faces delete a row only where the predicate is
+    TRUE: a NULL predicate keeps the row, under copy-on-write exactly
+    as under deletion vectors."""
+    df = spark.createDataFrame(
+        [(1, 10), (2, None), (3, 30), (4, 40)], "k long, v long"
+    ).coalesce(1)
+    cow, mor = str(tmp_path / "cow"), str(tmp_path / "mor")
+    txlog.create(df, cow)
+    txlog.create(df, mor)
+    txlog.delete_where(spark, cow, F.col("v") > 25)
+    txlog.delete_where_dv(spark, mor, F.col("v") > 25)
+
+    def rows(p):
+        return sorted(tuple(r) for r in txlog.snapshot(spark, p).collect())
+
+    assert rows(cow) == rows(mor) == [(1, 10), (2, None)]
+
+
+def _every_kind_table(spark, tmp_path) -> str:
+    """A small table whose log holds every action kind: add/remove,
+    add_dv/remove_dv, constraint, rename, drop_column, index, txn
+    and mtxn."""
+    path = str(tmp_path / "t")
+    df = spark.range(8).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 10).alias("v"),
+        (F.col("id") * 100).alias("w"),
+        F.lit(1).cast("long").alias("x"),
+    )
+    txlog.create(df.repartitionByRange(2, "k"), path)
+    txlog.append(df.filter(F.col("k") < 2).withColumn("k", F.col("k") + 100), path)
+    txlog.delete_where(spark, path, F.col("k") == 7)              # remove + add
+    pre_dv = txlog.delete_where_dv(spark, path, F.col("k") == 1) - 1
+    txlog.restore(path, pre_dv)                                   # remove_dv
+    txlog.delete_where_dv(spark, path, F.col("k") == 2)           # live add_dv
+    txlog.set_constraint(path, "k_pos", "k >= 0")
+    txlog.rename_column(path, "v", "vv")
+    txlog.drop_column(path, "w")
+    txlog.attach_bloom(spark, path, "k")
+    batch = spark.createDataFrame([(200, 1, 1)], "k long, vv long, x long")
+    txlog.append_idempotent(batch.coalesce(1), path, "ingest", 3)
+    txlog.commit_multi([(batch.coalesce(1), path)], str(tmp_path))
+    return path
+
+
+def test_checkpoint_and_clone_round_trip_every_action_kind(spark, tmp_path):
+    """A checkpoint is the replayed state written back, and a clone is
+    the source's state with its paths rebased: replaying either must
+    give back the same state, kind by kind. A checkpoint or clone that
+    loses an action kind fails here."""
+    import dataclasses
+
+    path = _every_kind_table(spark, tmp_path)
+    st = txlog._replay(path)
+    kinds = set()
+    for v in range(st.version + 1):
+        with open(txlog._commit_path(path, v)) as f:
+            kinds.update(k for a in json.load(f)["actions"] for k in a)
+    assert kinds == {
+        "add", "remove", "add_dv", "remove_dv", "constraint", "rename",
+        "drop_column", "index", "txn", "mtxn",
+    }
+    # ...and every kind of state is non-empty
+    assert st.adds and st.dvs and st.constraints and st.blooms
+    assert st.txns == {"ingest": 3} and len(st.mtxns) == 1
+    assert [next(iter(a)) for a in st.schema] == ["rename", "drop_column"]
+    rows = sorted(map(tuple, txlog.snapshot(spark, path).collect()))
+
+    txlog.checkpoint_log(path)
+    assert txlog._read_log(path)[0]["version"] == st.version  # replays from it
+    after = txlog._replay(path)
+    assert after == st and list(after.adds) == list(st.adds)
+    assert sorted(map(tuple, txlog.snapshot(spark, path).collect())) == rows
+
+    dst = str(tmp_path / "clone")
+    txlog.clone(path, dst)
+
+    def rebase(p):
+        return os.path.relpath(txlog._abs(path, p), dst)
+
+    def moved(entry):
+        return {**entry, "path": rebase(entry["path"])}
+
+    want = dataclasses.replace(
+        st,
+        version=0,
+        adds={rebase(p): moved(a) for p, a in st.adds.items()},
+        dvs={rebase(p): moved(d) for p, d in st.dvs.items()},
+        blooms={(rebase(p), c): moved(i) for (p, c), i in st.blooms.items()},
+    )
+    got = txlog._replay(dst)
+    assert got == want and list(got.adds) == list(want.adds)
+    assert sorted(map(tuple, txlog.snapshot(spark, dst).collect())) == rows
+
+
+def test_checkpoint_round_trips_partitioning(spark, tmp_path):
+    path = str(tmp_path / "p")
+    df = spark.range(6).select("id", (F.col("id") % 2).cast("int").alias("b"))
+    txlog.create_partitioned(df, path, ["b"])
+    txlog.append(df.filter(F.col("id") < 2), path)
+    st = txlog._replay(path)
+    assert st.partitioning["cols"] == ["b"]
+    txlog.checkpoint_log(path)
+    assert txlog._read_log(path)[0]["version"] == st.version
+    assert txlog._replay(path) == st
+
+
+def test_public_ops_replay_the_log_once(spark, tmp_path, monkeypatch):
+    """A public operation replays the log once and passes the state
+    down; a commit replays once more per attempt, because a lost race
+    needs a fresh log."""
+    path = str(tmp_path / "t")
+    o = _orders(spark)
+    txlog.create(o.filter(F.col("o_orderkey") < 200).repartitionByRange(2, "o_orderkey"), path)
+    reads = []
+    real = txlog._read_log
+    monkeypatch.setattr(
+        txlog, "_read_log", lambda *a, **k: reads.append(1) or real(*a, **k)
+    )
+
+    def count(fn) -> int:
+        reads.clear()
+        fn()
+        return len(reads)
+
+    assert count(lambda: txlog.snapshot(spark, path)) == 1
+    assert count(lambda: txlog.append(o.filter(F.col("o_orderkey") >= 200), path)) == 2
+    src = o.filter(F.col("o_orderkey") < 20)
+    assert count(lambda: txlog.merge_upsert(spark, path, src, ["o_orderkey"])) == 2
+    assert count(lambda: txlog.delete_where(spark, path, F.col("o_orderkey") < 10)) == 2

@@ -71,7 +71,7 @@ def test_time_travel_and_checkpoint_preserve_partitioning(spark, ptable):
     snap = txlog.snapshot(spark, path)
     assert snap.count() == 200
     assert "bucket" in snap.columns  # spec survived the collapse
-    assert txlog._partitioning(path)["cols"] == ["bucket", "grp"]
+    assert txlog._replay(path).partitioning["cols"] == ["bucket", "grp"]
 
 
 def test_append_requires_partition_columns(spark, ptable):
@@ -178,7 +178,7 @@ def test_maintain_compacts_partitioned_tables_per_partition(spark, ptable):
     assert decisions["compact_small"]["triggered"]
     # every partition is now at the 1-file target; values intact
     for key, adds in txlog._group_adds_by_partition(
-        txlog._live_adds(path)
+        txlog._replay(path).adds.values()
     ).items():
         assert len(adds) == 1, key
     assert _vals(txlog.snapshot(spark, path)) == _vals(exp)
@@ -204,7 +204,7 @@ def test_maintain_clustered_sort_runs_per_partition_zorder_refused(spark, ptable
     decisions = {d["action"]: d for d in txlog.maintain(spark, path, policy)}
     assert decisions["compact_cluster"]["triggered"]
     for key, adds in txlog._group_adds_by_partition(
-        txlog._live_adds(path)
+        txlog._replay(path).adds.values()
     ).items():
         assert len(adds) == 1, key
         st = adds[0].get("stats", {})
@@ -241,7 +241,7 @@ def test_append_idempotent_routes_partition_values(spark, ptable):
     )
     txlog.append_idempotent(batch.coalesce(1), path, "app1", 0)
     # every live add carries the full partition key
-    for a in txlog._live_adds(path):
+    for a in txlog._replay(path).adds.values():
         assert set(a.get("partitionValues", {})) == {"bucket", "grp"}
     # pruned read sees the new rows
     pr = txlog.snapshot_partition_pruned(spark, path, {"bucket": 1, "grp": "g1"})
@@ -280,7 +280,7 @@ def test_commit_multi_routes_partition_values(spark, ptable):
         [(batch_p.coalesce(1), path), (batch_u.coalesce(1), plain)], root
     )
     # all live adds on the partitioned table carry the key
-    for a in txlog._live_adds(path):
+    for a in txlog._replay(path).adds.values():
         assert set(a.get("partitionValues", {})) == {"bucket", "grp"}
     snap = txlog.snapshot(spark, path)
     assert snap.filter(F.col("id") >= 500).count() == 10
@@ -308,7 +308,7 @@ def test_boolean_partition_values_normalize(spark):
     )
     txlog.create_partitioned(df.coalesce(1), path, ["flag"])
     stored = {
-        a["partitionValues"]["flag"] for a in txlog._live_adds(path)
+        a["partitionValues"]["flag"] for a in txlog._replay(path).adds.values()
     }
     assert stored == {"true", "false"}
     pr = txlog.snapshot_partition_pruned(spark, path, {"flag": True})
@@ -337,7 +337,7 @@ def test_float_partition_values_require_stored_strings(spark):
     with pytest.raises(ValueError, match="directory string"):
         txlog.partition_files(path, {"x": 1.0})
     stored = sorted(
-        a["partitionValues"]["x"] for a in txlog._live_adds(path)
+        a["partitionValues"]["x"] for a in txlog._replay(path).adds.values()
     )
     assert len(txlog.partition_files(path, {"x": stored[0]})) == 1
     # boolean value against a non-boolean column raises
