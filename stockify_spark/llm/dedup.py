@@ -1347,7 +1347,7 @@ def repeated_substring_spans(
     tests/test_dedup.py). The same trade applies at the other
     corpus-sized materializations in this family:
     :func:`keepone_substring_spans` (also conf-switched),
-    registry_ext4's tfidf term frame, and registry_ext37's CDC
+    text_tfidf_topk's term frame, and pipeline_cdc_chunk_dedup's CDC
     chunk stream."""
     L = min_tokens
     df = _spread_small_scan(df)

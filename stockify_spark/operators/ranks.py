@@ -27,7 +27,7 @@ parquet doubles both faces group on):
 At 100 TB the fact-side cost is one groupBy shuffle; the
 single-partition stage carries |distinct values| rows.  If value
 cardinality itself outgrows a task, the chunked-prefix-scan
-recursion (``stats_runs_test_chunked``, registry_ext81) applies to
+recursion (``stats_runs_test_chunked``, queries/stats.py) applies to
 step 2 unchanged — chunk the value domain, prefix-sum the per-chunk
 counts driver-side.
 

@@ -14,38 +14,18 @@ Conventions that make the differential comparison deterministic:
   * rankings always carry a unique tiebreaker column;
   * per-row arithmetic (same IEEE ops, same order) is left exact.
 
-Reference-parity queries run against the star-schema tables
-(TESTDATA.md) with ``lineitem`` standing in for the reference's
-``stocks`` table: the reference's literals (volume >= 1e6 etc.,
-stockify.cu:229,274) are re-chosen inside each column's actual range
-so every comparator is exercised at selectivity strictly between
-0 and 1 (FIXTURES.md), plus one empty-result probe.
+The queries live in ``stockify_spark/queries/``, one module per
+domain; each registers its queries with :func:`register` on import.
 """
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from stockify_spark.operators import (
-    compare,
-    filter_rows,
-    selection_vector,
-    global_agg,
-    group_agg,
-    moving_average,
-    rolling_min,
-    rolling_max,
-    sliding_agg,
-    top_k,
-    top_k_per_group,
-    range_scan,
-)
-from stockify_spark.operators.aggregates import cube_agg, rollup_agg, summary_stats
-from stockify_spark.operators.joins import anti_join, dim_join, fact_join, semi_join
-from stockify_spark.operators.setops import except_, intersect, union_all
 from stockify_spark.sources.io import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -81,464 +61,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-# ---------------------------------------------------------------------------
-# F1-F6 — filters (SURVEY §2.2). Full comparator algebra + composition.
-# ---------------------------------------------------------------------------
+# Every module of the ``queries`` package registers its domain's
+# queries on import. pkgutil lists them sorted by name; the driver
+# order is __spark_entry__._PRIORITY, not this import order.
+from stockify_spark import queries  # noqa: E402
 
-@register(
-    "filter_ge",
-    "SELECT * FROM lineitem WHERE l_quantity >= 25",
-)
-def filter_ge(spark, sf_dir):
-    """F1-F5 shape: col >= literal (filterStocksBy*, stockify.cu:89-116)."""
-    return filter_rows(_t(spark, sf_dir, "lineitem"), compare("l_quantity", "ge", 25.0))
-
-
-@register(
-    "filter_gt",
-    "SELECT * FROM lineitem WHERE l_extendedprice > 50000",
-)
-def filter_gt(spark, sf_dir):
-    return filter_rows(_t(spark, sf_dir, "lineitem"), compare("l_extendedprice", "gt", 50000.0))
-
-
-@register(
-    "filter_lt",
-    "SELECT * FROM lineitem WHERE l_discount < 0.03",
-)
-def filter_lt(spark, sf_dir):
-    return filter_rows(_t(spark, sf_dir, "lineitem"), compare("l_discount", "lt", 0.03))
-
-
-@register(
-    "filter_le",
-    "SELECT * FROM lineitem WHERE l_quantity <= 10",
-)
-def filter_le(spark, sf_dir):
-    return filter_rows(_t(spark, sf_dir, "lineitem"), compare("l_quantity", "le", 10.0))
-
-
-@register(
-    "filter_eq",
-    "SELECT * FROM lineitem WHERE l_linenumber = 3",
-)
-def filter_eq(spark, sf_dir):
-    return filter_rows(_t(spark, sf_dir, "lineitem"), compare("l_linenumber", "eq", 3))
-
-
-@register(
-    "filter_ne",
-    "SELECT * FROM lineitem WHERE l_returnflag <> 'N'",
-)
-def filter_ne(spark, sf_dir):
-    return filter_rows(_t(spark, sf_dir, "lineitem"), compare("l_returnflag", "ne", "N"))
-
-
-@register(
-    "filter_and",
-    "SELECT * FROM lineitem WHERE l_quantity >= 25 AND l_discount >= 0.05",
-)
-def filter_and(spark, sf_dir):
-    """F6: conjunctive filter (stockify.cu:119-122), generalized to
-    n-ary via filter_rows."""
-    return filter_rows(
-        _t(spark, sf_dir, "lineitem"),
-        compare("l_quantity", "ge", 25.0),
-        compare("l_discount", "ge", 0.05),
-    )
-
-
-@register(
-    "filter_or_not",
-    "SELECT * FROM lineitem WHERE l_returnflag = 'R' OR NOT (l_quantity < 40)",
-)
-def filter_or_not(spark, sf_dir):
-    """OR/NOT composition — declared intent at stockify.cu:78-81."""
-    df = _t(spark, sf_dir, "lineitem")
-    return df.filter(compare("l_returnflag", "eq", "R") | ~compare("l_quantity", "lt", 40.0))
-
-
-@register(
-    "filter_empty",
-    "SELECT * FROM lineitem WHERE l_extendedprice >= 1e9",
-)
-def filter_empty(spark, sf_dir):
-    """Empty-result probe (FIXTURES.md: selectivity-0 edge)."""
-    return filter_rows(_t(spark, sf_dir, "lineitem"), compare("l_extendedprice", "ge", 1e9))
-
-
-@register(
-    "filter_selection_vector",
-    "SELECT l_orderkey, l_linenumber, l_quantity, l_quantity >= 25 AS flag FROM lineitem",
-)
-def filter_selection_vector(spark, sf_dir):
-    """The reference's uncompacted bool-per-row output surface
-    (bool* results, stockify.cu:89-92)."""
-    df = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity")
-    return selection_vector(df, compare("l_quantity", "ge", 25.0))
-
-
-# ---------------------------------------------------------------------------
-# A1-A4 — global aggregates (SURVEY §2.3). Spark's partial/final
-# HashAggregate replaces the reference's atomicAdd + host reduce.
-# ---------------------------------------------------------------------------
-
-@register(
-    "agg_sum",
-    "SELECT ROUND(SUM(l_extendedprice), 2) AS sum_price FROM lineitem",
-)
-def agg_sum(spark, sf_dir):
-    """A1 (sumLowPrice, stockify.cu:135-138) — double, not float32."""
-    return global_agg(
-        _t(spark, sf_dir, "lineitem"),
-        F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
-    )
-
-
-@register(
-    "agg_min_max",
-    "SELECT MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty,"
-    " MIN(l_extendedprice) AS min_price, MAX(l_extendedprice) AS max_price FROM lineitem",
-)
-def agg_min_max(spark, sf_dir):
-    """A2/A3 (stockify.cu:556-562, 599-605)."""
-    return global_agg(
-        _t(spark, sf_dir, "lineitem"),
-        F.min("l_quantity").alias("min_qty"),
-        F.max("l_quantity").alias("max_qty"),
-        F.min("l_extendedprice").alias("min_price"),
-        F.max("l_extendedprice").alias("max_price"),
-    )
-
-
-@register(
-    "agg_stats",
-    "SELECT ROUND(SUM(l_extendedprice), 2) AS sum, MIN(l_extendedprice) AS min,"
-    " MAX(l_extendedprice) AS max, COUNT(l_extendedprice) AS count,"
-    " ROUND(AVG(l_extendedprice), 6) AS avg FROM lineitem",
-)
-def agg_stats(spark, sf_dir):
-    """A1-A3 + the free count/avg extensions in one pass."""
-    df = summary_stats(_t(spark, sf_dir, "lineitem"), "l_extendedprice")
-    return df.select(
-        F.round("sum", 2).alias("sum"),
-        "min",
-        "max",
-        "count",
-        F.round("avg", 6).alias("avg"),
-    )
-
-
-@register(
-    "agg_filtered",
-    "SELECT ROUND(SUM(l_extendedprice), 2) AS sum_price, COUNT(*) AS cnt"
-    " FROM lineitem WHERE l_quantity >= 25",
-)
-def agg_filtered(spark, sf_dir):
-    """Filter + aggregate fused in one plan — experiments 1.x + 2.a
-    composed; the filter is pushed into the scan, the aggregate is
-    partial/final."""
-    return global_agg(
-        filter_rows(_t(spark, sf_dir, "lineitem"), compare("l_quantity", "ge", 25.0)),
-        F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
-
-
-@register(
-    "agg_count_distinct",
-    "SELECT COUNT(DISTINCT l_orderkey) AS n_orders,"
-    " COUNT(DISTINCT l_returnflag) AS n_flags, COUNT(*) AS n_rows FROM lineitem",
-)
-def agg_count_distinct(spark, sf_dir):
-    return global_agg(
-        _t(spark, sf_dir, "lineitem"),
-        F.countDistinct("l_orderkey").alias("n_orders"),
-        F.countDistinct("l_returnflag").alias("n_flags"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# W1-W3 — sliding windows (SURVEY §2.4): frame [CURRENT ROW, +9], row
-# order materialized as event_id (the reference's implicit file order,
-# made explicit per §7.4.1). Global-order variant at test scale;
-# partitioned variants below are the production shape.
-# ---------------------------------------------------------------------------
-
-_W_FRAME_SQL = "OVER (ORDER BY event_id ROWS BETWEEN CURRENT ROW AND 9 FOLLOWING)"
-
-
-@register(
-    "window_moving_avg",
-    f"SELECT event_id, ROUND(AVG(value) {_W_FRAME_SQL}, 6) AS moving_avg FROM events",
-)
-def window_moving_avg(spark, sf_dir):
-    """W1 (getMovingAverage intent, stockify.cu:513-521). Tail frames
-    shrink (SQL standard) — the reference's OOB tail reads
-    (stockify.cu:146) are a documented bug, not reproduced."""
-    df = _t(spark, sf_dir, "events").select("event_id", "value")
-    out = moving_average(df, "value", order_by=["event_id"], window_size=10)
-    return out.select("event_id", F.round("moving_avg", 6).alias("moving_avg"))
-
-
-@register(
-    "window_rolling_min",
-    f"SELECT event_id, MIN(value) {_W_FRAME_SQL} AS rolling_min FROM events",
-)
-def window_rolling_min(spark, sf_dir):
-    """W2 (getMinLowPrice, stockify.cu:153-162); oracle compares the
-    full per-row column, not the vacuous min-of-mins (§5.1)."""
-    df = _t(spark, sf_dir, "events").select("event_id", "value")
-    return rolling_min(df, "value", order_by=["event_id"], window_size=10).select(
-        "event_id", "rolling_min"
-    )
-
-
-@register(
-    "window_rolling_max",
-    f"SELECT event_id, MAX(value) {_W_FRAME_SQL} AS rolling_max FROM events",
-)
-def window_rolling_max(spark, sf_dir):
-    """W3 (getMaxHighPrice, stockify.cu:170-193)."""
-    df = _t(spark, sf_dir, "events").select("event_id", "value")
-    return rolling_max(df, "value", order_by=["event_id"], window_size=10).select(
-        "event_id", "rolling_max"
-    )
-
-
-@register(
-    "window_partitioned_sum",
-    "SELECT event_id, user_id, ROUND(SUM(value) OVER (PARTITION BY user_id"
-    " ORDER BY ts, event_id ROWS BETWEEN 9 PRECEDING AND CURRENT ROW), 6)"
-    " AS trailing_sum FROM events",
-)
-def window_partitioned_sum(spark, sf_dir):
-    """Production window shape: PARTITION BY bounds per-task state and
-    parallelizes WindowExec across users (SURVEY §7.4.1)."""
-    df = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
-    out = sliding_agg(
-        df,
-        F.sum("value"),
-        "trailing_sum",
-        order_by=["ts", "event_id"],
-        partition_by=["user_id"],
-        window_size=10,
-        forward=False,
-    )
-    return out.select("event_id", "user_id", F.round("trailing_sum", 6).alias("trailing_sum"))
-
-
-@register(
-    "window_running_total",
-    "SELECT event_id, user_id, ROUND(SUM(value) OVER (PARTITION BY user_id"
-    " ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6)"
-    " AS running_total FROM events",
-)
-def window_running_total(spark, sf_dir):
-    df = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.select(
-        "event_id",
-        "user_id",
-        F.round(F.sum("value").over(w), 6).alias("running_total"),
-    )
-
-
-@register(
-    "window_rank",
-    "SELECT o_orderkey, o_orderpriority,"
-    " RANK() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC) AS rnk,"
-    " DENSE_RANK() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC) AS drnk,"
-    " ROW_NUMBER() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey) AS rn"
-    " FROM orders",
-)
-def window_rank(spark, sf_dir):
-    """Ranking functions (absent from reference, §2.4 note; free in
-    Spark). row_number carries a unique tiebreaker for determinism."""
-    df = _t(spark, sf_dir, "orders")
-    by_price = Window.partitionBy("o_orderpriority").orderBy(F.col("o_totalprice").desc())
-    stable = Window.partitionBy("o_orderpriority").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return df.select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.rank().over(by_price).cast("long").alias("rnk"),
-        F.dense_rank().over(by_price).cast("long").alias("drnk"),
-        F.row_number().over(stable).cast("long").alias("rn"),
-    )
-
-
-@register(
-    "window_lag_lead",
-    "SELECT event_id, user_id, value,"
-    " LAG(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_value,"
-    " LEAD(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_value"
-    " FROM events",
-)
-def window_lag_lead(spark, sf_dir):
-    df = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return df.select(
-        "event_id",
-        "user_id",
-        "value",
-        F.lag("value").over(w).alias("prev_value"),
-        F.lead("value").over(w).alias("next_value"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# X1-X5 — sort / top-k / range scan (SURVEY §2.5, §4.3).
-# ---------------------------------------------------------------------------
-
-@register(
-    "topk_orders",
-    "SELECT o_orderkey, o_totalprice FROM orders"
-    " ORDER BY o_totalprice DESC, o_orderkey LIMIT 100",
-)
-def topk_orders(spark, sf_dir):
-    """ORDER BY + LIMIT → TakeOrderedAndProject (per-partition heaps,
-    k-row driver merge; no global sort at any scale)."""
-    df = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    return top_k(df, 100, F.col("o_totalprice").desc(), F.col("o_orderkey"))
-
-
-@register(
-    "topk_per_group",
-    "SELECT * FROM (SELECT o_orderkey, o_orderpriority, o_totalprice,"
-    " ROW_NUMBER() OVER (PARTITION BY o_orderpriority"
-    " ORDER BY o_totalprice DESC, o_orderkey) AS rn FROM orders) WHERE rn <= 3",
-)
-def topk_per_group_q(spark, sf_dir):
-    df = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority", "o_totalprice")
-    return top_k_per_group(
-        df,
-        ["o_orderpriority"],
-        3,
-        F.col("o_totalprice").desc(),
-        F.col("o_orderkey"),
-    )
-
-
-@register(
-    "range_scan_price",
-    "SELECT * FROM lineitem WHERE l_extendedprice >= 95000",
-)
-def range_scan_price(spark, sf_dir):
-    """Experiment-3 probe shape (volume >= 1.8e6, stockify.cu:674) on
-    the stand-in column; over a sorted layout this is row-group-
-    skipped (bench measures the ratio, BASELINE.md E2)."""
-    return range_scan(_t(spark, sf_dir, "lineitem"), "l_extendedprice", 95000.0)
-
-
-# Extension queries (groupby/joins/setops/functions/streaming/LLM) —
-# imported last so they register into the same QUERIES/ORACLE dicts.
-from stockify_spark import registry_ext  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext2  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext3  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext4  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext5  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext6  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext7  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext8  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext9  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext10  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext11  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext12  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext13  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext14  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext15  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext16  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext17  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext18  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext19  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext20  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext21  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext22  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext23  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext24  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext25  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext26  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext27  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext28  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext29  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext30  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext31  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext32  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext33  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext34  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext35  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext36  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext37  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext38  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext39  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext40  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext41  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext42  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext43  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext44  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext45  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext46  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext47  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext48  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext49  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext50  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext51  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext52  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext53  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext54  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext55  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext56  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext57  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext58  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext59  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext60  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext61  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext62  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext63  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext64  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext65  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext66  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext67  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext68  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext69  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext70  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext71  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext72  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext73  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext74  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext75  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext76  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext77  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext78  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext79  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext80  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext81  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext82  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext83  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext84  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext85  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext86  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext87  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext88  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext89  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext90  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext91  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext92  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext93  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext94  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext95  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext96  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext97  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext98  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext99  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext100  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext101  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext102  # noqa: E402,F401  (registration side effect)
-from stockify_spark import registry_ext103  # noqa: E402,F401  (registration side effect)
+for _mod in pkgutil.iter_modules(queries.__path__):
+    importlib.import_module(f"{queries.__name__}.{_mod.name}")

@@ -10,6 +10,8 @@ and (b) Experiment 3's in-process ``rand()`` generator
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,6 +43,27 @@ def stocks_ramp(spark: SparkSession, cycles: int = 100, num_partitions: int | No
     )
 
 
+# The ramp's oracle face: ``stocks_ramp(spark, cycles=RAMP_CYCLES)``
+# as DuckDB SQL, column for column (tests/test_fixtures.py pins the
+# two together). Oracles read it as the CTE ``stocks``; queries that
+# need several series split it into symbols of RAMP_SERIES_LEN rows
+# (``row_id // RAMP_SERIES_LEN``). Literals like 10.0 are DECIMAL in
+# DuckDB, so the prices CAST to DOUBLE to match the double columns.
+RAMP_CYCLES = 100
+RAMP_ROWS = RAMP_CYCLES * RAMP_PERIOD
+RAMP_SERIES_LEN = 180
+RAMP_SQL = (
+    "SELECT i AS row_id,"
+    f" strftime(DATE '2024-01-01' + CAST(i % {RAMP_PERIOD} AS INTEGER), '%Y-%m-%d') AS date,"
+    f" CAST(500 + (i % {RAMP_PERIOD}) * 10 AS DOUBLE) AS close,"
+    f" CAST(1200000 + (i % {RAMP_PERIOD}) * 100000 AS DOUBLE) AS volume,"
+    f" CAST(450 + (i % {RAMP_PERIOD}) * 10 AS DOUBLE) AS open,"
+    f" CAST(510 + (i % {RAMP_PERIOD}) * 10 AS DOUBLE) AS high,"
+    f" CAST(440 + (i % {RAMP_PERIOD}) * 10 AS DOUBLE) AS low"
+    f" FROM range({RAMP_ROWS}) t(i)"
+)
+
+
 def stocks_rand(spark: SparkSession, n: int = 100_000, seed: int = 42, num_partitions: int | None = None) -> DataFrame:
     """Experiment 3's random table (stockify.cu:647-657), seeded.
 
@@ -67,7 +90,7 @@ def stocks_rand(spark: SparkSession, n: int = 100_000, seed: int = 42, num_parti
 
 
 # Derived-partsupp hash constants — the SINGLE definition. The DuckDB
-# oracle CTE (registry_ext7._PS_CTE) interpolates these same values,
+# oracle CTE (queries/tpch.py _PS_CTE) interpolates these same values,
 # so the Spark expressions and the oracle SQL cannot drift apart
 # silently (an edit here changes both sides together).
 PS_QTY_MUL_PART, PS_QTY_MUL_SUPP, PS_QTY_MOD = 7, 13, 9999
@@ -126,3 +149,61 @@ def derive_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
         ps_availqty_expr("ps_partkey", "ps_suppkey").alias("ps_availqty"),
         ps_supplycost_expr("ps_partkey", "ps_suppkey").alias("ps_supplycost"),
     )
+
+
+def _scratch_table(sf_dir: str, tag: str, build, src_file: str = "orders.parquet") -> str:
+    """Deterministic scratch txlog table keyed on (tag, sf_dir,
+    source fingerprint), built once and REUSED by later invocations —
+    repeated driver verification and bench iterations previously
+    mkdtemp'd a fresh parquet copy of orders per call and never
+    cleaned up (unbounded /tmp growth; the dirs can't be deleted
+    eagerly because the returned plan reads them lazily).
+
+    The key includes a FINGERPRINT of the source parquet (size +
+    mtime of orders.parquet): the test data has been regenerated in
+    place across rounds, and a cache keyed on the
+    path alone would keep serving tables built from data that no
+    longer exists while the oracle reads the new parquet — every
+    txlog query would hash-mismatch with no local signal. A new
+    vintage gets a new directory; stale vintages and orphaned
+    staging dirs of the same (tag, sf) are swept on the way.
+
+    The build lands in a unique staging dir and is os.rename'd into
+    place, so a concurrent build of the same table can't observe a
+    half-built lifecycle: one rename wins, the loser's staging copy
+    is discarded."""
+    import glob as _glob
+    import shutil
+    import tempfile
+    import uuid as _uuid
+
+    key = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
+    # fingerprint the parquet the BUILD actually reads (callers whose
+    # scripted history reads a different table pass it via src_file —
+    # a stale cache keyed on the wrong source would keep serving a
+    # table built from data the oracle no longer sees)
+    src = os.path.join(sf_dir, src_file)
+    st = os.stat(src)
+    fp = f"{st.st_size:x}.{st.st_mtime_ns:x}"
+    base = os.path.join(tempfile.gettempdir(), f"stockify_txlog_{tag}_{key}")
+    path = f"{base}_{fp}"
+    if os.path.exists(os.path.join(path, "_COMPLETE")):
+        return path
+    # sweep stale vintages (and their crashed builds' staging
+    # dirs); never touch the CURRENT fingerprint's namespace — a
+    # concurrent build of the same vintage may be mid-write there
+    for old in _glob.glob(base + "_*"):
+        if not old.startswith(path):
+            shutil.rmtree(old, ignore_errors=True)
+    staging = path + ".staging." + _uuid.uuid4().hex
+    try:
+        build(staging)
+        with open(os.path.join(staging, "_COMPLETE"), "w") as f:
+            f.write("ok")
+        try:
+            os.rename(staging, path)
+        except OSError:  # lost the race — another process built it
+            pass
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    return path

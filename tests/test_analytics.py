@@ -1,5 +1,6 @@
-"""Semantics tests for the fifth extension wave
-(stockify_spark/registry_ext5.py): sessionization boundaries, EWMA
+"""Semantics tests for the classic-analytics queries (queries: aggregates,
+events, filters, graph, orders, pipeline, text, txlog, windows):
+sessionization boundaries, EWMA
 renormalization at series starts, drawdown monotonicity, skyline
 dominance, and the HLL sketch-union tolerance contract. The
 cross-engine value check lives in tools/check_oracle.py; these pin

@@ -97,7 +97,7 @@ def test_cms_never_underestimates_and_conserves_mass(spark):
 def test_geo_banding_equals_bruteforce(spark):
     """Latitude banding (band width > radius, ±1 neighbor) must not
     lose any pair the exact cross-join haversine filter admits."""
-    from stockify_spark.registry_ext10 import _haversine_km, _GEO_R_KM
+    from stockify_spark.queries.events import _haversine_km, _GEO_R_KM
 
     got = {
         (r.c_custkey, r.s_suppkey)
@@ -274,12 +274,7 @@ def test_kcore_converges_and_survivors_keep_degree(spark):
     """The bounded-round contract is only the k-core because the peel
     has CONVERGED by round 10: round 11 must remove nothing, and every
     survivor must keep induced degree >= k within the surviving set."""
-    from stockify_spark.registry_ext10 import (
-        _KCORE_K,
-        _KCORE_ROUNDS,
-        _kcore_peel,
-        _kcore_sym_edges,
-    )
+    from stockify_spark.queries.graph import _KCORE_K, _KCORE_ROUNDS, _kcore_peel, _kcore_sym_edges
 
     sym = _kcore_sym_edges(spark, SF01)
     n10 = {r.node for r in _kcore_peel(sym, _KCORE_K, _KCORE_ROUNDS).collect()}

@@ -1,4 +1,4 @@
-"""Pins for the round-13 scoring/tails wave (registry_ext100).
+"""Pins for the round-13 scoring/tails wave (queries: events, ml, orders, stats).
 
 Hill and scorecard tests run at SF_SMALL (sf0.01): the Hill
 estimator needs > k+1 = 31 user series and sf0.001 has 15.
@@ -14,7 +14,7 @@ from tests.conftest import SF_SMALL, SF_SMOKE
 
 def test_scorecard_woe_iv_python_recompute(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext100 import orders_credit_scorecard
+    from stockify_spark.queries.orders import orders_credit_scorecard
 
     rows = _t(spark, SF_SMALL, "orders").select(
         "o_totalprice", "o_orderstatus"
@@ -59,7 +59,7 @@ def test_auc_equals_pair_counting(spark):
     from pyspark.sql import functions as F
 
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext100 import stats_gini_auc
+    from stockify_spark.queries.stats import stats_gini_auc
 
     rows = _t(spark, SF_SMOKE, "orders").select(
         "o_totalprice", "o_orderstatus"
@@ -85,7 +85,7 @@ def test_auc_equals_pair_counting(spark):
 
 def test_hill_estimator_matches_python_and_recovers_pareto(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext100 import events_power_law_hill
+    from stockify_spark.queries.events import events_power_law_hill
 
     counts = Counter()
     for r in _t(spark, SF_SMALL, "events").select("user_id").collect():
@@ -115,7 +115,7 @@ def test_nearest_centroid_matches_numpy(spark):
     import numpy as np
 
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext100 import ml_nearest_centroid
+    from stockify_spark.queries.ml import ml_nearest_centroid
 
     rows = _t(spark, SF_SMOKE, "embeddings").collect()
     by_label = defaultdict(list)

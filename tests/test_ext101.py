@@ -1,5 +1,5 @@
 """Pins for the round-13 paired/blocked statistics wave
-(registry_ext101)."""
+(queries: functions, orders, stats, windows)."""
 
 from __future__ import annotations
 
@@ -26,7 +26,7 @@ def _events(spark):
 
 
 def test_wilcoxon_matches_python(spark):
-    from stockify_spark.registry_ext101 import stats_wilcoxon_signed_rank
+    from stockify_spark.queries.stats import stats_wilcoxon_signed_rank
 
     series = defaultdict(list)
     for r in _events(spark):
@@ -56,7 +56,7 @@ def test_wilcoxon_matches_python(spark):
 
 
 def test_friedman_matches_python_and_blocks_cancel_user_levels(spark):
-    from stockify_spark.registry_ext101 import stats_friedman
+    from stockify_spark.queries.stats import stats_friedman
 
     cell = defaultdict(dict)
     for r in _events(spark):
@@ -90,7 +90,7 @@ def test_elasticity_is_the_ols_slope(spark):
     from pyspark.sql import functions as F
 
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext101 import orders_price_elasticity
+    from stockify_spark.queries.orders import orders_price_elasticity
 
     li = _t(spark, SF_SMOKE, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice"
@@ -120,7 +120,7 @@ def test_elasticity_is_the_ols_slope(spark):
 
 
 def test_mh_odds_ratio_pools_between_stratum_ors(spark):
-    from stockify_spark.registry_ext101 import stats_odds_ratio_mh
+    from stockify_spark.queries.stats import stats_odds_ratio_mh
 
     rows = stats_odds_ratio_mh(spark, SF_SMOKE).collect()
     assert len(rows) == 5
@@ -132,7 +132,7 @@ def test_mh_odds_ratio_pools_between_stratum_ors(spark):
 
 
 def test_m4_preserves_extremes_and_endpoints(spark):
-    from stockify_spark.registry_ext101 import window_downsample_m4
+    from stockify_spark.queries.windows import window_downsample_m4
 
     series = defaultdict(list)
     for r in _events(spark):
@@ -160,7 +160,7 @@ def test_m4_preserves_extremes_and_endpoints(spark):
 
 def test_business_days_matches_calendar_walk(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext101 import fn_business_days
+    from stockify_spark.queries.functions import fn_business_days
 
     orders = {
         r.o_orderkey: r.o_orderdate

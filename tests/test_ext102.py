@@ -1,4 +1,4 @@
-"""Pins for the round-13 reliability wave (registry_ext102)."""
+"""Pins for the round-13 reliability wave (queries/stats.py)."""
 
 from __future__ import annotations
 
@@ -30,7 +30,7 @@ def _var(xs):
 
 
 def test_cronbach_alpha_matches_python_and_variance_identity(spark):
-    from stockify_spark.registry_ext102 import stats_cronbach_alpha
+    from stockify_spark.queries.stats import stats_cronbach_alpha
 
     blocks = _blocks(spark)
     types = sorted(next(iter(blocks.values())))
@@ -50,7 +50,7 @@ def test_cronbach_alpha_matches_python_and_variance_identity(spark):
 
 
 def test_icc_matches_anova_decomposition(spark):
-    from stockify_spark.registry_ext102 import stats_icc
+    from stockify_spark.queries.stats import stats_icc
 
     blocks = _blocks(spark)
     n, k = len(blocks), 5

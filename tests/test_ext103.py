@@ -1,4 +1,4 @@
-"""Pins for the round-13 pipeline-health wave (registry_ext103)."""
+"""Pins for the round-13 pipeline-health wave (queries: pipeline, similarity, stats)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ from tests.conftest import SF_SMOKE
 def test_dedup_impact_consistent_with_dedup_exact(spark):
     from stockify_spark.llm.dedup import exact_dedup
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext103 import pipeline_dedup_impact
+    from stockify_spark.queries.pipeline import pipeline_dedup_impact
 
     docs = _t(spark, SF_SMOKE, "documents").select("doc_id", "text").collect()
     groups = Counter(r.text for r in docs)
@@ -39,7 +39,7 @@ def test_embedding_health_matches_numpy(spark):
     import numpy as np
 
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext103 import sim_embedding_health
+    from stockify_spark.queries.similarity import sim_embedding_health
 
     by_label = defaultdict(list)
     for r in _t(spark, SF_SMOKE, "embeddings").collect():
@@ -64,7 +64,7 @@ def test_embedding_health_matches_numpy(spark):
 
 def test_cohens_d_matches_python_and_g_shrinks(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext103 import stats_cohens_d
+    from stockify_spark.queries.stats import stats_cohens_d
 
     rows = _t(spark, SF_SMOKE, "events").select("event_type", "value").collect()
     a = [r.value for r in rows if r.event_type == "click"]
@@ -95,7 +95,7 @@ def test_bland_altman_matches_python(spark):
     from pyspark.sql import functions as F
 
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext103 import stats_bland_altman
+    from stockify_spark.queries.stats import stats_bland_altman
 
     series = defaultdict(list)
     for r in (

@@ -1,5 +1,5 @@
-"""Property pins for the registry_ext12 wave (rank statistics,
-rolling regression, URL parsing, stochastic oscillator).
+"""Property pins for rank statistics, rolling regression, URL parsing
+and the stochastic oscillator (queries: functions, stats, stocks, windows).
 
 These are invariant checks — the value-level contract is the DuckDB
 differential gate (tools/check_oracle.py); here we pin the
@@ -24,7 +24,7 @@ def test_stochastic_bounds_and_extremes(spark):
     100 only if close == max(high) never happens on the ramp (close
     < high by 10 always), so %K < 100 strictly; %D stays within the
     min/max of its 3-row frame."""
-    from stockify_spark.registry_ext12 import stocks_stochastic
+    from stockify_spark.queries.stocks import stocks_stochastic
 
     rows = stocks_stochastic(spark, SF_SMALL).orderBy("row_id").collect()
     assert len(rows) == 1800
@@ -41,7 +41,7 @@ def test_rolling_slope_on_pure_ramp_segment(spark):
     still spans a wrap, but the first 18 rows are a pure line of
     slope 10 — rows 1..17 (frames entirely inside the first cycle)
     must report slope exactly 10 and intercept exactly 500."""
-    from stockify_spark.registry_ext12 import window_rolling_slope
+    from stockify_spark.queries.windows import window_rolling_slope
 
     rows = window_rolling_slope(spark, SF_SMALL).orderBy("row_id").collect()
     assert rows[0].slope is None  # single-point frame: NULLIF guard
@@ -57,7 +57,7 @@ def test_mannwhitney_group_swap_antisymmetry(spark):
     n1*n2: U1 + U2 == n1*n2 exactly (rank-sum identity)."""
     from pyspark.sql import functions as F
 
-    from stockify_spark.registry_ext12 import stats_mannwhitney
+    from stockify_spark.queries.stats import stats_mannwhitney
 
     r = _one(stats_mannwhitney(spark, SF_SMALL))
     # recompute the swapped test by symmetry identities, not a
@@ -76,7 +76,7 @@ def test_anova_f_matches_brute_force(spark):
     the distributed two-level aggregation."""
     import duckdb
 
-    from stockify_spark.registry_ext12 import stats_anova
+    from stockify_spark.queries.stats import stats_anova
 
     r = _one(stats_anova(spark, SF_SMALL))
     con = duckdb.connect()
@@ -104,7 +104,7 @@ def test_spearman_self_correlation_is_one(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from stockify_spark.registry_ext12 import stats_spearman
+    from stockify_spark.queries.stats import stats_spearman
 
     r = _one(stats_spearman(spark, SF_SMALL))
     assert -1.0 <= r.spearman_rho <= 1.0
@@ -136,7 +136,7 @@ def test_spearman_self_correlation_is_one(spark):
 def test_url_parse_components_reassemble(spark):
     """protocol://host path ? query reassembles the original URL,
     and the extracted page param equals the trailing modulus."""
-    from stockify_spark.registry_ext12 import fn_url_parse
+    from stockify_spark.queries.functions import fn_url_parse
 
     rows = fn_url_parse(spark, SF_SMALL).orderBy("row_id").collect()
     assert len(rows) == 3000
@@ -155,7 +155,7 @@ def test_atr_first_row_and_flat_gap(spark):
     dominates: tr = |low - prev_close| = |440 - 670| = 230? No —
     high-prev = |510-670| = 160, low-prev = |440-670| = 230, span
     70 → tr = 230. Pin both shapes."""
-    from stockify_spark.registry_ext11 import stocks_atr
+    from stockify_spark.queries.stocks import stocks_atr
 
     rows = stocks_atr(spark, SF_SMALL).orderBy("row_id").collect()
     assert rows[0].tr == 70.0
@@ -168,7 +168,7 @@ def test_obv_cycle_structure(spark):
     wrap the close drops (−volume). OBV at the end of cycle c is
     therefore sum of 17 up-volumes per cycle minus the wrap
     volumes — pin the first few exact values."""
-    from stockify_spark.registry_ext11 import stocks_obv
+    from stockify_spark.queries.stocks import stocks_obv
 
     rows = stocks_obv(spark, SF_SMALL).orderBy("row_id").collect()
     assert rows[0].obv == 0.0  # first row: no direction

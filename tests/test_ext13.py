@@ -1,5 +1,6 @@
-"""Property pins for registry_ext13 (URL canonicalization dedup,
-burstiness, graph Jaccard, Kaplan-Meier, mean family)."""
+"""Property pins for URL canonicalization dedup, burstiness, graph
+Jaccard, Kaplan-Meier and the mean family (queries: aggregates, events,
+graph, orders, pipeline)."""
 
 from __future__ import annotations
 
@@ -12,7 +13,7 @@ def test_url_dedup_collapses_every_variant_axis(spark):
     canonical count equals the number of distinct residue tuples,
     and every canonical is www-free, lowercase, portless,
     fragment-free, utm-free, and param-sorted."""
-    from stockify_spark.registry_ext13 import pipeline_url_dedup
+    from stockify_spark.queries.pipeline import pipeline_url_dedup
 
     rows = pipeline_url_dedup(spark, SF_SMALL).collect()
     truth = len({(i % 5, i % 29, i % 11, i % 7) for i in range(4000)})
@@ -31,7 +32,7 @@ def test_url_dedup_collapses_every_variant_axis(spark):
 
 
 def test_burstiness_nonnegative_and_ordered(spark):
-    from stockify_spark.registry_ext13 import events_burstiness
+    from stockify_spark.queries.events import events_burstiness
 
     rows = events_burstiness(spark, SF_SMALL).collect()
     assert 0 < len(rows) <= 50
@@ -47,11 +48,9 @@ def test_graph_jaccard_matches_triangle_support(spark):
     triangle contributes one common neighbor to each of its three
     edges). Cross-check against graph_triangles on the same
     fixture; jaccard bounded in [0, 1)."""
-    from stockify_spark.registry_ext12 import (  # noqa: F401  (import check)
-        stats_anova,
-    )
-    from stockify_spark.registry_ext13 import graph_jaccard
-    from stockify_spark.registry_ext5 import graph_triangles
+    from stockify_spark.queries.stats import stats_anova  # noqa: F401  (import check)
+    from stockify_spark.queries.graph import graph_jaccard
+    from stockify_spark.queries.graph import graph_triangles
 
     jrows = graph_jaccard(spark, SF_SMALL).collect()
     tri = graph_triangles(spark, SF_SMALL).count()
@@ -64,7 +63,7 @@ def test_km_curve_monotone_from_one(spark):
     """S is strictly decreasing over the emitted jump points,
     starts below 1 (first jump) and stays positive (d < n rows
     only); at-risk counts are non-increasing in t."""
-    from stockify_spark.registry_ext13 import orders_survival_km
+    from stockify_spark.queries.orders import orders_survival_km
 
     rows = orders_survival_km(spark, SF_SMALL).collect()
     assert len(rows) > 10
@@ -80,7 +79,7 @@ def test_power_mean_inequality(spark):
     """harmonic <= geometric <= arithmetic <= quadratic per group
     (strict on non-constant data), the defining property of the
     family."""
-    from stockify_spark.registry_ext13 import agg_mean_family
+    from stockify_spark.queries.aggregates import agg_mean_family
 
     rows = agg_mean_family(spark, SF_SMALL).collect()
     assert len(rows) == 5

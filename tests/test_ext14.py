@@ -1,4 +1,4 @@
-"""Pins for the sequential-recursion wave (registry_ext14)."""
+"""Pins for the sequential-recursion wave (queries: stocks, windows)."""
 
 from __future__ import annotations
 
@@ -15,7 +15,7 @@ def test_ema_exact_matches_independent_recursion(spark):
     """Recompute the recursion in plain Python from the ramp formula
     and demand exact equality after the same 6dp rounding — this is
     a THIRD independent face (the oracle CTE being the second)."""
-    from stockify_spark.registry_ext14 import window_ema_exact
+    from stockify_spark.queries.windows import window_ema_exact
 
     rows = window_ema_exact(spark, SF_SMALL).orderBy("symbol", "pos").collect()
     assert len(rows) == 1800
@@ -34,7 +34,7 @@ def test_ema_exact_beats_truncation(spark):
     drops: at alpha=0.2 the 8-term tail weight is 0.8^8 ~ 0.168, so
     mid-series EMA must differ from the 8-term truncated sum —
     pinning that this query is NOT the window_ewma approximation."""
-    from stockify_spark.registry_ext14 import window_ema_exact
+    from stockify_spark.queries.windows import window_ema_exact
 
     rows = window_ema_exact(spark, SF_SMALL).orderBy("symbol", "pos").collect()
     r = next(x for x in rows if x.symbol == 0 and x.pos == 100)
@@ -49,7 +49,7 @@ def test_macd_state_chain(spark):
     """histogram == macd - signal after rounding; signal is a
     smoothed (lower-variance) version of macd; pos 0 row is the
     zero seed."""
-    from stockify_spark.registry_ext14 import stocks_macd
+    from stockify_spark.queries.stocks import stocks_macd
 
     rows = stocks_macd(spark, SF_SMALL).orderBy("symbol", "pos").collect()
     assert len(rows) == 1800

@@ -1,4 +1,4 @@
-"""Pins for the indicator/classifier/containment wave (registry_ext15)."""
+"""Pins for the indicator/classifier/containment wave (queries: ml, pipeline, stocks)."""
 
 from __future__ import annotations
 
@@ -30,7 +30,7 @@ def test_heikin_ashi_matches_independent_recursion(spark):
     in plain Python from the ramp formula and demand exact equality
     after the same 6dp rounding, plus the candle-envelope invariant
     ha_low <= min(ha_open, ha_close) <= max(...) <= ha_high."""
-    from stockify_spark.registry_ext15 import stocks_heikin_ashi
+    from stockify_spark.queries.stocks import stocks_heikin_ashi
 
     rows = stocks_heikin_ashi(spark, SF_SMALL).orderBy("symbol", "pos").collect()
     assert len(rows) == 1800
@@ -53,7 +53,7 @@ def test_heikin_ashi_matches_independent_recursion(spark):
 def test_adx_bounds_and_spot_recursion(spark):
     """DI± and ADX live in [0, 100]; replay the four coupled Wilder
     recursions for one series and demand exact 6dp equality."""
-    from stockify_spark.registry_ext15 import stocks_adx
+    from stockify_spark.queries.stocks import stocks_adx
 
     rows = stocks_adx(spark, SF_SMALL).orderBy("symbol", "pos").collect()
     assert len(rows) == 1800
@@ -86,7 +86,7 @@ def test_cci_first_frame_null_and_spot_value(spark):
     """The single-row first frame has zero mean deviation -> NULL by
     the guard; a full 20-row frame matches an independent two-pass
     computation exactly at 6dp."""
-    from stockify_spark.registry_ext15 import stocks_cci
+    from stockify_spark.queries.stocks import stocks_cci
 
     rows = stocks_cci(spark, SF_SMALL).orderBy("row_id").collect()
     assert len(rows) == 1800
@@ -109,7 +109,7 @@ def test_cci_first_frame_null_and_spot_value(spark):
 def test_mfi_bounds_and_flat_start(spark):
     """Row 0 contributes no flow (lag undefined) -> both sums 0 ->
     MFI pinned to 100; all values in [0, 100]."""
-    from stockify_spark.registry_ext15 import stocks_mfi
+    from stockify_spark.queries.stocks import stocks_mfi
 
     rows = stocks_mfi(spark, SF_SMALL).orderBy("row_id").collect()
     assert rows[0].pos_flow == 0.0 and rows[0].neg_flow == 0.0
@@ -125,7 +125,7 @@ def test_naive_bayes_covers_test_split_once(spark):
     """Every held-out doc (doc_id % 5 == 0) gets exactly one
     prediction from the 5-class label set, with a negative
     log-score (probabilities < 1)."""
-    from stockify_spark.registry_ext15 import ml_naive_bayes
+    from stockify_spark.queries.ml import ml_naive_bayes
 
     rows = ml_naive_bayes(spark, SF_SMALL).collect()
     ids = sorted(r.doc_id for r in rows)

@@ -1,4 +1,4 @@
-"""Pins for the smoothing/keyword/robust-trend wave (registry_ext16)."""
+"""Pins for the smoothing/keyword/robust-trend wave (queries: functions, orders, stats, text, windows)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ def test_kalman_gain_converges_and_estimate_bounded(spark):
     """The Kalman gain is data-independent state (k_t depends only on
     t), so it must converge to the steady-state value of the Riccati
     recursion; estimates stay inside the observation envelope."""
-    from stockify_spark.registry_ext16 import window_kalman
+    from stockify_spark.queries.windows import window_kalman
 
     rows = window_kalman(spark, SF_SMALL).orderBy("symbol", "pos").collect()
     assert len(rows) == 1800
@@ -25,7 +25,7 @@ def test_kalman_gain_converges_and_estimate_bounded(spark):
 
 
 def test_kalman_matches_independent_recursion(spark):
-    from stockify_spark.registry_ext16 import window_kalman
+    from stockify_spark.queries.windows import window_kalman
     from tests.test_ext15 import _r6
 
     rows = window_kalman(spark, SF_SMALL).orderBy("symbol", "pos").collect()
@@ -50,7 +50,7 @@ def test_holt_forecast_identity_and_coverage(spark):
     once."""
     from pyspark.sql import functions as F
 
-    from stockify_spark.registry_ext16 import orders_holt_forecast
+    from stockify_spark.queries.orders import orders_holt_forecast
 
     df = orders_holt_forecast(spark, SF_SMALL)
     rows = df.collect()
@@ -70,7 +70,7 @@ def test_holt_forecast_identity_and_coverage(spark):
 def test_rake_ranks_contiguous_and_stopword_free(spark):
     from collections import defaultdict
 
-    from stockify_spark.registry_ext16 import text_rake
+    from stockify_spark.queries.text import text_rake
 
     rows = text_rake(spark, SF_SMALL).collect()
     bydoc = defaultdict(list)
@@ -88,7 +88,7 @@ def test_rake_ranks_contiguous_and_stopword_free(spark):
 
 
 def test_theil_sen_matches_bruteforce_median(spark):
-    from stockify_spark.registry_ext16 import stats_theil_sen
+    from stockify_spark.queries.stats import stats_theil_sen
     from tests.test_ext15 import _r6
 
     rows = {r.symbol: r for r in stats_theil_sen(spark, SF_SMALL).collect()}
@@ -107,7 +107,7 @@ def test_theil_sen_matches_bruteforce_median(spark):
 
 
 def test_ip_cidr_subnet_math(spark):
-    from stockify_spark.registry_ext16 import fn_ip_cidr
+    from stockify_spark.queries.functions import fn_ip_cidr
 
     rows = fn_ip_cidr(spark, SF_SMALL).collect()
     assert rows

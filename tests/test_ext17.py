@@ -1,5 +1,5 @@
 """Pins for the integer-exact statistics / closed-form ML wave
-(registry_ext17)."""
+(queries: aggregates, graph, ml, stats, text)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ def test_assortativity_in_range_and_matches_definition(spark):
     the edge list with plain Python arithmetic."""
     from pyspark.sql import functions as F
 
-    from stockify_spark.registry_ext17 import graph_assortativity
+    from stockify_spark.queries.graph import graph_assortativity
     from stockify_spark.registry import _t
     from tests.test_ext15 import _r6
 
@@ -58,7 +58,7 @@ def test_mann_kendall_zero_trend_on_periodic_ramp(spark):
     cancel in a specific, hand-checkable way. Verify S against a
     brute-force pair count and the tie term against the known tie
     structure (18 values x 10 repeats per series)."""
-    from stockify_spark.registry_ext17 import stats_mann_kendall
+    from stockify_spark.queries.stats import stats_mann_kendall
     from tests.test_ext15 import _r6
 
     rows = {r.symbol: r for r in stats_mann_kendall(spark, SF_SMALL).collect()}
@@ -85,7 +85,7 @@ def test_ridge_matches_numpy_solve(spark):
     import numpy as np
     import duckdb
 
-    from stockify_spark.registry_ext17 import ml_ridge_closed_form
+    from stockify_spark.queries.ml import ml_ridge_closed_form
 
     row = ml_ridge_closed_form(spark, SF_SMALL).collect()[0]
     df = (
@@ -109,7 +109,7 @@ def test_readability_counts_and_formula(spark):
     Python and replay the Flesch formula."""
     import re
 
-    from stockify_spark.registry_ext17 import text_readability
+    from stockify_spark.queries.text import text_readability
     from stockify_spark.registry import _t
     from tests.test_ext15 import _r6
 
@@ -131,7 +131,7 @@ def test_weighted_median_selection_rule(spark):
     weight reaches half the total — recheck per flag in Python."""
     from collections import defaultdict
 
-    from stockify_spark.registry_ext17 import agg_weighted_median
+    from stockify_spark.queries.aggregates import agg_weighted_median
     from stockify_spark.registry import _t
 
     li = _t(spark, SF_SMALL, "lineitem").select(

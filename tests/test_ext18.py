@@ -1,4 +1,4 @@
-"""Pins for the transform/sketch/spectral wave (registry_ext18)."""
+"""Pins for the transform/sketch/spectral wave (queries: aggregates, graph, ml, stocks, windows)."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ def test_haar_reconstructs_and_conserves(spark):
     64+32+...+1 details plus 1 approximation per series."""
     from collections import defaultdict
 
-    from stockify_spark.registry_ext18 import window_haar_dwt
+    from stockify_spark.queries.windows import window_haar_dwt
 
     rows = window_haar_dwt(spark, SF_SMALL).collect()
     per = defaultdict(dict)
@@ -41,7 +41,7 @@ def test_haar_reconstructs_and_conserves(spark):
 def test_hll_estimate_close_to_exact(spark):
     """The 64-register estimate must land within the ~13% standard
     error band (3 sigma) of the exact distinct count."""
-    from stockify_spark.registry_ext18 import agg_hll_sketch
+    from stockify_spark.queries.aggregates import agg_hll_sketch
 
     row = agg_hll_sketch(spark, SF_SMALL).collect()[0]
     assert row.n_registers == 64
@@ -54,7 +54,7 @@ def test_hll_estimate_close_to_exact(spark):
 def test_modularity_sums_and_bounds(spark):
     """Σ edges_within <= m, Σ degree_sum = 2m, and Q = Σ q_c lies in
     [-1, 1]."""
-    from stockify_spark.registry_ext18 import graph_modularity
+    from stockify_spark.queries.graph import graph_modularity
 
     rows = graph_modularity(spark, SF_SMALL).collect()
     assert len(rows) == 8
@@ -73,7 +73,7 @@ def test_pca_eigen_properties(spark):
     import duckdb
     import numpy as np
 
-    from stockify_spark.registry_ext18 import ml_pca_2d
+    from stockify_spark.queries.ml import ml_pca_2d
 
     row = ml_pca_2d(spark, SF_SMALL).collect()[0]
     assert row.lambda1 >= row.lambda2 >= 0
@@ -100,7 +100,7 @@ def test_ichimoku_displacements(spark):
     """Displaced spans: senkou lines are NULL for the first 26 rows,
     chikou NULL for the last 26; tenkan/kijun equal (maxH+minL)/2
     recomputed at a spot row."""
-    from stockify_spark.registry_ext18 import stocks_ichimoku
+    from stockify_spark.queries.stocks import stocks_ichimoku
 
     rows = stocks_ichimoku(spark, SF_SMALL).orderBy("row_id").collect()
     assert len(rows) == 1800

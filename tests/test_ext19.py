@@ -1,5 +1,5 @@
 """Pins for the lakehouse-metadata + execution-shape wave
-(registry_ext19): schema evolution, shallow clone (and its vacuum
+(queries: events, txlog, windows): schema evolution, shallow clone (and its vacuum
 safety), quadkey rollup, biquad recursion."""
 
 from __future__ import annotations
@@ -80,7 +80,7 @@ def test_schema_evolution_old_files_read_null(spark, tmp_path):
 def test_quadkey_interleave_spot(spark):
     """Recompute the quadkey for a known user_id and confirm its
     zoom-4 prefix bucket exists with consistent totals."""
-    from stockify_spark.registry_ext19 import events_quadkey_rollup
+    from stockify_spark.queries.events import events_quadkey_rollup
 
     rows = events_quadkey_rollup(spark, SF_SMALL).collect()
     assert rows
@@ -105,7 +105,7 @@ def test_quadkey_interleave_spot(spark):
 
 
 def test_biquad_matches_reference_loop_and_unity_dc_gain(spark):
-    from stockify_spark.registry_ext19 import window_biquad_filter
+    from stockify_spark.queries.windows import window_biquad_filter
     from tests.test_ext15 import _r6
 
     rows = window_biquad_filter(spark, SF_SMALL).orderBy("symbol", "pos").collect()

@@ -1,4 +1,4 @@
-"""Pins for the metadata/BM25/Shapley/spectral wave (registry_ext20)."""
+"""Pins for the metadata/BM25/Shapley/spectral wave (queries: events, similarity, txlog, windows)."""
 
 from __future__ import annotations
 
@@ -43,7 +43,7 @@ def test_bm25_ordering_and_positivity(spark):
     """Scores are positive (non-negative idf variant), sorted
     descending, and every returned doc contains at least one query
     term."""
-    from stockify_spark.registry_ext20 import sim_bm25_search, _BM25_TERMS
+    from stockify_spark.queries.similarity import sim_bm25_search, _BM25_TERMS
     from stockify_spark.registry import _t
 
     rows = sim_bm25_search(spark, SF_SMALL).collect()
@@ -61,7 +61,7 @@ def test_shapley_credits_sum_to_attributed_users(spark):
     """Total credit across channels equals the number of converted
     users with at least one pre-purchase channel (each contributes
     exactly 1.0 split across their set)."""
-    from stockify_spark.registry_ext20 import events_shapley_attribution
+    from stockify_spark.queries.events import events_shapley_attribution
     from stockify_spark.registry import _t
 
     rows = events_shapley_attribution(spark, SF_SMALL).collect()
@@ -89,7 +89,7 @@ def test_goertzel_sawtooth_harmonics(spark):
     and (c) the value matches a direct Python evaluation."""
     from collections import defaultdict
 
-    from stockify_spark.registry_ext20 import window_goertzel_power
+    from stockify_spark.queries.windows import window_goertzel_power
 
     rows = window_goertzel_power(spark, SF_SMALL).collect()
     per = defaultdict(dict)

@@ -1,5 +1,5 @@
 """Pins for the temporal-join/rolling-corr/eval/peaks wave
-(registry_ext21)."""
+(queries: joins, ml, stocks, windows)."""
 
 from __future__ import annotations
 
@@ -14,7 +14,7 @@ def test_scd2_pointintime_balance_split(spark):
     balance-at-order exceeds the all-original-balance baseline by
     exactly 100 x (orders by updated customers on/after the split
     date)."""
-    from stockify_spark.registry_ext21 import join_scd2_pointintime
+    from stockify_spark.queries.joins import join_scd2_pointintime
     from stockify_spark.registry import _t
 
     rows = join_scd2_pointintime(spark, SF_SMALL).collect()
@@ -44,7 +44,7 @@ def test_rolling_corr_bounds_and_perfect_prefix(spark):
     exactly collinear (corr 1.0) while every larger frame pairs a
     linear series against the quadratic high*low -> corr strictly
     below 1."""
-    from stockify_spark.registry_ext21 import stocks_rolling_corr
+    from stockify_spark.queries.stocks import stocks_rolling_corr
 
     rows = stocks_rolling_corr(spark, SF_SMALL).orderBy("row_id").collect()
     assert len(rows) == 1800
@@ -60,7 +60,7 @@ def test_rolling_corr_bounds_and_perfect_prefix(spark):
 def test_confusion_metrics_identities(spark):
     """Σ support = Σ pred_n = held-out size; Σ tp <= support; per-row
     metric identities hold on the integer counts."""
-    from stockify_spark.registry_ext21 import ml_confusion_metrics
+    from stockify_spark.queries.ml import ml_confusion_metrics
 
     rows = ml_confusion_metrics(spark, SF_SMALL).collect()
     assert {r.lang for r in rows} == {"en", "de", "es", "fr", "zh"}
@@ -78,7 +78,7 @@ def test_confusion_metrics_identities(spark):
 def test_peaks_are_period_tops(spark):
     """The sawtooth peaks exactly at pos 17 mod 18 (close 670), with
     prominence 670 - max(flanking minima)."""
-    from stockify_spark.registry_ext21 import window_peak_detection
+    from stockify_spark.queries.windows import window_peak_detection
 
     rows = window_peak_detection(spark, SF_SMALL).orderBy("row_id").collect()
     assert rows

@@ -1,5 +1,5 @@
 """Pins for the enrichment/backtest/aging/merge wave
-(registry_ext22)."""
+(queries: aggregates, orders, streaming)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ from tests.conftest import SF_SMALL
 
 
 def test_enrich_totals_cover_all_events(spark):
-    from stockify_spark.registry_ext22 import stream_static_enrich
+    from stockify_spark.queries.streaming import stream_static_enrich
     from stockify_spark.registry import _t
 
     rows = stream_static_enrich(spark, SF_SMALL).collect()
@@ -20,8 +20,8 @@ def test_enrich_totals_cover_all_events(spark):
 def test_forecast_eval_counts_and_positive_errors(spark):
     """Each nation evaluates (observed months - 1) forecasts; errors
     are non-negative and MAPE is a sane fraction."""
-    from stockify_spark.registry_ext22 import orders_forecast_eval
-    from stockify_spark.registry_ext16 import orders_holt_forecast
+    from stockify_spark.queries.orders import orders_forecast_eval
+    from stockify_spark.queries.orders import orders_holt_forecast
 
     ev = {r.nation: r for r in orders_forecast_eval(spark, SF_SMALL).collect()}
     holt_counts = (
@@ -39,7 +39,7 @@ def test_forecast_eval_counts_and_positive_errors(spark):
 
 
 def test_backlog_aging_partitions_open_orders(spark):
-    from stockify_spark.registry_ext22 import orders_backlog_aging
+    from stockify_spark.queries.orders import orders_backlog_aging
     from stockify_spark.registry import _t
 
     rows = orders_backlog_aging(spark, SF_SMALL).collect()
@@ -55,8 +55,8 @@ def test_hll_merge_registers_identical(spark):
     """The core claim: merged registers == direct registers, and the
     merged estimate equals agg_hll_sketch's estimate (same registers,
     same estimator path modulo the small-range branch)."""
-    from stockify_spark.registry_ext18 import agg_hll_sketch
-    from stockify_spark.registry_ext22 import agg_hll_merge
+    from stockify_spark.queries.aggregates import agg_hll_sketch
+    from stockify_spark.queries.aggregates import agg_hll_merge
 
     m = agg_hll_merge(spark, SF_SMALL).collect()[0]
     assert m.registers_disagreeing == 0

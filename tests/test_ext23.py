@@ -1,4 +1,4 @@
-"""Pins for the bitmap/encoding/Hurst wave (registry_ext23)."""
+"""Pins for the bitmap/encoding/Hurst wave (queries: aggregates, functions, windows)."""
 
 from __future__ import annotations
 
@@ -6,7 +6,7 @@ from tests.conftest import SF_SMALL
 
 
 def test_bitmap_distinct_self_verifies(spark):
-    from stockify_spark.registry_ext23 import agg_bitmap_distinct
+    from stockify_spark.queries.aggregates import agg_bitmap_distinct
 
     rows = agg_bitmap_distinct(spark, SF_SMALL).collect()
     assert rows
@@ -19,7 +19,7 @@ def test_bitmap_distinct_self_verifies(spark):
 def test_base64_roundtrips_every_row(spark):
     import base64
 
-    from stockify_spark.registry_ext23 import fn_base64_roundtrip
+    from stockify_spark.queries.functions import fn_base64_roundtrip
 
     rows = fn_base64_roundtrip(spark, SF_SMALL).collect()
     assert rows
@@ -36,7 +36,7 @@ def test_hurst_mean_reverting_sawtooth(spark):
     growing once the chunk covers full periods, so the log-log slope
     (H) must sit well below the 0.5 random-walk line; R/S values are
     positive and identical across the ten identical series."""
-    from stockify_spark.registry_ext23 import window_hurst_rs
+    from stockify_spark.queries.windows import window_hurst_rs
 
     rows = window_hurst_rs(spark, SF_SMALL).collect()
     assert len(rows) == 10

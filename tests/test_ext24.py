@@ -1,5 +1,5 @@
 """Pins for the pivots/detrend/zipf/levenshtein wave
-(registry_ext24)."""
+(queries: functions, stocks, text, windows)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ def test_pivot_identities(spark):
     and the level ordering R2 >= R1 >= P >= S1 >= S2 holds whenever
     L <= P <= H (true for every ramp bar); spot-check one row
     against hand arithmetic."""
-    from stockify_spark.registry_ext24 import stocks_pivot_points
+    from stockify_spark.queries.stocks import stocks_pivot_points
 
     rows = stocks_pivot_points(spark, SF_SMALL).orderBy("row_id").collect()
     assert len(rows) == 1799
@@ -31,7 +31,7 @@ def test_detrend_residuals_sum_to_zero_per_series(spark):
 
     import numpy as np
 
-    from stockify_spark.registry_ext24 import window_linear_detrend
+    from stockify_spark.queries.windows import window_linear_detrend
 
     rows = window_linear_detrend(spark, SF_SMALL).collect()
     per = defaultdict(list)
@@ -54,7 +54,7 @@ def test_zipf_slope_negative_and_top_token(spark):
     negative; top_freq matches a direct count."""
     from pyspark.sql import functions as F
 
-    from stockify_spark.registry_ext24 import text_zipf_fit
+    from stockify_spark.queries.text import text_zipf_fit
     from stockify_spark.functions.text import tokens
     from stockify_spark.registry import _t
 
@@ -73,7 +73,7 @@ def test_zipf_slope_negative_and_top_token(spark):
 
 
 def test_levenshtein_against_python_reference(spark):
-    from stockify_spark.registry_ext24 import fn_levenshtein
+    from stockify_spark.queries.functions import fn_levenshtein
     from stockify_spark.registry import _t
 
     names = {

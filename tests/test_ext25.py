@@ -1,5 +1,5 @@
 """Pins for the admission-ensemble / bot-detection wave
-(registry_ext25)."""
+(queries: events, pipeline)."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ from tests.conftest import SF_SMALL
 
 
 def test_ensemble_covers_corpus_with_consistent_verdicts(spark):
-    from stockify_spark.registry_ext25 import pipeline_quality_ensemble
+    from stockify_spark.queries.pipeline import pipeline_quality_ensemble
     from stockify_spark.registry import _t
 
     rows = pipeline_quality_ensemble(spark, SF_SMALL).collect()
@@ -29,7 +29,7 @@ def test_bot_detection_moment_identities(spark):
     agreement; every flagged bot satisfies the rule's conjuncts."""
     from pyspark.sql import functions as F
 
-    from stockify_spark.registry_ext25 import events_bot_detection
+    from stockify_spark.queries.events import events_bot_detection
     from stockify_spark.registry import _t
     from tests.test_ext15 import _r6
 

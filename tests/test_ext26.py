@@ -1,5 +1,5 @@
 """Pins for the dedup-evaluation / funnel-latency wave
-(registry_ext26)."""
+(queries: events, pipeline)."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ def test_dedup_eval_counts_consistent(spark):
     """n_common <= min(n_exact, n_lsh); precision is 1.0 by
     construction (LSH pairs are exact-verified), so n_common must
     equal n_lsh; recall matches the ratio."""
-    from stockify_spark.registry_ext26 import pipeline_dedup_eval
+    from stockify_spark.queries.pipeline import pipeline_dedup_eval
 
     r = pipeline_dedup_eval(spark, SF_SMALL).collect()[0]
     assert r.n_exact > 0
@@ -26,7 +26,7 @@ def test_time_to_convert_median_in_window(spark):
     and be positive; n_conversions matches an independent count."""
     from pyspark.sql import functions as F
 
-    from stockify_spark.registry_ext26 import events_time_to_convert
+    from stockify_spark.queries.events import events_time_to_convert
     from stockify_spark.registry import _t
 
     r = events_time_to_convert(spark, SF_SMALL).collect()[0]

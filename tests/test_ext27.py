@@ -1,4 +1,4 @@
-"""Pins for the active-users / SPC wave (registry_ext27)."""
+"""Pins for the active-users / SPC wave (queries: events, windows)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ def test_active_users_identities(spark):
     """DAU <= WAU <= MAU every day; WAU(d) equals an independently
     computed exact distinct over the trailing 7 days for spot days;
     total days match the event span."""
-    from stockify_spark.registry_ext27 import events_active_users
+    from stockify_spark.queries.events import events_active_users
     from stockify_spark.registry import _t
 
     rows = {r.day: r for r in events_active_users(spark, SF_SMALL).collect()}
@@ -44,7 +44,7 @@ def test_spc_rules_fire_selectively(spark):
     fire somewhere (discriminative on the events stream); rule-1
     rows are recomputable from pinned per-type moments; the flagged
     set is a strict subset of the stream."""
-    from stockify_spark.registry_ext27 import window_spc_control
+    from stockify_spark.queries.windows import window_spc_control
     from stockify_spark.registry import _t
 
     rows = window_spc_control(spark, SF_SMALL).collect()

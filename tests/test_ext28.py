@@ -1,5 +1,5 @@
 """Pins for the clustering-coefficient / mutual-information wave
-(registry_ext28)."""
+(queries: graph, stats)."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ def test_clustering_coeff_against_networkx_style_bruteforce(spark):
     consistent with graph_modularity's edge universe."""
     from pyspark.sql import functions as F
 
-    from stockify_spark.registry_ext28 import graph_clustering_coeff
+    from stockify_spark.queries.graph import graph_clustering_coeff
     from stockify_spark.registry import _t
     from tests.test_ext15 import _r6
 
@@ -56,7 +56,7 @@ def test_mutual_info_bounds(spark):
 
     from pyspark.sql import functions as F
 
-    from stockify_spark.registry_ext28 import stats_mutual_info
+    from stockify_spark.queries.stats import stats_mutual_info
     from stockify_spark.registry import _t
 
     r = stats_mutual_info(spark, SF_SMALL).collect()[0]

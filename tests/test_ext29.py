@@ -1,4 +1,4 @@
-"""Pins for the polyfit / Heaps-law wave (registry_ext29)."""
+"""Pins for the polyfit / Heaps-law wave (queries: ml, text)."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ from tests.conftest import SF_SMALL
 def test_polyfit_matches_numpy(spark):
     import numpy as np
 
-    from stockify_spark.registry_ext29 import ml_polyfit_series
+    from stockify_spark.queries.ml import ml_polyfit_series
 
     rows = {r.symbol: r for r in ml_polyfit_series(spark, SF_SMALL).collect()}
     assert set(rows) == set(range(10))
@@ -27,7 +27,7 @@ def test_heaps_vocabulary_growth_is_monotone_sublinear(spark):
     final checkpoint covers the whole corpus."""
     from pyspark.sql import functions as F
 
-    from stockify_spark.registry_ext29 import text_heaps_law
+    from stockify_spark.queries.text import text_heaps_law
     from stockify_spark.functions.text import tokens
     from stockify_spark.registry import _t
 

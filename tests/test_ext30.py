@@ -1,4 +1,4 @@
-"""Pins for the gaps/streaks/novelty wave (registry_ext30)."""
+"""Pins for the gaps/streaks/novelty wave (queries: stocks, text)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ def test_gap_structure_on_sawtooth(spark):
     every gap is filled (the bar's range spans the prior close)
     except the wrap bars where the prior close 670 exceeds the new
     high 510."""
-    from stockify_spark.registry_ext30 import stocks_gap_analysis
+    from stockify_spark.queries.stocks import stocks_gap_analysis
 
     rows = stocks_gap_analysis(spark, SF_SMALL).orderBy("row_id").collect()
     assert len(rows) == 1799
@@ -28,7 +28,7 @@ def test_gap_structure_on_sawtooth(spark):
 def test_streaks_closed_form(spark):
     """Each 180-row series has 10 up-streaks of 17 (one per period)
     and 9 down-streaks of 1 (the wraps between periods)."""
-    from stockify_spark.registry_ext30 import stocks_streaks
+    from stockify_spark.queries.stocks import stocks_streaks
 
     rows = {r.symbol: r for r in stocks_streaks(spark, SF_SMALL).collect()}
     assert set(rows) == set(range(10))
@@ -43,7 +43,7 @@ def test_novelty_monotone_context(spark):
     """doc 0 is fully novel by definition; ratios live in [0, 1];
     mean novelty must exceed 0 and at least one later doc repeats
     content (ratio < 1 somewhere, the planted duplicates)."""
-    from stockify_spark.registry_ext30 import text_novelty_ratio
+    from stockify_spark.queries.text import text_novelty_ratio
 
     rows = {r.doc_id: r for r in text_novelty_ratio(spark, SF_SMALL).collect()}
     assert rows[0].novelty_ratio == 1.0

@@ -1,4 +1,4 @@
-"""Pins for the H.264 I_PCM codec (registry_ext32 / llm/h264.py)."""
+"""Pins for the H.264 I_PCM codec (queries/media.py / llm/h264.py)."""
 
 from __future__ import annotations
 
@@ -56,7 +56,7 @@ def test_ipcm_probe_and_decode_agree():
 
 
 def test_ipcm_query_matches_spec(spark):
-    from stockify_spark.registry_ext32 import media_h264_ipcm_decode
+    from stockify_spark.queries.media import media_h264_ipcm_decode
 
     rows = {r.media_id: r for r in media_h264_ipcm_decode(spark, SF_SMALL).collect()}
     assert set(rows) == set(range(6))

@@ -1,4 +1,4 @@
-"""Pins for the chunk-reconstruction audit (registry_ext33)."""
+"""Pins for the chunk-reconstruction audit (queries/pipeline.py)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ def test_every_document_reconstructs(spark):
     one document agrees."""
     from collections import defaultdict
 
-    from stockify_spark.registry_ext33 import pipeline_chunk_audit
+    from stockify_spark.queries.pipeline import pipeline_chunk_audit
     from stockify_spark.registry import QUERIES, _t
 
     rows = {r.doc_id: r for r in pipeline_chunk_audit(spark, SF_SMALL).collect()}

@@ -1,4 +1,4 @@
-"""Pins for CHECK-constraint enforcement (registry_ext34 /
+"""Pins for CHECK-constraint enforcement (queries/txlog.py /
 sources/txlog.py)."""
 
 from __future__ import annotations
@@ -62,7 +62,7 @@ def test_multiple_constraints_all_enforced(spark, tmp_path):
 
 
 def test_registered_query_green_shape(spark):
-    from stockify_spark.registry_ext34 import txlog_check_constraint
+    from stockify_spark.queries.txlog import txlog_check_constraint
 
     rows = txlog_check_constraint(spark, SF_SMALL).collect()
     assert len(rows) == 7

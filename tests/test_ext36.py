@@ -1,5 +1,5 @@
 """Pins for the equi-depth histogram / seasonal anomaly wave
-(registry_ext36)."""
+(queries: aggregates, events)."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ from tests.conftest import SF_SMALL
 
 
 def test_equidepth_buckets_balanced_and_ordered(spark):
-    from stockify_spark.registry_ext36 import agg_histogram_equidepth
+    from stockify_spark.queries.aggregates import agg_histogram_equidepth
     from stockify_spark.registry import _t
 
     rows = sorted(
@@ -31,7 +31,7 @@ def test_seasonal_anomaly_flags_extreme_residuals_only(spark):
 
     from pyspark.sql import functions as F
 
-    from stockify_spark.registry_ext36 import events_seasonal_anomaly
+    from stockify_spark.queries.events import events_seasonal_anomaly
     from stockify_spark.registry import _t
 
     rows = events_seasonal_anomaly(spark, SF_SMALL).collect()

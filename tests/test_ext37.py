@@ -1,4 +1,4 @@
-"""Pins for content-defined chunking dedup (registry_ext37)."""
+"""Pins for content-defined chunking dedup (queries/pipeline.py)."""
 
 from __future__ import annotations
 
@@ -45,7 +45,7 @@ def _chunks(text: str) -> list[str]:
 
 def test_cdc_report_matches_independent_reimplementation(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext37 import pipeline_cdc_chunk_dedup
+    from stockify_spark.queries.pipeline import pipeline_cdc_chunk_dedup
 
     texts = {
         r.doc_id: r.text

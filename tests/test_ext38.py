@@ -1,4 +1,4 @@
-"""Pins for the Benjamini-Hochberg FDR screen (registry_ext38)."""
+"""Pins for the Benjamini-Hochberg FDR screen (queries/stats.py)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ def test_bh_matches_true_pvalue_procedure(spark):
     """The fence-ladder formulation must agree with the textbook
     procedure run on actual two-sided p-values: reject ranks 1..k*,
     k* = max{i : p_(i) <= q*i/m}."""
-    from stockify_spark.registry_ext38 import stats_fdr_bh
+    from stockify_spark.queries.stats import stats_fdr_bh
 
     rows = sorted(stats_fdr_bh(spark, SF_SMALL).collect(), key=lambda r: r.rnk)
     m, q = len(rows), 0.10
@@ -31,7 +31,7 @@ def test_bh_step_up_rejects_below_deepest_crossing(spark):
     """Step-up semantics: every rank at or above the deepest fence
     crossing is rejected even if it missed its OWN fence — the
     property that distinguishes BH from per-test thresholding."""
-    from stockify_spark.registry_ext38 import stats_fdr_bh
+    from stockify_spark.queries.stats import stats_fdr_bh
 
     rows = sorted(stats_fdr_bh(spark, SF_SMALL).collect(), key=lambda r: r.rnk)
     crossing = [r.rnk for r in rows if abs(r.zscore) >= r.thr]

@@ -1,4 +1,4 @@
-"""Pins for SAX motif mining (registry_ext39)."""
+"""Pins for SAX motif mining (queries/windows.py)."""
 
 from __future__ import annotations
 
@@ -31,7 +31,7 @@ def _word(vals: list[float]) -> str:
 
 def test_sax_census_matches_independent_reimplementation(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext39 import window_sax_motifs
+    from stockify_spark.queries.windows import window_sax_motifs
 
     ev = (
         _t(spark, SF_SMALL, "events")

@@ -1,4 +1,4 @@
-"""Pins for Newton-logistic training (registry_ext40)."""
+"""Pins for Newton-logistic training (queries/ml.py)."""
 
 from __future__ import annotations
 
@@ -32,7 +32,7 @@ def _newton_steps(x, y, iters=3):
 
 def test_newton_steps_match_numpy_reimplementation(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext40 import ml_logreg_newton
+    from stockify_spark.queries.ml import ml_logreg_newton
 
     rows = sorted(
         ml_logreg_newton(spark, SF_SMALL).collect(), key=lambda r: r.iter
@@ -63,7 +63,7 @@ def test_newton_converges_to_base_rate(spark):
     MLE is (logit(urgent share), ~0) — and Newton must ascend the
     log likelihood every step."""
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext40 import ml_logreg_newton
+    from stockify_spark.queries.ml import ml_logreg_newton
 
     rows = sorted(
         ml_logreg_newton(spark, SF_SMALL).collect(), key=lambda r: r.iter

@@ -1,4 +1,4 @@
-"""Pins for repeated-n-gram span coverage (registry_ext42)."""
+"""Pins for repeated-n-gram span coverage (queries/pipeline.py)."""
 
 from __future__ import annotations
 
@@ -14,7 +14,7 @@ def test_coverage_matches_brute_force_position_union(spark):
     covered token positions per doc, via nested loops over raw
     grams (no interval closed form, no hashing)."""
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext42 import pipeline_ngram_coverage
+    from stockify_spark.queries.pipeline import pipeline_ngram_coverage
 
     docs = {
         r.doc_id: r.text.split(" ")
@@ -47,7 +47,7 @@ def test_within_document_repeats_do_not_count(spark):
     construction above by asserting the operator never covers a
     position whose gram-set is single-document."""
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext42 import pipeline_ngram_coverage
+    from stockify_spark.queries.pipeline import pipeline_ngram_coverage
 
     docs = {
         r.doc_id: r.text.split(" ")

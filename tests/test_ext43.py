@@ -1,4 +1,4 @@
-"""Pins for BPE encoding (registry_ext43)."""
+"""Pins for BPE encoding (queries/text.py)."""
 
 from __future__ import annotations
 
@@ -51,7 +51,7 @@ def _vocab(spark):
 
 
 def test_encoding_matches_independent_serial_bpe(spark):
-    from stockify_spark.registry_ext43 import tokenizer_bpe_apply
+    from stockify_spark.queries.text import tokenizer_bpe_apply
 
     words = _vocab(spark)
     _, enc = _serial_bpe(words)

@@ -1,4 +1,4 @@
-"""Pins for DTW distance (registry_ext44)."""
+"""Pins for DTW distance (queries/windows.py)."""
 
 from __future__ import annotations
 
@@ -28,7 +28,7 @@ def _dtw_matrix(xs, tpl):
 
 def test_dtw_matches_full_matrix_dp(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext44 import _N, _TPL, window_dtw
+    from stockify_spark.queries.windows import _DTW_N as _N, _TPL, window_dtw
 
     ev = (
         _t(spark, SF_SMALL, "events")
@@ -54,7 +54,7 @@ def test_dtw_matches_full_matrix_dp(spark):
 
 
 def test_dtw_identity_and_elasticity():
-    from stockify_spark.registry_ext44 import _TPL
+    from stockify_spark.queries.windows import _TPL
 
     tpl = np.array(_TPL)
     assert _dtw_matrix(tpl, tpl) == 0.0

@@ -1,4 +1,4 @@
-"""Pins for exact MIPS via the cosine reduction (registry_ext45)."""
+"""Pins for exact MIPS via the cosine reduction (queries/similarity.py)."""
 
 from __future__ import annotations
 
@@ -21,7 +21,7 @@ def _load(spark):
 def test_augmented_ranking_equals_direct_ip_ranking(spark):
     """The reduction's whole claim: top-5 through the augmented
     cosine must be exactly the top-5 by raw inner product."""
-    from stockify_spark.registry_ext45 import sim_mips_topk
+    from stockify_spark.queries.similarity import sim_mips_topk
 
     ids, mat = _load(spark)
     got = {}

@@ -1,4 +1,4 @@
-"""Pins for the Poisson bootstrap CI (registry_ext46)."""
+"""Pins for the Poisson bootstrap CI (queries/stats.py)."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import math
 
 from tests.conftest import SF_SMALL
 
-from stockify_spark.registry_ext46 import _B, _HI_RANK, _LO_RANK, _POIS_CDF
+from stockify_spark.queries.stats import _B, _HI_RANK, _LO_RANK, _POIS_CDF
 
 
 def _weight(b: int, k: int) -> int:
@@ -20,7 +20,7 @@ def _weight(b: int, k: int) -> int:
 
 def test_ci_matches_independent_weight_reimplementation(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext46 import stats_bootstrap_ci
+    from stockify_spark.queries.stats import stats_bootstrap_ci
 
     rows = {
         r.priority: r for r in stats_bootstrap_ci(spark, SF_SMALL).collect()

@@ -1,4 +1,4 @@
-"""Pins for CUPED variance reduction (registry_ext47)."""
+"""Pins for CUPED variance reduction (queries/stats.py)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ def _user_table(spark):
     from pyspark.sql import functions as F
 
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext47 import _SPLIT
+    from stockify_spark.queries.stats import _SPLIT
 
     split = F.lit(_SPLIT).cast("timestamp")
     ev = _t(spark, SF_SMALL, "events")
@@ -36,7 +36,7 @@ def _user_table(spark):
 
 
 def test_cuped_shrinks_variance_by_squared_correlation(spark):
-    from stockify_spark.registry_ext47 import stats_cuped
+    from stockify_spark.queries.stats import stats_cuped
 
     uid, x, y = _user_table(spark)
     out = {r.arm: r for r in stats_cuped(spark, SF_SMALL).collect()}
@@ -64,7 +64,7 @@ def test_cuped_shrinks_variance_by_squared_correlation(spark):
 def test_cuped_preserves_the_pooled_mean(spark):
     """E[y_cuped] == E[y] by construction (the adjustment is centered
     on xbar): the estimator shifts nothing, it only shrinks."""
-    from stockify_spark.registry_ext47 import stats_cuped
+    from stockify_spark.queries.stats import stats_cuped
 
     out = stats_cuped(spark, SF_SMALL).collect()
     n = sum(r.n_users for r in out)

@@ -1,4 +1,4 @@
-"""Pins for systematic weighted resampling (registry_ext48)."""
+"""Pins for systematic weighted resampling (queries/pipeline.py)."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ def test_resample_matches_brute_force_probe_placement(spark):
     """Ground truth by literally placing the 200 probes with exact
     rational arithmetic and walking the cumulative intervals."""
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext48 import _M, pipeline_systematic_resample
+    from stockify_spark.queries.pipeline import _M, pipeline_systematic_resample
 
     docs = sorted(
         (r.doc_id, r.n_chars)
@@ -45,7 +45,7 @@ def test_multiplicity_within_one_of_expectation(spark):
     resampling's defining guarantee (independent draws only get
     this in expectation)."""
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext48 import _M, pipeline_systematic_resample
+    from stockify_spark.queries.pipeline import _M, pipeline_systematic_resample
 
     weights = {
         r.doc_id: r.n_chars

@@ -1,4 +1,4 @@
-"""Pins for interpolated Kneser-Ney smoothing (registry_ext49)."""
+"""Pins for interpolated Kneser-Ney smoothing (queries/text.py)."""
 
 from __future__ import annotations
 
@@ -40,7 +40,7 @@ def _kn(c2):
 
 
 def test_kn_rows_match_and_every_context_normalizes(spark):
-    from stockify_spark.registry_ext49 import text_kneser_ney
+    from stockify_spark.queries.text import text_kneser_ney
 
     c2 = _counts(spark)
     p, c1, n1p, nc = _kn(c2)

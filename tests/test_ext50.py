@@ -1,4 +1,4 @@
-"""Pins for the seeded Laplace DP release (registry_ext50)."""
+"""Pins for the seeded Laplace DP release (queries/pipeline.py)."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import math
 
 from tests.conftest import SF_SMALL
 
-from stockify_spark.registry_ext50 import _B, _SEED
+from stockify_spark.queries.pipeline import _B, _SEED
 
 
 def _noise(key: str) -> float:
@@ -22,7 +22,7 @@ def test_release_matches_reimplemented_mechanism(spark):
     from pyspark.sql import functions as F
 
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext50 import dq_dp_counts
+    from stockify_spark.queries.pipeline import dq_dp_counts
 
     true = {
         r.event_type: r.n

@@ -1,4 +1,4 @@
-"""Pins for HITS hubs/authorities (registry_ext51)."""
+"""Pins for HITS hubs/authorities (queries/graph.py)."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ from tests.conftest import SF_SMALL
 
 
 def _edges(spark):
-    from stockify_spark.registry_ext51 import graph_hits  # noqa: F401
+    from stockify_spark.queries.graph import graph_hits  # noqa: F401
     import hashlib
 
     from stockify_spark.registry import _t
@@ -30,7 +30,7 @@ def _edges(spark):
 
 
 def test_hits_matches_numpy_power_iteration(spark):
-    from stockify_spark.registry_ext51 import graph_hits
+    from stockify_spark.queries.graph import graph_hits
 
     E = _edges(spark)
     nodes = sorted({s for s, _ in E} | {d for _, d in E})
@@ -60,7 +60,7 @@ def test_hits_separates_roles(spark):
     """Pure sources (out-edges only) must carry hub mass and zero
     authority; pure sinks the reverse — the two-score structure
     PageRank collapses."""
-    from stockify_spark.registry_ext51 import graph_hits
+    from stockify_spark.queries.graph import graph_hits
 
     E = _edges(spark)
     srcs = {s for s, _ in E}

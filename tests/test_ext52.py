@@ -1,4 +1,4 @@
-"""Pins for LTTB downsampling (registry_ext52)."""
+"""Pins for LTTB downsampling (queries/windows.py)."""
 
 from __future__ import annotations
 
@@ -6,7 +6,7 @@ import numpy as np
 
 from tests.conftest import SF_SMALL
 
-from stockify_spark.registry_ext52 import _BK, _N, _NB
+from stockify_spark.queries.windows import _BK, _LTTB_N as _N, _NB
 
 
 def _lttb_ref(y):
@@ -34,7 +34,7 @@ def _lttb_ref(y):
 
 def test_lttb_matches_reference_and_keeps_endpoints(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext52 import window_lttb
+    from stockify_spark.queries.windows import window_lttb
 
     ev = (
         _t(spark, SF_SMALL, "events")

@@ -1,4 +1,4 @@
-"""Pins for Holt-Winters seasonal smoothing (registry_ext53)."""
+"""Pins for Holt-Winters seasonal smoothing (queries/windows.py)."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ import numpy as np
 
 from tests.conftest import SF_SMALL
 
-from stockify_spark.registry_ext53 import _AL, _BE, _GA, _M
+from stockify_spark.queries.windows import _AL, _BE, _GA, _M
 
 
 def _hw_ref(z):
@@ -30,7 +30,7 @@ def _hw_ref(z):
 
 def test_hw_matches_reference_on_real_series(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext53 import window_holt_winters
+    from stockify_spark.queries.windows import window_holt_winters
     from pyspark.sql import functions as F
 
     rev = (

@@ -1,4 +1,4 @@
-"""Pins for positional proximity search (registry_ext54)."""
+"""Pins for positional proximity search (queries/text.py)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ def test_near_matches_brute_force_pair_scan(spark):
     """Ground truth by the quadratic definition the operator
     deliberately avoids: min over ALL occurrence pairs."""
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext54 import text_proximity_search
+    from stockify_spark.queries.text import text_proximity_search
 
     docs = {
         r.doc_id: r.text.lower().split(" ")

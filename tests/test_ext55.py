@@ -1,4 +1,4 @@
-"""Pins for seeded random walks (registry_ext55)."""
+"""Pins for seeded random walks (queries/graph.py)."""
 
 from __future__ import annotations
 
@@ -29,7 +29,7 @@ def _graph(spark):
 
 
 def test_walks_match_independent_reimplementation(spark):
-    from stockify_spark.registry_ext55 import _STEPS, graph_random_walk
+    from stockify_spark.queries.graph import _STEPS, graph_random_walk
 
     adj = _graph(spark)
     rows = graph_random_walk(spark, SF_SMALL).collect()
@@ -53,7 +53,7 @@ def test_walk_steps_follow_edges_and_spread(spark):
     """Every consecutive pair must be a real edge, and the step-1
     choices must not collapse onto a few hubs (the seeded hash is a
     per-(step,node,start) draw, not a global one)."""
-    from stockify_spark.registry_ext55 import graph_random_walk
+    from stockify_spark.queries.graph import graph_random_walk
 
     adj = _graph(spark)
     walks: dict = {}

@@ -1,10 +1,10 @@
-"""Pins for the sequential probability ratio test (registry_ext56)."""
+"""Pins for the sequential probability ratio test (queries/stats.py)."""
 
 from __future__ import annotations
 
 from tests.conftest import SF_SMALL
 
-from stockify_spark.registry_ext56 import _C0, _C1, _LN_A, _LN_B, _THRESH
+from stockify_spark.queries.stats import _C0, _C1, _LN_A, _LN_B, _THRESH
 
 
 def test_sprt_stops_at_the_first_crossing_and_not_before(spark):
@@ -12,7 +12,7 @@ def test_sprt_stops_at_the_first_crossing_and_not_before(spark):
     the FIRST prefix crossing either fence, every earlier prefix
     strictly inside the continuation band."""
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext56 import stats_sprt
+    from stockify_spark.queries.stats import stats_sprt
 
     ev = (
         _t(spark, SF_SMALL, "events")

@@ -1,4 +1,4 @@
-"""Pins for skip-gram pairs + negative sampling (registry_ext57)."""
+"""Pins for skip-gram pairs + negative sampling (queries/text.py)."""
 
 from __future__ import annotations
 
@@ -24,7 +24,7 @@ def _pairs(spark):
 
 
 def test_top_pairs_match_and_are_symmetric(spark):
-    from stockify_spark.registry_ext57 import text_skipgram_pairs
+    from stockify_spark.queries.text import text_skipgram_pairs
 
     pc = _pairs(spark)
     rows = text_skipgram_pairs(spark, SF_SMALL).collect()
@@ -44,7 +44,7 @@ def test_three_quarter_power_lifts_rare_words(spark):
     unigram distribution, rare words gain sampling mass and frequent
     words lose it (p_neg/p_unigram decreases monotonically in
     frequency)."""
-    from stockify_spark.registry_ext57 import text_skipgram_pairs
+    from stockify_spark.queries.text import text_skipgram_pairs
 
     pc = _pairs(spark)
     uni: Counter = Counter()

@@ -1,10 +1,10 @@
-"""Pins for ray-casting point-in-polygon (registry_ext58)."""
+"""Pins for ray-casting point-in-polygon (queries/events.py)."""
 
 from __future__ import annotations
 
 from tests.conftest import SF_SMALL
 
-from stockify_spark.registry_ext58 import _EDGES, _POLY
+from stockify_spark.queries.events import _EDGES, _POLY
 
 
 def _inside(x: float, y: float) -> bool:
@@ -17,7 +17,7 @@ def _inside(x: float, y: float) -> bool:
 
 def test_census_matches_per_point_reimplementation(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext58 import geo_point_in_polygon
+    from stockify_spark.queries.events import geo_point_in_polygon
 
     cust = (
         _t(spark, SF_SMALL, "customer")

@@ -1,4 +1,4 @@
-"""Pins for the information-gain decision stump (registry_ext59)."""
+"""Pins for the information-gain decision stump (queries/ml.py)."""
 
 from __future__ import annotations
 
@@ -17,7 +17,7 @@ def test_stump_matches_per_candidate_rescan(spark):
     """Ground truth by the naive method the operator avoids: rescan
     the full data per candidate threshold."""
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext59 import ml_decision_stump
+    from stockify_spark.queries.ml import ml_decision_stump
 
     data = [
         (

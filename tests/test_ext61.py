@@ -1,4 +1,4 @@
-"""Pins for split-conformal intervals (registry_ext61)."""
+"""Pins for split-conformal intervals (queries/stats.py)."""
 
 from __future__ import annotations
 
@@ -35,7 +35,7 @@ def _splits(spark):
 
 
 def test_conformal_matches_rank_rule_and_guarantees_coverage(spark):
-    from stockify_spark.registry_ext61 import stats_conformal_interval
+    from stockify_spark.queries.stats import stats_conformal_interval
 
     model, calib, test = _splits(spark)
     n = len(calib)

@@ -1,4 +1,4 @@
-"""Pins for the Python UDTF surface (registry_ext62)."""
+"""Pins for the Python UDTF surface (queries/functions.py)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ _W = 40
 
 def test_udtf_chunks_match_python_reimplementation(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext62 import fn_udtf_chunks
+    from stockify_spark.queries.functions import fn_udtf_chunks
 
     texts = {
         r.doc_id: r.text
@@ -35,7 +35,7 @@ def test_udtf_is_lateral_composable(spark):
     """The point of the TABLE-function form: it composes in SQL with
     per-row arguments, filters push below it, and aggregates stack
     on top — one statement, no DataFrame plumbing."""
-    from stockify_spark.registry_ext62 import fn_udtf_chunks
+    from stockify_spark.queries.functions import fn_udtf_chunks
 
     fn_udtf_chunks(spark, SF_SMALL)  # registers chunk_text + the view
     out = spark.sql(

@@ -1,4 +1,4 @@
-"""Pins for Burrows' Delta stylometry (registry_ext63)."""
+"""Pins for Burrows' Delta stylometry (queries/text.py)."""
 
 from __future__ import annotations
 
@@ -34,7 +34,7 @@ def _profiles(spark):
 
 
 def test_delta_matches_numpy_and_is_a_metric_on_profiles(spark):
-    from stockify_spark.registry_ext63 import text_stylometry_delta
+    from stockify_spark.queries.text import text_stylometry_delta
 
     sources, _markers, fr = _profiles(spark)
     mu = fr.mean(axis=0)

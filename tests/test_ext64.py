@@ -1,4 +1,4 @@
-"""Pins for the lag-1 Granger test (registry_ext64)."""
+"""Pins for the lag-1 Granger test (queries/stats.py)."""
 
 from __future__ import annotations
 
@@ -28,7 +28,7 @@ def _series(spark):
 
 
 def test_granger_matches_numpy_lstsq(spark):
-    from stockify_spark.registry_ext64 import stats_granger
+    from stockify_spark.queries.stats import stats_granger
 
     x, y = _series(spark)
     yt, y1, x1 = y[1:], y[:-1], x[:-1]

@@ -1,4 +1,4 @@
-"""Pins for changepoint localization (registry_ext65)."""
+"""Pins for changepoint localization (queries/windows.py)."""
 
 from __future__ import annotations
 
@@ -25,7 +25,7 @@ def _best_split(vals):
 
 def test_changepoint_matches_explicit_sse_scan(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext65 import window_changepoint
+    from stockify_spark.queries.windows import window_changepoint
 
     ev = (
         _t(spark, SF_SMALL, "events")

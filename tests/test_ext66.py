@@ -1,4 +1,4 @@
-"""Pins for price index numbers (registry_ext66)."""
+"""Pins for price index numbers (queries/orders.py)."""
 
 from __future__ import annotations
 
@@ -34,7 +34,7 @@ def _unit_values(spark):
 
 
 def test_indexes_match_reimplementation_and_fisher_bounds(spark):
-    from stockify_spark.registry_ext66 import orders_price_index
+    from stockify_spark.queries.orders import orders_price_index
 
     by_ym = _unit_values(spark)
     ym0 = min(by_ym)

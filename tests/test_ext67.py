@@ -1,4 +1,4 @@
-"""Pins for AR(1) mean-reversion half-life (registry_ext67)."""
+"""Pins for AR(1) mean-reversion half-life (queries/windows.py)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ from tests.conftest import SF_SMALL
 
 def test_halflife_matches_numpy_ols(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext67 import window_ar1_halflife
+    from stockify_spark.queries.windows import window_ar1_halflife
 
     ev = (
         _t(spark, SF_SMALL, "events")

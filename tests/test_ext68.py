@@ -1,4 +1,4 @@
-"""Pins for two-state burst detection (registry_ext68)."""
+"""Pins for two-state burst detection (queries/events.py)."""
 
 from __future__ import annotations
 
@@ -38,7 +38,7 @@ def _full_dp(gaps, a0):
 
 def test_difference_recursion_equals_full_dp_and_matches_engine(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext68 import events_burst_detect
+    from stockify_spark.queries.events import events_burst_detect
 
     ev = (
         _t(spark, SF_SMALL, "events")

@@ -1,4 +1,4 @@
-"""Pins for tokenizer fertility (registry_ext69)."""
+"""Pins for tokenizer fertility (queries/text.py)."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ from tests.test_ext43 import _serial_bpe
 
 def test_fertility_matches_serial_bpe_reimplementation(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext69 import tokenizer_fertility
+    from stockify_spark.queries.text import tokenizer_fertility
 
     docs = _t(spark, SF_SMALL, "documents").select("lang", "text").collect()
     vocab: Counter = Counter()
@@ -47,7 +47,7 @@ def test_merges_help_languages_containing_them(spark):
     discount vs its character baseline; a language with none gets
     exactly the baseline (fertility == mean word length)."""
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext69 import tokenizer_fertility
+    from stockify_spark.queries.text import tokenizer_fertility
 
     docs = _t(spark, SF_SMALL, "documents").select("lang", "text").collect()
     vocab: Counter = Counter()

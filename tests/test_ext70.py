@@ -1,4 +1,4 @@
-"""Pins for the KMV sketch set operations (registry_ext70)."""
+"""Pins for the KMV sketch set operations (queries/aggregates.py)."""
 
 from __future__ import annotations
 
@@ -35,7 +35,7 @@ def _hv(part: int) -> int:
 
 
 def test_sketch_estimates_match_reimplementation_and_track_truth(spark):
-    from stockify_spark.registry_ext70 import agg_kmv_sketch
+    from stockify_spark.queries.aggregates import agg_kmv_sketch
 
     sets = _region_part_sets(spark)
     sketches = {

@@ -1,4 +1,4 @@
-"""Pins for rank-biased overlap (registry_ext71)."""
+"""Pins for rank-biased overlap (queries/stats.py)."""
 
 from __future__ import annotations
 
@@ -23,7 +23,7 @@ def test_rbo_matches_reimplementation(spark):
     from pyspark.sql import functions as F
 
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext71 import stats_rbo
+    from stockify_spark.queries.stats import stats_rbo
 
     s = defaultdict(lambda: [0.0, 0])
     for r in (

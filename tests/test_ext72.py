@@ -1,4 +1,4 @@
-"""Pins for TTR/MATTR lexical diversity (registry_ext72)."""
+"""Pins for TTR/MATTR lexical diversity (queries/text.py)."""
 
 from __future__ import annotations
 
@@ -18,7 +18,7 @@ def _mattr(toks):
 
 def test_mattr_matches_brute_force_window_recount(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext72 import text_mattr
+    from stockify_spark.queries.text import text_mattr
 
     docs = {
         r.doc_id: r.text.lower().split(" ")

@@ -1,4 +1,4 @@
-"""Pins for Allen's interval algebra (registry_ext73)."""
+"""Pins for Allen's interval algebra (queries/joins.py)."""
 
 from __future__ import annotations
 
@@ -40,7 +40,7 @@ def test_census_matches_per_pair_classifier(spark):
     from pyspark.sql import functions as F
 
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext73 import join_allen_relations
+    from stockify_spark.queries.joins import join_allen_relations
 
     li = _t(spark, SF_SMALL, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_shipdate"

@@ -1,4 +1,4 @@
-"""Pins for Jaro-Winkler similarity (registry_ext74)."""
+"""Pins for Jaro-Winkler similarity (queries/functions.py)."""
 
 from __future__ import annotations
 
@@ -6,7 +6,7 @@ import duckdb
 
 from tests.conftest import SF_SMALL
 
-from stockify_spark.registry_ext74 import _jaro, _jw
+from stockify_spark.queries.functions import _jaro, _jw
 
 
 def test_textbook_values_and_duckdb_parity():
@@ -42,7 +42,7 @@ def test_textbook_values_and_duckdb_parity():
 
 
 def test_query_ranks_by_boosted_score(spark):
-    from stockify_spark.registry_ext74 import fn_jaro_winkler
+    from stockify_spark.queries.functions import fn_jaro_winkler
 
     rows = fn_jaro_winkler(spark, SF_SMALL).collect()
     assert len(rows) == 100

@@ -1,4 +1,4 @@
-"""Pins for the character-entropy quality signal (registry_ext75)."""
+"""Pins for the character-entropy quality signal (queries/text.py)."""
 
 from __future__ import annotations
 
@@ -17,7 +17,7 @@ def _H(text: str) -> float:
 
 def test_entropy_matches_brute_recount_and_bounds(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext75 import text_char_entropy
+    from stockify_spark.queries.text import text_char_entropy
 
     docs = {
         r.doc_id: r.text

@@ -1,4 +1,4 @@
-"""Pins for ABC/XYZ classification (registry_ext76)."""
+"""Pins for ABC/XYZ classification (queries/orders.py)."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ def test_matrix_matches_pandas_recomputation(spark):
     from pyspark.sql import functions as F
 
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext76 import orders_abc_xyz
+    from stockify_spark.queries.orders import orders_abc_xyz
 
     rows = (
         _t(spark, SF_SMALL, "lineitem")

@@ -1,4 +1,4 @@
-"""Pins for the language-ID evaluation (registry_ext77)."""
+"""Pins for the language-ID evaluation (queries/text.py)."""
 
 from __future__ import annotations
 
@@ -8,7 +8,7 @@ from tests.conftest import SF_SMALL
 
 
 def _matrix(spark):
-    from stockify_spark.registry_ext77 import text_langid_eval
+    from stockify_spark.queries.text import text_langid_eval
 
     rows = text_langid_eval(spark, SF_SMALL).collect()
     return {(r.true_lang, r.predicted): r for r in rows}

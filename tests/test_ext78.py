@@ -1,4 +1,4 @@
-"""Pins for Kendall's tau-b (registry_ext78)."""
+"""Pins for Kendall's tau-b (queries/stats.py)."""
 
 from __future__ import annotations
 
@@ -27,7 +27,7 @@ def _tau_b(xs, ys):
 
 def test_tau_matches_pairwise_reimplementation(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext78 import stats_kendall_tau
+    from stockify_spark.queries.stats import stats_kendall_tau
 
     monthly: defaultdict = defaultdict(lambda: [0, 0.0])
     for r in (

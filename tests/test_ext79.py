@@ -1,4 +1,4 @@
-"""Pins for the dataset card (registry_ext79)."""
+"""Pins for the dataset card (queries/pipeline.py)."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ from tests.conftest import SF_SMALL
 
 def test_card_fields_match_independent_recount(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext79 import pipeline_dataset_card
+    from stockify_spark.queries.pipeline import pipeline_dataset_card
 
     docs = (
         _t(spark, SF_SMALL, "documents")
@@ -56,7 +56,7 @@ def test_card_is_consistent_with_the_dedup_operator(spark):
     the corpus: n_docs - n_unique == number of EXCESS members across
     dedup_exact's duplicate groups."""
     from stockify_spark.registry import QUERIES
-    from stockify_spark.registry_ext79 import pipeline_dataset_card
+    from stockify_spark.queries.pipeline import pipeline_dataset_card
 
     c = pipeline_dataset_card(spark, SF_SMALL).collect()[0]
     groups = QUERIES["dedup_exact"](spark, SF_SMALL).collect()

@@ -1,4 +1,4 @@
-"""Pins for the Ljung-Box portmanteau test (registry_ext80)."""
+"""Pins for the Ljung-Box portmanteau test (queries/windows.py)."""
 
 from __future__ import annotations
 
@@ -22,7 +22,7 @@ def _q(x, h=3):
 
 def test_q_matches_numpy_reimplementation(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext80 import window_ljung_box
+    from stockify_spark.queries.windows import window_ljung_box
 
     ev = (
         _t(spark, SF_SMALL, "events")

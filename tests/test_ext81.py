@@ -1,4 +1,4 @@
-"""Pins for the Wald-Wolfowitz runs test (registry_ext81)."""
+"""Pins for the Wald-Wolfowitz runs test (queries/stats.py)."""
 
 from __future__ import annotations
 
@@ -22,7 +22,7 @@ def _runs_z(xs):
 
 def test_runs_match_reimplementation(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext81 import stats_runs_test
+    from stockify_spark.queries.stats import stats_runs_test
 
     ev = (
         _t(spark, SF_SMALL, "events")

@@ -1,4 +1,4 @@
-"""Pins for Cohen's kappa (registry_ext82)."""
+"""Pins for Cohen's kappa (queries/stats.py)."""
 
 from __future__ import annotations
 
@@ -21,7 +21,7 @@ def _kappa(pairs):
 def test_kappa_matches_reimplementation_and_exposes_chance(spark):
     from stockify_spark.functions.text import lang_id
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext82 import stats_cohens_kappa
+    from stockify_spark.queries.stats import stats_cohens_kappa
 
     from pyspark.sql import functions as F
 

@@ -1,4 +1,4 @@
-"""Pins for token-budget selection (registry_ext83)."""
+"""Pins for token-budget selection (queries/pipeline.py)."""
 
 from __future__ import annotations
 
@@ -20,7 +20,7 @@ def _docs(spark):
 
 
 def test_selection_is_the_density_greedy_prefix(spark):
-    from stockify_spark.registry_ext83 import pipeline_budget_select
+    from stockify_spark.queries.pipeline import pipeline_budget_select
 
     docs = _docs(spark)
     order = sorted(docs, key=lambda d: (-docs[d][1], d))

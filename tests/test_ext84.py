@@ -1,4 +1,4 @@
-"""Pins for A/B power analysis (registry_ext84)."""
+"""Pins for A/B power analysis (queries/stats.py)."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ def test_mde_matches_numpy_recomputation(spark):
     from pyspark.sql import functions as F
 
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext84 import stats_power_mde
+    from stockify_spark.queries.stats import stats_power_mde
 
     users = (
         _t(spark, SF_SMALL, "events")

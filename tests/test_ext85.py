@@ -1,4 +1,4 @@
-"""Pins for the degree census + reciprocity (registry_ext85)."""
+"""Pins for the degree census + reciprocity (queries/graph.py)."""
 
 from __future__ import annotations
 
@@ -31,7 +31,7 @@ def _directed_edges(spark):
 
 
 def test_census_conserves_edges_and_matches_recount(spark):
-    from stockify_spark.registry_ext85 import graph_degree_census
+    from stockify_spark.queries.graph import graph_degree_census
 
     E = _directed_edges(spark)
     outd = Counter(s for s, _ in E)

@@ -1,4 +1,4 @@
-"""Pins for Sharpe/Sortino risk ratios (registry_ext86)."""
+"""Pins for Sharpe/Sortino risk ratios (queries/stocks.py)."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ _ANN = math.sqrt(252.0)
 
 def test_ratios_match_numpy(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext86 import stocks_risk_ratios
+    from stockify_spark.queries.stocks import stocks_risk_ratios
 
     ev = (
         _t(spark, SF_SMALL, "events")

@@ -1,4 +1,4 @@
-"""Pins for the nearest-direction asof join (registry_ext87)."""
+"""Pins for the nearest-direction asof join (queries/joins.py)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ _TOL_S = 600
 
 def test_nearest_matches_brute_force_scan(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext87 import join_asof_nearest
+    from stockify_spark.queries.joins import join_asof_nearest
 
     ev = (
         _t(spark, SF_SMALL, "events")

@@ -136,7 +136,7 @@ def test_geo_knn_grid_matches_brute_force(spark):
     certified path)."""
     from pyspark.sql import Window
     from stockify_spark.registry import QUERIES, _t
-    from stockify_spark.registry_ext10 import _haversine_km
+    from stockify_spark.queries.events import _haversine_km
 
     for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         def pts(df, key):

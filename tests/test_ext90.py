@@ -81,8 +81,8 @@ def test_permutation_test_exact_formula(spark):
 def test_gopher_ngrams_known_doc(spark):
     """Hand-built doc: 'a b a b a b c' → top 2-gram 'a b' (3×, 3
     chars) over 13 chars; dup 5-grams: none repeated → 0."""
-    from stockify_spark.registry_ext90 import doc_quality_gopher_ngrams
-    from stockify_spark import registry_ext90 as m
+    from stockify_spark.queries.text import doc_quality_gopher_ngrams
+    from stockify_spark.queries import text as m
 
     df = spark.createDataFrame(
         [(1, "a b a b a b c"), (2, "x y z w v u t s r q")],

@@ -7,8 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from stockify_spark.registry_ext81 import stats_runs_test
-from stockify_spark.registry_ext81 import stats_runs_test_chunked
+from stockify_spark.queries.stats import stats_runs_test
+from stockify_spark.queries.stats import stats_runs_test_chunked
 
 from tests.conftest import SF_SMOKE
 

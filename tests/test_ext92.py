@@ -1,4 +1,4 @@
-"""Pins for the round-13 statistics wave (registry_ext92).
+"""Pins for the round-13 statistics wave (queries: events, stats, windows).
 
 Each test recomputes the statistic from first principles in pure
 Python over the same sf0.001 tables and compares — an oracle
@@ -33,7 +33,7 @@ def _series(spark):
 
 
 def test_savitzky_golay_matches_python_and_preserves_quadratic(spark):
-    from stockify_spark.registry_ext92 import window_savitzky_golay
+    from stockify_spark.queries.windows import window_savitzky_golay
 
     series = _series(spark)
     want = {}
@@ -67,7 +67,7 @@ def _acf(ys, k):
 
 
 def test_pacf_durbin_levinson_matches_python(spark):
-    from stockify_spark.registry_ext92 import window_pacf
+    from stockify_spark.queries.windows import window_pacf
 
     series = _series(spark)
     got = defaultdict(dict)
@@ -89,7 +89,7 @@ def test_pacf_durbin_levinson_matches_python(spark):
 
 
 def test_negbinom_moments_and_consistency(spark):
-    from stockify_spark.registry_ext92 import stats_negbinom_mom
+    from stockify_spark.queries.stats import stats_negbinom_mom
 
     rows = stats_negbinom_mom(spark, SF_SMOKE).collect()
     assert len(rows) == 5  # one fit per event type
@@ -105,7 +105,7 @@ def test_negbinom_moments_and_consistency(spark):
 def test_poisson_rate_test_python_recompute(spark):
     from pyspark.sql import functions as F
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext92 import events_poisson_rate_test
+    from stockify_spark.queries.events import events_poisson_rate_test
 
     rows = (
         _t(spark, SF_SMOKE, "events")
@@ -128,7 +128,7 @@ def test_poisson_rate_test_python_recompute(spark):
 def test_cramers_v_python_recompute_and_correction_shrinks(spark):
     from pyspark.sql import functions as F
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext92 import stats_cramers_v
+    from stockify_spark.queries.stats import stats_cramers_v
 
     rows = (
         _t(spark, SF_SMOKE, "orders")
@@ -157,7 +157,7 @@ def test_cramers_v_python_recompute_and_correction_shrinks(spark):
 
 def test_brown_forsythe_python_recompute(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext92 import stats_brown_forsythe
+    from stockify_spark.queries.stats import stats_brown_forsythe
 
     rows = (
         _t(spark, SF_SMOKE, "orders")

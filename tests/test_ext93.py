@@ -1,4 +1,4 @@
-"""Pins for the round-13 corpus-statistics wave (registry_ext93).
+"""Pins for the round-13 corpus-statistics wave (queries: pipeline, text).
 
 Pure-Python recomputation over sf0.001 — independent of both SQL
 engines — plus the defining mathematical property of each statistic.
@@ -22,7 +22,7 @@ def _docs(spark):
 
 
 def test_sppmi_matches_python_and_is_shifted_pmi(spark):
-    from stockify_spark.registry_ext93 import text_sppmi
+    from stockify_spark.queries.text import text_sppmi
 
     pc: Counter = Counter()
     for r in _docs(spark):
@@ -57,7 +57,7 @@ def test_sppmi_matches_python_and_is_shifted_pmi(spark):
 
 
 def test_vocab_coverage_python_recompute(spark):
-    from stockify_spark.registry_ext93 import tokenizer_vocab_coverage
+    from stockify_spark.queries.text import tokenizer_vocab_coverage
 
     tok_by_lang = defaultdict(Counter)
     glob: Counter = Counter()
@@ -87,7 +87,7 @@ def test_vocab_coverage_python_recompute(spark):
 def test_mahalanobis_matches_numpy(spark):
     import numpy as np
 
-    from stockify_spark.registry_ext93 import dq_mahalanobis_outliers
+    from stockify_spark.queries.pipeline import dq_mahalanobis_outliers
 
     feats, ids = [], []
     for r in _docs(spark):
@@ -111,7 +111,7 @@ def test_mahalanobis_matches_numpy(spark):
 
 
 def test_epoch_allocation_budget_and_discount(spark):
-    from stockify_spark.registry_ext93 import pipeline_epoch_allocation
+    from stockify_spark.queries.pipeline import pipeline_epoch_allocation
 
     rows = pipeline_epoch_allocation(spark, SF_SMOKE).collect()
     tokens = {}

@@ -1,4 +1,4 @@
-"""Pins for the round-13 model-loop wave (registry_ext96)."""
+"""Pins for the round-13 model-loop wave (queries: ml, orders, stats)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ from tests.conftest import SF_SMOKE
 
 
 def test_gbt_rounds_monotonically_reduce_sse(spark):
-    from stockify_spark.registry_ext96 import ml_gbt_two_stumps
+    from stockify_spark.queries.ml import ml_gbt_two_stumps
 
     r = ml_gbt_two_stumps(spark, SF_SMOKE).collect()[0]
     # every boosting round must strictly reduce training SSE
@@ -28,7 +28,7 @@ def test_gbt_stage1_matches_exhaustive_python(spark):
     from pyspark.sql import functions as F
 
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext96 import ml_gbt_two_stumps
+    from stockify_spark.queries.ml import ml_gbt_two_stumps
 
     rows = (
         _t(spark, SF_SMOKE, "lineitem")
@@ -63,7 +63,7 @@ def test_gbt_stage1_matches_exhaustive_python(spark):
 
 
 def test_moments_merge_identity_holds(spark):
-    from stockify_spark.registry_ext96 import stats_moments_merge
+    from stockify_spark.queries.stats import stats_moments_merge
 
     rows = stats_moments_merge(spark, SF_SMOKE).collect()
     assert len(rows) == 5
@@ -74,7 +74,7 @@ def test_moments_merge_identity_holds(spark):
 
 def test_calibration_ece_python_recompute(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext96 import ml_calibration_ece
+    from stockify_spark.queries.ml import ml_calibration_ece
 
     o = _t(spark, SF_SMOKE, "orders").select("o_totalprice", "o_orderstatus").collect()
     vals = [r.o_totalprice for r in o]
@@ -105,7 +105,7 @@ def test_calibration_ece_python_recompute(spark):
 
 def test_npv_discount_is_correct_and_orders_rank(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext96 import orders_customer_npv
+    from stockify_spark.queries.orders import orders_customer_npv
 
     o = _t(spark, SF_SMOKE, "orders").select(
         "o_custkey", "o_totalprice", "o_orderdate"

@@ -1,4 +1,4 @@
-"""Pins for the round-13 measurement-science wave (registry_ext97)."""
+"""Pins for the round-13 measurement-science wave (queries: ml, similarity, stats)."""
 
 from __future__ import annotations
 
@@ -22,7 +22,7 @@ def test_lin_ccc_matches_python_and_is_bounded_by_pearson(spark):
     from pyspark.sql import functions as F
 
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext97 import stats_lin_ccc
+    from stockify_spark.queries.stats import stats_lin_ccc
 
     rows = (
         _t(spark, SF_SMOKE, "events")
@@ -53,7 +53,7 @@ def test_deming_matches_python_and_beats_ols_attenuation(spark):
     from pyspark.sql import functions as F
 
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext97 import stats_deming_regression
+    from stockify_spark.queries.stats import stats_deming_regression
 
     o = _t(spark, SF_SMOKE, "orders").select("o_custkey", "o_totalprice").collect()
     c = {
@@ -83,7 +83,7 @@ def test_matryoshka_rerank_recall_vs_bruteforce(spark):
     import numpy as np
 
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext97 import sim_matryoshka_topk
+    from stockify_spark.queries.similarity import sim_matryoshka_topk
 
     emb = {
         r.vec_id: np.array(r.embedding, dtype=np.float64)
@@ -132,7 +132,7 @@ def test_lda_fisher_direction_maximizes_separation(spark):
     from pyspark.sql import functions as F
 
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext97 import ml_lda_fisher
+    from stockify_spark.queries.ml import ml_lda_fisher
 
     got = ml_lda_fisher(spark, SF_SMOKE).collect()[0]
     raw = _t(spark, SF_SMOKE, "orders").select(
@@ -165,7 +165,7 @@ def test_lda_fisher_direction_maximizes_separation(spark):
 
 def test_mcnemar_counts_and_statistic(spark):
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext97 import stats_mcnemar
+    from stockify_spark.queries.stats import stats_mcnemar
 
     o = _t(spark, SF_SMOKE, "orders").select(
         "o_totalprice", "o_orderstatus", "o_orderpriority"

@@ -1,4 +1,4 @@
-"""Pins for the round-13 directional/centrality wave (registry_ext99)."""
+"""Pins for the round-13 directional/centrality wave (queries: graph, stats, windows)."""
 
 from __future__ import annotations
 
@@ -14,7 +14,7 @@ def test_circular_stats_match_python_and_handle_wraparound(spark):
     from pyspark.sql import functions as F
 
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext99 import window_circular_stats
+    from stockify_spark.queries.windows import window_circular_stats
 
     rows = (
         _t(spark, SF_SMOKE, "events")
@@ -48,7 +48,7 @@ def test_vif_matches_numpy_inverse(spark):
     import numpy as np
 
     from stockify_spark.registry import _t
-    from stockify_spark.registry_ext99 import stats_vif
+    from stockify_spark.queries.stats import stats_vif
 
     feats = []
     for r in _t(spark, SF_SMOKE, "documents").select("text", "n_chars").collect():
@@ -64,8 +64,8 @@ def test_vif_matches_numpy_inverse(spark):
 
 
 def test_katz_matches_python_power_iterations(spark):
-    from stockify_spark.registry_ext10 import _kcore_sym_edges
-    from stockify_spark.registry_ext99 import graph_katz_centrality
+    from stockify_spark.queries.graph import _kcore_sym_edges
+    from stockify_spark.queries.graph import graph_katz_centrality
 
     sym = _kcore_sym_edges(spark, SF_SMOKE)
     nbrs = defaultdict(list)
@@ -84,8 +84,8 @@ def test_katz_matches_python_power_iterations(spark):
 
 
 def test_seasonal_strength_consistent_with_decomposition(spark):
-    from stockify_spark.registry_ext10 import window_seasonal
-    from stockify_spark.registry_ext99 import stats_seasonal_strength
+    from stockify_spark.queries.windows import window_seasonal
+    from stockify_spark.queries.stats import stats_seasonal_strength
 
     dec = window_seasonal(spark, SF_SMOKE).collect()
     rev = [r.rev for r in dec]

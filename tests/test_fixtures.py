@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from stockify_spark.sources.fixtures import RAMP_PERIOD, stocks_ramp, stocks_rand
+from stockify_spark.sources.fixtures import RAMP_CYCLES, RAMP_PERIOD, RAMP_SQL, stocks_ramp, stocks_rand
 
 
 def test_ramp_reproduces_reference_table(spark):
@@ -18,6 +18,18 @@ def test_ramp_reproduces_reference_table(spark):
     assert (r17["close"], r17["volume"]) == (670.0, 2_900_000.0)
     # period 18: row 18 repeats row 0
     assert r18["close"] == r0["close"] and r18["date"] == r0["date"]
+
+
+def test_ramp_sql_equals_spark_ramp(spark):
+    """The ramp's two faces, the Spark generator and the DuckDB SQL the
+    oracles read, hold the same rows column for column."""
+    import duckdb
+
+    cur = duckdb.connect().execute(RAMP_SQL)
+    cols = [d[0] for d in cur.description]
+    want = stocks_ramp(spark, cycles=RAMP_CYCLES)
+    assert cols == want.columns
+    assert sorted(cur.fetchall()) == sorted(tuple(r) for r in want.collect())
 
 
 def test_ramp_selectivities_match_reference_probes(spark):

@@ -15,9 +15,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from stockify_spark.operators.ranks import distinct_value_ranks, ntile_bucket_bounds
-from stockify_spark.registry_ext12 import stats_spearman
-from stockify_spark.registry_ext100 import orders_credit_scorecard, stats_gini_auc
-from stockify_spark.registry_ext101 import stats_wilcoxon_signed_rank
+from stockify_spark.queries.orders import orders_credit_scorecard
+from stockify_spark.queries.stats import stats_gini_auc, stats_spearman, stats_wilcoxon_signed_rank
 
 from tests.conftest import SF_SMOKE
 
@@ -161,7 +160,7 @@ class TestWeightedMedianChunkedPlan:
         the tiny per-chunk aggregate (prefix-sum over ~|domain/256|
         rows) or a BroadcastHashJoin against the one-row-per-flag
         fence BEFORE the parquet scan."""
-        from stockify_spark.registry_ext17 import agg_weighted_median
+        from stockify_spark.queries.aggregates import agg_weighted_median
 
         df = agg_weighted_median(spark, SF_SMOKE)
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -216,7 +215,7 @@ class TestWeightedMedianChunkedPlan:
 
         with tempfile.TemporaryDirectory() as td:
             df.write.parquet(os.path.join(td, "lineitem.parquet"))
-            from stockify_spark.registry_ext17 import agg_weighted_median
+            from stockify_spark.queries.aggregates import agg_weighted_median
 
             got = agg_weighted_median(spark, td).collect()
         assert len(got) == 1

@@ -45,3 +45,15 @@ def test_driver_module_exposes_contract():
     assert set(o) <= set(q)
     assert len(q) >= 100
     assert callable(next(iter(q.values())))
+
+
+def test_priority_lists_every_query_once():
+    """__spark_entry__._PRIORITY fixes the driver order of queries()
+    and oracle_sql(), so that order cannot depend on the order in
+    which pkgutil imports the query modules."""
+    import __spark_entry__ as e
+
+    assert len(e._PRIORITY) == len(set(e._PRIORITY))
+    assert sorted(e._PRIORITY) == sorted(QUERIES)
+    assert list(e.queries()) == e._PRIORITY
+    assert list(e.oracle_sql()) == [n for n in e._PRIORITY if n in ORACLE]

@@ -1,6 +1,6 @@
 """Partition-column support in the txlog (sources/txlog.py
 create_partitioned / partitionValues / snapshot_partition_pruned),
-plus the label-propagation pins of registry_ext95."""
+plus the label-propagation pins of queries/graph.py."""
 
 from __future__ import annotations
 
@@ -110,8 +110,8 @@ def test_raw_read_and_rewrite_faces_refuse_partitioned_tables(spark, ptable):
 def test_label_propagation_matches_python(spark):
     """2-round deterministic LPA recomputed in pure Python from the
     same residue-graph edges."""
-    from stockify_spark.registry_ext10 import _kcore_sym_edges
-    from stockify_spark.registry_ext95 import graph_label_propagation
+    from stockify_spark.queries.graph import _kcore_sym_edges
+    from stockify_spark.queries.graph import graph_label_propagation
 
     sym = _kcore_sym_edges(spark, SF_SMOKE)
     nbrs = defaultdict(list)
