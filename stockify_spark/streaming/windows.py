@@ -15,19 +15,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stockify_spark.sources.io import NANOS_TS_COLS, _ensure_ltz, _ensure_utc
+from stockify_spark.sources.io import (
+    NANOS_TS_COLS,
+    _ensure_ltz,
+    _ensure_nanos_conf,
+    _ensure_utc,
+    _pinned_schema,
+)
 
 
 def stream_events(spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1) -> DataFrame:
     """File-source stream over the events parquet (the local stand-in
     for Kafka; same downstream plan either way)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    _ensure_nanos_conf(spark)
     _ensure_utc(spark)
     _ensure_ltz(spark)
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
     # FileStreamSource wants a directory/glob, not a single file
     stream = (
-        spark.readStream.schema(static.schema)
+        spark.readStream.schema(_pinned_schema(spark, f"{sf_dir}/events.parquet"))
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(f"{sf_dir}/events*.parquet")
     )
