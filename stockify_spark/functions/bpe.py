@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stockify_spark.functions.scale import materialize
+
 
 def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Distinct-word frequency table: the BPE training input."""
@@ -110,7 +112,7 @@ def bpe_learn(
     Deterministic: ties broken by (count desc, lhs asc, rhs asc), so
     the learned merge table is exactly reproducible cross-engine.
     """
-    enc = _encoded(words).localCheckpoint(eager=True)
+    enc = materialize(_encoded(words))
     if enc.count() <= local_vocab_limit:
         # model-sized vocabulary: all steps in one executor pass
         # (serial BPE == the batched recurrence with batch=1: one
@@ -190,8 +192,8 @@ def bpe_learn(
             releasable = sdf
             sdf = nxt
     finally:
-        # base is localCheckpoint'ed (ContextCleaner reclaims its
-        # blocks on GC); only the per-step replace-chain persists are
+        # base is materialized (ContextCleaner reclaims its blocks on
+        # GC); only the per-step replace-chain persists are
         # releasable here
         if releasable is not None and releasable is not base:
             releasable.unpersist()
@@ -247,7 +249,7 @@ def bpe_learn_batched(
     trainers; the learned vocabulary differs only in merge ORDER for
     pairs whose counts interleave within a round.
     """
-    enc = _encoded(words).localCheckpoint(eager=True)
+    enc = materialize(_encoded(words))
     if enc.count() <= local_vocab_limit:
         # model-sized vocabulary: every round's count/select/apply in
         # one executor pass — the per-round shuffle + driver collect
@@ -330,7 +332,7 @@ def bpe_learn_batched(
             releasable = sdf
             sdf = nxt
     finally:
-        # base is localCheckpoint'ed (see bpe_learn) — only the
+        # base is materialized (see bpe_learn) — only the
         # per-round replace-chain persists are releasable here
         if releasable is not None and releasable is not base:
             releasable.unpersist()

@@ -1,16 +1,29 @@
-"""Scan-parallelism helper for map-heavy operators.
+"""Scale helpers: scan parallelism for map-heavy operators, and the
+one materialization primitive.
 
-A small or single-file parquet scan (single row group — byte-range
-splitting cannot parallelize it) arrives in fewer partitions than the
-session has slots, which serializes any expensive map pass that runs
-BEFORE the operator's first shuffle. These operators call
-:func:`spread_small_scan` at their input boundary: a conditional
-round-robin repartition that is a NO-OP whenever the input already
-has at least slot-count partitions — i.e., always at warehouse scale,
-where inputs arrive in thousands of splits and adding a corpus-sized
-shuffle would be a defect. The condition, not the repartition, is the
-design: pay one small-table shuffle to engage all cores at bench
-scale, add zero exchanges at 100 TB.
+Materialization policy. Every site that materializes a shared subtree
+or iterative state calls :func:`materialize`; no other module decides
+how an intermediate result is stored. The policy is LOCAL:
+``localCheckpoint`` keeps the blocks on the executors that computed
+them, unreplicated, and truncates the lineage, so an executor lost
+mid-query fails the query (there is no recompute path) and the query
+is rerun. That is the right trade for local and bench runs and for
+idempotent batch jobs, where a rerun is the retry. The blocks are
+RDD-level, so the ContextCleaner reclaims them once the plan is
+garbage-collected, and a later call on the same plan computes afresh
+instead of reusing a pinned cache entry.
+
+Scan parallelism. A small or single-file parquet scan (single row
+group — byte-range splitting cannot parallelize it) arrives in fewer
+partitions than the session has slots, which serializes any expensive
+map pass that runs BEFORE the operator's first shuffle. These
+operators call :func:`spread_small_scan` at their input boundary: a
+conditional round-robin repartition that is a NO-OP whenever the input
+already has at least slot-count partitions — i.e., always at warehouse
+scale, where inputs arrive in thousands of splits and adding a
+corpus-sized shuffle would be a defect. The condition, not the
+repartition, is the design: pay one small-table shuffle to engage all
+cores at bench scale, add zero exchanges at 100 TB.
 
 Measured boundary (r11, sf0.1): this pays ONLY where the serial map
 pass dwarfs the repartition — the substring-dedup family's
@@ -24,6 +37,14 @@ Measure before adding a call site.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Materialize ``df`` for several consumers or to cut a deep
+    lineage: ``df.localCheckpoint(eager=eager)``, under the policy in
+    the module docstring. With ``eager`` the frame is computed before
+    this returns."""
+    return df.localCheckpoint(eager=eager)
 
 
 def spread_small_scan(df: DataFrame) -> DataFrame:

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stockify_spark.functions.scale import materialize
+
 
 def _score_pick(mat, cmat):
     """Dimension-sequential squared-distance accumulation + first-
@@ -127,17 +129,13 @@ def kmeans_assign(
     clusters dropping out of the model (tests pin local/distributed
     hash parity; set ``local_rows_limit=0`` to force the loop).
     """
-    # localCheckpoint (not persist): the gate count, the seed collect,
-    # every mean-update pass, AND the lazily-returned final assignment
-    # all read the materialized blocks; ContextCleaner reclaims them
-    # when the returned plan is GC'd (same rationale as the simhash
-    # signature barrier — persist would need an unpersist AFTER the
-    # caller's action, which a function returning a lazy frame cannot
-    # sequence).
+    # materialized: the gate count, the seed collect, every
+    # mean-update pass, AND the lazily-returned final assignment all
+    # read it
     e = emb.select(
         F.col(id_col).alias("vec_id"),
         F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     n_rows = e.count()
     # the local pass holds the corpus matrix in ONE python worker, so
     # gate on elements (rows x dim), not rows alone — 16M float64

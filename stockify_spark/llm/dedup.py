@@ -31,7 +31,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from stockify_spark.functions.scale import spread_cpu_dense
+from stockify_spark.functions.scale import materialize, spread_cpu_dense
 from stockify_spark.functions.text import fingerprint, tokens
 
 
@@ -190,17 +190,7 @@ def minhash_lsh_pairs_seeded(
     # (single-file scans serialize the expensive map; no-op at scale)
     from stockify_spark.functions.scale import spread_small_scan
 
-    # _materialize, NOT DataFrame.persist: persist() registers a
-    # CacheManager entry keyed on the logical plan with no unpersist
-    # hook here — repeat invocations silently REUSE the cached
-    # intermediate (the timed iteration no longer recomputes from the
-    # source), and across a many-query session the pinned entries
-    # accumulate until storage eviction thrash (r14 measured: the
-    # persist-family bench rows read 3-6x their solo probes while the
-    # localCheckpoint-family rows matched theirs). localCheckpoint
-    # blocks are ContextCleaner-reclaimed on GC and never shared
-    # across invocations.
-    base = _materialize(
+    base = materialize(
         spread_small_scan(df.select(F.col(id_col).alias("_id"), F.col(text_col)))
         .select("_id", shingles(text_col, k).alias("_sh"))
     )
@@ -213,8 +203,7 @@ def minhash_lsh_pairs_seeded(
     sig = hashed.groupBy("_id").agg(
         *[F.min(f"_h{i}").alias(f"_h{i}") for i in range(num_hashes)]
     )
-    # _materialize, not persist (see the base comment above)
-    banded = _materialize(
+    banded = materialize(
         sig.select(
             "_id",
             F.explode(
@@ -292,10 +281,9 @@ def minhash_lsh_pairs(
     r = num_hashes // bands
 
     # the shingle base feeds the signature pipeline AND both sides of
-    # the verification join — materialize it once. _materialize, not
-    # persist (CacheManager pinning / cross-invocation reuse — see
-    # minhash_lsh_pairs_seeded's base comment); spread first (ditto)
-    base = _materialize(
+    # the verification join — materialize it once; spread first (see
+    # minhash_lsh_pairs_seeded)
+    base = materialize(
         _spread_small_scan(df.select(F.col(id_col).alias("_id"), F.col(text_col)))
         .select("_id", shingles(text_col, k).alias("_sh"))
     )
@@ -306,7 +294,7 @@ def minhash_lsh_pairs(
     # pipeline executes twice. (id, band_id, band_hash) is the slim
     # banded index — at warehouse scale this is the LSH index table
     # you would materialize to storage.
-    banded = _materialize(
+    banded = materialize(
         sig.select(
             "_id",
             F.explode(
@@ -383,13 +371,12 @@ def ngram_jaccard_pairs(
     """
     # base and prefix feed multiple downstream branches (self-join
     # sides + verification); materialize them or the shingle pipeline
-    # is re-evaluated once per branch (_materialize, not persist — the
-    # minhash_lsh_pairs base comment). At warehouse scale this is the
+    # is re-evaluated once per branch. At warehouse scale this is the
     # materialized shingle/prefix index you would write to storage.
     # spread before shingling: the per-doc regex split + k-gram build
     # is the expensive serial map, and a single-row-group scan arrives
     # in one partition (no-op at warehouse scale — see functions/scale)
-    base = _materialize(
+    base = materialize(
         _spread_small_scan(df.select(F.col(id_col).alias("_id"), F.col(text_col)))
         .select("_id", shingles(text_col, k).alias("_sh"))
     )
@@ -412,7 +399,7 @@ def ngram_jaccard_pairs(
             W.partitionBy("_id").orderBy(F.col("_df").asc(), F.col("shingle"))
         ),
     )
-    prefix = _materialize(
+    prefix = materialize(
         ranked.filter(
             F.col("_pos") <= F.col("_n") - _ceil_bound(F.lit(threshold) * F.col("_n")) + 1
         ).select("_id", "_n", "_pos", "shingle")
@@ -507,7 +494,7 @@ def shingle_containment_pairs(
     same bound ngram_jaccard_pairs carries.
     """
     # spread before shingling (see ngram_jaccard_pairs)
-    base = _materialize(
+    base = materialize(
         _spread_small_scan(df.select(F.col(id_col).alias("_id"), F.col(text_col)))
         .select("_id", shingles(text_col, k).alias("_sh"))
         .filter(F.size("_sh") > 0)
@@ -692,9 +679,7 @@ def simhash_near_dup_pairs(
     # a materialization barrier Spark computes the tokenize+hash pass
     # twice (self-joins duplicate the subtree — ReusedExchange only
     # kicks in after an exchange, and the UDF runs before any).
-    # localCheckpoint is RDD-level, so ContextCleaner reclaims it when
-    # the plan is GC'd — no CacheManager pinning across invocations.
-    sig = sig.select("_id", "simhash").localCheckpoint()
+    sig = materialize(sig.select("_id", "simhash"))
 
     chunks = sig.select(
         "_id",
@@ -814,15 +799,13 @@ def simhash_near_dup_pairs_seeded(
     # dominant cost of the whole query, and the band self-join's two
     # sides would otherwise each recompute it from scratch (self-joins
     # duplicate the logical subtree; ReusedExchange only dedups AFTER
-    # an exchange). localCheckpoint is eager and RDD-level — cleaned by
-    # ContextCleaner on GC, so repeated invocations don't pin cache
-    # entries the way DataFrame.persist would. Halves wall-clock at
-    # sf0.1; at cluster scale the checkpoint is (id, int64) per doc —
-    # ~16 bytes/row, trivially memory-resident.
+    # an exchange). Halves wall-clock at sf0.1; at cluster scale the
+    # materialized frame is (id, int64) per doc — ~16 bytes/row,
+    # trivially memory-resident.
     sig = (
         accs.select("_id", "_n", ps.alias("_ps"))
         .select("_id", sig_expr.alias("_sig"))
-        .localCheckpoint()
+        .transform(materialize)
     )
 
     chunks = sig.select(
@@ -891,7 +874,7 @@ def connected_components(
     2 shuffled joins + a groupBy over the full label set), so the
     loop checks convergence EVERY round but (a) skips the provably
     redundant round-0 check (a nonempty edge set always lowers some
-    label in round 0), and (b) eagerly localCheckpoints each round's
+    label in round 0), and (b) eagerly materializes each round's
     node-sized result, so the check is a count between two CACHED
     frames and lineage/plan depth stays O(1) regardless of round
     count. max_iters=20 covers diameter ~2^19 — far beyond any
@@ -906,20 +889,18 @@ def connected_components(
     sym = (
         edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     nodes = sym.select(F.col("src").alias("node")).distinct()
     # adjacency WITH self-loops, checkpointed as the per-round join
     # input (built from the cached sym — one distinct shuffle, once)
     adj = sym.union(
         nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     # initial labels: one row per distinct node (nodes re-reads the
     # CACHED sym — a genuine self-edge in the input would make the
     # adj self-loop rows non-unique, so don't derive labels from adj)
-    labels = nodes.withColumn("component", F.col("node")).localCheckpoint(
-        eager=True
-    )
+    labels = nodes.withColumn("component", F.col("node")).transform(materialize)
     for it in range(max_iters):
         # one-hop min INCLUDING own label (self-loop supplies it)
         hop = (
@@ -944,9 +925,8 @@ def connected_components(
             )
             # eager + node-sized: truncates lineage every round (plan
             # depth stays O(1)) and makes the convergence count below
-            # a cache-read job. Checkpointed RDDs are reclaimed by
-            # ContextCleaner on GC.
-            .localCheckpoint(eager=True)
+            # a cache-read job.
+            .transform(materialize)
         )
         if it == 0:
             # a nonempty edge set ALWAYS changes labels in round 0
@@ -1073,15 +1053,12 @@ def fuzzy_set_join(
     """
     L = left.select(F.col(id_col).alias("_id"), F.col(tokens_col).alias("_tk"))
     R = right.select(F.col(id_col).alias("_id"), F.col(tokens_col).alias("_tk"))
-    # localCheckpoint, not persist: the union feeds three subtrees
-    # (inverted index + both verification sides). persist() would pin a
-    # CacheManager entry per invocation with no unpersist hook (the
-    # caller holds a lazy plan over it); the RDD-level checkpoint is
-    # reclaimed by ContextCleaner once the plan is GC'd.
+    # materialized: the union feeds three subtrees (inverted index +
+    # both verification sides)
     both = (
         L.withColumn("_side", F.lit(0))
         .unionByName(R.withColumn("_side", F.lit(1)))
-        .localCheckpoint()
+        .transform(materialize)
     )
     inv = both.select(
         "_side", "_id", F.size("_tk").alias("_n"), F.explode("_tk").alias("tok")
@@ -1128,46 +1105,6 @@ def fuzzy_set_join(
 
 
 from stockify_spark.functions.scale import spread_small_scan as _spread_small_scan
-
-# Scan-once materialization durability (the r12 ADVICE trade): the
-# substring-dedup family materializes corpus-sized intermediates so
-# two consumers share one scan. Default localCheckpoint is
-# executor-LOCAL and unreplicated (lineage truncated — an executor
-# loss mid-query fails the query); set this session conf to "true"
-# on a real cluster to use persist(DISK_ONLY_2) instead: 2×
-# replicated, lineage kept, same plan shape — the query then
-# survives a lost executor at the cost of a replicated disk write.
-REPLICATED_MATERIALIZE_CONF = "spark.stockify.dedup.replicatedMaterialize"
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Eagerly materialize a frame that multiple consumers will read
-    (pre-exchange subtrees get no ReusedExchange — without this, each
-    consumer re-runs the producing scan). Durability is governed by
-    :data:`REPLICATED_MATERIALIZE_CONF`; both forms cost one pass and
-    return a frame whose downstream plan is identical.
-
-    The replicated mode persists with no unpersist hook — it PINS a
-    CacheManager entry per invocation and repeat invocations of the
-    same plan will silently reuse it, exactly the cross-invocation
-    reuse the default localCheckpoint path exists to avoid. It is a
-    durability escape hatch for long single-pass cluster jobs (lost-
-    executor recompute amplification), NOT for repeated-invocation
-    benchmarking; leave the conf unset anywhere timings matter."""
-    try:
-        replicated = (
-            df.sparkSession.conf.get(REPLICATED_MATERIALIZE_CONF, "false")
-            == "true"
-        )
-    except Exception:  # noqa: BLE001 — conf access varies across harnesses
-        replicated = False
-    if replicated:
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.DISK_ONLY_2)
-        out.count()  # eager: consumers read the replicated store
-        return out
-    return df.localCheckpoint()
 
 
 def _win_hash(w: Column) -> Column:
@@ -1306,7 +1243,7 @@ def repeated_substring_spans(
       1. slide exactly-L windows per doc, hashing each to 64 bits
          map-side — the exchanges carry (id, pos, hash) only;
       2. count occurrences per hash — materialize the hashed-window
-         frame ONCE (localCheckpoint preserves the scan-once
+         frame ONCE (materializing preserves the scan-once
          property a naive groupBy+join-back loses: both join sides
          would re-run the window-materialization scan), then
          ``groupBy(h).count()`` + semi-join back on the 8-byte key.
@@ -1333,31 +1270,17 @@ def repeated_substring_spans(
     space) for a distributed suffix array — same output set,
     asymptotically cheaper plan.
 
-    Fault-tolerance trade: the scan-once materialization uses
-    ``localCheckpoint`` — EXECUTOR-LOCAL, unreplicated storage with
-    the lineage truncated, so on a real cluster an executor loss
-    mid-query fails the query (no recompute path) and it must be
-    rerun. That is the right trade for the local/bench path and for
-    idempotent batch jobs (rerun = retry); for a long multi-tenant
-    job at cluster scale set the session conf
-    ``spark.stockify.dedup.replicatedMaterialize=true`` and the same
-    two sites persist with ``StorageLevel.DISK_ONLY_2`` instead (2×
-    replicated, lineage kept) — the plan shape is unchanged, only
-    the materialization's durability (parity pinned in
-    tests/test_dedup.py). The same trade applies at the other
-    corpus-sized materializations in this family:
-    :func:`keepone_substring_spans` (also conf-switched),
-    text_tfidf_topk's term frame, and pipeline_cdc_chunk_dedup's CDC
-    chunk stream."""
+    The two scan-once materializations are corpus-sized; their
+    durability is the session's materialization policy
+    (:mod:`stockify_spark.functions.scale`), as at every other site."""
     L = min_tokens
     df = _spread_small_scan(df)
     # materialize the hashed-window stream ONCE: the count side and
     # the probe side below are two consumers of the same pre-exchange
     # map subtree, which would otherwise re-run the window-
     # materialization scan per side (the pca_block_pairs lesson —
-    # ReusedExchange only dedups AFTER an exchange). Durability via
-    # REPLICATED_MATERIALIZE_CONF (see _materialize).
-    wh = _materialize(_windows_hashed(df, text_col, id_col, L))
+    # ReusedExchange only dedups AFTER an exchange).
+    wh = materialize(_windows_hashed(df, text_col, id_col, L))
     # hashes occurring > 1 time corpus-wide: groupBy + semi-join back
     # on the 8-byte key, NEVER count().over(Window.partitionBy("h"))
     # — repeated-substring hashes are power-law keys, and a window
@@ -1378,7 +1301,7 @@ def repeated_substring_spans(
     # true repeats are candidates, so the text count is exact).
     # Same skew-safe shape — the hot TEXT keys are exactly the hot
     # hash keys that motivated it.
-    cand_w = _materialize(_candidate_window_text(df, cand, text_col, id_col, L))
+    cand_w = materialize(_candidate_window_text(df, cand, text_col, id_col, L))
     hot_w = (
         cand_w.groupBy("w")
         .agg(F.count(F.lit(1)).alias("n_occ"))
@@ -1415,7 +1338,7 @@ def keepone_substring_spans(
     df = _spread_small_scan(df)
     # same skew-safe shape as repeated_substring_spans (see its
     # step-2 comment): materialize once, groupBy-count, semi-join back
-    wh = _materialize(_windows_hashed(df, text_col, id_col, L))
+    wh = materialize(_windows_hashed(df, text_col, id_col, L))
     hot = (
         wh.groupBy("h")
         .agg(F.count(F.lit(1)).alias("n_occ"))
@@ -1423,7 +1346,7 @@ def keepone_substring_spans(
         .select("h")
     )
     cand = wh.join(hot, "h", "left_semi").select("_id", "sp")
-    cand_w = _materialize(_candidate_window_text(df, cand, text_col, id_col, L))
+    cand_w = materialize(_candidate_window_text(df, cand, text_col, id_col, L))
     # per verified (text-counted, collision-free) window: who keeps it
     keep = (
         cand_w.groupBy("w")
@@ -1729,13 +1652,13 @@ def near_dedup_ingest_sink(
             F.col(id_col).alias("_id"),
             F.col(text_col).alias("_text"),
             shingles(text_col, k).alias("_sh"),
-        ).localCheckpoint()  # batch-sized; read by signature build + joins
+        ).transform(materialize)  # batch-sized; read by signature build + joins
         sigs = _signatures_from_base(base, num_hashes)
         # materialize once: bt feeds band derivation (three join
         # branches) AND the survivor write — lazily it would re-run
         # the explode×num_hashes signature pipeline per consumer (the
         # minhash_lsh_pairs persist lesson)
-        bt = base.join(sigs, "_id").localCheckpoint()
+        bt = materialize(base.join(sigs, "_id"))
         if instrument is not None:
             instrument["signature_sec"] = round(_time.perf_counter() - t0, 4)
         t1 = _time.perf_counter()
@@ -1797,7 +1720,7 @@ def near_dedup_ingest_sink(
         if instrument is not None:
             # materialize the id-only drop set so the probe's cost is
             # separable from the append's (ids are collision-sized)
-            dropped = dropped.localCheckpoint()
+            dropped = materialize(dropped)
             instrument["probe_sec"] = round(_time.perf_counter() - t1, 4)
         t2 = _time.perf_counter()
         survivors = (
@@ -1898,11 +1821,11 @@ def near_dedup_ingest_sink_indexed(
             F.col(id_col).alias("_id"),
             F.col(text_col).alias("_text"),
             shingles(text_col, k).alias("_sh"),
-        ).localCheckpoint()  # batch-sized; read by signature build + joins
+        ).transform(materialize)  # batch-sized; read by signature build + joins
         sigs = _signatures_from_base(base, num_hashes)
-        bt = base.join(sigs, "_id").localCheckpoint()
+        bt = materialize(base.join(sigs, "_id"))
         # batch-sized, read by the probe join AND the index append
-        b_bands = _flat_bk(bt, "_id").localCheckpoint()
+        b_bands = materialize(_flat_bk(bt, "_id"))
         b_sh = bt.select("_id", "_sh")
         if instrument is not None:
             instrument["signature_sec"] = round(_time.perf_counter() - t0, 4)
@@ -1916,7 +1839,7 @@ def near_dedup_ingest_sink_indexed(
             ).select("bk", "_hid")
             cand = (
                 b_bands.join(cand_idx, "bk").select("_id", "_hid").distinct()
-            ).localCheckpoint()  # band-collision-sized
+            ).transform(materialize)  # band-collision-sized
             # bounded collect: ids of truly colliding history docs
             hids = [x["_hid"] for x in cand.select("_hid").distinct().collect()]
             if hids:
@@ -1960,10 +1883,10 @@ def near_dedup_ingest_sink_indexed(
         )
         dropped = bb if dropped is None else dropped.unionByName(bb).distinct()
         if instrument is not None:
-            dropped = dropped.localCheckpoint()
+            dropped = materialize(dropped)
             instrument["probe_sec"] = round(_time.perf_counter() - t1, 4)
         t2 = _time.perf_counter()
-        survivors = bt.join(dropped, "_id", "left_anti").localCheckpoint()
+        survivors = materialize(bt.join(dropped, "_id", "left_anti"))
         _txlog.append_idempotent(
             survivors.select(
                 F.col("_id").alias(id_col), F.col("_text").alias(text_col), "_sig"

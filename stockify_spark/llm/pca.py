@@ -39,6 +39,8 @@ from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame
 
+from stockify_spark.functions.scale import materialize
+
 
 def _round_half_up(x: float, nd: int) -> float:
     """Spark ``Round(double, nd)`` / DuckDB ``ROUND`` semantics:
@@ -310,9 +312,8 @@ def pca_block_pairs(
     # sides are different selects over the same pre-exchange
     # mapInPandas subtree, which would otherwise recompute the full
     # corpus projection per side (ReusedExchange only dedups AFTER an
-    # exchange — the text_rake/simhash lesson). localCheckpoint is
-    # RDD-level, reclaimed by ContextCleaner on GC.
-    proj = proj.localCheckpoint()
+    # exchange — the text_rake/simhash lesson).
+    proj = materialize(proj)
     cell = proj.select(
         F.col(id_col).alias("_id"),
         *[F.col(f"p{c}") for c in range(1, k + 1)],

@@ -6,7 +6,7 @@ The reference engine has no graph surface; this extends the
 north-star iterative-algorithm family (SURVEY §7.6) with the second
 classic fixed-point computation. The Spark shape is the textbook
 one — rank vector joined to the edge list each round, contributions
-combined map-side by destination — with ``localCheckpoint`` every
+combined map-side by destination — materialized every
 few rounds so plan depth stays bounded (the same lineage-truncation
 policy as the path-doubling connected components).
 
@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from stockify_spark.functions.scale import materialize
 
 
 def pagerank(
@@ -49,8 +51,8 @@ def pagerank(
     iteration joins move (node, rank) rows only. Spark broadcasts
     the rank side automatically when the node set is small; for
     billion-node graphs the same loop holds with both sides
-    hash-partitioned on the join key, and ``localCheckpoint`` keeps
-    the 2·iters-join lineage from accreting superlinear planning
+    hash-partitioned on the join key, and materializing every few
+    rounds keeps the 2·iters-join lineage from accreting superlinear planning
     cost.
     """
     w = F.col(weight) if weight else F.lit(1.0)
@@ -63,7 +65,7 @@ def pagerank(
     # round's plan re-derives it from the source — for an edge table
     # aggregated from fact joins that means re-running the joins
     # iters times (the plan audit showed 33 scans for 8 rounds).
-    ew = ew.join(outw, "_src").localCheckpoint(eager=True)
+    ew = materialize(ew.join(outw, "_src"))
 
     m = ew.count()  # metadata-cheap on the already-checkpointed blocks
     if m <= local_edge_limit:
@@ -153,7 +155,7 @@ def pagerank(
             # eager: actually truncate lineage now — a lazy checkpoint
             # materializes nothing until an action, leaving the full
             # 2·iters-join plan in place for the final one
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = materialize(ranks)
     return ranks
 
 
@@ -183,9 +185,7 @@ def triangles(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     # count, both join sides, and the closing-edge set — without this
     # every reference re-derives it from source (the pagerank lesson:
     # 15 scans for one query in the plan census)
-    e = edges.select(F.col(a).alias("_a"), F.col(b).alias("_b")).localCheckpoint(
-        eager=True
-    )
+    e = materialize(edges.select(F.col(a).alias("_a"), F.col(b).alias("_b")))
     m = e.count()  # metadata-cheap on the already-checkpointed blocks
     target = max(
         1, min(edges.sparkSession.sparkContext.defaultParallelism, m // 100_000)
@@ -224,7 +224,7 @@ def triangles(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
             F.when(lo_first, F.col("_b")).otherwise(F.col("_a")).alias("_w"),
         )
         # referenced three times (both wedge sides + closing set)
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     o1 = oriented.select(F.col("_u"), F.col("_w").alias("_x"))
     o2 = oriented.select(F.col("_u"), F.col("_w").alias("_y"))
@@ -257,7 +257,7 @@ def tree_depth(edges: DataFrame, root, node: str = "node", parent: str = "parent
     PRAM technique and the only shape that survives deep hierarchies
     on a cluster (H=10⁶ chain: 20 rounds, not 10⁶). Each round is
     one equi-join of the (node, anc, dist) table with itself;
-    ``localCheckpoint`` truncates lineage exactly as in
+    materializing each round truncates lineage exactly as in
     :func:`pagerank`. Rounds stop early once every pointer reaches
     the root (bounded driver check: one `count` per round over a
     shrinking not-done set).
@@ -267,7 +267,7 @@ def tree_depth(edges: DataFrame, root, node: str = "node", parent: str = "parent
     ).unionAll(
         edges.sparkSession.createDataFrame([(root, root, 0)], "a long, b long, c int")
         .select(F.col("a").alias("_n"), F.col("b").alias("_anc"), F.col("c").alias("_d"))
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     while True:
         hop = ptr.select(
             F.col("_n").alias("_hn"), F.col("_anc").alias("_hanc"), F.col("_d").alias("_hd")
@@ -275,7 +275,7 @@ def tree_depth(edges: DataFrame, root, node: str = "node", parent: str = "parent
         nxt = (
             ptr.join(hop, ptr["_anc"] == hop["_hn"])
             .select("_n", F.col("_hanc").alias("_anc"), (F.col("_d") + F.col("_hd")).alias("_d"))
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         remaining = nxt.filter(F.col("_anc") != root).count()
         ptr = nxt
@@ -302,14 +302,14 @@ def bfs_hops(
     O(sum of frontier degrees), the textbook level-synchronous BFS
     a cluster runs (Pregel's shape), not a recursive CTE's
     all-paths enumeration, which multiplies by path count and
-    explodes on cyclic graphs. The visited set is
-    ``localCheckpoint``ed per round (lineage truncation, same
-    policy as :func:`pagerank`); the per-round empty-frontier check
-    is one bounded count on the shrinking frontier.
+    explodes on cyclic graphs. The visited set is materialized per
+    round (lineage truncation, as in :func:`pagerank`); the per-round
+    empty-frontier check is one bounded count on the shrinking
+    frontier.
     """
     e = edges.select(F.col(src).alias("_es"), F.col(dst).alias("_ed"))
     dist = sources.select(F.col(node).alias("_n"), F.lit(0).alias("_h")).distinct()
-    dist = dist.localCheckpoint(eager=True)
+    dist = materialize(dist)
     frontier = dist
     for h in range(1, max_hops + 1):
         nxt = (
@@ -318,7 +318,7 @@ def bfs_hops(
             .distinct()
             .join(dist.select("_n"), "_n", "left_anti")
             .withColumn("_h", F.lit(h))
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         if nxt.count() == 0:
             break

@@ -69,29 +69,6 @@ def upsert_partitioned(
     return touched
 
 
-def compact_small_files(
-    spark,
-    path: str,
-    target_rows_per_file: int = 1_000_000,
-) -> int:
-    """Rewrite a parquet directory into ⌈rows/target⌉ files.
-
-    Small-file proliferation (streaming sinks, per-trigger appends) is
-    the quiet killer of 100 TB scans: every file costs a task + footer
-    read + open. Compaction trades one rewrite for every future scan.
-    Returns the new file count."""
-    df = spark.read.parquet(path)
-    n_rows = df.count()
-    n_files = max(1, (n_rows + target_rows_per_file - 1) // target_rows_per_file)
-    tmp = path.rstrip("/") + "__compacting"
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    import shutil
-
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
-    return n_files
-
-
 def merge_scd2(
     dim: DataFrame,
     updates: DataFrame,

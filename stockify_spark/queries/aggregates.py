@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F, Window
 
+from stockify_spark.functions.scale import materialize
 from stockify_spark.operators import compare, filter_rows, global_agg, group_agg
 from stockify_spark.operators.aggregates import (
     cube_agg,
@@ -1719,7 +1720,7 @@ def agg_kmv_sketch(spark, sf_dir):
         )
         .filter(F.col("r") <= _K)
         .select("region", "hv")
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     regions = sk.select("region").distinct()
     cand = (

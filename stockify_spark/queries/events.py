@@ -9,6 +9,7 @@ import math
 import pandas as pd
 from pyspark.sql import functions as F, Window
 
+from stockify_spark.functions.scale import materialize
 from stockify_spark.registry import register, _t
 
 
@@ -752,11 +753,11 @@ def geo_knn_suppliers(spark, sf_dir):
     # candidate top-3 is consumed THREE times (certificate, certified
     # output, fallback anti-join); at 3 rows/customer it is
     # model-sized, so pin it once instead of re-running the cell join
-    # per consumer (the text_perplexity localCheckpoint lesson)
+    # per consumer (the text_perplexity lesson)
     top = (
         cand.withColumn("rk", F.row_number().over(w).cast("long"))
         .filter(F.col("rk") <= 3)
-        .localCheckpoint()
+        .transform(materialize)
     )
     # certificate per customer: 3 candidates found AND the 3rd
     # distance clears the excluded-supplier lower bound with margin.
@@ -773,7 +774,7 @@ def geo_knn_suppliers(spark, sf_dir):
     )
     certified = per_cust.filter(
         (F.col("n3") == 3) & (F.col("d3") + 1e-3 < F.lit(D_LAT_BOUND))
-    ).select("c_custkey").localCheckpoint()
+    ).select("c_custkey").transform(materialize)
     fallback_cust = base.join(certified, "c_custkey", "left_anti").select(
         "c_custkey", "lat", "lon"
     )
@@ -1242,7 +1243,7 @@ def events_seasonal_anomaly(spark, sf_dir):
             "event_id",
             (F.col("value") - F.col("s1") / F.col("n")).alias("r"),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     wtype = Window.partitionBy("event_type")
     rk = resid.select(

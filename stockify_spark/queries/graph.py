@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F, Window
 
+from stockify_spark.functions.scale import materialize
 from stockify_spark.registry import register, _t
 
 
@@ -85,7 +86,7 @@ def graph_pagerank(spark, sf_dir):
     trade graph: edge weights are lineitem counts aggregated from
     the 4-way fact join (the data-sized work — one shuffle per join
     plus the edge aggregation), then 8 fixed-point rounds over the
-    25-node edge list (operators/graph.pagerank, localCheckpoint
+    25-node edge list (operators/graph.pagerank, materialized
     lineage truncation). The dense trade graph gives every nation
     in- and out-edges, so the inner-join recurrence is standard
     uniform-teleport PageRank."""
@@ -239,11 +240,11 @@ n{r} AS MATERIALIZED (SELECT s.a AS node FROM sym s
 def _kcore_sym_edges(spark, sf_dir):
     """Symmetrized edge list of the md5-thinned residue graph the
     k-core peel runs on (one row per directed edge; each undirected
-    edge appears both ways). Checkpointed: every peel round reads it."""
+    edge appears both ways). Materialized: every peel round reads it."""
     e = _residue_edges(spark, sf_dir, 400, 8, 8)
     return e.unionAll(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
 
 
 def _kcore_peel(sym, k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS):
@@ -260,10 +261,10 @@ def _kcore_peel(sym, k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS):
             # each round references the previous round's nodes TWICE
             # (a-face and b-face), so an unbroken lineage doubles the
             # logical plan per round — 2^rounds leaf scans by round
-            # 10. Lazy checkpoint keeps the plan linear; it
+            # 10. Lazy materialization keeps the plan linear; it
             # materializes as a side effect of the next round's job
             # (the pagerank lineage discipline, operators/graph.py).
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
     return nodes
 
@@ -283,7 +284,7 @@ def graph_kcore(spark, sf_dir):
     round 10 (pinned in tests/test_ext10.py: round 11 removes
     nothing, and every survivor keeps induced degree >= k), so the
     bounded result IS the k-core. The edge table is
-    localCheckpointed once and reused by all rounds — the pagerank
+    materialized once and reused by all rounds — the pagerank
     lineage discipline (operators/graph.py)."""
     return _kcore_peel(_kcore_sym_edges(spark, sf_dir))
 
@@ -331,7 +332,7 @@ def graph_jaccard(spark, sf_dir):
     # e feeds deg, both wedge sides, and the final edge join —
     # materialize it or each branch re-derives the distinct+md5 thin
     # (census: 13 shuffles / 10 scans -> 3 / 1)
-    e = _residue_edges(spark, sf_dir, 80, 4, 12).localCheckpoint(eager=False)
+    e = materialize(_residue_edges(spark, sf_dir, 80, 4, 12), eager=False)
 
     und = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         e.select(F.col("b").alias("u"), F.col("a").alias("v"))
@@ -413,7 +414,7 @@ def graph_assortativity(spark, sf_dir):
 
     # e feeds the degree union and the edge-side joins; materialize
     # to stop each branch re-deriving the thinned edge list
-    e = _residue_edges(spark, sf_dir, 80, 4, 12).localCheckpoint(eager=False)
+    e = materialize(_residue_edges(spark, sf_dir, 80, 4, 12), eager=False)
     und = e.select(F.col("a").alias("u")).unionAll(e.select(F.col("b").alias("u")))
     deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     ed = (
@@ -472,12 +473,9 @@ def graph_modularity(spark, sf_dir):
     list."""
     from pyspark.sql import functions as F
 
-    # localCheckpoint, not persist: e feeds three consumers (degree
-    # union, m count, within filter) but persist() pins a CacheManager
-    # entry per invocation with no unpersist hook — repeat invocations
-    # reuse it and a long session accumulates pinned storage (the
-    # llm/dedup.py minhash_lsh_pairs lesson, r14)
-    e = _residue_edges(spark, sf_dir, 80, 4, 12).localCheckpoint()
+    # materialized: e feeds three consumers (degree union, m count,
+    # within filter)
+    e = materialize(_residue_edges(spark, sf_dir, 80, 4, 12))
     und = e.select(F.col("a").alias("u")).unionAll(e.select(F.col("b").alias("u")))
     deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     m = e.count()
@@ -545,7 +543,7 @@ def graph_clustering_coeff(spark, sf_dir):
     division. Degree-1 vertices have no defined coefficient (NULL on
     both faces). Same O(Σ deg²) wedge bound as graph_triangles;
     counts are integers so the ratio is deterministic."""
-    e = _residue_edges(spark, sf_dir, 80, 4, 12).localCheckpoint(eager=False)
+    e = materialize(_residue_edges(spark, sf_dir, 80, 4, 12), eager=False)
     und = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         e.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
@@ -636,15 +634,15 @@ def graph_hits(spark, sf_dir):
     Scale shape: each half-step is one equi-join of the edge list
     against a node-score table plus one map-side-combinable sum —
     the graph_pagerank layout exactly, 2*K shuffles total, scores
-    localCheckpointed between steps so the lineage stays linear
-    (the kcore discipline). Edge list checkpointed once, read by
+    materialized between steps so the lineage stays linear
+    (the kcore discipline). Edge list materialized once, read by
     all six half-steps."""
-    e = _residue_edges(spark, sf_dir, 400, 8, 8, directed=True).localCheckpoint(eager=True)
+    e = materialize(_residue_edges(spark, sf_dir, 400, 8, 8, directed=True))
     nodes = (
         e.select(F.col("s").alias("node"))
         .union(e.select(F.col("d").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     score = nodes.select("node", F.lit(1.0).alias("x"))
     out = {}
@@ -667,7 +665,7 @@ def graph_hits(spark, sf_dir):
                         F.coalesce(F.col("v"), F.lit(0.0)) / F.col("t"), 9
                     ).alias("x"),
                 )
-                .localCheckpoint(eager=False)
+                .transform(materialize, eager=False)
             )
             out[face] = score
     return (
@@ -741,7 +739,7 @@ def graph_random_walk(spark, sf_dir):
     adj = (
         sym.groupBy(F.col("a").alias("node"))
         .agg(F.sort_array(F.collect_list("b")).alias("nbrs"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     frontier = adj.select(F.col("node").alias("start"), "node")
     out = frontier.select("start", F.lit(0).cast("long").alias("step"), "node")
@@ -831,7 +829,7 @@ def graph_degree_census(spark, sf_dir):
     Scale shape: two edge-list aggregates, two degree-bounded
     histograms, one equi-self-join on the reversed key (hash-
     partitioned both sides, no broadcast needed at any scale)."""
-    e = _residue_edges(spark, sf_dir, 400, 8, 8, directed=True).localCheckpoint(eager=True)
+    e = materialize(_residue_edges(spark, sf_dir, 400, 8, 8, directed=True))
     outd = e.groupBy(F.col("s").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("k")
     )
@@ -909,7 +907,7 @@ def graph_label_propagation(spark, sf_dir):
     (label table is node-sized — broadcastable at any realistic
     community count), groupBy (node, label) with map-side combine,
     then a per-node row_number argmax. The edge table is
-    localCheckpointed once and reused by both rounds (the pagerank
+    materialized once and reused by both rounds (the pagerank
     lineage discipline)."""
 
     sym = _kcore_sym_edges(spark, sf_dir)
@@ -929,7 +927,7 @@ def graph_label_propagation(spark, sf_dir):
             votes.withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") == 1)
             .select("node", "label")
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
     return labels
 
@@ -968,7 +966,7 @@ def graph_katz_centrality(spark, sf_dir):
 
     Shape per round: one (edges ⋈ scores) shuffle with map-side
     partial sums — scores are node-sized and broadcastable; the edge
-    table is localCheckpointed once and reused (the pagerank lineage
+    table is materialized once and reused (the pagerank lineage
     discipline)."""
 
     sym = _kcore_sym_edges(spark, sf_dir)
@@ -982,6 +980,6 @@ def graph_katz_centrality(spark, sf_dir):
             )
             .groupBy(F.col("a").alias("node"))
             .agg((1 + _KATZ_ALPHA * F.sum("x")).alias("x"))
-            .localCheckpoint(eager=False)
+            .transform(materialize, eager=False)
         )
     return x.select("node", F.round("x", 6).alias("katz"))

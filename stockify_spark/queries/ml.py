@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F, Window
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from stockify_spark.functions.scale import materialize
 from stockify_spark.queries.text import _TOKS_SQL
 from stockify_spark.registry import register, _t
 from stockify_spark.sources.fixtures import RAMP_SERIES_LEN, RAMP_SQL, _scratch_table, stocks_ramp
@@ -202,7 +203,7 @@ def ml_naive_bayes(spark, sf_dir):
     # materialize once instead of four explode passes
     ttok = train.select(
         "doc_id", "lang", F.explode(tokens("text")).alias("tok")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, eager=False)
     ccnt = ttok.groupBy("lang", "tok").agg(F.count(F.lit(1)).alias("c"))
     ctot = ttok.groupBy("lang").agg(F.count(F.lit(1)).alias("tot"))
     v = ttok.select(F.countDistinct("tok").alias("v"))
@@ -491,7 +492,7 @@ def ml_confusion_metrics(spark, sf_dir):
     # j feeds BOTH confusion branches (per-true and per-pred); without
     # materialization each branch re-runs the full NB train+score
     # pipeline (plan census: 18 shuffles -> 10)
-    j = truth.join(nb, "doc_id").localCheckpoint(eager=False)
+    j = materialize(truth.join(nb, "doc_id"), eager=False)
     per_true = j.groupBy("true_lang").agg(
         F.count(F.lit(1)).alias("support"),
         F.sum(

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F, Window
 
+from stockify_spark.functions.scale import materialize
 from stockify_spark.registry import register, _t
 
 
@@ -532,7 +533,7 @@ def orders_forecast_eval(spark, sf_dir):
     pos = rev.withColumn(
         "pos",
         F.row_number().over(Window.partitionBy("nation").orderBy("ym")) - 1,
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, eager=False)
     p = pos.select("nation", "ym", "pos")
     a = pos.select(
         "nation", F.col("pos").alias("apos"), F.col("z").alias("actual")

@@ -10,6 +10,7 @@ import os
 import pandas as pd
 from pyspark.sql import functions as F, Window
 
+from stockify_spark.functions.scale import materialize
 from stockify_spark.queries.dedup import _minhash_oracle_sql, _SHINGLES_SQL
 from stockify_spark.queries.text import _CHUNK_S, _CHUNK_W, _PPL_SQL, text_perplexity, _TOKS_SQL
 from stockify_spark.registry import register, _t
@@ -1269,12 +1270,9 @@ def pipeline_cdc_chunk_dedup(spark, sf_dir):
     # window over "h" — a boilerplate chunk repeated corpus-wide is a
     # power-law key that would pin one WindowExec buffer (AQE splits
     # skewed joins, not windows; the substring-dedup lesson). The
-    # checkpoint keeps the chunking scan single-pass across the
-    # count side and the probe side. localCheckpoint is executor-
-    # local and unreplicated (lineage truncated): fine locally; at
-    # cluster scale use persist(DISK_ONLY_2) / reliable checkpoint —
-    # the trade documented at llm/dedup.repeated_substring_spans.
-    ch = ch.localCheckpoint()
+    # materialization keeps the chunking scan single-pass across the
+    # count side and the probe side.
+    ch = materialize(ch)
     occ_n = ch.groupBy("h").agg(F.count(F.lit(1)).alias("n_occ"))
     occ = ch.join(occ_n, "h")
     dup = F.sum(F.when(F.col("n_occ") > 1, F.col("clen")).otherwise(F.lit(0)))
@@ -1853,7 +1851,7 @@ def pipeline_dsir_weights(spark, sf_dir):
             F.count(F.lit(1)).alias("rc"),
             F.sum(F.when(F.col("lang") == "de", 1).otherwise(0)).alias("tc"),
         )
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )  # bounded: <= _DSIR_B rows of model state
     tot = hist.agg(
         F.sum("rc").cast("double").alias("nr"),
@@ -2391,7 +2389,7 @@ def pipeline_near_ingest_indexed(spark, sf_dir):
                         (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
                     )
                 )
-            batch = batch.localCheckpoint()
+            batch = materialize(batch)
             plain(batch, b)
             indexed(batch, b)
             if b == 2:  # at-least-once replay mid-feed on the indexed

@@ -8,6 +8,7 @@ import math
 
 from pyspark.sql import functions as F, Window
 
+from stockify_spark.functions.scale import materialize
 from stockify_spark.queries.text import _PRED_SQL
 from stockify_spark.registry import register, _t
 from stockify_spark.sources.fixtures import RAMP_SERIES_LEN, RAMP_SQL, stocks_ramp
@@ -938,7 +939,7 @@ def stats_mutual_info(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     j = ev.groupBy(
         "event_type", F.hour("ts").cast("long").alias("hr")
-    ).agg(F.count(F.lit(1)).alias("c")).localCheckpoint(eager=False)
+    ).agg(F.count(F.lit(1)).alias("c")).transform(materialize, eager=False)
     tot = j.agg(F.sum("c").cast("double").alias("n"))
     mx = j.groupBy("event_type").agg(F.sum("c").cast("double").alias("cx"))
     my = j.groupBy("hr").agg(F.sum("c").cast("double").alias("cy"))
@@ -2190,14 +2191,12 @@ def stats_runs_test_chunked(spark, sf_dir, _debug: dict | None = None):
     # materialize the bucketed frame ONCE: phases A/B/C each run a
     # bounded collect at construction time, and without this every
     # collect would re-run the scan + span join + window chain from
-    # the source (measured 10-15 s vs ~1 s; the localCheckpoint
-    # fault-tolerance trade is documented at
-    # llm/dedup.repeated_substring_spans)
+    # the source (measured 10-15 s vs ~1 s)
     x = ev.join(F.broadcast(spans), "event_type").select(
         "event_type", "ts", "event_id", "value",
         _bucketed(F.col("_tsd"), F.col("_tlo"), F.col("_thi")).alias("_ck"),
         _bucketed(F.col("value"), F.col("_vlo"), F.col("_vhi")).alias("_vc"),
-    ).localCheckpoint()
+    ).transform(materialize)
     w_ck = Window.partitionBy("event_type", "_ck").orderBy("ts", "event_id")
     x = x.withColumn("_lrn", F.row_number().over(w_ck))
     if _debug is not None:
@@ -2226,7 +2225,7 @@ def stats_runs_test_chunked(spark, sf_dir, _debug: dict | None = None):
     x = (
         x.join(F.broadcast(off_df), ["event_type", "_ck"])
         .withColumn("rn", F.col("_lrn") + F.col("_off"))
-        .localCheckpoint()
+        .transform(materialize)
     )
 
     # --- phase B: median rank located inside ONE value chunk --------
@@ -3913,9 +3912,9 @@ def stats_cronbach_alpha(spark, sf_dir):
     )
     # the complete-block table is users×5 rows and feeds THREE
     # subtrees (item variances, row sums, and full's own lineage) —
-    # one eager localCheckpoint keeps the plan linear (the pagerank
+    # one eager materialization keeps the plan linear (the pagerank
     # lineage discipline; kilobytes at any scale)
-    c = cell.join(F.broadcast(full), "user_id").localCheckpoint(eager=True)
+    c = cell.join(F.broadcast(full), "user_id").transform(materialize)
     item = c.groupBy("event_type").agg(F.var_pop("m").alias("v"))
     tot = (
         c.groupBy("user_id")
@@ -3982,9 +3981,9 @@ def stats_icc(spark, sf_dir):
         .filter(F.col("kk") == _K)
         .select("user_id")
     )
-    # same three-consumer shape as stats_cronbach_alpha: checkpoint
+    # same three-consumer shape as stats_cronbach_alpha: materialize
     # the users×5 block table once
-    c = cell.join(F.broadcast(full), "user_id").localCheckpoint(eager=True)
+    c = cell.join(F.broadcast(full), "user_id").transform(materialize)
     g = c.agg(F.avg("m").alias("gm"))
     blocks = c.groupBy("user_id").agg(
         F.avg("m").alias("bm"), F.count(F.lit(1)).cast("double").alias("k")

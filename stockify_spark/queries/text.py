@@ -10,6 +10,7 @@ import math
 from pyspark.sql import functions as F, Window
 
 from stockify_spark.functions.bpe import bpe_learn, bpe_learn_batched, word_frequencies
+from stockify_spark.functions.scale import materialize
 from stockify_spark.functions.text import fingerprint, lang_id, LANG_PROFILES, quality_score
 from stockify_spark.registry import register, _t
 
@@ -286,15 +287,10 @@ def text_tfidf_topk(spark, sf_dir):
     # exactly once into the compact (doc_id, token, tf) table, which
     # is checkpointed so BOTH df consumers below read the
     # materialized rows instead of re-running the explode.
-    # localCheckpoint = executor-local, unreplicated, lineage
-    # truncated: right for the local/bench path; at cluster scale
-    # swap in persist(DISK_ONLY_2) or a reliable checkpoint() — the
-    # fault-tolerance trade documented at
-    # llm/dedup.repeated_substring_spans
     tf = (
         tok.groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     # df: groupBy + join-back, not COUNT OVER (PARTITION BY token) —
     # token document-frequency is the canonical power-law key (a
@@ -685,7 +681,7 @@ def text_perplexity(spark, sf_dir):
     half that text_ngram_lm's count tables feed.
 
     Scale shape: the trigram stream is materialized once
-    (localCheckpoint — it feeds the trigram counts, the context
+    (it feeds the trigram counts, the context
     counts, the vocab scalar, AND the per-instance scoring join).
     This was re-litigated in round 8: WITHOUT the checkpoint the
     executed plan shows 8 parquet scans and ZERO ReusedExchange —
@@ -718,7 +714,7 @@ def text_perplexity(spark, sf_dir):
                 ),
             )
         ).alias("g"),
-    ).select("doc_id", "g.w1", "g.w2", "g.w3").localCheckpoint()
+    ).select("doc_id", "g.w1", "g.w2", "g.w3").transform(materialize)
     # ONE aggregation over the data-sized trigram stream; the context
     # counts and the vocab scalar are rollups of the (much smaller)
     # trigram-count table — counts are exact integers, so
@@ -956,13 +952,13 @@ def text_rake(spark, sf_dir):
     ns = tok.filter(~F.col("tok").isin(*_STOP16)).withColumn(
         "grp",
         F.col("pos") - F.row_number().over(Window.partitionBy("doc_id").orderBy("pos")),
-    ).localCheckpoint()
+    ).transform(materialize)
     ph = ns.groupBy("doc_id", "grp").agg(
         F.concat_ws(" ", F.array_sort(F.collect_list(F.struct("pos", "tok"))).tok).alias(
             "phrase"
         ),
         F.count(F.lit(1)).alias("plen"),
-    ).localCheckpoint()  # phrase-level (rows = phrases), read 2x below
+    ).transform(materialize)  # phrase-level (rows = phrases), read 2x below
     pw = ns.join(ph.select("doc_id", "grp", "plen"), ["doc_id", "grp"])
     ws = pw.groupBy("tok").agg(
         (F.sum("plen").cast("double") / F.count(F.lit(1))).alias("wscore")
@@ -1285,8 +1281,8 @@ def text_js_divergence(spark, sf_dir):
         F.substring("source", 4, 10).cast("long") % 2 == 0, "even"
     ).otherwise("odd")
     tok = docs.select(grp.alias("grp"), F.explode(tokens("text")).alias("tok"))
-    cnt = tok.groupBy("grp", "tok").agg(F.count(F.lit(1)).alias("c")).localCheckpoint(
-        eager=False
+    cnt = materialize(
+        tok.groupBy("grp", "tok").agg(F.count(F.lit(1)).alias("c")), eager=False
     )
     tot = cnt.groupBy("grp").agg(F.sum("c").cast("double").alias("t"))
     c = F.col
@@ -1799,7 +1795,7 @@ def text_stylometry_delta(spark, sf_dir):
     sw = (
         w.groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     top = (
         sw.groupBy("word")

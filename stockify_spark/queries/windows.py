@@ -9,6 +9,7 @@ import math
 
 from pyspark.sql import functions as F, Window
 
+from stockify_spark.functions.scale import materialize
 from stockify_spark.operators import moving_average, rolling_max, rolling_min, sliding_agg
 from stockify_spark.registry import register, _t
 from stockify_spark.sources.fixtures import RAMP_CYCLES, RAMP_SERIES_LEN, RAMP_SQL, stocks_ramp
@@ -1334,7 +1335,7 @@ def window_haar_dwt(spark, sf_dir):
         # level k's branch re-executes every lower level and the plan
         # census counts 35 shuffles instead of 7 (measured); the
         # level outputs halve in size so the checkpoints are tiny
-        nxt = nxt.localCheckpoint(eager=False)
+        nxt = materialize(nxt, eager=False)
         levels.append(
             nxt.select(
                 "symbol", F.lit(lv).cast("long").alias("level"), "k",
@@ -2361,7 +2362,7 @@ def window_holt_winters(spark, sf_dir):
         # ~400 rows (5 regions x ~80 months); checkpointing stops the
         # init/seasonal/series consumers from re-expanding the fact
         # join three times (plan-audit catch: 8 scans -> 1)
-        .localCheckpoint(eager=False)
+        .transform(materialize, eager=False)
     )
     w = Window.partitionBy("region").orderBy("ym")
     base = rev.withColumn("pos", F.row_number().over(w))

@@ -46,6 +46,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stockify_spark.functions.scale import materialize
+
 
 def _log_dir(path: str) -> str:
     return os.path.join(path, "_txlog")
@@ -1730,7 +1732,7 @@ def merge_upsert(
     _reject_tombstoned(source, st)
     source = _to_physical(source, m)
     key_cols = [m.get(k, k) for k in key_cols]
-    src = source.localCheckpoint()  # read twice: key probe + data write
+    src = materialize(source)  # read twice: key probe + data write
     snap = spark.read.option("mergeSchema", "true").parquet(*st.files(path))
     # touched files are mapped back to the LOG-FORM paths of the live
     # set by file name: remove actions must string-match their adds,
@@ -2539,7 +2541,7 @@ def incremental_mv(
                 ).alias("total"),
             )
             .filter(F.col("n_rows") > 0)
-            .localCheckpoint()  # view-sized, keeps lineage O(1) per commit
+            .transform(materialize)  # view-sized, keeps lineage O(1) per commit
         )
     return mv
 

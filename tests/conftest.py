@@ -3,6 +3,7 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
+import time
 
 import pytest
 
@@ -64,3 +65,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+def jobs_of(spark, fn) -> list[int]:
+    """Run ``fn`` under its own job group and return the ids of the
+    Spark jobs it started. The status tracker is fed by the listener
+    bus asynchronously, so a marker job run after ``fn`` is waited for
+    first: once it is visible, every earlier job is too."""
+    sc = spark.sparkContext
+    group = f"jobs-of-{time.monotonic_ns()}"
+    try:
+        sc.setJobGroup(group, "jobs_of")
+        fn()
+        sc.setJobGroup(f"{group}-marker", "jobs_of marker")
+        spark.range(1).collect()
+        tracker = sc.statusTracker()
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(f"{group}-marker"):
+            assert time.monotonic() < deadline, "marker job never reached the status tracker"
+            time.sleep(0.05)
+        return list(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

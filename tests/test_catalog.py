@@ -8,7 +8,6 @@ from __future__ import annotations
 import calendar
 import datetime
 import os
-import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -16,30 +15,9 @@ import pytest
 
 from stockify_spark.sources import io
 from stockify_spark.sources.io import NANOS_TS_COLS, TABLES, load_table
+from tests.conftest import jobs_of
 
 _NTZ_CONF = "spark.sql.parquet.inferTimestampNTZ.enabled"
-
-
-def _jobs_of(spark, fn) -> list[int]:
-    """Run ``fn`` under its own job group and return the ids of the
-    Spark jobs it started. The status tracker is fed by the listener
-    bus asynchronously, so a marker job run after ``fn`` is waited for
-    first: once it is visible, every earlier job is too."""
-    sc = spark.sparkContext
-    group = f"catalog-test-{time.monotonic_ns()}"
-    try:
-        sc.setJobGroup(group, "catalog test")
-        fn()
-        sc.setJobGroup(f"{group}-marker", "catalog test marker")
-        spark.range(1).collect()
-        tracker = sc.statusTracker()
-        deadline = time.monotonic() + 30
-        while not tracker.getJobIdsForGroup(f"{group}-marker"):
-            assert time.monotonic() < deadline, "marker job never reached the status tracker"
-            time.sleep(0.05)
-        return list(tracker.getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 @pytest.mark.parametrize("name", TABLES)
@@ -62,8 +40,8 @@ def _write(path: str, columns: dict) -> None:
 
 def test_second_load_of_seen_file_fires_no_job(spark, tmp_path):
     _write(str(tmp_path / "t.parquet"), {"a": [1, 2, 3]})
-    first = _jobs_of(spark, lambda: load_table(spark, str(tmp_path), "t"))
-    again = _jobs_of(spark, lambda: load_table(spark, str(tmp_path), "t"))
+    first = jobs_of(spark, lambda: load_table(spark, str(tmp_path), "t"))
+    again = jobs_of(spark, lambda: load_table(spark, str(tmp_path), "t"))
     assert len(first) >= 1  # the inference job, so the count can see jobs
     assert again == []
 
@@ -87,7 +65,7 @@ def test_flipped_inference_conf_is_inferred_afresh(spark, tmp_path):
         loads = []
         for flag in ("false", "true"):
             spark.conf.set(_NTZ_CONF, flag)
-            jobs = _jobs_of(
+            jobs = jobs_of(
                 spark, lambda: loads.append(load_table(spark, str(tmp_path), "t"))
             )
             assert len(jobs) >= 1, f"no fresh inference with {_NTZ_CONF}={flag}"

@@ -212,52 +212,6 @@ def test_repeated_substring_spans_exact(spark):
     assert out == {(1, 3, 8, 6), (2, 1, 6, 6), (2, 12, 17, 6)}
 
 
-def test_replicated_materialize_conf_switches_durability(spark):
-    """spark.stockify.dedup.replicatedMaterialize=true swaps the
-    scan-once materialization from localCheckpoint (executor-local,
-    lineage truncated) to persist(DISK_ONLY_2) (replicated, lineage
-    kept) — the cluster-scale fault-tolerance form of the r12 ADVICE
-    trade. Same results either way; the switch is observable on the
-    returned frame's storage level."""
-    from pyspark import StorageLevel
-
-    from stockify_spark.llm.dedup import (
-        REPLICATED_MATERIALIZE_CONF,
-        _materialize,
-        repeated_substring_spans,
-    )
-
-    shared = "alpha beta gamma delta epsilon zeta"
-    df = spark.createDataFrame(
-        [
-            (1, f"one two {shared} three four"),
-            (2, f"{shared} unrelated tail words here and {shared}"),
-        ],
-        "doc_id long, text string",
-    )
-
-    def spans():
-        return {
-            tuple(r)
-            for r in repeated_substring_spans(df, "text", "doc_id", 6).collect()
-        }
-
-    base = spans()
-    assert base  # non-trivial corpus
-    spark.conf.set(REPLICATED_MATERIALIZE_CONF, "true")
-    try:
-        assert spans() == base
-        m = _materialize(df.select("doc_id"))
-        assert m.storageLevel == StorageLevel.DISK_ONLY_2
-        assert m.count() == 2
-    finally:
-        spark.conf.set(REPLICATED_MATERIALIZE_CONF, "false")
-    # default path: lineage-truncated local checkpoint, not persisted
-    m = _materialize(df.select("doc_id"))
-    assert m.storageLevel == StorageLevel.NONE or not m.storageLevel.useDisk
-    assert m.count() == 2
-
-
 def test_repeated_substring_spans_merges_overlaps(spark):
     """A 8-token repeat with L=6 yields THREE overlapping repeated
     windows that must merge into one maximal span."""

@@ -4,11 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from stockify_spark.operators.merge import (
-    compact_small_files,
-    merge_upsert,
-    upsert_partitioned,
-)
+from stockify_spark.operators.merge import merge_upsert, upsert_partitioned
 from stockify_spark.sources.io import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -65,18 +61,3 @@ def test_upsert_partitioned_rewrites_only_touched_partitions(spark, tmp_path):
     assert untouched and all(after[k] == before[k] for k in untouched), (
         "untouched partitions were rewritten"
     )
-
-
-def test_compact_small_files(spark, tmp_path):
-    import pathlib
-
-    path = str(tmp_path / "shards")
-    li = load_table(spark, SF, "lineitem")
-    li.repartition(24).write.parquet(path)
-    assert len(list(pathlib.Path(path).glob("*.parquet"))) >= 24
-
-    n_before = spark.read.parquet(path).count()
-    n_files = compact_small_files(spark, path, target_rows_per_file=n_before)
-    assert n_files == 1
-    assert len(list(pathlib.Path(path).glob("*.parquet"))) == 1
-    assert spark.read.parquet(path).count() == n_before
