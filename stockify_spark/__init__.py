@@ -24,7 +24,6 @@ from stockify_spark.sources.io import (
     read_stocks_csv,
     write_bucketed,
     write_date_partitioned,
-    write_parquet,
     write_sorted_layout,
     write_zorder_layout,
 )
@@ -37,7 +36,6 @@ __all__ = [
     "read_stocks_csv",
     "write_bucketed",
     "write_date_partitioned",
-    "write_parquet",
     "write_sorted_layout",
     "write_zorder_layout",
 ]

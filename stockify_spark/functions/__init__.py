@@ -2,11 +2,8 @@ from stockify_spark.functions.text import (
     tokens,
     token_count,
     avg_token_len,
-    stopword_ratio,
-    punct_ratio,
     quality_score,
     fingerprint,
-    lang_scores,
     lang_id,
 )
 
@@ -14,10 +11,7 @@ __all__ = [
     "tokens",
     "token_count",
     "avg_token_len",
-    "stopword_ratio",
-    "punct_ratio",
     "quality_score",
     "fingerprint",
-    "lang_scores",
     "lang_id",
 ]

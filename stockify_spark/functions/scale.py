@@ -43,7 +43,8 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize ``df`` for several consumers or to cut a deep
     lineage: ``df.localCheckpoint(eager=eager)``, under the policy in
     the module docstring. With ``eager`` the frame is computed before
-    this returns."""
+    this returns. Under AQE, ``eager=False`` still runs the map stages
+    of any exchange in the frame before this returns."""
     return df.localCheckpoint(eager=eager)
 
 

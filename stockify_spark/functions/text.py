@@ -45,21 +45,6 @@ def avg_token_len(col: str | Column) -> Column:
     return F.aggregate(t, F.lit(0).cast("double"), lambda acc, x: acc + F.length(x)) / F.size(t)
 
 
-def stopword_ratio(col: str | Column, stopwords: tuple[str, ...] = LANG_PROFILES["en"]) -> Column:
-    """Fraction of tokens that are (given-language) stopwords."""
-    t = tokens(col)
-    hits = F.size(F.filter(t, lambda x: x.isin(*stopwords)))
-    return hits / F.size(t)
-
-
-def punct_ratio(col: str | Column, punct_class: str = r"[.,!?;:]") -> Column:
-    """Fraction of characters that are punctuation (explicit class so
-    oracle SQL can use the identical regex)."""
-    c = F.col(col) if isinstance(col, str) else col
-    stripped = F.regexp_replace(c, punct_class, "")
-    return (F.length(c) - F.length(stripped)) / F.length(c)
-
-
 def quality_score(col: str | Column) -> Column:
     """Composite document-quality heuristic in [0, 1]: rewards
     reasonable length, penalizes very short docs and extreme mean
@@ -87,14 +72,6 @@ def _isin_pred(stopwords: tuple[str, ...]):
     # functions as an (element, index) lambda and receive the array
     # index as the second argument
     return lambda x: x.isin(*stopwords)
-
-
-def lang_scores(col: str | Column) -> dict[str, Column]:
-    """Per-language stopword-hit counts (the lang-id evidence)."""
-    t = tokens(col)
-    return {
-        lang: F.size(F.filter(t, _isin_pred(sw))) for lang, sw in LANG_PROFILES.items()
-    }
 
 
 def lang_id(col: str | Column, default: str = "unknown") -> Column:

@@ -1,22 +1,14 @@
 from stockify_spark.llm.dedup import (
     exact_dedup,
     shingles,
-    minhash_signature,
-    minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    simhash,
-    simhash_near_dup_pairs,
 )
 from stockify_spark.llm.similarity import cosine, cosine_topk, embedding_dup_pairs
 
 __all__ = [
     "exact_dedup",
     "shingles",
-    "minhash_signature",
-    "minhash_lsh_pairs",
     "ngram_jaccard_pairs",
-    "simhash",
-    "simhash_near_dup_pairs",
     "cosine",
     "cosine_topk",
     "embedding_dup_pairs",

@@ -6,15 +6,17 @@ std::map last-write-wins on volume, stockify.cu:713, which SURVEY
 Scale design:
   * exact dedup — hash-groupBy on a fingerprint: one shuffle keyed on
     a 32-char digest, partial aggregation map-side.
-  * MinHash+LSH — signatures are computed map-side with built-in
-    ``xxhash64`` (no Python); candidate generation is an equi-join on
-    (band, band_hash), so cost tracks the number of *colliding* pairs,
-    not n². The only shuffle keys are band hashes — naturally spread.
-  * SimHash — 64-bit signature per doc via an Arrow-batched pandas
-    UDF (per-token loop can't be expressed as column ops without an
-    explode+64-agg shuffle; the UDF keeps it map-side, no shuffle),
-    then banded equi-join on 16-bit chunks + exact hamming verify
-    with built-in ``bit_count``.
+  * MinHash+LSH — signatures are seeded linear permutations of a
+    60-bit md5-prefix shingle hash, min-aggregated map-side (no
+    Python, and nameable in ANSI SQL, so the oracle reproduces them);
+    candidate generation is an equi-join on (band, band_key), so cost
+    tracks the number of *colliding* pairs, not n². The streaming
+    ingest sinks keep their own xxhash64 family
+    (:func:`_signatures_from_base`).
+  * SimHash — 60-bit signature per doc from the same md5-prefix token
+    hash: per-bit one-counts packed four to a long, one map-side
+    partial aggregate, then a banded equi-join on 15-bit chunks + exact
+    hamming verify with built-in ``bit_count``.
   * n-gram Jaccard — candidates from a shared-shingle equi-join
     (inverted-index style), verified with exact set Jaccard on
     distinct shingles.
@@ -22,16 +24,11 @@ Scale design:
 
 from __future__ import annotations
 
-import hashlib
-
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from stockify_spark.functions.scale import materialize, spread_cpu_dense
+from stockify_spark.functions.scale import materialize, spread_cpu_dense, spread_small_scan
 from stockify_spark.functions.text import fingerprint, tokens
 
 
@@ -80,32 +77,6 @@ def shingles(col: str | Column, k: int = 3) -> Column:
             )
         )
     )
-
-
-def minhash_signature(col: str | Column, num_hashes: int = 32, k: int = 3) -> Column:
-    """MinHash signature (array<bigint>, length ``num_hashes``) of the
-    document's k-shingle set.
-
-    Each permutation is approximated by seeded ``xxhash64`` — a
-    built-in JVM hash, so signatures are computed inside codegen on
-    the scan output. Empty docs get MAX_LONG sentinels.
-    """
-    sh = shingles(col, k)
-
-    def seeded(i: int):
-        # single-parameter lambda factory — a default-arg lambda would
-        # be read as an (element, index) lambda by F.transform
-        return lambda s: F.xxhash64(s, F.lit(i))
-
-    def sig_of(s):
-        mins = [F.array_min(F.transform(s, seeded(i))) for i in range(num_hashes)]
-        return F.array(*[F.coalesce(m, F.lit(2**63 - 1)) for m in mins])
-
-    # bind the shingle array ONCE as a lambda variable: referencing
-    # ``sh`` as the collection arg of num_hashes separate transforms
-    # re-evaluates the whole shingle pipeline once per hash (the
-    # shingles() docstring's O(T²) note, multiplied by 32)
-    return F.element_at(F.transform(F.array(sh), sig_of), 1)
 
 
 def _rotl(c, i: int):
@@ -172,11 +143,10 @@ def minhash_lsh_pairs_seeded(
     """MinHash-LSH near-dup pairs with a fully deterministic,
     SQL-expressible hash family (see :func:`minhash_seed_constants`).
 
-    Same banding shape as :func:`minhash_lsh_pairs` — explode →
-    per-shingle base hash → ``num_hashes`` seeded permutation mins
-    collapsed map-side in one partial aggregate, band keys as an
-    ids-only equi-join, exact Jaccard verification — but every step
-    is reproducible in ANSI SQL, so the differential oracle
+    Explode → per-shingle base hash → ``num_hashes`` seeded
+    permutation mins collapsed map-side in one partial aggregate,
+    band keys as an ids-only equi-join, exact Jaccard verification —
+    every step reproducible in ANSI SQL, so the differential oracle
     hash-checks the LSH *semantics* (which pairs band-collide AND
     verify), not just row counts. Band keys join on the literal
     min-value tuple rendered as a string (collision-free), not an
@@ -188,8 +158,6 @@ def minhash_lsh_pairs_seeded(
 
     # doc-level spread before shingling + the per-shingle md5 fan-out
     # (single-file scans serialize the expensive map; no-op at scale)
-    from stockify_spark.functions.scale import spread_small_scan
-
     base = materialize(
         spread_small_scan(df.select(F.col(id_col).alias("_id"), F.col(text_col)))
         .select("_id", shingles(text_col, k).alias("_sh"))
@@ -256,86 +224,6 @@ def minhash_lsh_pairs_seeded(
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    bands: int = 16,
-    k: int = 3,
-    jaccard_threshold: float = 0.5,
-) -> DataFrame:
-    """Near-duplicate pairs via MinHash banding + exact verification.
-
-    rows_per_band = num_hashes/bands sets the LSH S-curve; candidates
-    collide on any band. The band join is an equi-join on
-    (band_id, band_hash) carrying IDS ONLY — shingle arrays are joined
-    back per-side after candidate dedup, so the wide payload never
-    rides through the band shuffle. Band-hash keys are uniform, so no
-    skew unless the corpus has giant duplicate classes (AQE splits
-    those). Output: (id_a, id_b, jaccard) with id_a < id_b and
-    jaccard >= threshold, exact Jaccard on distinct shingle sets.
-    """
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
-    r = num_hashes // bands
-
-    # the shingle base feeds the signature pipeline AND both sides of
-    # the verification join — materialize it once; spread first (see
-    # minhash_lsh_pairs_seeded)
-    base = materialize(
-        _spread_small_scan(df.select(F.col(id_col).alias("_id"), F.col(text_col)))
-        .select("_id", shingles(text_col, k).alias("_sh"))
-    )
-    sig = _signatures_from_base(base, num_hashes)
-
-    # materialized: BOTH sides of the candidate self-join read this
-    # plan, and without it the whole explode→hash→min-agg signature
-    # pipeline executes twice. (id, band_id, band_hash) is the slim
-    # banded index — at warehouse scale this is the LSH index table
-    # you would materialize to storage.
-    banded = materialize(
-        sig.select(
-            "_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band_id"),
-                            F.xxhash64(F.slice("_sig", b * r + 1, r), F.lit(b)).alias("band_hash"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("band"),
-        ).select("_id", "band.band_id", "band.band_hash")
-    )
-
-    cand = (
-        banded.select(F.col("_id").alias("id_a"), "band_id", "band_hash")
-        .join(banded.select(F.col("_id").alias("id_b"), "band_id", "band_hash"),
-              ["band_id", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # scoped verify-boundary spread (functions/scale.spread_cpu_dense)
-    cand = spread_cpu_dense(cand)
-
-    joined = cand.join(
-        base.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a")), "id_a"
-    ).join(base.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b")), "id_b")
-
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    # threshold applies to the true jaccard; round only the projection
-    return (
-        joined.filter(inter / union >= jaccard_threshold)
-        .withColumn("jaccard", F.round(inter / union, 6))
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
 def _ceil_bound(expr: Column) -> Column:
     """``ceil`` of a threshold·size product, robust to FP double
     rounding. The prune bounds below compare against
@@ -377,7 +265,7 @@ def ngram_jaccard_pairs(
     # is the expensive serial map, and a single-row-group scan arrives
     # in one partition (no-op at warehouse scale — see functions/scale)
     base = materialize(
-        _spread_small_scan(df.select(F.col(id_col).alias("_id"), F.col(text_col)))
+        spread_small_scan(df.select(F.col(id_col).alias("_id"), F.col(text_col)))
         .select("_id", shingles(text_col, k).alias("_sh"))
     )
     inv = base.select("_id", F.size("_sh").alias("_n"), F.explode("_sh").alias("shingle"))
@@ -495,7 +383,7 @@ def shingle_containment_pairs(
     """
     # spread before shingling (see ngram_jaccard_pairs)
     base = materialize(
-        _spread_small_scan(df.select(F.col(id_col).alias("_id"), F.col(text_col)))
+        spread_small_scan(df.select(F.col(id_col).alias("_id"), F.col(text_col)))
         .select("_id", shingles(text_col, k).alias("_sh"))
         .filter(F.size("_sh") > 0)
     )
@@ -571,152 +459,8 @@ def shingle_containment_pairs(
     )
 
 
-def _simhash64(text: str) -> int:
-    """Scalar reference: deterministic 64-bit SimHash of whitespace
-    tokens (blake2b token hashes — stable across processes, unlike
-    ``hash()``). Used only as the test oracle for the vectorized
-    batch implementation below."""
-    acc = [0] * 64
-    for tok in text.lower().split():
-        h = int.from_bytes(hashlib.blake2b(tok.encode(), digest_size=8).digest(), "big")
-        for b in range(64):
-            acc[b] += 1 if (h >> b) & 1 else -1
-    out = 0
-    for b in range(64):
-        if acc[b] > 0:
-            out |= 1 << b
-    # wrap to signed 64-bit for Spark LongType
-    return out - (1 << 64) if out >= 1 << 63 else out
-
-
-_SIMHASH_CHUNK_TOKENS = 1 << 18  # bounds the unpacked sign matrix to ~16 MB
-
-
-def _simhash_batch(texts: pd.Series) -> pd.Series:
-    """Vectorized SimHash for one Arrow batch.
-
-    The only Python-level loop is blake2b over the batch's UNIQUE
-    tokens (vocabulary, typically ≪ token count); everything per-token
-    is numpy: bit-unpack each token hash into a (tokens, 64) ±1 sign
-    matrix and segment-sum it per document with ``np.add.reduceat``
-    (token runs are flattened in document order, so successive
-    non-empty documents own exactly contiguous row ranges). Bit-exact
-    with :func:`_simhash64`, ~100× less interpreter time than the
-    per-token loop it replaces."""
-    import numpy as np
-
-    token_lists = [(t or "").lower().split() for t in texts]
-    n_docs = len(token_lists)
-    counts = np.fromiter((len(ts) for ts in token_lists), dtype=np.int64, count=n_docs)
-    flat = [tok for ts in token_lists for tok in ts]
-    sig = np.zeros(n_docs, dtype=np.uint64)
-    if flat:
-        uniq, inv = np.unique(np.array(flat, dtype=object), return_inverse=True)
-        uniq_hash = np.fromiter(
-            (
-                int.from_bytes(hashlib.blake2b(u.encode(), digest_size=8).digest(), "big")
-                for u in uniq
-            ),
-            dtype=np.uint64,
-            count=len(uniq),
-        )
-        hashes = uniq_hash[inv]  # one uint64 per token, in doc order
-        starts = np.zeros(n_docs, dtype=np.int64)
-        np.cumsum(counts[:-1], out=starts[1:])
-        bit_idx = np.arange(64, dtype=np.uint64)[None, :]
-        acc = np.zeros((n_docs, 64), dtype=np.int64)
-        nonempty = np.flatnonzero(counts > 0)
-        # chunk over documents so the (tokens, 64) sign matrix stays
-        # bounded regardless of Arrow batch size
-        lo = 0
-        while lo < len(nonempty):
-            hi = lo
-            tok_budget = 0
-            while hi < len(nonempty) and (
-                tok_budget == 0 or tok_budget + counts[nonempty[hi]] <= _SIMHASH_CHUNK_TOKENS
-            ):
-                tok_budget += counts[nonempty[hi]]
-                hi += 1
-            docs = nonempty[lo:hi]
-            t0 = starts[docs[0]]
-            t1 = starts[docs[-1]] + counts[docs[-1]]
-            signs = (
-                ((hashes[t0:t1, None] >> bit_idx) & np.uint64(1)).astype(np.int8) * 2 - 1
-            )
-            acc[docs] = np.add.reduceat(signs, starts[docs] - t0, axis=0, dtype=np.int64)
-            lo = hi
-        weights = np.uint64(1) << np.arange(64, dtype=np.uint64)
-        sig = ((acc > 0).astype(np.uint64) * weights[None, :]).sum(axis=1, dtype=np.uint64)
-    return pd.Series(sig.view(np.int64))
-
-
-@F.pandas_udf(T.LongType())
-def _simhash_udf(texts: pd.Series) -> pd.Series:
-    return _simhash_batch(texts)
-
-
-def simhash(df: DataFrame, text_col: str, alias: str = "simhash") -> DataFrame:
-    """Attach a 64-bit SimHash signature column (Arrow-batched pandas
-    UDF — map-side only, no shuffle)."""
-    return df.withColumn(alias, _simhash_udf(F.col(text_col)))
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs with hamming(simhash) <= max_hamming.
-
-    Pigeonhole banding: split the 64-bit signature into 4 chunks of
-    16 bits; any pair within hamming distance 3 agrees exactly on at
-    least one chunk, so an equi-join per chunk finds all candidates.
-    Verification uses built-in ``bit_count(xor)`` — pure JVM.
-    """
-    sig = simhash(df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text")), "_text")
-    # The signature UDF feeds BOTH sides of the self-join below; without
-    # a materialization barrier Spark computes the tokenize+hash pass
-    # twice (self-joins duplicate the subtree — ReusedExchange only
-    # kicks in after an exchange, and the UDF runs before any).
-    sig = materialize(sig.select("_id", "simhash"))
-
-    chunks = sig.select(
-        "_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk_id"),
-                        F.shiftrightunsigned("simhash", c * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("chunk_val"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("ch"),
-    ).select("_id", "simhash", "ch.chunk_id", "ch.chunk_val")
-
-    a = chunks.select(
-        F.col("_id").alias("id_a"), F.col("simhash").alias("sig_a"), "chunk_id", "chunk_val"
-    )
-    b = chunks.select(
-        F.col("_id").alias("id_b"), F.col("simhash").alias("sig_b"), "chunk_id", "chunk_val"
-    )
-    cand = (
-        a.join(b, ["chunk_id", "chunk_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return (
-        cand.withColumn("hamming", hamming.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+# Largest per-bit one-count a 15-bit packed field holds.
+SIMHASH_MAX_TOKENS = (1 << 15) - 1
 
 
 def simhash_near_dup_pairs_seeded(
@@ -727,15 +471,19 @@ def simhash_near_dup_pairs_seeded(
 ) -> DataFrame:
     """SimHash near-dup pairs with a fully SQL-expressible signature.
 
-    Same shape as :func:`simhash_near_dup_pairs` but the per-token
-    hash is the 60-bit md5-prefix (cross-engine, see
-    :data:`MINHASH_P` notes) instead of JVM-only blake2b/xxhash, so a
-    differential oracle can reproduce signatures, banding, AND the
-    hamming verification bit-for-bit — everything is integer
-    arithmetic. Signature: per-bit ±1 counts over whitespace tokens
-    (duplicates kept), sign bits packed to one BIGINT; candidates
-    agree on one of 4 15-bit bands; verify ``bit_count(xor) <=
-    max_hamming``. Pure column expressions — no Python in the plan.
+    The per-token hash is the 60-bit md5-prefix (cross-engine, see
+    :data:`MINHASH_P` notes), so a differential oracle can reproduce
+    signatures, banding, AND the hamming verification bit-for-bit —
+    everything is integer arithmetic. Signature: per-bit ±1 counts
+    over whitespace tokens (duplicates kept), sign bits packed to one
+    BIGINT; candidates agree on one of 4 15-bit bands; verify
+    ``bit_count(xor) <= max_hamming``. Pure column expressions — no
+    Python in the plan.
+
+    A document may hold at most :data:`SIMHASH_MAX_TOKENS` tokens: the
+    per-bit counts are packed into 15-bit fields, and a longer document
+    raises instead of overflowing one field into the next. Chunk such
+    documents upstream.
     """
     n_bits, n_bands = 60, 4
     band_bits = n_bits // n_bands  # 15
@@ -748,8 +496,6 @@ def simhash_near_dup_pairs_seeded(
     # case functions/scale documents — a single-file scan serializes
     # it); round-robin on whole docs keeps every doc's tokens in one
     # partition, so the signature aggregate still collapses map-side
-    from stockify_spark.functions.scale import spread_small_scan
-
     inv = spread_small_scan(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col).alias("_id"), F.explode(tokens(text_col)).alias("_t")
     ).select(
@@ -762,9 +508,8 @@ def simhash_near_dup_pairs_seeded(
     # aggregation is 15 sum() columns + a count, not 60 sum(when())
     # columns (2.5× faster at sf0.1, identical signatures: the ±1
     # majority  Σ±1 > 0  ⇔  2·ones > n). 15-bit fields carry no
-    # cross-field overflow below 32 768 tokens per doc; longer
-    # documents should be chunked upstream (SimHash over multi-10k
-    # token blobs degrades to noise anyway).
+    # cross-field overflow up to SIMHASH_MAX_TOKENS tokens per doc;
+    # the signature projection below raises on a longer document.
     n_groups = 15  # 60 bits / 4 fields per long
     spread = (1 << 0) | (1 << 15) | (1 << 30) | (1 << 45)
     accs = inv.groupBy("_id").agg(
@@ -787,7 +532,7 @@ def simhash_near_dup_pairs_seeded(
     # 2·ones > n. Long addition is associative, so the HOF fold
     # equals the chained sum bit-for-bit. `>>` (arithmetic shift) is
     # safe: packed sums are non-negative (≤4 fields × 15 bits + no
-    # sign-bit contact below 32 768 tokens/doc, the documented bound).
+    # sign-bit contact within the SIMHASH_MAX_TOKENS bound).
     ps = F.array(*[F.col(f"_p{g}") for g in range(n_groups)])
     sig_expr = F.expr(
         "aggregate(sequence(0, 59), 0L, (acc, b) -> acc + "
@@ -802,9 +547,24 @@ def simhash_near_dup_pairs_seeded(
     # an exchange). Halves wall-clock at sf0.1; at cluster scale the
     # materialized frame is (id, int64) per doc — ~16 bytes/row,
     # trivially memory-resident.
+    too_long = F.raise_error(
+        F.concat(
+            F.lit("simhash_near_dup_pairs_seeded: document "),
+            F.col("_id").cast("string"),
+            F.lit(" has "),
+            F.col("_n").cast("string"),
+            F.lit(f" tokens, over the {SIMHASH_MAX_TOKENS}-token bound of the packed"
+                  " 15-bit signature counts; chunk it upstream"),
+        )
+    )
     sig = (
         accs.select("_id", "_n", ps.alias("_ps"))
-        .select("_id", sig_expr.alias("_sig"))
+        .select(
+            "_id",
+            F.when(F.col("_n") > SIMHASH_MAX_TOKENS, too_long)
+            .otherwise(sig_expr)
+            .alias("_sig"),
+        )
         .transform(materialize)
     )
 
@@ -953,25 +713,14 @@ def duplicate_clusters(
     id_col: str,
     k: int = 3,
     threshold: float = 0.5,
-    detector: str = "ngram",
 ) -> DataFrame:
-    """Near-duplicate clusters: pair detection → connected
-    components. Returns (doc id, component representative) for every
-    document with at least one near-duplicate — pairs only assert
-    "these two match"; keeping one doc per duplicate GROUP needs the
-    transitive closure.
-
-    ``detector``: "ngram" (exact Jaccard via prefix-filtered index —
-    the verification path) or "minhash" (LSH banding — the 100 TB
-    path; same downstream verification threshold, candidate recall is
-    probabilistic).
+    """Near-duplicate clusters: exact n-gram Jaccard pairs
+    (:func:`ngram_jaccard_pairs`) → connected components. Returns
+    (doc id, component representative) for every document with at
+    least one near-duplicate — pairs only assert "these two match";
+    keeping one doc per duplicate GROUP needs the transitive closure.
     """
-    if detector == "ngram":
-        pairs = ngram_jaccard_pairs(df, text_col, id_col, k=k, threshold=threshold)
-    elif detector == "minhash":
-        pairs = minhash_lsh_pairs(df, text_col, id_col, k=k, jaccard_threshold=threshold)
-    else:
-        raise ValueError("detector must be 'ngram' or 'minhash'")
+    pairs = ngram_jaccard_pairs(df, text_col, id_col, k=k, threshold=threshold)
     edges = pairs.select("id_a", "id_b")
     return connected_components(edges).select(
         F.col("node").alias(id_col), "component"
@@ -1012,8 +761,6 @@ def contamination_pairs(
     # functions/scale documents) spreads across all slots on a
     # single-file scan — measured 4.1s → the double serial corpus
     # hash was the whole cost at sf0.1
-    from stockify_spark.functions.scale import spread_small_scan
-
     ev = _hashed(df.filter(F.col(id_col) < eval_max_id)).select(
         F.col(id_col).alias("eval_id"), "h"
     )
@@ -1102,9 +849,6 @@ def fuzzy_set_join(
         .withColumn("jaccard", F.round(inter / union, 6))
         .select("id_a", "id_b", "jaccard")
     )
-
-
-from stockify_spark.functions.scale import spread_small_scan as _spread_small_scan
 
 
 def _win_hash(w: Column) -> Column:
@@ -1274,7 +1018,7 @@ def repeated_substring_spans(
     durability is the session's materialization policy
     (:mod:`stockify_spark.functions.scale`), as at every other site."""
     L = min_tokens
-    df = _spread_small_scan(df)
+    df = spread_small_scan(df)
     # materialize the hashed-window stream ONCE: the count side and
     # the probe side below are two consumers of the same pre-exchange
     # map subtree, which would otherwise re-run the window-
@@ -1335,7 +1079,7 @@ def keepone_substring_spans(
     not the corpus, so the join-back broadcasts at any corpus size
     where dedup is meaningful."""
     L = min_tokens
-    df = _spread_small_scan(df)
+    df = spread_small_scan(df)
     # same skew-safe shape as repeated_substring_spans (see its
     # step-2 comment): materialize once, groupBy-count, semi-join back
     wh = materialize(_windows_hashed(df, text_col, id_col, L))
@@ -1390,7 +1134,7 @@ def remove_repeated_spans(
     # cut side below, whose per-token covered() filter is an
     # interpreted higher-order pass that must not run on a
     # single-split scan
-    df = _spread_small_scan(df)
+    df = spread_small_scan(df)
     spans = repeated_substring_spans(df, text_col, id_col, min_tokens)
     per_doc = spans.groupBy(id_col).agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
@@ -1475,7 +1219,7 @@ def contaminated_spans(
         .distinct()
     )
     # train side: hash-only windows, semi-joined on the 8-byte key
-    train = _spread_small_scan(train)
+    train = spread_small_scan(train)
     cand = (
         _windows_hashed(train, text_col, id_col, L)
         .join(ev_w.select("h").distinct(), "h", "left_semi")
@@ -1656,8 +1400,7 @@ def near_dedup_ingest_sink(
         sigs = _signatures_from_base(base, num_hashes)
         # materialize once: bt feeds band derivation (three join
         # branches) AND the survivor write — lazily it would re-run
-        # the explode×num_hashes signature pipeline per consumer (the
-        # minhash_lsh_pairs persist lesson)
+        # the explode×num_hashes signature pipeline per consumer
         bt = materialize(base.join(sigs, "_id"))
         if instrument is not None:
             instrument["signature_sec"] = round(_time.perf_counter() - t0, 4)

@@ -171,63 +171,6 @@ def embedding_dup_pairs(
     )
 
 
-def embedding_dup_pairs_blocked(
-    df: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_blocks: int = 8,
-) -> DataFrame:
-    """Exact all-pairs cosine near-dups via blocked matrix multiply.
-
-    Same result set as :func:`embedding_dup_pairs`, different physics:
-    vectors are hashed into ``n_blocks`` blocks, each vector is
-    replicated to the ``n_blocks`` unordered block-pairs it belongs
-    to, and each (block_a, block_b) group computes its cross-pairs in
-    ONE numpy float64 matmul inside ``applyInPandas`` (Arrow-batched).
-    Replication factor is n_blocks, group working set is
-    2·(n/n_blocks) vectors — tune n_blocks ≈ sqrt(n·dim·8 / mem) so a
-    group fits in executor memory. Replaces per-pair interpreted
-    lambda evaluation (~50× slower) while staying exact.
-    """
-    v = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks)).alias("_b"),
-    )
-    # replicate each vector to every unordered block pair containing
-    # its block; the same-block pair (b, b) gets it exactly once
-    replicated = v.select(
-        "_id",
-        "_v",
-        "_b",
-        F.explode(F.array(*[F.lit(j) for j in range(n_blocks)])).alias("_ob"),
-    ).select(
-        "_id",
-        "_v",
-        "_b",
-        F.least("_b", "_ob").alias("_ka"),
-        F.greatest("_b", "_ob").alias("_kb"),
-    )
-
-    def find(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["_id"].to_numpy()
-        blk = pdf["_b"].to_numpy()
-        mat = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0.0] = 1.0
-        sims = (mat @ mat.T) / np.outer(norms, norms)
-        ia, ib = np.where(np.triu(sims >= threshold, k=1))
-        if pdf["_ka"].iat[0] != pdf["_kb"].iat[0]:
-            cross = blk[ia] != blk[ib]  # same-block pairs belong to (b, b)
-            ia, ib = ia[cross], ib[cross]
-        return pd.DataFrame(
-            {"id_a": np.minimum(ids[ia], ids[ib]), "id_b": np.maximum(ids[ia], ids[ib])}
-        )
-
-    return replicated.groupBy("_ka", "_kb").applyInPandas(find, "id_a long, id_b long")
-
-
 def _seq_cosine(mat: np.ndarray, qmat: np.ndarray, qnorm: np.ndarray) -> np.ndarray:
     """Cosine of every row of ``mat`` (B, dim) against every row of
     ``qmat`` (Q, dim), accumulating one DIMENSION at a time across the
@@ -240,8 +183,8 @@ def _seq_cosine(mat: np.ndarray, qmat: np.ndarray, qnorm: np.ndarray) -> np.ndar
     Cost: dim vectorized passes per batch instead of one GEMM —
     fine at dim≈64-768 (memory-bound either way). For high-dim
     embeddings where the GEMM wins, swap in ``mat @ qmat.T`` (the
-    :func:`embedding_dup_pairs_blocked` form) and accept last-ulp
-    rank ties being broken by id — only differential-oracle
+    :func:`embedding_dup_pairs_bucketed` in-cell form) and accept
+    last-ulp rank ties being broken by id — only differential-oracle
     comparisons need the exact association, not production ANN."""
     dim = qmat.shape[1]
     dots = np.zeros((len(mat), len(qmat)))
@@ -317,8 +260,7 @@ def embedding_dup_pairs_bucketed(
     pairs sharing a cell are verified exactly with one numpy matmul
     per cell inside ``applyInPandas``. Verify work is ~n²·p²/(2k) vs
     n²/2 for all-pairs, and k scales with corpus size (k ≈ √n keeps
-    per-cell work flat); a hot cell can be sub-blocked with
-    :func:`embedding_dup_pairs_blocked` as the in-cell verifier.
+    per-cell work flat).
 
     Semantics are honestly approximate: a qualifying pair whose
     members share no probed cell is missed. On clustered corpora
@@ -354,72 +296,6 @@ def embedding_dup_pairs_bucketed(
     return pairs.dropDuplicates(["id_a", "id_b"])
 
 
-def quantize_int8(vec: Column | str, alias_scale: bool = False) -> Column:
-    """Symmetric per-vector int8 quantization as pure JVM expressions:
-    ``q_i = floor(x_i * 127 / max|x| + 0.5)`` (half-up — identical in
-    every engine, unlike banker's rounding). 4× less memory traffic
-    per scan than float32 and integer dot products — the standard ANN
-    compression step. Deterministic, so a SQL oracle reproduces the
-    exact same codes."""
-    v = F.col(vec) if isinstance(vec, str) else vec
-    maxabs = F.greatest(
-        F.array_max(F.transform(v, lambda x: F.abs(_as_double(x)))), F.lit(1e-30)
-    )
-    # bind maxabs ONCE per row as a lambda variable: referencing the
-    # array_max reduction inside the per-element lambda re-evaluates
-    # it at every element — O(d²) per vector (higher-order-function
-    # lambdas get no cross-invocation CSE; the shingles() lesson)
-    return F.element_at(
-        F.transform(
-            F.array(maxabs),
-            lambda m: F.transform(
-                v, lambda x: F.floor(_as_double(x) * 127.0 / m + 0.5).cast("long")
-            ),
-        ),
-        1,
-    )
-
-
-def quantized_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Brute-force top-k over int8-quantized vectors.
-
-    Same shape as :func:`cosine_topk` but the scan reads 1 byte per
-    dimension instead of 4-8 and the inner product is integer
-    arithmetic (exact — sums of 64 products ≤ 127² are far below
-    2^53, so ranking is bit-deterministic across engines). Scores are
-    the quantized cosine; ranking quality vs float cosine is pinned
-    in tests. At scale the quantized codes persist alongside (or
-    instead of) the float vectors and serve as the cheap first-pass
-    ranker, with float re-scoring of the short list."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), quantize_int8(vec_col).alias("_qq")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), quantize_int8(vec_col).alias("_qc")
-    )
-    pairs = c.crossJoin(F.broadcast(q)).filter(F.col("query_id") != F.col("neighbor_id"))
-    dot = F.aggregate(
-        F.zip_with("_qq", "_qc", lambda x, y: x * y), F.lit(0).cast("long"), lambda a, x: a + x
-    )
-    sq = lambda col: F.aggregate(  # noqa: E731
-        F.transform(col, lambda x: x * x), F.lit(0).cast("long"), lambda a, x: a + x
-    )
-    score = dot.cast("double") / F.sqrt((sq(F.col("_qq")) * sq(F.col("_qc"))).cast("double"))
-    w = Window.partitionBy("query_id").orderBy(F.col("_score").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("_score", score)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
-
-
 def quantized_topk_batched(
     corpus: DataFrame,
     queries: DataFrame,
@@ -427,16 +303,21 @@ def quantized_topk_batched(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """:func:`quantized_topk` with Arrow-batched numpy scoring — the
-    :func:`cosine_topk_batched` physics applied to the int8 path.
+    """Brute-force top-k over int8-quantized vectors, with
+    Arrow-batched numpy scoring — the :func:`cosine_topk_batched`
+    physics applied to the int8 path.
 
-    Quantization (floor(x·127/max|x| + 0.5), all double ops) and the
-    integer dot products are exact, so the numpy batch result is
-    bit-identical to both the expression form and the SQL oracle —
-    no sequential-association care needed beyond the quantize step's
-    (x·127.0)/maxabs op order. Each corpus batch emits only its
-    partial top-k per query; the one shuffle carries k rows per
-    (query, batch)."""
+    Symmetric per-vector quantization ``q_i = floor(x_i * 127 / max|x|
+    + 0.5)`` (half-up — identical in every engine, unlike banker's
+    rounding) is the standard ANN compression step. Quantization (all
+    double ops) and the integer dot products are exact — sums of 64
+    products ≤ 127² are far below 2^53 — so the result is
+    bit-identical to the SQL oracle, with no sequential-association
+    care needed beyond the quantize step's (x·127.0)/maxabs op order.
+    Scores are the quantized cosine; ranking quality vs float cosine
+    is pinned in tests. Each corpus batch emits only its partial
+    top-k per query; the one shuffle carries k rows per (query,
+    batch)."""
     q_rows = sorted(
         queries.select(id_col, vec_col).collect(), key=lambda r: r[0]
     )
@@ -444,7 +325,7 @@ def quantized_topk_batched(
 
     def _q8(mat: np.ndarray) -> np.ndarray:
         maxabs = np.maximum(np.abs(mat).max(axis=1), 1e-30)
-        # same op order as the column expression: (x * 127.0) / maxabs
+        # same op order as the oracle's SQL: (x * 127.0) / maxabs
         return np.floor(mat * 127.0 / maxabs[:, None] + 0.5).astype(np.int64)
 
     qmat = _q8(np.array([r[1] for r in q_rows], dtype=np.float64))
@@ -933,7 +814,7 @@ def pq_topk(
     """Product-quantized top-k with EXACT integer math end to end.
 
     The FAISS-style IVFPQ recipe's PQ half, made cross-engine
-    deterministic: vectors are int8-quantized (quantize_int8's
+    deterministic: vectors are int8-quantized (quantized_topk_batched's
     half-up spec), split into ``n_sub`` subvectors, and each
     subvector is encoded as the index of its nearest codebook entry
     (integer L2, ties to the lowest index). Scoring is asymmetric

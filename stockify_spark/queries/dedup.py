@@ -85,8 +85,7 @@ def _minhash_oracle_sql(num_hashes: int = 32, bands: int = 16) -> str:
 def dedup_minhash_lsh(spark, sf_dir):
     """MinHash-LSH near-dup pairs, deterministic cross-engine hash
     family (md5-prefix base + seeded linear permutations): the LSH
-    banding semantics are hash-exact-checked against the SQL oracle.
-    The xxhash64-based minhash_lsh_pairs stays the library fast path;
+    banding semantics are hash-exact-checked against the SQL oracle;
     its banding recall vs exact Jaccard is pinned in tests."""
     from stockify_spark.llm.dedup import minhash_lsh_pairs_seeded
 
@@ -136,9 +135,7 @@ def dedup_simhash(spark, sf_dir):
     """SimHash near-dup pairs, SQL-expressible 60-bit md5-prefix
     signature: banding and hamming verification are hash-exact-
     checked against the oracle (llm/dedup.simhash_near_dup_pairs_
-    seeded — pure column expressions). The vectorized blake2b
-    simhash stays the library fast path, bit-exactness vs its scalar
-    reference pinned in tests."""
+    seeded — pure column expressions)."""
     from stockify_spark.llm.dedup import simhash_near_dup_pairs_seeded
 
     return simhash_near_dup_pairs_seeded(

@@ -261,9 +261,11 @@ def _kcore_peel(sym, k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS):
             # each round references the previous round's nodes TWICE
             # (a-face and b-face), so an unbroken lineage doubles the
             # logical plan per round — 2^rounds leaf scans by round
-            # 10. Lazy materialization keeps the plan linear; it
-            # materializes as a side effect of the next round's job
-            # (the pagerank lineage discipline, operators/graph.py).
+            # 10. Lazy materialization keeps the plan linear (the
+            # pagerank lineage discipline, operators/graph.py). It is
+            # not free: under AQE, building it runs the map stages of
+            # this round's exchanges before the next round is built
+            # (functions/scale.materialize).
             .transform(materialize, eager=False)
         )
     return nodes

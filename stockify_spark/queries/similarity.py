@@ -24,7 +24,7 @@ def sim_cosine_topk(spark, sf_dir):
     partial top-k, one tiny final window. Scores use the dimension-
     sequential accumulation, so they stay bit-identical to the
     oracle's ``list_cosine_similarity`` loop (the declarative
-    ``cosine_topk`` HOF form remains the library baseline)."""
+    ``cosine_topk`` HOF form is the exact reference in tests)."""
     from stockify_spark.llm.similarity import cosine_topk_batched
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -52,8 +52,8 @@ def sim_cosine_topk(spark, sf_dir):
 def sim_embedding_dup(spark, sf_dir):
     """Corpus-level near-dup detection, bucketed (the 100 TB path):
     candidates from shared IVF cells, exact matmul verify per cell.
-    The exact all-pairs form (embedding_dup_pairs/_blocked) remains
-    the bounded-set verification baseline in tests."""
+    The exact all-pairs embedding_dup_pairs remains the bounded-set
+    verification baseline in tests."""
     from stockify_spark.llm.similarity import embedding_dup_pairs_bucketed
 
     return embedding_dup_pairs_bucketed(
@@ -86,7 +86,7 @@ def sim_quantized_topk(spark, sf_dir):
     scale (float re-scoring of the short list follows). Quantized
     ranking recall vs float cosine is pinned in tests. Scoring is
     the Arrow-batched map-side-top-k form (exact integer math, so
-    still hash-identical to the expression variant and the oracle)."""
+    hash-identical to the oracle)."""
     from stockify_spark.llm.similarity import quantized_topk_batched
 
     emb = _t(spark, sf_dir, "embeddings")

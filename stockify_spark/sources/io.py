@@ -261,18 +261,6 @@ def with_row_id(df: DataFrame) -> DataFrame:
     return df.withColumn("row_id", F.monotonically_increasing_id())
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table_name: str,

@@ -9,10 +9,8 @@ from pyspark.sql import functions as F
 
 from stockify_spark.llm.dedup import (
     exact_dedup,
-    minhash_lsh_pairs,
+    minhash_lsh_pairs_seeded,
     ngram_jaccard_pairs,
-    simhash,
-    simhash_near_dup_pairs,
 )
 
 BASE = (
@@ -57,64 +55,13 @@ def test_minhash_lsh_matches_exact_jaccard_recall(docs):
     exact = {(r["id_a"], r["id_b"]) for r in
              ngram_jaccard_pairs(docs, "text", "doc_id", k=3, threshold=0.5).collect()}
     lsh = {(r["id_a"], r["id_b"]) for r in
-           minhash_lsh_pairs(docs, "text", "doc_id", num_hashes=32, bands=16,
-                             jaccard_threshold=0.5).collect()}
+           minhash_lsh_pairs_seeded(docs, "text", "doc_id", num_hashes=32, bands=16,
+                                    jaccard_threshold=0.5).collect()}
     # LSH verifies candidates with the exact jaccard, so it can only
     # miss pairs whose bands never collide; at 16 bands×2 rows and
     # j>=0.5 collision probability is ~0.99 per pair
     assert lsh == exact
     assert exact  # fixture actually contains qualifying pairs
-
-
-def test_minhash_signature_entries_differ_across_seeds(spark, docs):
-    """Regression: seeds must vary per hash (a two-arg lambda bug once
-    made all 32 signature entries identical)."""
-    from stockify_spark.llm.dedup import minhash_signature
-
-    sig = docs.filter(F.col("doc_id") == 0).select(
-        minhash_signature("text", num_hashes=8).alias("sig")
-    ).collect()[0]["sig"]
-    assert len(set(sig)) > 1
-
-
-def test_simhash_deterministic_and_discriminative(docs):
-    a = simhash(docs, "text").orderBy("doc_id").collect()
-    b = simhash(docs, "text").orderBy("doc_id").collect()
-    assert [r["simhash"] for r in a] == [r["simhash"] for r in b]
-    pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in
-             simhash_near_dup_pairs(docs, "text", "doc_id", max_hamming=10).collect()}
-    assert pairs[(0, 1)] == 0          # exact dups → identical signature
-    assert pairs[(0, 3)] <= 10         # near dup → small hamming
-    assert (0, 4) not in pairs         # unrelated text → far
-
-
-def test_simhash_vectorized_matches_scalar_reference():
-    """The numpy batch SimHash must be bit-exact with the per-token
-    scalar reference, across empty docs, repeats, ties, and chunking
-    boundaries."""
-    import pandas as pd
-
-    from stockify_spark.llm import dedup as d
-
-    texts = [
-        "",
-        "one",
-        "the quick brown fox jumps over the lazy dog",
-        "the the the repeated token token",
-        " ",
-        "MiXeD Case TOKENS mixed case tokens",
-        "a b c d e f g h i j " * 50,
-    ]
-    got = d._simhash_batch(pd.Series(texts)).tolist()
-    want = [d._simhash64(t) for t in texts]
-    assert got == want
-    # force the document-chunking path with a tiny token budget
-    orig = d._SIMHASH_CHUNK_TOKENS
-    d._SIMHASH_CHUNK_TOKENS = 4
-    try:
-        assert d._simhash_batch(pd.Series(texts)).tolist() == want
-    finally:
-        d._SIMHASH_CHUNK_TOKENS = orig
 
 
 def test_connected_components_handles_chains_and_cliques(spark):
@@ -134,18 +81,15 @@ def test_connected_components_handles_chains_and_cliques(spark):
                     30: 30, 31: 30, 32: 30}
 
 
-def test_cluster_detectors_agree_on_planted_dups(spark, docs):
-    """ngram (exact) and minhash (LSH) detectors must produce the
-    same clusters on the planted-duplicate fixture — LSH recall at
-    these jaccard levels is ~1."""
+def test_duplicate_clusters_groups_planted_dups(spark, docs):
+    """The exact dups 0-2 and the one-word near dup 3 form one
+    cluster under the smallest id; docs 4 and 5 have no near dup and
+    do not appear."""
     from stockify_spark.llm.dedup import duplicate_clusters
 
-    exact = {(r["doc_id"], r["component"]) for r in
-             duplicate_clusters(docs, "text", "doc_id", detector="ngram").collect()}
-    lsh = {(r["doc_id"], r["component"]) for r in
-           duplicate_clusters(docs, "text", "doc_id", detector="minhash").collect()}
-    assert exact == lsh
-    assert exact  # docs 0,1,2(,3) cluster
+    got = {r["doc_id"]: r["component"] for r in
+           duplicate_clusters(docs, "text", "doc_id").collect()}
+    assert got == {0: 0, 1: 0, 2: 0, 3: 0}
 
 
 def test_connected_components_long_chain_path_doubling(spark):
@@ -489,45 +433,28 @@ def test_jaccard_hot_shingle_correctness(spark):
     assert pairs == {(299, 1300)}
 
 
-def test_seeded_signature_hof_matches_chained_reference(spark):
-    """r15: simhash_near_dup_pairs_seeded assembles the 60-bit
-    signature with one higher-order aggregate instead of a 60-term
-    chained when-sum (the chained tree made Catalyst planning the
-    dominant cost). Pin the fold bit-for-bit against a Python
-    recomputation of the packed-field majority rule on real rows."""
+def _sig60(text: str) -> int:
+    """Python recomputation of the seeded SimHash signature: 60-bit
+    md5-prefix token hashes, bit set where more than half the tokens
+    (duplicates kept) have it."""
     import hashlib
+    from collections import Counter
 
-    from stockify_spark.llm.dedup import simhash_near_dup_pairs_seeded
-
-    texts = [
-        (0, BASE),
-        (1, NEAR),
-        (2, OTHER),
-        (3, "one"),
-        (4, "a b c d e f g h i j k l m n o p q r s t u v w x y z"),
-        (5, BASE),  # exact dup of 0: hamming 0, guarantees a pair
-    ]
-    df = spark.createDataFrame(texts, ["doc_id", "text"])
-
-    def md5_60(tok: str) -> int:
-        return int(hashlib.md5(tok.encode()).hexdigest()[:15], 16)
-
-    def sig60(text: str) -> int:
-        toks = text.strip().lower().split()
-        n = len(toks)
-        ones = [0] * 60
-        for t in toks:
-            h = md5_60(t)
-            for b in range(60):
-                ones[b] += (h >> b) & 1
-        out = 0
+    toks = Counter(text.strip().lower().split())
+    n = sum(toks.values())
+    ones = [0] * 60
+    for t, c in toks.items():
+        h = int(hashlib.md5(t.encode()).hexdigest()[:15], 16)
         for b in range(60):
-            if 2 * ones[b] > n:
-                out |= 1 << b
-        return out
+            ones[b] += c * ((h >> b) & 1)
+    return sum(1 << b for b in range(60) if 2 * ones[b] > n)
 
-    want = {i: sig60(t) for i, t in texts}
-    # reconstruct pairs the expected way: band agreement + hamming
+
+def _seeded_simhash_reference(texts, max_hamming: int) -> set:
+    """Pairs the expected way: agreement on one 15-bit band, then the
+    hamming bound."""
+    want = {i: _sig60(t) for i, t in texts}
+
     def bands(s):
         return {(c, (s >> (c * 15)) & 0x7FFF) for c in range(4)}
 
@@ -536,12 +463,48 @@ def test_seeded_signature_hof_matches_chained_reference(spark):
         for j, _ in texts:
             if i < j and bands(want[i]) & bands(want[j]):
                 d = bin(want[i] ^ want[j]).count("1")
-                if d <= 10:
+                if d <= max_hamming:
                     expected.add((i, j, d))
-    got = {
+    return expected
+
+
+def _seeded_simhash_pairs(spark, texts, max_hamming: int) -> set:
+    from stockify_spark.llm.dedup import simhash_near_dup_pairs_seeded
+
+    df = spark.createDataFrame(texts, "doc_id long, text string")
+    return {
         (r.id_a, r.id_b, r.hamming)
         for r in simhash_near_dup_pairs_seeded(
-            df, "text", "doc_id", max_hamming=10
+            df, "text", "doc_id", max_hamming=max_hamming
         ).collect()
     }
-    assert got == expected and len(expected) > 0
+
+
+def test_seeded_signature_hof_matches_chained_reference(spark):
+    """r15: simhash_near_dup_pairs_seeded assembles the 60-bit
+    signature with one higher-order aggregate instead of a 60-term
+    chained when-sum (the chained tree made Catalyst planning the
+    dominant cost). Pin the fold bit-for-bit against a Python
+    recomputation of the packed-field majority rule on real rows."""
+    texts = [
+        (0, BASE),
+        (1, NEAR),
+        (2, OTHER),
+        (3, "one"),
+        (4, "a b c d e f g h i j k l m n o p q r s t u v w x y z"),
+        (5, BASE),  # exact dup of 0: hamming 0, guarantees a pair
+    ]
+    expected = _seeded_simhash_reference(texts, 10)
+    assert _seeded_simhash_pairs(spark, texts, 10) == expected and len(expected) > 0
+
+
+def test_seeded_simhash_token_bound(spark):
+    """A 15-bit packed field counts at most 32,767 tokens. A document
+    at the bound still matches the Python reference; one token more
+    must raise, not overflow into the next field and lose the pair."""
+    at_bound = [(0, " ".join(["x"] * 32_767)), (1, "x")]
+    want = _seeded_simhash_reference(at_bound, 10)
+    assert _seeded_simhash_pairs(spark, at_bound, 10) == want == {(0, 1, 0)}
+    over = [(0, " ".join(["x"] * 32_768)), (1, "x")]
+    with pytest.raises(Exception, match="32767-token bound"):
+        _seeded_simhash_pairs(spark, over, 60)

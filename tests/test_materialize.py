@@ -30,10 +30,16 @@ def test_local_form_truncates_lineage_and_is_not_persisted(spark):
 
 
 def test_lazy_local_form_starts_no_job(spark):
+    """``eager=False`` starts no job on a frame without an exchange.
+    On a frame with one, AQE runs the exchange's map stage while the
+    checkpoint is built, so the lazy form is not free there."""
     eager = jobs_of(spark, lambda: materialize(_frame(spark)))
     lazy = jobs_of(spark, lambda: materialize(_frame(spark), eager=False))
     assert len(eager) >= 1  # the count can see the eager form's job
     assert lazy == []
+    exchange = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
+    lazy_exchange = jobs_of(spark, lambda: materialize(exchange, eager=False))
+    assert len(lazy_exchange) == 1
 
 
 def test_iterative_site_plan_does_not_grow_with_rounds(spark):

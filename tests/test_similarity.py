@@ -71,23 +71,6 @@ def test_ivf_assign_is_total_partition(emb):
     assert assigned.count() == emb.count()
 
 
-def test_blocked_dup_pairs_match_allpairs_baseline(spark):
-    """embedding_dup_pairs_blocked must return the exact same pair set
-    as the expression-based all-pairs baseline (it is a physical
-    rewrite, not an approximation)."""
-    from stockify_spark.llm.similarity import embedding_dup_pairs, embedding_dup_pairs_blocked
-    from stockify_spark.sources.io import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    exact = {(r["id_a"], r["id_b"]) for r in embedding_dup_pairs(emb, threshold=0.4).collect()}
-    blocked = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_dup_pairs_blocked(emb, threshold=0.4, n_blocks=4).collect()
-    }
-    assert blocked == exact
-    assert exact  # fixture contains qualifying pairs
-
-
 def test_bucketed_dup_pairs_subset_of_exact_with_recall_floor(spark):
     """The bucketed IVF near-dup path must emit NO false positives
     (every emitted pair passes the exact threshold) and keep recall
@@ -139,11 +122,11 @@ def test_quantized_topk_recall_vs_float(emb):
     """int8 quantized ranking must closely track float cosine ranking
     — recall@5 pinned on the fixture (isotropic, so this is a hard
     case: neighbors are separated by small margins)."""
-    from stockify_spark.llm.similarity import quantized_topk
+    from stockify_spark.llm.similarity import quantized_topk_batched
 
     queries = emb.filter(F.col("vec_id") < 10)
     exact = cosine_topk(emb, queries, k=5).collect()
-    quant = quantized_topk(emb, queries, k=5).collect()
+    quant = quantized_topk_batched(emb, queries, k=5).collect()
     exact_sets, quant_sets = {}, {}
     for r in exact:
         exact_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
