@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import struct
 
+from stockify_spark.llm.bits import malformed_input_guard
+
 STEP_TABLE = [
     7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
     41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
@@ -111,6 +113,7 @@ def encode_ima(samples: list[int]) -> bytes:
     return bytes(out)
 
 
+@malformed_input_guard("IMA ADPCM")
 def decode_ima(data: bytes) -> list[int]:
     """Inverse of encode_ima."""
     out: list[int] = []

@@ -43,6 +43,7 @@ import struct
 
 import numpy as np
 
+from stockify_spark.llm.bits import malformed_input_guard
 from stockify_spark.llm.jpeg import decode_jpeg, encode_jpeg
 
 _MJPEG_FOURCC = (b"MJPG", b"mjpg", b"dmb1")
@@ -144,19 +145,12 @@ def _walk_chunks(data: bytes, pos: int, end: int):
         pos = body + size + (size % 2)
 
 
+@malformed_input_guard("AVI")
 def _parse_avi(data: bytes) -> dict:
     """Single header pass: dims, fps, frame count, movi extent, and
     the '00dc' frame (offset, size) table — from idx1 when present,
     else a movi header-walk. No pixel decode either way. Malformed
-    input raises ValueError — never a raw struct/index error (the
-    fuzz contract shared by every parser in this package)."""
-    try:
-        return _parse_avi_unchecked(data)
-    except (struct.error, IndexError, KeyError, OverflowError) as exc:
-        raise ValueError(f"corrupt AVI: {exc!r}") from exc
-
-
-def _parse_avi_unchecked(data: bytes) -> dict:
+    input raises ValueError (the fuzz contract in llm/bits.py)."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise ValueError("not an AVI: bad RIFF/AVI magic")
     riff_size = struct.unpack_from("<I", data, 4)[0]

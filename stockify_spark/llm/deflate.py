@@ -1,14 +1,14 @@
-"""Pure-Python DEFLATE / zlib / gzip decoder — stdlib-free inflate.
+"""Pure-Python DEFLATE / gzip decoder — stdlib-free inflate.
 
-RFC 1951 (DEFLATE), RFC 1950 (zlib wrapper), RFC 1952 (gzip) from
-scratch: LSB-first bit stream, stored blocks, fixed AND dynamic
-Huffman blocks (canonical code construction per RFC 1951 §3.2.2, the
+RFC 1951 (DEFLATE) and RFC 1952 (gzip) from scratch: LSB-first bit
+stream (``llm/bits.py``), stored blocks, fixed AND dynamic Huffman
+blocks (canonical code construction per RFC 1951 §3.2.2, the
 code-length meta-alphabet with 16/17/18 run codes), full LZ77
-length/distance back-references, plus from-scratch Adler-32 and
-CRC-32 integrity checks for the two wrappers.
+length/distance back-references, plus a from-scratch CRC-32 check
+for the gzip wrapper.
 
 This is the one codec in the family with an INDEPENDENT reference
-implementation in the container: stdlib ``zlib``/``gzip`` act as the
+implementation in the container: stdlib ``gzip`` acts as the
 encoder, this module decodes, and the tests round-trip every
 compression level 0-9 (level 0 exercises stored blocks, low levels
 fixed-Huffman, high levels dynamic-Huffman) — a cross-implementation
@@ -16,7 +16,7 @@ differential no other media module can run locally. The encoder side
 is deliberately NOT reimplemented: compression strategy (lazy match
 selection, block splitting) is heuristic, unbounded design space,
 and stdlib zlib is universally available; decode is where corpus
-ingestion needs code (WARC/.gz shards, zlib-wrapped PNG IDAT).
+ingestion needs code (WARC/.gz shards).
 
 At 100 TB this is the ingest path for gzip'd text shards: gzip
 members are NOT splittable, so the unit of parallelism is the FILE
@@ -28,19 +28,11 @@ from __future__ import annotations
 
 import struct
 
+from stockify_spark.llm.bits import LsbReader, malformed_input_guard
+
 # ---------------------------------------------------------------------------
-# integrity checks (RFC 1950 Adler-32, RFC 1952 CRC-32) — from scratch
+# integrity check (RFC 1952 CRC-32) — from scratch
 # ---------------------------------------------------------------------------
-
-_ADLER_MOD = 65521
-
-
-def adler32(data: bytes) -> int:
-    a, b = 1, 0
-    for byte in data:
-        a = (a + byte) % _ADLER_MOD
-        b = (b + a) % _ADLER_MOD
-    return (b << 16) | a
 
 
 def _make_crc32_table() -> list[int]:
@@ -61,38 +53,6 @@ def crc32(data: bytes) -> int:
     for byte in data:
         c = _CRC32_TABLE[(c ^ byte) & 0xFF] ^ (c >> 8)
     return c ^ 0xFFFFFFFF
-
-
-# ---------------------------------------------------------------------------
-# LSB-first bit reader (DEFLATE packs bits opposite to FLAC/H.264)
-# ---------------------------------------------------------------------------
-
-
-class _LsbReader:
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self._data = data
-        self._pos = pos  # byte position
-        self._acc = 0
-        self._nbits = 0
-
-    def bits(self, n: int) -> int:
-        while self._nbits < n:
-            if self._pos >= len(self._data):
-                raise ValueError("truncated deflate stream")
-            self._acc |= self._data[self._pos] << self._nbits
-            self._pos += 1
-            self._nbits += 8
-        v = self._acc & ((1 << n) - 1)
-        self._acc >>= n
-        self._nbits -= n
-        return v
-
-    def align_byte(self) -> None:
-        self._acc = 0
-        self._nbits = 0
-
-    def byte_pos(self) -> int:
-        return self._pos - (self._nbits // 8)
 
 
 # ---------------------------------------------------------------------------
@@ -125,12 +85,12 @@ class _Huffman:
                 self._table[(next_code[ln], ln)] = sym
                 next_code[ln] += 1
 
-    def read(self, r: _LsbReader) -> int:
+    def read(self, r: LsbReader) -> int:
         """Huffman codes are packed MSB-of-code-first in the LSB
         stream: accumulate bit by bit."""
         code = 0
         for ln in range(1, self.max_len + 1):
-            code = (code << 1) | r.bits(1)
+            code = (code << 1) | r.read(1)
             sym = self._table.get((code, ln))
             if sym is not None:
                 return sym
@@ -163,13 +123,13 @@ _DIST_EXTRA = (
 _CLEN_ORDER = (16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1, 15)
 
 
-def _read_dynamic_tables(r: _LsbReader) -> tuple[_Huffman, _Huffman]:
-    hlit = r.bits(5) + 257
-    hdist = r.bits(5) + 1
-    hclen = r.bits(4) + 4
+def _read_dynamic_tables(r: LsbReader) -> tuple[_Huffman, _Huffman]:
+    hlit = r.read(5) + 257
+    hdist = r.read(5) + 1
+    hclen = r.read(4) + 4
     clen_lengths = [0] * 19
     for i in range(hclen):
-        clen_lengths[_CLEN_ORDER[i]] = r.bits(3)
+        clen_lengths[_CLEN_ORDER[i]] = r.read(3)
     clen = _Huffman(clen_lengths)
     lengths: list[int] = []
     while len(lengths) < hlit + hdist:
@@ -179,11 +139,11 @@ def _read_dynamic_tables(r: _LsbReader) -> tuple[_Huffman, _Huffman]:
         elif sym == 16:
             if not lengths:
                 raise ValueError("repeat with no previous code length")
-            lengths.extend([lengths[-1]] * (3 + r.bits(2)))
+            lengths.extend([lengths[-1]] * (3 + r.read(2)))
         elif sym == 17:
-            lengths.extend([0] * (3 + r.bits(3)))
+            lengths.extend([0] * (3 + r.read(3)))
         else:  # 18
-            lengths.extend([0] * (11 + r.bits(7)))
+            lengths.extend([0] * (11 + r.read(7)))
     if len(lengths) != hlit + hdist:
         raise ValueError("code-length run overflows the alphabets")
     return _Huffman(lengths[:hlit]), _Huffman(lengths[hlit:])
@@ -191,13 +151,13 @@ def _read_dynamic_tables(r: _LsbReader) -> tuple[_Huffman, _Huffman]:
 
 def inflate(data: bytes, pos: int = 0) -> tuple[bytes, int]:
     """Raw DEFLATE (RFC 1951). Returns (decompressed, end byte pos)."""
-    r = _LsbReader(data, pos)
+    r = LsbReader(data, pos)
     out = bytearray()
     while True:
-        bfinal = r.bits(1)
-        btype = r.bits(2)
+        bfinal = r.read(1)
+        btype = r.read(2)
         if btype == 0:  # stored
-            r.align_byte()
+            r.align()
             p = r.byte_pos()
             if p + 4 > len(data):
                 raise ValueError("truncated stored block header")
@@ -207,7 +167,7 @@ def inflate(data: bytes, pos: int = 0) -> tuple[bytes, int]:
             if p + 4 + length > len(data):
                 raise ValueError("truncated stored block")
             out += data[p + 4 : p + 4 + length]
-            r = _LsbReader(data, p + 4 + length)
+            r = LsbReader(data, p + 4 + length)
         elif btype in (1, 2):
             if btype == 1:
                 litlen, dist = _FIXED_LITLEN, _FIXED_DIST
@@ -223,11 +183,11 @@ def inflate(data: bytes, pos: int = 0) -> tuple[bytes, int]:
                     if sym > 285:
                         raise ValueError(f"invalid length symbol {sym}")
                     li = sym - 257
-                    length = _LEN_BASE[li] + r.bits(_LEN_EXTRA[li])
+                    length = _LEN_BASE[li] + r.read(_LEN_EXTRA[li])
                     dsym = dist.read(r)
                     if dsym > 29:
                         raise ValueError(f"invalid distance symbol {dsym}")
-                    d = _DIST_BASE[dsym] + r.bits(_DIST_EXTRA[dsym])
+                    d = _DIST_BASE[dsym] + r.read(_DIST_EXTRA[dsym])
                     if d > len(out):
                         raise ValueError("back-reference before stream start")
                     # overlapping copies are the RLE idiom (d < length)
@@ -238,27 +198,11 @@ def inflate(data: bytes, pos: int = 0) -> tuple[bytes, int]:
             raise ValueError("reserved BTYPE 3")
         if bfinal:
             break
+    r.align()
     return bytes(out), r.byte_pos()
 
 
-def zlib_decompress(data: bytes) -> bytes:
-    """RFC 1950 wrapper: header check + inflate + Adler-32 verify."""
-    if len(data) < 6:
-        raise ValueError("zlib stream too short")
-    cmf, flg = data[0], data[1]
-    if cmf & 0x0F != 8:
-        raise ValueError("zlib CM != deflate")
-    if (cmf << 8 | flg) % 31 != 0:
-        raise ValueError("zlib header check failed")
-    if flg & 0x20:
-        raise NotImplementedError("preset dictionary (FDICT) not supported")
-    out, end = inflate(data, 2)
-    (expect,) = struct.unpack_from(">I", data, end)
-    if adler32(out) != expect:
-        raise ValueError("Adler-32 mismatch")
-    return out
-
-
+@malformed_input_guard("gzip")
 def gunzip(data: bytes) -> bytes:
     """RFC 1952: multi-member gzip. Parses FEXTRA/FNAME/FCOMMENT/
     FHCRC, verifies CRC-32 and ISIZE per member."""

@@ -44,7 +44,10 @@ Arrow batch decodes independently and in parallel.
 from __future__ import annotations
 
 import hashlib
+import operator
 import struct
+
+from stockify_spark.llm.bits import MsbReader, MsbWriter, malformed_input_guard
 
 BLOCKSIZE = 4096
 MAX_FIXED_ORDER = 4
@@ -85,76 +88,23 @@ def crc16(data: bytes) -> int:
 
 
 # ---------------------------------------------------------------------------
-# bit IO (MSB first, as all FLAC fields are)
-# ---------------------------------------------------------------------------
-
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self._out = bytearray()
-        self._acc = 0
-        self._nbits = 0
-
-    def u(self, value: int, n: int) -> None:
-        self._acc = (self._acc << n) | (value & ((1 << n) - 1))
-        self._nbits += n
-        while self._nbits >= 8:
-            self._nbits -= 8
-            self._out.append((self._acc >> self._nbits) & 0xFF)
-        self._acc &= (1 << self._nbits) - 1
-
-    def unary(self, q: int) -> None:
-        """FLAC unary: q zero bits terminated by a one bit."""
-        while q >= 32:
-            self.u(0, 32)
-            q -= 32
-        self.u(1, q + 1)
-
-    def align(self) -> None:
-        if self._nbits:
-            self.u(0, 8 - self._nbits)
-
-    def bytes(self) -> bytes:
-        assert self._nbits == 0
-        return bytes(self._out)
-
-
-class _BitReader:
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self._data = data
-        self._bit = pos * 8
-
-    def u(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            byte = self._data[self._bit >> 3]
-            v = (v << 1) | ((byte >> (7 - (self._bit & 7))) & 1)
-            self._bit += 1
-        return v
-
-    def s(self, n: int) -> int:
-        v = self.u(n)
-        return v - (1 << n) if v & (1 << (n - 1)) else v
-
-    def unary(self) -> int:
-        q = 0
-        while self.u(1) == 0:
-            q += 1
-            if q > 1 << 24:
-                raise ValueError("runaway unary code")
-        return q
-
-    def align(self) -> None:
-        self._bit = (self._bit + 7) & ~7
-
-    def byte_pos(self) -> int:
-        assert self._bit % 8 == 0
-        return self._bit >> 3
-
-
-# ---------------------------------------------------------------------------
 # rice residual coding
 # ---------------------------------------------------------------------------
+
+
+def _write_unary(w: MsbWriter, q: int) -> None:
+    """FLAC unary: q zero bits terminated by a one bit."""
+    while q >= 32:
+        w.write(0, 32)
+        q -= 32
+    w.write(1, q + 1)
+
+
+def _read_unary(r: MsbReader) -> int:
+    q = 0
+    while r.read(1) == 0:
+        q += 1
+    return q
 
 
 def _zigzag(n: int) -> int:
@@ -200,7 +150,7 @@ def _partition_slices(
 
 
 def _write_residuals(
-    w: _BitWriter, residuals: list[int], blocksize: int, order: int
+    w: MsbWriter, residuals: list[int], blocksize: int, order: int
 ) -> None:
     """Partitioned Rice, coding method 00: the encoder tries partition
     orders 0-4 and keeps the cheapest — nonstationary blocks win with
@@ -217,32 +167,31 @@ def _write_residuals(
         if best is None or cost < best[2]:
             best = (porder, [k for k, _ in plan], cost, slices)
     porder, params, _, slices = best
-    w.u(0, 2)  # coding method: 4-bit rice
-    w.u(porder, 4)
+    w.write(0, 2)  # coding method: 4-bit rice
+    w.write(porder, 4)
     for (s, c), k in zip(slices, params):
-        w.u(k, 4)
+        w.write(k, 4)
         for rres in residuals[s : s + c]:
             u = _zigzag(rres)
-            w.unary(u >> k)
-            if k:
-                w.u(u & ((1 << k) - 1), k)
+            _write_unary(w, u >> k)
+            w.write(u & ((1 << k) - 1), k)
 
 
-def _read_residuals(r: _BitReader, blocksize: int, order: int) -> list[int]:
-    method = r.u(2)
+def _read_residuals(r: MsbReader, blocksize: int, order: int) -> list[int]:
+    method = r.read(2)
     if method != 0:
         raise NotImplementedError("5-bit rice escape not emitted by this encoder")
-    porder = r.u(4)
+    porder = r.read(4)
     slices = _partition_slices(blocksize, order, porder)
     if slices is None:
         raise ValueError(f"invalid partition order {porder} for block {blocksize}")
     out: list[int] = []
     for _, cnt in slices:
-        k = r.u(4)
+        k = r.read(4)
         if k == 15:
             raise NotImplementedError("verbatim rice escape not emitted")
         for _ in range(cnt):
-            u = (r.unary() << k) | (r.u(k) if k else 0)
+            u = (_read_unary(r) << k) | r.read(k)
             out.append(_unzigzag(u))
     return out
 
@@ -347,8 +296,8 @@ def _utf8_encode(n: int) -> bytes:
     raise ValueError("frame number too large")
 
 
-def _utf8_decode(r: _BitReader) -> int:
-    b0 = r.u(8)
+def _utf8_decode(r: MsbReader) -> int:
+    b0 = r.read(8)
     if b0 < 0x80:
         return b0
     nbytes = 0
@@ -359,7 +308,7 @@ def _utf8_decode(r: _BitReader) -> int:
             break
     v = b0 & ((1 << (7 - nbytes)) - 1)
     for _ in range(nbytes - 1):
-        b = r.u(8)
+        b = r.read(8)
         if b & 0xC0 != 0x80:
             raise ValueError("bad UTF-8 continuation in frame number")
         v = (v << 6) | (b & 0x3F)
@@ -386,16 +335,15 @@ def _subframe_cost(samples: list[int], depth: int) -> int:
     return 8 + (best or 0)
 
 
-def _write_subframe(w: _BitWriter, samples: list[int], depth: int) -> None:
+def _write_subframe(w: MsbWriter, samples: list[int], depth: int) -> None:
     """One channel's subframe: constant / fixed / LPC — cheapest
     estimated bit cost. ``depth`` is the channel bit depth (17 for a
     stereo side channel, else the frame depth)."""
     n = len(samples)
-    mask = (1 << depth) - 1
     if all(s == samples[0] for s in samples):
-        w.u(0b000000, 6)  # SUBFRAME_CONSTANT
-        w.u(0, 1)  # no wasted bits
-        w.u(samples[0] & mask, depth)
+        w.write(0b000000, 6)  # SUBFRAME_CONSTANT
+        w.write(0, 1)  # no wasted bits
+        w.write_signed(samples[0], depth)
         return
 
     def rice_cost(res: list[int]) -> int:
@@ -427,19 +375,19 @@ def _write_subframe(w: _BitWriter, samples: list[int], depth: int) -> None:
             best = (cost, "lpc", order, res, q, shift)
     _, kind, order, res, q, shift = best
     if kind == "fixed":
-        w.u(0b001000 | order, 6)  # SUBFRAME_FIXED
-        w.u(0, 1)  # no wasted bits
+        w.write(0b001000 | order, 6)  # SUBFRAME_FIXED
+        w.write(0, 1)  # no wasted bits
         for s in samples[:order]:  # warmup, channel bit depth
-            w.u(s & mask, depth)
+            w.write_signed(s, depth)
     else:
-        w.u(0b100000 | (order - 1), 6)  # SUBFRAME_LPC
-        w.u(0, 1)  # no wasted bits
+        w.write(0b100000 | (order - 1), 6)  # SUBFRAME_LPC
+        w.write(0, 1)  # no wasted bits
         for s in samples[:order]:
-            w.u(s & mask, depth)
-        w.u(precision - 1, 4)
-        w.u(shift, 5)  # non-negative; field is wide enough
+            w.write_signed(s, depth)
+        w.write(precision - 1, 4)
+        w.write(shift, 5)  # non-negative; field is wide enough
         for c in q:
-            w.u(c & ((1 << precision) - 1), precision)
+            w.write_signed(c, precision)
     _write_residuals(w, res, n, order)
 
 
@@ -476,34 +424,32 @@ def _encode_frame(
     else:
         ch_code = 0  # mono
         stored = [(channels[0], 16)]
-    w = _BitWriter()
-    w.u(0b11111111111110, 14)  # sync
-    w.u(0, 1)  # reserved
-    w.u(0, 1)  # fixed-blocksize strategy
+    w = MsbWriter()
+    w.write(0b11111111111110, 14)  # sync
+    w.write(0, 1)  # reserved
+    w.write(0, 1)  # fixed-blocksize strategy
     if n == 4096:
         bs_code, bs_tail = 0b1100, None
     else:
         bs_code, bs_tail = 0b0111, n - 1  # 16-bit blocksize-1 follows
-    w.u(bs_code, 4)
-    w.u(0, 4)  # sample rate: from STREAMINFO
-    w.u(ch_code, 4)
-    w.u(0b100, 3)  # 16-bit samples
-    w.u(0, 1)  # reserved
+    w.write(bs_code, 4)
+    w.write(0, 4)  # sample rate: from STREAMINFO
+    w.write(ch_code, 4)
+    w.write(0b100, 3)  # 16-bit samples
+    w.write(0, 1)  # reserved
     for b in _utf8_encode(frame_no):
-        w.u(b, 8)
+        w.write(b, 8)
     if bs_tail is not None:
-        w.u(bs_tail, 16)
-    w.align()
-    header = w.bytes()
-    w = _BitWriter()
+        w.write(bs_tail, 16)
+    header = w.flush()
+    w = MsbWriter()
     for b in header:
-        w.u(b, 8)
-    w.u(crc8(header), 8)
+        w.write(b, 8)
+    w.write(crc8(header), 8)
     for ch, depth in stored:
-        w.u(0, 1)  # zero padding bit
+        w.write(0, 1)  # zero padding bit
         _write_subframe(w, ch, depth)
-    w.align()
-    body = w.bytes()
+    body = w.flush()
     return body + struct.pack(">H", crc16(body))
 
 
@@ -513,16 +459,16 @@ def encode_flac(samples, sample_rate: int = 16000) -> bytes:
     two equal-length channel lists for stereo (per-frame the encoder
     picks independent / left-side / right-side / mid-side, whichever
     decorrelation costs least)."""
-    if (
+    stereo = (
         isinstance(samples, (tuple, list))
         and len(samples) == 2
         and isinstance(samples[0], list)
-    ):
-        chans = [samples[0], samples[1]]
-        if len(chans[0]) != len(chans[1]):
-            raise ValueError("stereo channels must be equal length")
-    else:
-        chans = [list(samples)]
+    )
+    # Python ints: numpy int16 elements would overflow in the LPC
+    # autocorrelation (still lossless, but a worse predictor)
+    chans = [[operator.index(s) for s in ch] for ch in (samples if stereo else [samples])]
+    if stereo and len(chans[0]) != len(chans[1]):
+        raise ValueError("stereo channels must be equal length")
     for ch in chans:
         if any(not -32768 <= s <= 32767 for s in ch):
             raise ValueError("16-bit sample range exceeded")
@@ -537,16 +483,16 @@ def encode_flac(samples, sample_rate: int = 16000) -> bytes:
         for ch in chans:
             interleaved += struct.pack("<h", ch[i])
     md5 = hashlib.md5(bytes(interleaved)).digest()
-    w = _BitWriter()
-    w.u(BLOCKSIZE, 16)  # min blocksize
-    w.u(BLOCKSIZE, 16)  # max blocksize
-    w.u(0, 24)  # min frame size unknown
-    w.u(0, 24)  # max frame size unknown
-    w.u(sample_rate, 20)
-    w.u(len(chans) - 1, 3)  # channels - 1
-    w.u(15, 5)  # bits per sample - 1
-    w.u(n_samples, 36)
-    info = w.bytes() + md5
+    w = MsbWriter()
+    w.write(BLOCKSIZE, 16)  # min blocksize
+    w.write(BLOCKSIZE, 16)  # max blocksize
+    w.write(0, 24)  # min frame size unknown
+    w.write(0, 24)  # max frame size unknown
+    w.write(sample_rate, 20)
+    w.write(len(chans) - 1, 3)  # channels - 1
+    w.write(15, 5)  # bits per sample - 1
+    w.write(n_samples, 36)
+    info = w.flush() + md5
     header = b"fLaC" + bytes([0x80, 0, 0, len(info)]) + info  # last-block flag
     return header + bytes(frames)
 
@@ -562,6 +508,7 @@ _BLOCKSIZE_TABLE = {
 }
 
 
+@malformed_input_guard("FLAC")
 def parse_streaminfo(data: bytes) -> dict:
     """STREAMINFO walk — the 34-byte filter-before-decode router."""
     if data[:4] != b"fLaC":
@@ -572,13 +519,13 @@ def parse_streaminfo(data: bytes) -> dict:
         btype = data[pos]
         length = int.from_bytes(data[pos + 1 : pos + 4], "big")
         if btype & 0x7F == 0:
-            r = _BitReader(data, pos + 4)
-            r.u(16), r.u(24), r.u(24)  # min bs / frame sizes
-            _maxbs = r.u(16)
-            rate = r.u(20)
-            channels = r.u(3) + 1
-            bits = r.u(5) + 1
-            total = r.u(36)
+            r = MsbReader(data, pos + 4)
+            r.read(16), r.read(24), r.read(24)  # min bs / frame sizes
+            _maxbs = r.read(16)
+            rate = r.read(20)
+            channels = r.read(3) + 1
+            bits = r.read(5) + 1
+            total = r.read(36)
             info = {
                 "sample_rate": rate,
                 "channels": channels,
@@ -595,32 +542,32 @@ def parse_streaminfo(data: bytes) -> dict:
     return info
 
 
-def _read_subframe(r: _BitReader, n: int, depth: int) -> list[int]:
+def _read_subframe(r: MsbReader, n: int, depth: int) -> list[int]:
     """One channel's subframe at the given bit depth (17 for a
     stereo side channel)."""
-    if r.u(1):
+    if r.read(1):
         raise ValueError("subframe padding bit set")
-    stype = r.u(6)
-    if r.u(1):
+    stype = r.read(6)
+    if r.read(1):
         raise NotImplementedError("wasted bits not emitted by this encoder")
     if stype == 0:  # constant
-        return [r.s(depth)] * n
+        return [r.read_signed(depth)] * n
     if stype == 1:  # verbatim
-        return [r.s(depth) for _ in range(n)]
+        return [r.read_signed(depth) for _ in range(n)]
     if 0b001000 <= stype <= 0b001100:  # fixed order 0-4
         order = stype & 0x07
-        warmup = [r.s(depth) for _ in range(order)]
+        warmup = [r.read_signed(depth) for _ in range(order)]
         return _reintegrate(_read_residuals(r, n, order), warmup, order)
     if stype >= 0b100000:  # LPC order 1-32
         order = (stype & 0x1F) + 1
-        warmup = [r.s(depth) for _ in range(order)]
-        precision = r.u(4) + 1
+        warmup = [r.read_signed(depth) for _ in range(order)]
+        precision = r.read(4) + 1
         if precision == 16:
             raise ValueError("invalid qlp precision escape")
-        shift = r.s(5)
+        shift = r.read_signed(5)
         if shift < 0:
             raise ValueError("negative qlp shift")
-        q = [r.s(precision) for _ in range(order)]
+        q = [r.read_signed(precision) for _ in range(order)]
         res = _read_residuals(r, n, order)
         block = list(warmup)
         for i in range(order, n):
@@ -630,6 +577,7 @@ def _read_subframe(r: _BitReader, n: int, depth: int) -> list[int]:
     raise ValueError(f"reserved subframe type {stype:#08b}")
 
 
+@malformed_input_guard("FLAC")
 def decode_flac(data: bytes, verify: bool = True):
     """Full sample reconstruction; returns (samples, sample_rate) —
     ``samples`` is a flat list for mono, a (left, right) tuple of
@@ -643,32 +591,32 @@ def decode_flac(data: bytes, verify: bool = True):
     chans: list[list[int]] = [[] for _ in range(n_chan)]
     pos = info["frames_at"]
     while len(chans[0]) < info["total_samples"]:
-        r = _BitReader(data, pos)
-        if r.u(14) != 0b11111111111110:
+        r = MsbReader(data, pos)
+        if r.read(14) != 0b11111111111110:
             raise ValueError("lost frame sync")
-        r.u(1)
-        r.u(1)  # reserved + blocking strategy
-        bs_code = r.u(4)
-        sr_code = r.u(4)
-        chan = r.u(4)
-        ssize = r.u(3)
-        r.u(1)
+        r.read(1)
+        r.read(1)  # reserved + blocking strategy
+        bs_code = r.read(4)
+        sr_code = r.read(4)
+        chan = r.read(4)
+        ssize = r.read(3)
+        r.read(1)
         if ssize != 0b100:
             raise NotImplementedError("decoder subset: 16-bit frames")
         _frame_no = _utf8_decode(r)
         if bs_code == 0b0110:
-            n = r.u(8) + 1
+            n = r.read(8) + 1
         elif bs_code == 0b0111:
-            n = r.u(16) + 1
+            n = r.read(16) + 1
         else:
             n = _BLOCKSIZE_TABLE[bs_code]
         if sr_code not in (0, *range(1, 12)):
-            r.u(8 if sr_code == 12 else 16)  # explicit rate field, unused
+            r.read(8 if sr_code == 12 else 16)  # explicit rate field, unused
         r.align()
         header_end = r.byte_pos()
         if verify and crc8(data[pos:header_end]) != data[header_end]:
             raise ValueError("frame header CRC-8 mismatch")
-        r.u(8)  # the CRC-8 byte itself
+        r.read(8)  # the CRC-8 byte itself
         if chan == 0:  # mono
             if n_chan != 1:
                 raise ValueError("mono frame in a stereo stream")

@@ -6,7 +6,7 @@ variable-width, table-growing dictionary coder. This module
 implements it both directions with the giflib width convention
 (code width bumps when the next-to-assign code reaches 2^width;
 encoder emits a Clear and resets when the table would pass 4096),
-LSB-first bit packing, 255-byte sub-block framing, multi-frame
+LSB-first bit packing (llm/bits.py), 255-byte sub-block framing, multi-frame
 streams with Graphic Control Extensions, and a 256-entry grayscale
 global color table.
 
@@ -20,53 +20,9 @@ from __future__ import annotations
 
 import struct
 
+from stockify_spark.llm.bits import LsbReader, LsbWriter, malformed_input_guard
+
 _MAX_CODE = 4096  # GIF caps LZW codes at 12 bits
-
-
-class _BitWriter:
-    """LSB-first bit packer (GIF's LZW byte order)."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self._acc = 0
-        self._nbits = 0
-
-    def write(self, code: int, width: int) -> None:
-        self._acc |= code << self._nbits
-        self._nbits += width
-        while self._nbits >= 8:
-            self.out.append(self._acc & 0xFF)
-            self._acc >>= 8
-            self._nbits -= 8
-
-    def flush(self) -> bytes:
-        if self._nbits:
-            self.out.append(self._acc & 0xFF)
-            self._acc = 0
-            self._nbits = 0
-        return bytes(self.out)
-
-
-class _BitReader:
-    """LSB-first bit reader matching _BitWriter."""
-
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self._pos = 0
-        self._acc = 0
-        self._nbits = 0
-
-    def read(self, width: int) -> int:
-        while self._nbits < width:
-            if self._pos >= len(self.data):
-                raise ValueError("LZW bitstream truncated")
-            self._acc |= self.data[self._pos] << self._nbits
-            self._pos += 1
-            self._nbits += 8
-        v = self._acc & ((1 << width) - 1)
-        self._acc >>= width
-        self._nbits -= width
-        return v
 
 
 def lzw_encode(data: bytes, min_code_size: int) -> bytes:
@@ -74,7 +30,7 @@ def lzw_encode(data: bytes, min_code_size: int) -> bytes:
     Clear emitted first and whenever the table would exceed 4096."""
     clear = 1 << min_code_size
     eoi = clear + 1
-    w = _BitWriter()
+    w = LsbWriter()
 
     def reset():
         return {bytes([i]): i for i in range(clear)}, eoi + 1, min_code_size + 1
@@ -117,7 +73,7 @@ def lzw_decode(data: bytes, min_code_size: int, n_expected: int) -> bytes:
     have been produced (some writers omit a final EOI)."""
     clear = 1 << min_code_size
     eoi = clear + 1
-    r = _BitReader(data)
+    r = LsbReader(data)
     out = bytearray()
 
     table: dict[int, bytes] = {}
@@ -209,6 +165,7 @@ def encode_gif(
     return bytes(out)
 
 
+@malformed_input_guard("GIF")
 def decode_gif(data: bytes) -> dict:
     """Decode a GIF (87a or 89a). Returns {width, height, frames:
     [bytes], delays_cs: [int]} with frames as 8-bit grayscale (the

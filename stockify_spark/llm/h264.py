@@ -33,72 +33,47 @@ O(parameter sets + start codes) of each file, never slice payload.
 
 from __future__ import annotations
 
+from stockify_spark.llm.bits import MsbReader, MsbWriter, malformed_input_guard
+
 NAL_NON_IDR = 1
 NAL_IDR = 5
 NAL_SPS = 7
 NAL_PPS = 8
 
 # ---------------------------------------------------------------------------
-# bit-level plumbing
+# Exp-Golomb codes and RBSP trailing bits over the MSB-first bit I/O
+# of llm/bits.py
 # ---------------------------------------------------------------------------
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self._bits: list[int] = []
-
-    def u(self, value: int, n: int) -> None:
-        """Fixed-width unsigned, MSB first."""
-        for i in range(n - 1, -1, -1):
-            self._bits.append((value >> i) & 1)
-
-    def ue(self, value: int) -> None:
-        """Unsigned Exp-Golomb: leadingZeroBits zeros, 1, then the
-        (value+1) payload without its MSB."""
-        code = value + 1
-        n = code.bit_length()
-        self.u(0, n - 1)
-        self.u(code, n)
-
-    def rbsp_trailing_bits(self) -> bytes:
-        """Stop bit + zero padding to a byte boundary; returns the
-        finished RBSP."""
-        self._bits.append(1)
-        while len(self._bits) % 8:
-            self._bits.append(0)
-        out = bytearray()
-        for i in range(0, len(self._bits), 8):
-            byte = 0
-            for b in self._bits[i : i + 8]:
-                byte = (byte << 1) | b
-            out.append(byte)
-        return bytes(out)
+def _write_ue(w: MsbWriter, value: int) -> None:
+    """Unsigned Exp-Golomb: leadingZeroBits zeros, 1, then the
+    (value+1) payload without its MSB."""
+    code = value + 1
+    n = code.bit_length()
+    w.write(0, n - 1)
+    w.write(code, n)
 
 
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self._data = data
-        self._pos = 0  # bit position
+def _rbsp_trailing_bits(w: MsbWriter) -> bytes:
+    """Stop bit + zero padding to a byte boundary; returns the
+    finished RBSP."""
+    w.write(1, 1)
+    return w.flush()
 
-    def u(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            byte = self._data[self._pos >> 3]
-            v = (v << 1) | ((byte >> (7 - (self._pos & 7))) & 1)
-            self._pos += 1
-        return v
 
-    def ue(self) -> int:
-        zeros = 0
-        while self.u(1) == 0:
-            zeros += 1
-            if zeros > 31:
-                raise ValueError("malformed Exp-Golomb code")
-        return (1 << zeros) - 1 + (self.u(zeros) if zeros else 0)
+def _read_ue(r: MsbReader) -> int:
+    zeros = 0
+    while r.read(1) == 0:
+        zeros += 1
+        if zeros > 31:
+            raise ValueError("malformed Exp-Golomb code")
+    return (1 << zeros) - 1 + r.read(zeros)
 
-    def se(self) -> int:
-        k = self.ue()
-        return (k + 1) // 2 if k % 2 else -(k // 2)
+
+def _read_se(r: MsbReader) -> int:
+    k = _read_ue(r)
+    return (k + 1) // 2 if k % 2 else -(k // 2)
 
 
 def rbsp_to_ebsp(rbsp: bytes) -> bytes:
@@ -152,48 +127,48 @@ def _sps_rbsp(width: int, height: int, profile_idc: int, level_idc: int) -> byte
     mbs_h = (height + 15) // 16
     crop_r = (mbs_w * 16 - width) // 2  # CropUnitX = 2 (4:2:0)
     crop_b = (mbs_h * 16 - height) // 2  # CropUnitY = 2 (frame_mbs_only)
-    w = _BitWriter()
-    w.u(profile_idc, 8)
-    w.u(0, 8)  # constraint flags + reserved
-    w.u(level_idc, 8)
-    w.ue(0)  # seq_parameter_set_id
-    w.ue(0)  # log2_max_frame_num_minus4
-    w.ue(0)  # pic_order_cnt_type
-    w.ue(0)  # log2_max_pic_order_cnt_lsb_minus4
-    w.ue(1)  # max_num_ref_frames
-    w.u(0, 1)  # gaps_in_frame_num_value_allowed_flag
-    w.ue(mbs_w - 1)  # pic_width_in_mbs_minus1
-    w.ue(mbs_h - 1)  # pic_height_in_map_units_minus1
-    w.u(1, 1)  # frame_mbs_only_flag
-    w.u(0, 1)  # direct_8x8_inference_flag
+    w = MsbWriter()
+    w.write(profile_idc, 8)
+    w.write(0, 8)  # constraint flags + reserved
+    w.write(level_idc, 8)
+    _write_ue(w, 0)  # seq_parameter_set_id
+    _write_ue(w, 0)  # log2_max_frame_num_minus4
+    _write_ue(w, 0)  # pic_order_cnt_type
+    _write_ue(w, 0)  # log2_max_pic_order_cnt_lsb_minus4
+    _write_ue(w, 1)  # max_num_ref_frames
+    w.write(0, 1)  # gaps_in_frame_num_value_allowed_flag
+    _write_ue(w, mbs_w - 1)  # pic_width_in_mbs_minus1
+    _write_ue(w, mbs_h - 1)  # pic_height_in_map_units_minus1
+    w.write(1, 1)  # frame_mbs_only_flag
+    w.write(0, 1)  # direct_8x8_inference_flag
     if crop_r or crop_b:
-        w.u(1, 1)  # frame_cropping_flag
-        w.ue(0)  # left
-        w.ue(crop_r)  # right
-        w.ue(0)  # top
-        w.ue(crop_b)  # bottom
+        w.write(1, 1)  # frame_cropping_flag
+        _write_ue(w, 0)  # left
+        _write_ue(w, crop_r)  # right
+        _write_ue(w, 0)  # top
+        _write_ue(w, crop_b)  # bottom
     else:
-        w.u(0, 1)
-    w.u(0, 1)  # vui_parameters_present_flag
-    return w.rbsp_trailing_bits()
+        w.write(0, 1)
+    w.write(0, 1)  # vui_parameters_present_flag
+    return _rbsp_trailing_bits(w)
 
 
 def _pps_rbsp() -> bytes:
-    w = _BitWriter()
-    w.ue(0)  # pic_parameter_set_id
-    w.ue(0)  # seq_parameter_set_id
-    w.u(0, 1)  # entropy_coding_mode_flag (CAVLC)
-    w.u(0, 1)  # bottom_field_pic_order_in_frame_present_flag
-    w.ue(0)  # num_slice_groups_minus1
-    w.ue(0)  # num_ref_idx_l0_default_active_minus1
-    w.ue(0)  # num_ref_idx_l1_default_active_minus1
-    w.u(0, 1)  # weighted_pred_flag
-    w.u(0, 2)  # weighted_bipred_idc
-    w.ue(0)  # pic_init_qp_minus26 (ue of se(0))
-    w.ue(0)  # pic_init_qs_minus26
-    w.ue(0)  # chroma_qp_index_offset
-    w.u(0, 3)  # deblocking/constrained-intra/redundant-pic flags
-    return w.rbsp_trailing_bits()
+    w = MsbWriter()
+    _write_ue(w, 0)  # pic_parameter_set_id
+    _write_ue(w, 0)  # seq_parameter_set_id
+    w.write(0, 1)  # entropy_coding_mode_flag (CAVLC)
+    w.write(0, 1)  # bottom_field_pic_order_in_frame_present_flag
+    _write_ue(w, 0)  # num_slice_groups_minus1
+    _write_ue(w, 0)  # num_ref_idx_l0_default_active_minus1
+    _write_ue(w, 0)  # num_ref_idx_l1_default_active_minus1
+    w.write(0, 1)  # weighted_pred_flag
+    w.write(0, 2)  # weighted_bipred_idc
+    _write_ue(w, 0)  # pic_init_qp_minus26 (ue of se(0))
+    _write_ue(w, 0)  # pic_init_qs_minus26
+    _write_ue(w, 0)  # chroma_qp_index_offset
+    w.write(0, 3)  # deblocking/constrained-intra/redundant-pic flags
+    return _rbsp_trailing_bits(w)
 
 
 def _nal(nal_type: int, rbsp: bytes, long_start: bool) -> bytes:
@@ -266,32 +241,32 @@ def _split_nals(data: bytes) -> list[bytes]:
 def parse_sps(rbsp: bytes) -> dict:
     """Recover profile/level and the exact cropped pixel dimensions
     from an SPS RBSP (emulation prevention already stripped)."""
-    r = _BitReader(rbsp)
-    profile_idc = r.u(8)
-    r.u(8)  # constraint flags
-    level_idc = r.u(8)
-    r.ue()  # seq_parameter_set_id
+    r = MsbReader(rbsp)
+    profile_idc = r.read(8)
+    r.read(8)  # constraint flags
+    level_idc = r.read(8)
+    _read_ue(r)  # seq_parameter_set_id
     if profile_idc >= 100:
         raise NotImplementedError(
             "high-profile SPS (chroma_format_idc et al.) not supported"
         )
-    r.ue()  # log2_max_frame_num_minus4
-    poc_type = r.ue()
+    _read_ue(r)  # log2_max_frame_num_minus4
+    poc_type = _read_ue(r)
     if poc_type == 0:
-        r.ue()  # log2_max_pic_order_cnt_lsb_minus4
+        _read_ue(r)  # log2_max_pic_order_cnt_lsb_minus4
     elif poc_type == 1:
         raise NotImplementedError("pic_order_cnt_type=1 SPS not supported")
-    r.ue()  # max_num_ref_frames
-    r.u(1)  # gaps_in_frame_num_value_allowed_flag
-    mbs_w = r.ue() + 1
-    map_units_h = r.ue() + 1
-    frame_mbs_only = r.u(1)
+    _read_ue(r)  # max_num_ref_frames
+    r.read(1)  # gaps_in_frame_num_value_allowed_flag
+    mbs_w = _read_ue(r) + 1
+    map_units_h = _read_ue(r) + 1
+    frame_mbs_only = r.read(1)
     if not frame_mbs_only:
-        r.u(1)  # mb_adaptive_frame_field_flag
-    r.u(1)  # direct_8x8_inference_flag
+        r.read(1)  # mb_adaptive_frame_field_flag
+    r.read(1)  # direct_8x8_inference_flag
     crop_l = crop_r = crop_t = crop_b = 0
-    if r.u(1):  # frame_cropping_flag
-        crop_l, crop_r, crop_t, crop_b = r.ue(), r.ue(), r.ue(), r.ue()
+    if r.read(1):  # frame_cropping_flag
+        crop_l, crop_r, crop_t, crop_b = _read_ue(r), _read_ue(r), _read_ue(r), _read_ue(r)
     frame_h_mbs = (2 - frame_mbs_only) * map_units_h
     # 4:2:0 crop units: X=2, Y=2*(2-frame_mbs_only)
     unit_y = 2 * (2 - frame_mbs_only)
@@ -303,6 +278,7 @@ def parse_sps(rbsp: bytes) -> dict:
     }
 
 
+@malformed_input_guard("H.264")
 def h264_probe(data: bytes) -> dict:
     """One O(start codes + SPS bits) pass: NAL census + stream
     geometry. Raises ValueError on a stream with no valid SPS."""
@@ -356,31 +332,30 @@ def _idr_ipcm_slice_rbsp(
     """IDR I-slice whose every macroblock is I_PCM. Deterministic
     sample pattern: luma(x, y) = luma_base + x + 2*y (caller keeps it
     under 256), constant chroma planes."""
-    w = _BitWriter()
-    w.ue(0)  # first_mb_in_slice
-    w.ue(7)  # slice_type: I (all slices in picture)
-    w.ue(0)  # pic_parameter_set_id
-    w.u(0, 4)  # frame_num (log2_max_frame_num = 4)
-    w.ue(0)  # idr_pic_id
-    w.u(0, 4)  # pic_order_cnt_lsb (log2 = 4)
-    w.u(0, 1)  # no_output_of_prior_pics_flag
-    w.u(0, 1)  # long_term_reference_flag
+    w = MsbWriter()
+    _write_ue(w, 0)  # first_mb_in_slice
+    _write_ue(w, 7)  # slice_type: I (all slices in picture)
+    _write_ue(w, 0)  # pic_parameter_set_id
+    w.write(0, 4)  # frame_num (log2_max_frame_num = 4)
+    _write_ue(w, 0)  # idr_pic_id
+    w.write(0, 4)  # pic_order_cnt_lsb (log2 = 4)
+    w.write(0, 1)  # no_output_of_prior_pics_flag
+    w.write(0, 1)  # long_term_reference_flag
     # se(slice_qp_delta) = 0 encodes as ue(0)
-    w.ue(0)
+    _write_ue(w, 0)
     width = mbs_w * 16
     for mb in range(mbs_w * mbs_h):
         mb_x, mb_y = (mb % mbs_w) * 16, (mb // mbs_w) * 16
-        w.ue(_MB_TYPE_I_PCM)
-        while len(w._bits) % 8:  # pcm_alignment_zero_bit
-            w.u(0, 1)
+        _write_ue(w, _MB_TYPE_I_PCM)
+        w.align()  # pcm_alignment_zero_bit
         for y in range(16):
             for x in range(16):
-                w.u((luma_base + (mb_x + x) + 2 * (mb_y + y)) & 0xFF, 8)
+                w.write((luma_base + (mb_x + x) + 2 * (mb_y + y)) & 0xFF, 8)
         for _ in range(64):
-            w.u(cb & 0xFF, 8)
+            w.write(cb & 0xFF, 8)
         for _ in range(64):
-            w.u(cr & 0xFF, 8)
-    return w.rbsp_trailing_bits()
+            w.write(cr & 0xFF, 8)
+    return _rbsp_trailing_bits(w)
 
 
 def encode_h264_ipcm(
@@ -400,6 +375,7 @@ def encode_h264_ipcm(
     return bytes(out)
 
 
+@malformed_input_guard("H.264")
 def decode_h264_ipcm(data: bytes) -> dict:
     """Decode an all-I_PCM Annex-B stream: SPS geometry, PPS sanity,
     slice-header Exp-Golomb parse, then the macroblock loop reading
@@ -423,42 +399,46 @@ def decode_h264_ipcm(data: bytes) -> dict:
                 raise ValueError("IDR before SPS/PPS")
             mbs_w = (sps["width"] + 15) // 16
             mbs_h = (sps["height"] + 15) // 16
-            r = _BitReader(rbsp)
-            if r.ue() != 0:
+            # each I_PCM macroblock carries 384 sample bytes: a slice
+            # too short for the SPS geometry is corrupt, and checking
+            # first keeps a damaged SPS from sizing the luma buffer
+            if len(rbsp) < 384 * mbs_w * mbs_h:
+                raise ValueError("IDR slice shorter than its I_PCM macroblocks")
+            r = MsbReader(rbsp)
+            if _read_ue(r) != 0:
                 raise NotImplementedError("multi-slice pictures not supported")
-            slice_type = r.ue()
+            slice_type = _read_ue(r)
             if slice_type % 5 != 2:
                 raise NotImplementedError("only I slices are decodable")
-            r.ue()  # pic_parameter_set_id
-            r.u(4)  # frame_num
-            r.ue()  # idr_pic_id
-            r.u(4)  # pic_order_cnt_lsb
-            r.u(1)  # no_output_of_prior_pics_flag
-            r.u(1)  # long_term_reference_flag
-            r.se()  # slice_qp_delta
+            _read_ue(r)  # pic_parameter_set_id
+            r.read(4)  # frame_num
+            _read_ue(r)  # idr_pic_id
+            r.read(4)  # pic_order_cnt_lsb
+            r.read(1)  # no_output_of_prior_pics_flag
+            r.read(1)  # long_term_reference_flag
+            _read_se(r)  # slice_qp_delta
             luma = bytearray(mbs_w * 16 * mbs_h * 16)
             cbs: list[int] = []
             crs: list[int] = []
             for mb in range(mbs_w * mbs_h):
-                mb_type = r.ue()
+                mb_type = _read_ue(r)
                 if mb_type != _MB_TYPE_I_PCM:
                     raise NotImplementedError(
                         "coded (non-I_PCM) macroblocks need CAVLC + intra "
                         "prediction — the honest decode_h264 boundary"
                     )
-                while r._pos % 8:  # pcm_alignment_zero_bit
-                    r.u(1)
+                r.align()  # pcm_alignment_zero_bit
                 mb_x, mb_y = (mb % mbs_w) * 16, (mb // mbs_w) * 16
                 for y in range(16):
                     row = (mb_y + y) * mbs_w * 16 + mb_x
                     for x in range(16):
-                        luma[row + x] = r.u(8)
-                cbs.append(r.u(8))
+                        luma[row + x] = r.read(8)
+                cbs.append(r.read(8))
                 for _ in range(63):
-                    r.u(8)
-                crs.append(r.u(8))
+                    r.read(8)
+                crs.append(r.read(8))
                 for _ in range(63):
-                    r.u(8)
+                    r.read(8)
             frame = {
                 "width": sps["width"],
                 "height": sps["height"],

@@ -30,9 +30,9 @@ production deployment would swap in a native decoder behind the same
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
+
+from stockify_spark.llm.bits import MsbReader, MsbWriter, malformed_input_guard
 
 # --- Annex K tables (ITU T.81) -------------------------------------------
 
@@ -179,58 +179,29 @@ def _build_decoder(bits: list[int], values: list[int]) -> dict[tuple[int, int], 
     return table
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
+# --- entropy-coded segments: MSB-first bits (llm/bits.py) with 0xFF
+# byte stuffing and 1-padding
 
-    def write(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            byte = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:  # byte stuffing
-                self.out.append(0x00)
-            self.nbits -= 8
-        self.acc &= (1 << self.nbits) - 1
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)  # pad with 1s per spec
-        return bytes(self.out)
+def _scan_bytes(writer: MsbWriter) -> bytes:
+    """Finish one entropy-coded segment: pad with 1 bits to a byte
+    boundary, then stuff a 0x00 after every 0xFF byte."""
+    pad = -writer.tell() % 8
+    writer.write((1 << pad) - 1, pad)
+    return writer.flush().replace(b"\xff", b"\xff\x00")
 
 
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        # un-stuff 0xFF00 -> 0xFF
-        self.data = data.replace(b"\xff\x00", b"\xff")
-        self.pos = 0  # bit position
+def _scan_reader(segment: bytes) -> MsbReader:
+    """Bit reader over one entropy-coded segment, 0xFF00 un-stuffed."""
+    return MsbReader(segment.replace(b"\xff\x00", b"\xff"))
 
-    def read_bit(self) -> int:
-        try:
-            byte = self.data[self.pos >> 3]
-        except IndexError:
-            raise ValueError("corrupt JPEG: truncated scan") from None
-        bit = (byte >> (7 - (self.pos & 7))) & 1
-        self.pos += 1
-        return bit
 
-    def read_bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def read_code(self, table: dict[tuple[int, int], int]) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.read_bit()
-            if (length, code) in table:
-                return table[(length, code)]
-        raise ValueError("corrupt JPEG: invalid Huffman code")
+def _read_code(reader: MsbReader, table: dict[tuple[int, int], int]) -> int:
+    code = 0
+    for length in range(1, 17):
+        code = (code << 1) | reader.read(1)
+        if (length, code) in table:
+            return table[(length, code)]
+    raise ValueError("corrupt JPEG: invalid Huffman code")
 
 
 def _magnitude(v: int) -> tuple[int, int]:
@@ -272,7 +243,7 @@ def _quantize_plane(plane: np.ndarray, qtable: np.ndarray) -> tuple[np.ndarray, 
 
 
 def _encode_scan(
-    writer: _BitWriter,
+    writer: MsbWriter,
     q: np.ndarray,
     dc_codes: dict,
     ac_codes: dict,
@@ -418,17 +389,17 @@ def encode_jpeg(
         q, bh, bw = _quantize_plane(plane, qtabs[ci])
         comp_blocks.append((q.reshape(bh, bw, 8, 8), sh, sv))
 
-    writer = _BitWriter()
+    writer = MsbWriter()
     preds = [0] * ncomp
     mcu_count = 0
     rst = 0
     for my in range(mcus_y):
         for mx in range(mcus_x):
             if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                out += writer.flush()
+                out += _scan_bytes(writer)
                 out += bytes([0xFF, 0xD0 + rst])
                 rst = (rst + 1) % 8
-                writer = _BitWriter()
+                writer = MsbWriter()
                 preds = [0] * ncomp
             for ci in range(ncomp):
                 q, sh, sv = comp_blocks[ci]
@@ -439,27 +410,20 @@ def encode_jpeg(
                             writer, block, dc_tabs[ci], ac_tabs[ci], preds[ci]
                         )
             mcu_count += 1
-    out += writer.flush()
+    out += _scan_bytes(writer)
     out += b"\xff\xd9"  # EOI
     return bytes(out)
 
 
 # --- Decoder --------------------------------------------------------------
 
+@malformed_input_guard("JPEG")
 def decode_jpeg(data: bytes) -> np.ndarray:
     """Decode a baseline (SOF0/1) or progressive (SOF2) JPEG to
     uint8: (h, w) for grayscale, (h, w, 3) RGB otherwise.
     Hierarchical/arithmetic/12-bit inputs raise NotImplementedError;
-    malformed input raises ValueError — never a raw index/struct
-    error (the fuzz contract shared by every parser in this
-    package)."""
-    try:
-        return _decode_jpeg_checked(data)
-    except (IndexError, KeyError, struct.error, StopIteration, OverflowError, ZeroDivisionError) as exc:
-        raise ValueError(f"corrupt JPEG: {exc!r}") from exc
-
-
-def _decode_jpeg_checked(data: bytes) -> np.ndarray:
+    malformed input raises ValueError (the fuzz contract in
+    llm/bits.py)."""
     data = bytes(data)
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG: bad SOI")
@@ -586,32 +550,16 @@ def _decode_scan(
             np.zeros((mcus_y * 8 * c["v"], mcus_x * 8 * c["h"]), dtype=np.float64)
         )
 
-    # split on restart markers if present
-    if restart_interval:
-        segments = []
-        cur = bytearray()
-        i = 0
-        while i < len(scan):
-            if scan[i] == 0xFF and i + 1 < len(scan) and 0xD0 <= scan[i + 1] <= 0xD7:
-                segments.append(bytes(cur))
-                cur = bytearray()
-                i += 2
-                continue
-            cur.append(scan[i])
-            i += 1
-        segments.append(bytes(cur))
-    else:
-        segments = [scan]
-
+    segments = _split_restarts(scan, restart_interval)
     seg_idx = 0
-    reader = _BitReader(segments[0])
+    reader = _scan_reader(segments[0])
     preds = [0] * len(comps)
     mcu_count = 0
     for my in range(mcus_y):
         for mx in range(mcus_x):
             if restart_interval and mcu_count and mcu_count % restart_interval == 0:
                 seg_idx += 1
-                reader = _BitReader(segments[seg_idx])
+                reader = _scan_reader(segments[seg_idx])
                 preds = [0] * len(comps)
             for ci, c in enumerate(comps):
                 qt = qtables[c["q"]]
@@ -620,13 +568,13 @@ def _decode_scan(
                 for by in range(c["v"]):
                     for bx in range(c["h"]):
                         zz = np.zeros(64, dtype=np.int64)
-                        size = reader.read_code(dct)
-                        diff = _extend(reader.read_bits(size), size)
+                        size = _read_code(reader, dct)
+                        diff = _extend(reader.read(size), size)
                         preds[ci] += diff
                         zz[0] = preds[ci]
                         k = 1
                         while k < 64:
-                            rs = reader.read_code(act)
+                            rs = _read_code(reader, act)
                             run, size = rs >> 4, rs & 0x0F
                             if size == 0:
                                 if run == 15:  # ZRL
@@ -636,7 +584,7 @@ def _decode_scan(
                             k += run
                             if k > 63:
                                 raise ValueError("corrupt JPEG: AC overflow")
-                            zz[k] = _extend(reader.read_bits(size), size)
+                            zz[k] = _extend(reader.read(size), size)
                             k += 1
                         block = np.zeros(64, dtype=np.int64)
                         block[ZIGZAG] = zz
@@ -778,7 +726,7 @@ def _progressive_scan(
         chunk = blocks[done : done + n_per_seg]
         if not chunk:
             break
-        reader = _BitReader(seg)
+        reader = _scan_reader(seg)
         if ah == 0:
             _ac_first(reader, chunk, act, ss, se, al)
         else:
@@ -826,23 +774,23 @@ def _dc_scan(
         chunk = seq[done : done + n_per_seg]
         if not chunk:
             break
-        reader = _BitReader(seg)
+        reader = _scan_reader(seg)
         if ah == 0:
             preds: dict[int, int] = {}
             for ci, block in chunk:
                 dct = dc_dec[next(sc["dc"] for sc, i in zip(scan_comps, comp_idx) if i == ci)]
-                size = reader.read_code(dct)
-                diff = _extend(reader.read_bits(size), size)
+                size = _read_code(reader, dct)
+                diff = _extend(reader.read(size), size)
                 preds[ci] = preds.get(ci, 0) + diff
                 block[0] = preds[ci] << al
         else:
             for _ci, block in chunk:
-                if reader.read_bit():
+                if reader.read(1):
                     block[0] |= 1 << al
         done += len(chunk)
 
 
-def _ac_first(reader: _BitReader, blocks: list[np.ndarray], act: dict,
+def _ac_first(reader: MsbReader, blocks: list[np.ndarray], act: dict,
               ss: int, se: int, al: int) -> None:
     """AC first pass (Ah==0): band coefficients arrive run-length
     coded with EOBn end-of-band runs (T.81 G.1.2.2)."""
@@ -853,24 +801,24 @@ def _ac_first(reader: _BitReader, blocks: list[np.ndarray], act: dict,
             continue
         k = ss
         while k <= se:
-            rs = reader.read_code(act)
+            rs = _read_code(reader, act)
             r, s = rs >> 4, rs & 0x0F
             if s == 0:
                 if r < 15:
                     eobrun = (1 << r) - 1
                     if r:
-                        eobrun += reader.read_bits(r)
+                        eobrun += reader.read(r)
                     break
                 k += 16  # ZRL
                 continue
             k += r
             if k > se:
                 raise ValueError("corrupt JPEG: AC band overflow")
-            zz[k] = _extend(reader.read_bits(s), s) << al
+            zz[k] = _extend(reader.read(s), s) << al
             k += 1
 
 
-def _ac_refine(reader: _BitReader, blocks: list[np.ndarray], act: dict,
+def _ac_refine(reader: MsbReader, blocks: list[np.ndarray], act: dict,
                ss: int, se: int, al: int) -> None:
     """AC refinement pass (Ah>0): one new bit for every coefficient
     already nonzero, plus newly-significant ±1·2^Al coefficients
@@ -883,7 +831,7 @@ def _ac_refine(reader: _BitReader, blocks: list[np.ndarray], act: dict,
         k = ss
         if eobrun == 0:
             while k <= se:
-                rs = reader.read_code(act)
+                rs = _read_code(reader, act)
                 r, s = rs >> 4, rs & 0x0F
                 newval = 0
                 if s == 0:
@@ -893,18 +841,18 @@ def _ac_refine(reader: _BitReader, blocks: list[np.ndarray], act: dict,
                         # the tail below (libjpeg decode_mcu_AC_refine)
                         eobrun = 1 << r
                         if r:
-                            eobrun += reader.read_bits(r)
+                            eobrun += reader.read(r)
                         break
                     # r == 15: skip over 16 zero-history coefficients
                 else:
                     if s != 1:
                         raise ValueError("corrupt JPEG: refinement size != 1")
-                    newval = p1 if reader.read_bit() else m1
+                    newval = p1 if reader.read(1) else m1
                 # advance past r zero-history coefficients, applying
                 # correction bits to nonzero ones encountered
                 while k <= se:
                     if zz[k] != 0:
-                        if reader.read_bit() and not (zz[k] & p1):
+                        if reader.read(1) and not (zz[k] & p1):
                             zz[k] += p1 if zz[k] >= 0 else m1
                     else:
                         if r == 0:
@@ -918,7 +866,7 @@ def _ac_refine(reader: _BitReader, blocks: list[np.ndarray], act: dict,
             # remainder of this band: correction bits only
             while k <= se:
                 if zz[k] != 0:
-                    if reader.read_bit() and not (zz[k] & p1):
+                    if reader.read(1) and not (zz[k] & p1):
                         zz[k] += p1 if zz[k] >= 0 else m1
                 k += 1
             eobrun -= 1
@@ -959,7 +907,7 @@ def _pt_ac(v: int, al: int) -> int:
     return -((-v) >> al) if v < 0 else v >> al
 
 
-def _encode_ac_first(writer: _BitWriter, blocks: list[np.ndarray], ac_codes: dict,
+def _encode_ac_first(writer: MsbWriter, blocks: list[np.ndarray], ac_codes: dict,
                      ss: int, se: int, al: int) -> None:
     """AC first pass encoder. End-of-band is always coded as EOB1
     (symbol 0x00): the standard Annex-K AC tables define no EOBn
@@ -993,7 +941,7 @@ def _encode_ac_first(writer: _BitWriter, blocks: list[np.ndarray], ac_codes: dic
             writer.write(code, length)
 
 
-def _encode_ac_refine(writer: _BitWriter, blocks: list[np.ndarray], ac_codes: dict,
+def _encode_ac_refine(writer: MsbWriter, blocks: list[np.ndarray], ac_codes: dict,
                       ss: int, se: int, al: int) -> None:
     """AC refinement encoder (the libjpeg encode_mcu_AC_refine
     structure, restricted to EOB1 like :func:`_encode_ac_first`):
@@ -1149,7 +1097,7 @@ def encode_jpeg_progressive(img: np.ndarray, subsample: str = "420") -> bytes:
 
     # scan 1: DC first, all components interleaved, Al=1
     out += sos_header(list(range(1, ncomp + 1)), 0, 0, 0, 1)
-    writer = _BitWriter()
+    writer = MsbWriter()
     preds = [0] * ncomp
     for my in range(mcus_y):
         for mx in range(mcus_x):
@@ -1164,20 +1112,20 @@ def encode_jpeg_progressive(img: np.ndarray, subsample: str = "420") -> bytes:
                         writer.write(code, length)
                         if size:
                             writer.write(bits, size)
-    out += writer.flush()
+    out += _scan_bytes(writer)
 
     # scans 2..: AC first passes, Al=1 (luma split into two bands —
     # the spectral-selection shape libjpeg's default script uses)
     ac_first_script = [(0, 1, 5), (0, 6, 63)] + [(ci, 1, 63) for ci in range(1, ncomp)]
     for ci, ss_, se_ in ac_first_script:
         out += sos_header([ci + 1], ss_, se_, 0, 1)
-        writer = _BitWriter()
+        writer = MsbWriter()
         _encode_ac_first(writer, ac_blocks(ci), ac_tabs[ci], ss_, se_, 1)
-        out += writer.flush()
+        out += _scan_bytes(writer)
 
     # DC refinement: interleaved, one raw bit per block
     out += sos_header(list(range(1, ncomp + 1)), 0, 0, 1, 0)
-    writer = _BitWriter()
+    writer = MsbWriter()
     for my in range(mcus_y):
         for mx in range(mcus_x):
             for ci in range(ncomp):
@@ -1185,14 +1133,14 @@ def encode_jpeg_progressive(img: np.ndarray, subsample: str = "420") -> bytes:
                 for by in range(cq["sv"]):
                     for bx in range(cq["sh"]):
                         writer.write(int(cq["zz"][my * cq["sv"] + by, mx * cq["sh"] + bx, 0]) & 1, 1)
-    out += writer.flush()
+    out += _scan_bytes(writer)
 
     # AC refinement passes, Ah=1 → Al=0
     for ci in range(ncomp):
         out += sos_header([ci + 1], 1, 63, 1, 0)
-        writer = _BitWriter()
+        writer = MsbWriter()
         _encode_ac_refine(writer, ac_blocks(ci), ac_tabs[ci], 1, 63, 0)
-        out += writer.flush()
+        out += _scan_bytes(writer)
 
     out += b"\xff\xd9"
     return bytes(out)

@@ -36,7 +36,7 @@ media_flac_decode tolerance-of-truth family).
 
 from __future__ import annotations
 
-import struct
+from stockify_spark.llm.bits import MsbReader, MsbWriter, malformed_input_guard
 
 # MPEG-1 Layer III tables (ISO 11172-3): bitrate index → kbit/s,
 # sample-rate index → Hz.
@@ -78,17 +78,11 @@ def encode_mp3_frames(
     return bytes(out)
 
 
+@malformed_input_guard("MP3")
 def parse_frames(data: bytes) -> list[tuple[int, int, int]]:
     """Walk the frame sequence: [(offset, frame_bytes, bitrate_kbps)].
     Tolerates an ID3v2 prefix (tag length from its syncsafe header)
     and stops at trailing garbage that is not a valid header."""
-    try:
-        return _parse_frames_unchecked(data)
-    except (struct.error, IndexError, OverflowError) as exc:
-        raise ValueError(f"corrupt MP3: {exc!r}") from exc
-
-
-def _parse_frames_unchecked(data: bytes) -> list[tuple[int, int, int]]:
     data = bytes(data)
     pos = 0
     if data[:3] == b"ID3" and len(data) >= 10:
@@ -149,41 +143,6 @@ _GRANULES = 2
 _CHANNELS = 2
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self.bits: list[int] = []
-
-    def u(self, value: int, n: int) -> None:
-        if not 0 <= value < (1 << n):
-            raise ValueError(f"value {value} does not fit in {n} bits")
-        for i in range(n - 1, -1, -1):
-            self.bits.append((value >> i) & 1)
-
-    def tobytes(self) -> bytes:
-        assert len(self.bits) % 8 == 0
-        out = bytearray()
-        for i in range(0, len(self.bits), 8):
-            b = 0
-            for bit in self.bits[i : i + 8]:
-                b = (b << 1) | bit
-            out.append(b)
-        return bytes(out)
-
-
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0  # bit position
-
-    def u(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            byte = self.data[self.pos >> 3]
-            v = (v << 1) | ((byte >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return v
-
-
 def _side_info_stereo(gains, count1sel) -> bytes:
     """Serialize MPEG-1 stereo side info for zero-main-data granules:
     main_data_begin=0 (no bit reservoir), every part2_3_length=0, the
@@ -192,27 +151,27 @@ def _side_info_stereo(gains, count1sel) -> bytes:
     carry the per-granule values, which is what makes the stream a
     PARSER test rather than an all-zero one. ``gains[g][ch]`` and
     ``count1sel[g][ch]`` index granule then channel."""
-    w = _BitWriter()
-    w.u(0, 9)   # main_data_begin
-    w.u(0, 3)   # private_bits (stereo)
+    w = MsbWriter()
+    w.write(0, 9)   # main_data_begin
+    w.write(0, 3)   # private_bits (stereo)
     for _ch in range(_CHANNELS):
-        w.u(0, 4)  # scfsi
+        w.write(0, 4)  # scfsi
     for g in range(_GRANULES):
         for ch in range(_CHANNELS):
-            w.u(0, 12)                  # part2_3_length: NO main data
-            w.u(0, 9)                   # big_values
-            w.u(gains[g][ch], 8)        # global_gain
-            w.u(0, 4)                   # scalefac_compress
-            w.u(0, 1)                   # window_switching_flag=0 (long)
-            w.u(0, 5)                   # table_select[0]
-            w.u(0, 5)                   # table_select[1]
-            w.u(0, 5)                   # table_select[2]
-            w.u(0, 4)                   # region0_count
-            w.u(0, 3)                   # region1_count
-            w.u(0, 1)                   # preflag
-            w.u(0, 1)                   # scalefac_scale
-            w.u(count1sel[g][ch], 1)    # count1table_select
-    out = w.tobytes()
+            w.write(0, 12)                  # part2_3_length: NO main data
+            w.write(0, 9)                   # big_values
+            w.write(gains[g][ch], 8)        # global_gain
+            w.write(0, 4)                   # scalefac_compress
+            w.write(0, 1)                   # window_switching_flag=0 (long)
+            w.write(0, 5)                   # table_select[0]
+            w.write(0, 5)                   # table_select[1]
+            w.write(0, 5)                   # table_select[2]
+            w.write(0, 4)                   # region0_count
+            w.write(0, 3)                   # region1_count
+            w.write(0, 1)                   # preflag
+            w.write(0, 1)                   # scalefac_scale
+            w.write(count1sel[g][ch], 1)    # count1table_select
+    out = w.flush()
     assert len(out) == SIDE_INFO_BYTES_STEREO
     return out
 
@@ -251,39 +210,40 @@ def parse_side_info_stereo(frame: bytes) -> dict:
     4..36 — header already validated, no CRC). Returns
     ``{"main_data_begin": int, "granules": [[{...}, {...}], ...]}``
     with every spec field, including the window-switching variant."""
-    r = _BitReader(frame[4 : 4 + SIDE_INFO_BYTES_STEREO])
-    info: dict = {"main_data_begin": r.u(9), "private_bits": r.u(3)}
-    info["scfsi"] = [r.u(4) for _ in range(_CHANNELS)]
+    r = MsbReader(frame[4 : 4 + SIDE_INFO_BYTES_STEREO])
+    info: dict = {"main_data_begin": r.read(9), "private_bits": r.read(3)}
+    info["scfsi"] = [r.read(4) for _ in range(_CHANNELS)]
     grs = []
     for _g in range(_GRANULES):
         row = []
         for _ch in range(_CHANNELS):
             d = {
-                "part2_3_length": r.u(12),
-                "big_values": r.u(9),
-                "global_gain": r.u(8),
-                "scalefac_compress": r.u(4),
-                "window_switching_flag": r.u(1),
+                "part2_3_length": r.read(12),
+                "big_values": r.read(9),
+                "global_gain": r.read(8),
+                "scalefac_compress": r.read(4),
+                "window_switching_flag": r.read(1),
             }
             if d["window_switching_flag"]:
-                d["block_type"] = r.u(2)
-                d["mixed_block_flag"] = r.u(1)
-                d["table_select"] = [r.u(5) for _ in range(2)]
-                d["subblock_gain"] = [r.u(3) for _ in range(3)]
+                d["block_type"] = r.read(2)
+                d["mixed_block_flag"] = r.read(1)
+                d["table_select"] = [r.read(5) for _ in range(2)]
+                d["subblock_gain"] = [r.read(3) for _ in range(3)]
             else:
-                d["table_select"] = [r.u(5) for _ in range(3)]
-                d["region0_count"] = r.u(4)
-                d["region1_count"] = r.u(3)
-            d["preflag"] = r.u(1)
-            d["scalefac_scale"] = r.u(1)
-            d["count1table_select"] = r.u(1)
+                d["table_select"] = [r.read(5) for _ in range(3)]
+                d["region0_count"] = r.read(4)
+                d["region1_count"] = r.read(3)
+            d["preflag"] = r.read(1)
+            d["scalefac_scale"] = r.read(1)
+            d["count1table_select"] = r.read(1)
             row.append(d)
         grs.append(row)
     info["granules"] = grs
-    assert r.pos == SIDE_INFO_BYTES_STEREO * 8
+    assert r.byte_pos() == SIDE_INFO_BYTES_STEREO
     return info
 
 
+@malformed_input_guard("MP3")
 def decode_mp3(data: bytes) -> dict:
     """Sample decode for the zero-spectrum subset; NotImplementedError
     beyond it (see module docstring).

@@ -51,6 +51,7 @@ import struct
 
 import numpy as np
 
+from stockify_spark.llm.bits import malformed_input_guard
 from stockify_spark.llm.jpeg import decode_jpeg, encode_jpeg
 
 _JPEG_FOURCC = (b"jpeg", b"mjpa", b"mjpb")
@@ -254,19 +255,12 @@ def _parse_video_stbl(data: bytes, body: int, size: int, info: dict) -> None:
     info["frames"] = frames
 
 
+@malformed_input_guard("MP4")
 def _parse_mp4(data: bytes) -> dict:
     """Single moov pass: dims, codec fourcc, timescale/delta, and the
     per-sample (offset, size) table of the first video track. No
-    pixel decode. Malformed input raises ValueError — never a raw
-    struct/index error (the fuzz contract shared by every parser in
-    this package)."""
-    try:
-        return _parse_mp4_unchecked(data)
-    except (struct.error, IndexError, KeyError, OverflowError) as exc:
-        raise ValueError(f"corrupt MP4: {exc!r}") from exc
-
-
-def _parse_mp4_unchecked(data: bytes) -> dict:
+    pixel decode. Malformed input raises ValueError (the fuzz
+    contract in llm/bits.py)."""
     if len(data) < 12:
         raise ValueError("not an MP4: too short")
     first = data[4:8]

@@ -21,6 +21,8 @@ import zlib
 
 import numpy as np
 
+from stockify_spark.llm.bits import malformed_input_guard
+
 _SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
 _CHANNELS = {0: 1, 2: 3, 6: 4}  # color_type -> samples per pixel
@@ -68,19 +70,12 @@ def _paeth(a: int, b: int, c: int) -> int:
     return b if pb <= pc else c
 
 
+@malformed_input_guard("PNG")
 def decode_png(data: bytes) -> np.ndarray:
     """Decode a PNG to a uint8 array: (h, w) for grayscale, else
     (h, w, channels). Supports bit depth 8, color types 0/2/6,
     interlace 0, all five scanline filters. Malformed input raises
-    ValueError — never a raw struct/zlib/index error (the fuzz
-    contract shared by every parser in this package)."""
-    try:
-        return _decode_png(data)
-    except (struct.error, zlib.error, IndexError) as exc:
-        raise ValueError(f"corrupt PNG: {exc}") from exc
-
-
-def _decode_png(data: bytes) -> np.ndarray:
+    ValueError (the fuzz contract in llm/bits.py)."""
     if bytes(data[:8]) != _SIGNATURE:
         raise ValueError("not a PNG: bad signature")
     pos = 8

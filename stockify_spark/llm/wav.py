@@ -16,6 +16,8 @@ import struct
 
 import numpy as np
 
+from stockify_spark.llm.bits import malformed_input_guard
+
 
 def encode_wav(samples: np.ndarray, sample_rate: int = 16_000) -> bytes:
     """Encode int16 samples as a PCM WAV. ``samples``: (n,) mono or
@@ -35,6 +37,7 @@ def encode_wav(samples: np.ndarray, sample_rate: int = 16_000) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
+@malformed_input_guard("WAV")
 def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
     """Decode a PCM WAV to (samples, sample_rate). Samples come back
     int16, shape (n,) for mono else (n, channels)."""

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from stockify_spark.llm.bits import malformed_input_guard
+
 _MAGIC = b"YUV4MPEG2"
 
 
@@ -105,12 +107,19 @@ def _frame_bodies(data: bytes, pos: int, frame_bytes: int) -> list[int]:
     return bodies
 
 
+@malformed_input_guard("Y4M")
+def _layout(data: bytes) -> tuple[int, int, tuple[int, int], list[int]]:
+    """(width, height, fps, frame body offsets). Malformed input raises
+    ValueError (the fuzz contract in llm/bits.py); a frame index out
+    of range stays the caller's IndexError, as in llm/avi.py."""
+    w, h, fps, pos = _parse_header(data)
+    frame_bytes = w * h + 2 * ((w * h) // 4)
+    return w, h, fps, _frame_bodies(data, pos, frame_bytes)
+
+
 def frame_count(data: bytes) -> int:
     """Number of frames — header/offset arithmetic, no pixel decode."""
-    data = bytes(data)
-    w, h, _, pos = _parse_header(data)
-    frame_bytes = w * h + 2 * ((w * h) // 4)
-    return len(_frame_bodies(data, pos, frame_bytes))
+    return len(_layout(bytes(data))[3])
 
 
 def decode_y4m(
@@ -122,10 +131,7 @@ def decode_y4m(
     pointer arithmetic, not a scan (the explode-before-decode shape:
     each task seeks straight to its frames)."""
     data = bytes(data)
-    w, h, fps, pos = _parse_header(data)
-    y_size = w * h
-    frame_bytes = y_size + 2 * (y_size // 4)
-    bodies = _frame_bodies(data, pos, frame_bytes)
+    w, h, fps, bodies = _layout(data)
     n_frames = len(bodies)
     if frame_indices is None:
         frame_indices = list(range(n_frames))
@@ -134,7 +140,7 @@ def decode_y4m(
         if not 0 <= idx < n_frames:
             raise IndexError(f"frame {idx} out of range 0..{n_frames - 1}")
         frames[out_i] = np.frombuffer(
-            data, dtype=np.uint8, count=y_size, offset=bodies[idx]
+            data, dtype=np.uint8, count=w * h, offset=bodies[idx]
         ).reshape(h, w)
     return frames, fps
 

@@ -95,8 +95,8 @@ def test_duplicate_clusters_groups_planted_dups(spark, docs):
 def test_connected_components_long_chain_path_doubling(spark):
     """A 200-node chain (diameter 199) must converge inside the
     default max_iters=20: pointer jumping doubles the propagation
-    horizon each round (2^t - 1 >= 199 at t=8), and localCheckpoint
-    every 5 rounds keeps plan depth bounded. Labels must equal the
+    horizon each round (2^t - 1 >= 199 at t=8), and materializing
+    every round keeps plan depth bounded. Labels must equal the
     transitive-closure answer: every node -> component 0."""
     from stockify_spark.llm.dedup import connected_components
 

@@ -331,8 +331,8 @@ def test_jpeg_progressive_eobn_runs_decode():
     stream: a custom AC table defining EOB4 (symbol 0x20), one scan
     where the first block carries a coefficient and the rest share
     one EOB4 run."""
+    from stockify_spark.llm.bits import MsbWriter as _BitWriter
     from stockify_spark.llm.jpeg import (
-        _BitWriter,
         _DC_LUMA,
         _build_codes,
         _dht_payload,
@@ -397,8 +397,8 @@ def test_jpeg_progressive_restart_markers():
     the same 4-block image as the EOBn test with restart_interval=2
     in the DC scan (two entropy segments, predictor resets between
     them) and per-segment EOB1s in the AC scan."""
+    from stockify_spark.llm.bits import MsbWriter as _BitWriter
     from stockify_spark.llm.jpeg import (
-        _BitWriter,
         _DC_LUMA,
         _AC_LUMA,
         _build_codes,

@@ -236,29 +236,54 @@ def test_mp3_frame_walk_matches_encode_spec(bits, sr_idx):
 @given(seed=st.integers(min_value=0, max_value=10_000))
 @settings(max_examples=10, deadline=None)
 def test_parsers_fail_cleanly_on_malformed_input(seed):
-    """The fuzz contract shared by every parser in llm/: truncated or
-    bit-flipped input raises ValueError or NotImplementedError —
-    never a raw IndexError/struct.error/ZeroDivisionError/etc. (a
-    corpus at scale WILL contain corrupt files, and a mapInPandas
-    task must be able to catch a typed error per row instead of
-    crashing the stage on an implementation detail)."""
+    """The fuzz contract shared by every parser in llm/ (llm/bits.py):
+    truncated or bit-flipped input raises ValueError or
+    NotImplementedError — never a raw IndexError/struct.error/
+    ZeroDivisionError/etc. (a corpus at scale WILL contain corrupt
+    files, and a mapInPandas task must be able to catch a typed error
+    per row instead of crashing the stage on an implementation
+    detail)."""
+    import gzip
+
     import numpy as np
 
+    from stockify_spark.llm.adpcm import decode_ima, encode_ima
     from stockify_spark.llm.avi import avi_info, encode_avi_mjpeg
+    from stockify_spark.llm.deflate import gunzip
+    from stockify_spark.llm.flac import decode_flac, encode_flac
+    from stockify_spark.llm.gif import decode_gif, encode_gif
+    from stockify_spark.llm.h264 import (
+        decode_h264_ipcm,
+        encode_h264_annexb,
+        encode_h264_ipcm,
+        h264_probe,
+    )
     from stockify_spark.llm.jpeg import decode_jpeg, encode_jpeg_progressive
-    from stockify_spark.llm.mp3 import encode_mp3_frames, mp3_info
+    from stockify_spark.llm.mp3 import decode_mp3, encode_mp3_frames, encode_mp3_silence, mp3_info
     from stockify_spark.llm.mp4 import encode_mp4_mjpeg, mp4_info
     from stockify_spark.llm.png import decode_png, encode_png
+    from stockify_spark.llm.wav import decode_wav, encode_wav
+    from stockify_spark.llm.y4m import decode_y4m, encode_y4m
 
     rng = np.random.RandomState(seed)
     frames = rng.randint(0, 256, size=(2, 16, 16)).astype(np.uint8)
     img = rng.randint(0, 256, size=(16, 16, 3)).astype(np.uint8)
+    audio = [int(v) for v in rng.randint(-3000, 3000, size=300)]
     cases = [
         (encode_avi_mjpeg(frames), avi_info),
         (encode_mp4_mjpeg(frames), mp4_info),
         (encode_mp3_frames([5, 9, 12]), mp3_info),
+        (encode_mp3_silence([5, 9]), decode_mp3),
         (encode_png(img), decode_png),
         (encode_jpeg_progressive(img), decode_jpeg),
+        (encode_flac(audio), decode_flac),
+        (encode_h264_ipcm(16, 16, 10, 100, 200), decode_h264_ipcm),
+        (encode_h264_annexb(34, 18, 1, 2), h264_probe),
+        (encode_gif([bytes(f.reshape(-1)) for f in frames], 16, 16), decode_gif),
+        (gzip.compress(bytes(frames.reshape(-1)), mtime=0), gunzip),
+        (encode_wav(np.array(audio, dtype=np.int16)), decode_wav),
+        (encode_y4m(frames), decode_y4m),
+        (encode_ima(audio), decode_ima),
     ]
     for data, probe in cases:
         cut = int(rng.randint(len(data)))

@@ -28,8 +28,6 @@ KEPT: dict[str, str] = {
         "AVI twin of y4m.frame_count, which llm/multimodal uses; tests/test_avi.py",
     "llm.mp4.frame_count":
         "MP4 twin of y4m.frame_count, which llm/multimodal uses; tests/test_mp4.py",
-    "llm.deflate.zlib_decompress":
-        "RFC 1950 wrapper over the inflate PNG decoding uses; test-only (ROADMAP Direction 5)",
     "llm.h264.decode_h264":
         "the NotImplementedError slice-decode boundary the media queries name",
     "llm.similarity.cosine_topk":
