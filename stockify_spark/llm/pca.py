@@ -535,9 +535,7 @@ def compact_gram(spark, path: str) -> int:
         ],
         "n long, s array<double>, g array<double>",
     )
-    actions: list[dict] = [{"remove": {"path": r}} for r in st.adds]
-    actions.extend(txlog._write_data_files(one.coalesce(1), path))
-    return txlog._commit(path, actions)
+    return txlog._rewrite(path, list(st.adds), one.coalesce(1))
 
 
 def pca_outlier_scores(

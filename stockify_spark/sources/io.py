@@ -307,6 +307,69 @@ def write_date_partitioned(
     )
 
 
+def cluster(
+    df: DataFrame,
+    n: int,
+    sort_by: str | None = None,
+    zorder_by: list[str] | None = None,
+) -> DataFrame:
+    """Lay ``df`` out as ``n`` partitions for a file write: range-
+    partitioned and sorted on ``sort_by``, or on the Z-order key of
+    the 2-4 columns ``zorder_by`` (:func:`_zorder_key`), or coalesced
+    when neither is given. The one clustering step behind every layout
+    write, plain (:func:`write_sorted_layout`,
+    :func:`write_zorder_layout`) or through the txlog (its compactions).
+
+    A sort gives each output file a disjoint range of ``sort_by``, so
+    footer min/max skips whole files on range probes on that column
+    and on no other; the Z-curve gives every listed column boxes about
+    square-root as tight — the multi-dimensional data-skipping trade.
+    The key is layout-only and dropped from the result."""
+    if sort_by is not None and zorder_by is not None:
+        raise ValueError("sort_by and zorder_by are mutually exclusive")
+    if zorder_by is not None:
+        return (
+            df.withColumn("__z", _zorder_key(df, zorder_by))
+            .repartitionByRange(n, "__z")
+            .sortWithinPartitions("__z")
+            .drop("__z")
+        )
+    if sort_by is not None:
+        return df.repartitionByRange(n, sort_by).sortWithinPartitions(sort_by)
+    return df.coalesce(n)
+
+
+def _zorder_key(df: DataFrame, cols: list[str]):
+    """Morton/Z-order key over 2-4 numeric columns: each column is
+    rank-bucketized to 256 quantile buckets (equal-population, so skew
+    cannot collapse the curve the way equal-WIDTH buckets would), then
+    the bucket bits are interleaved. Bucket boundaries come from
+    approxQuantile — bounded driver-side state (255 doubles per
+    column), one pass per column. The key is a closed-form column
+    expression: the clustering stays one repartitionByRange + local
+    sort, no UDF."""
+    from pyspark.sql import functions as F
+
+    if not 2 <= len(cols) <= 4:
+        raise ValueError("z-order wants 2-4 columns")
+    bits = 8
+    n_buckets = 1 << bits
+    probs = [i / n_buckets for i in range(1, n_buckets)]
+    z = F.lit(0)
+    for ci, c in enumerate(cols):
+        cuts = df.approxQuantile(c, probs, 0.001)
+        # bucket index = count of cut points <= value (monotone
+        # when-chain would be 255 branches; a literal array + a
+        # filtered size is one vectorized expression)
+        arr = F.array(*[F.lit(float(x)) for x in cuts])
+        bucket = F.size(F.filter(arr, lambda b: b <= F.col(c).cast("double")))
+        for bit in range(bits):
+            z = z + F.shiftright(bucket, bit).bitwiseAND(1).cast("long") * (
+                1 << (bit * len(cols) + ci)
+            )
+    return z
+
+
 def write_sorted_layout(df: DataFrame, path: str, sort_col: str, num_partitions: int | None = None) -> None:
     """Persist a range-sorted Parquet layout keyed on ``sort_col``.
 
@@ -319,27 +382,7 @@ def write_sorted_layout(df: DataFrame, path: str, sort_col: str, num_partitions:
     tail of the range partitioning.
     """
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    (
-        df.repartitionByRange(n, sort_col)
-        .sortWithinPartitions(sort_col)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def _morton_code(a_bucket, b_bucket, bits: int = 16):
-    """Interleave the low ``bits`` of two bucket ids into a Z-order
-    (Morton) key, as a pure column expression."""
-    from pyspark.sql import functions as F
-
-    code = F.lit(0).cast("long")
-    for i in range(bits):
-        abit = F.shiftright(a_bucket, i).bitwiseAND(F.lit(1))
-        bbit = F.shiftright(b_bucket, i).bitwiseAND(F.lit(1))
-        code = code.bitwiseOR(F.shiftleft(abit, 2 * i)).bitwiseOR(
-            F.shiftleft(bbit, 2 * i + 1)
-        )
-    return code
+    cluster(df, n, sort_by=sort_col).write.mode("overwrite").parquet(path)
 
 
 def write_zorder_layout(
@@ -347,111 +390,16 @@ def write_zorder_layout(
     path: str,
     col_a: str,
     col_b: str,
-    buckets: int = 1024,
     num_partitions: int | None = None,
 ) -> None:
-    """Persist Z-ordered on two columns: rank each column into
-    ``buckets`` quantile buckets, interleave the bucket bits into a
-    Morton key, range-partition + sort by it.
+    """Persist Z-ordered on two columns: the quantile-bucket Morton key
+    of :func:`cluster`, range-partitioned and sorted.
 
     A single-column sort gives perfect row-group skipping on that
     column and none on any other; Z-order trades a little of the
     first for usable min/max locality on BOTH — the standard layout
-    when two probe dimensions matter (e.g. time × price). The key is
-    layout-only and dropped from the written schema.
-
-    Buckets are uniform-width over each column's [min, max] — the
-    only global state is four scalars from one partial/final agg
-    (scale-free); value skew is rebalanced by the z-key range
-    partitioner, which samples actual key density.
+    when two probe dimensions matter (e.g. time × price). It is the
+    same key ``txlog.compact(zorder_by=...)`` clusters on.
     """
-    from pyspark.sql import functions as F
-
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    lo_a, hi_a, lo_b, hi_b = df.agg(
-        F.min(col_a), F.max(col_a), F.min(col_b), F.max(col_b)
-    ).collect()[0]
-
-    def bucket_of(col: str, lo, hi):
-        if hi == lo:
-            return F.lit(0).cast("long")
-        scaled = (F.col(col) - F.lit(lo)) / F.lit(float(hi - lo)) * buckets
-        return F.least(F.greatest(scaled.cast("long"), F.lit(0)), F.lit(buckets - 1))
-
-    with_key = df.withColumn(
-        "_z", _morton_code(bucket_of(col_a, lo_a, hi_a), bucket_of(col_b, lo_b, hi_b))
-    )
-    (
-        with_key.repartitionByRange(n, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-
-def write_parquet_observed(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    metrics: dict[str, "object"] | None = None,
-) -> dict:
-    """Write parquet and return pipeline metrics observed DURING the
-    write — at 100 TB a row count is otherwise a second full scan.
-
-    ``metrics`` maps metric name → aggregate Column (defaults to a
-    row count). Uses ``df.observe``: the aggregates ride the write
-    job's tasks, so the numbers are exact for exactly the rows
-    written, at zero extra passes.
-    """
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    metrics = metrics or {"rows_written": F.count(F.lit(1))}
-    obs = Observation()
-    observed = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
-    observed.write.mode(mode).parquet(path)
-    return obs.get
-
-
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema,
-    mode: str = "PERMISSIVE",
-    corrupt_col: str = "_corrupt_record",
-) -> DataFrame:
-    """Schema'd JSON-lines reader with an EXPLICIT malformed-record
-    policy — the raw-crawl ingestion surface (WARC extractions, API
-    dumps) where some fraction of lines is always broken and the
-    pipeline must choose, not inherit, what happens to them:
-
-    * ``PERMISSIVE`` (default): malformed lines become rows whose
-      data columns are NULL and whose raw text lands in
-      ``corrupt_col`` (added to the schema here if absent) — the
-      quarantine-and-continue shape: route ``corrupt_col IS NOT
-      NULL`` rows to a reject sink and keep the good ones flowing.
-    * ``DROPMALFORMED``: silently discard broken lines (acceptable
-      only when a loss metric is recorded elsewhere).
-    * ``FAILFAST``: abort on the first broken line (reference-data
-      loads where corruption means the upload itself failed).
-
-    Schema is REQUIRED, never inferred: inference needs an extra
-    full pass over 100 TB and silently widens types per batch.
-
-    Spark quirk, pinned in tests: a query referencing ONLY the
-    corrupt column is disallowed (the parser would never be
-    exercised) — select data columns alongside it, or cache first.
-    """
-    from pyspark.sql import types as T
-
-    s = schema
-    if mode.upper() == "PERMISSIVE" and corrupt_col not in s.fieldNames():
-        s = s.add(T.StructField(corrupt_col, T.StringType(), True))
-    return (
-        spark.read.schema(s)
-        .option("mode", mode)
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .json(path)
-    )
+    cluster(df, n, zorder_by=[col_a, col_b]).write.mode("overwrite").parquet(path)

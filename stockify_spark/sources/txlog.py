@@ -32,7 +32,17 @@ O(commits since the newest checkpoint). A snapshot read is
 ``spark.read.parquet(*live_files)`` — file-level pruning for free, no
 directory listing of data/. Faces that need per-commit history
 (history, changes, vacuum, log retention, the stream sources) read the
-commit files themselves.
+commit files themselves; the two change feeds plan each commit with
+one :func:`_change_spec`.
+
+Writes have one path too. Every face reads table files with
+:func:`_read_files`, stages new ones with :func:`_write_files`
+(partitioned or not), and every face that replaces files — COW delete,
+merge, the compactions, ``materialize_dvs`` and ``llm/pca.
+compact_gram`` — commits through :func:`_rewrite`: remove the old
+files, add the new ones, in one commit. The compactions share one body
+(:func:`_compact`) over a file set, clustered by
+``sources/io.cluster``.
 """
 
 from __future__ import annotations
@@ -42,11 +52,13 @@ import os
 import time
 import uuid
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stockify_spark.functions.scale import materialize
+from stockify_spark.sources.io import cluster
 
 
 def _log_dir(path: str) -> str:
@@ -514,7 +526,7 @@ def maintain(spark: SparkSession, path: str, policy: dict) -> list[dict]:
     if "small_file_bytes" in policy:
         b = int(policy["small_file_bytes"])
         f_thr = float(policy.get("small_file_fraction", 0.5))
-        small = [r for r in st.adds if os.path.getsize(_abs(path, r)) < b]
+        small = [r for r, a in st.adds.items() if _add_size(path, a) < b]
         frac = len(small) / len(st.adds) if st.adds else 0.0
         tp = int(policy.get("compact_target_partitions", 1))
         clustered = "compact_sort_by" in policy or "compact_zorder_by" in policy
@@ -640,6 +652,22 @@ def live_files(path: str, version: int | None = None) -> list[str]:
     return _replay(path, version).files(path)
 
 
+def _read_files(spark: SparkSession, path: str, rels) -> DataFrame:
+    """The one read of table files, given in log form: ``mergeSchema``
+    unions the file schemas, so a column added by a later append reads
+    as NULL on older files (additive schema evolution; each immutable
+    file's footer schema is the source of truth)."""
+    return spark.read.option("mergeSchema", "true").parquet(*[_abs(path, r) for r in rels])
+
+
+def _add_size(path: str, add: dict) -> int:
+    """Byte size of a data file, from its add action: stream admission
+    and maintenance planning size files from the log alone. Only a
+    legacy add written before sizes were logged stats the file."""
+    size = add.get("size")
+    return int(size) if size is not None else os.path.getsize(_abs(path, add["path"]))
+
+
 def _file_stats(fpath: str) -> dict:
     """Per-file column min/max from the parquet footer (one local
     metadata read at WRITE time — readers then prune from the log
@@ -671,35 +699,45 @@ def _file_stats(fpath: str) -> dict:
     return {"min": mins, "max": maxs, "rows": md.num_rows}
 
 
-def _write_data_files(df: DataFrame, path: str) -> list[dict]:
-    """Write df's partitions as immutable files; return add actions
-    carrying per-file column stats for log-level data skipping."""
+def _write_files(df: DataFrame, path: str, partition_cols=()) -> list[dict]:
+    """The one staged writer: write df's partitions as immutable files
+    in data/ and return their add actions. Spark writes into a staging
+    directory (in the hive ``col=value`` layout when ``partition_cols``
+    are given), and each leaf file is then renamed into flat data/
+    under a fresh uuid name, so no reader sees a partial file.
+
+    Each add carries the file's byte size (:func:`_add_size`; Delta's
+    add.size) and per-file column stats, so stream admission,
+    maintenance planning and data skipping read the commit alone. A
+    partitioned write's values move INTO the add (Delta's
+    partitionValues), not the file path, so the log stays the single
+    source of partition truth and file names stay uniform; an
+    unpartitioned add carries no partitionValues key."""
+    import shutil
+    import urllib.parse
+
     staging = os.path.join(_data_dir(path), f"_staging_{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(staging)
+    writer = df.write.mode("overwrite")
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.parquet(staging)
     adds = []
-    for name in sorted(os.listdir(staging)):
-        if not name.endswith(".parquet"):
-            continue
-        rel = os.path.join("data", f"{uuid.uuid4().hex}.parquet")
-        final = os.path.join(path, rel)
-        os.rename(os.path.join(staging, name), final)
-        # byte size in the log: stream admission (max_bytes_per_
-        # trigger) and maintenance planning read it from the commit
-        # alone — no per-file stat/GET at plan time (same rationale
-        # as the min/max stats; Delta's add.size field)
-        adds.append(
-            {
-                "add": {
-                    "path": rel,
-                    "size": os.path.getsize(final),
-                    "stats": _file_stats(final),
+    for root, dirs, files in os.walk(staging):
+        dirs.sort()
+        for name in sorted(files):
+            if not name.endswith(".parquet"):
+                continue
+            rel = os.path.join("data", f"{uuid.uuid4().hex}.parquet")
+            final = os.path.join(path, rel)
+            os.rename(os.path.join(root, name), final)
+            add = {"path": rel, "size": os.path.getsize(final), "stats": _file_stats(final)}
+            if partition_cols:
+                segs = (s.partition("=") for s in os.path.relpath(root, staging).split(os.sep))
+                add["partitionValues"] = {
+                    k: None if v == _HIVE_NULL else urllib.parse.unquote(v) for k, _, v in segs
                 }
-            }
-        )
-    # best-effort staging cleanup (only non-data markers remain)
-    for name in os.listdir(staging):
-        os.remove(os.path.join(staging, name))
-    os.rmdir(staging)
+            adds.append({"add": add})
+    shutil.rmtree(staging, ignore_errors=True)
     return adds
 
 
@@ -788,10 +826,26 @@ def _commit(path: str, actions: list[dict]) -> int:
             return version
 
 
+def _rewrite(
+    path: str, removed, *frames: DataFrame, partition_values: dict | None = None
+) -> int:
+    """The one remove-and-add commit of every face that replaces table
+    files: write ``frames`` in order as new files (stamped with
+    ``partition_values`` when the rewrite stays inside one partition)
+    and commit them in place of the log-form paths ``removed``. The
+    commit's conflict check refuses it if a concurrent writer removed
+    any of those files first."""
+    adds = [a for df in frames for a in _write_files(df, path)]
+    if partition_values is not None:
+        for a in adds:
+            a["add"]["partitionValues"] = dict(partition_values)
+    return _commit(path, [{"remove": {"path": r}} for r in removed] + adds)
+
+
 def create(df: DataFrame, path: str) -> int:
     os.makedirs(_log_dir(path), exist_ok=True)
     os.makedirs(_data_dir(path), exist_ok=True)
-    return _commit(path, _write_data_files(df, path))
+    return _commit(path, _write_files(df, path))
 
 
 def append(df: DataFrame, path: str) -> int:
@@ -804,21 +858,19 @@ def _stage_append(df: DataFrame, path: str, st: _TableState, op: str) -> list[di
     the LOGICAL batch (renaming a constrained column is rejected, so
     constraint names are always identity-mapped); files are written
     with PHYSICAL names so every file of the table shares one footer
-    naming scheme. Partitioned tables route through the partitioned
-    writer on every append face (append, append_idempotent,
+    naming scheme. Partitioned tables write with their partition
+    columns on every append face (append, append_idempotent,
     commit_multi): a streaming sink or a multi-table member that
     committed partition-LESS adds would be silently missed by every
     pruned read."""
     _validate_constraints(df, st)
     _reject_tombstoned(df, st)
     phys = _to_physical(df, st.fold_schema()[0])
-    part = st.partitioning
-    if part is None:
-        return _write_data_files(phys, path)
-    missing = [c for c in part["cols"] if c not in df.columns]
+    cols = () if st.partitioning is None else st.partitioning["cols"]
+    missing = [c for c in cols if c not in df.columns]
     if missing:
         raise ValueError(f"{op} missing partition columns for {path}: {missing}")
-    return _write_data_files_partitioned(phys, path, part["cols"])
+    return _write_files(phys, path, cols)
 
 
 class ConstraintViolation(RuntimeError):
@@ -896,48 +948,6 @@ def _group_adds_by_partition(adds) -> dict[tuple, list[dict]]:
     return groups
 
 
-def _write_data_files_partitioned(
-    df: DataFrame, path: str, cols: list[str]
-) -> list[dict]:
-    """Partitioned variant of _write_data_files: stage with Spark's
-    hive-layout writer, then lift each leaf file out of its
-    ``col=value`` directory chain into flat data/ — the values move
-    INTO the add action (Delta's partitionValues), not the file path,
-    so the log stays the single source of partition truth and file
-    names stay uniform."""
-    import shutil
-    import urllib.parse
-
-    staging = os.path.join(_data_dir(path), f"_staging_{uuid.uuid4().hex}")
-    df.write.mode("overwrite").partitionBy(*cols).parquet(staging)
-    adds = []
-    for root, dirs, files in os.walk(staging):
-        dirs.sort()
-        for name in sorted(files):
-            if not name.endswith(".parquet"):
-                continue
-            pvals: dict[str, str | None] = {}
-            rel_dir = os.path.relpath(root, staging)
-            for seg in () if rel_dir == "." else rel_dir.split(os.sep):
-                k, _, v = seg.partition("=")
-                pvals[k] = None if v == _HIVE_NULL else urllib.parse.unquote(v)
-            rel = os.path.join("data", f"{uuid.uuid4().hex}.parquet")
-            final = os.path.join(path, rel)
-            os.rename(os.path.join(root, name), final)
-            adds.append(
-                {
-                    "add": {
-                        "path": rel,
-                        "size": os.path.getsize(final),
-                        "stats": _file_stats(final),
-                        "partitionValues": pvals,
-                    }
-                }
-            )
-    shutil.rmtree(staging, ignore_errors=True)
-    return adds
-
-
 def create_partitioned(df: DataFrame, path: str, partition_by: list[str]) -> int:
     """Create a table partitioned by ``partition_by`` (Delta's
     partitionValues design): partition column values are stored in
@@ -955,9 +965,7 @@ def create_partitioned(df: DataFrame, path: str, partition_by: list[str]) -> int
     spec = {"cols": list(partition_by), "types": types}
     with open(_partition_marker(path), "w") as f:
         json.dump(spec, f)  # O(1) presence probe; the log action rules
-    actions: list[dict] = [{"partitioning": spec}]
-    actions += _write_data_files_partitioned(df, path, list(partition_by))
-    return _commit(path, actions)
+    return _commit(path, [{"partitioning": spec}] + _write_files(df, path, partition_by))
 
 
 def _read_partitioned(spark: SparkSession, path: str, adds, part: dict) -> DataFrame:
@@ -971,9 +979,7 @@ def _read_partitioned(spark: SparkSession, path: str, adds, part: dict) -> DataF
     order = lambda key: [(c, v is None, v or "") for c, v in key]  # noqa: E731
     groups = _group_adds_by_partition(adds)
     for key, group in sorted(groups.items(), key=lambda kv: order(kv[0])):
-        df = spark.read.option("mergeSchema", "true").parquet(
-            *[_abs(path, a["path"]) for a in group]
-        )
+        df = _read_files(spark, path, [a["path"] for a in group])
         for col, val in key:
             typ = part.get("types", {}).get(col, "string")
             df = df.withColumn(col, F.lit(val).cast(typ))
@@ -1094,29 +1100,18 @@ def compact_partition(
     want, adds = _partition_adds(path, st, equals)
     if len(adds) <= target_partitions:
         return st.version
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[_abs(path, a["path"]) for a in adds]
-    )
-    if sort_by is not None:
-        if sort_by in part["cols"]:
-            raise ValueError(
-                f"sort_by {sort_by!r} is a partition column — it is constant "
-                "within the partition; cluster on a data column"
-            )
-        # clustered per-partition OPTIMIZE: range-partition + local
-        # sort on the data column, so the rewritten files carry tight
-        # min/max boxes for snapshot_pruned-style skipping WITHIN the
-        # partition (the compact(sort_by=...) contract, scoped here)
-        df = df.repartitionByRange(target_partitions, sort_by).sortWithinPartitions(
-            sort_by
+    if sort_by in part["cols"]:
+        raise ValueError(
+            f"sort_by {sort_by!r} is a partition column — it is constant "
+            "within the partition; cluster on a data column"
         )
-    else:
-        df = df.coalesce(target_partitions)
-    new_adds = _write_data_files(df, path)
-    for a in new_adds:
-        a["add"]["partitionValues"] = dict(want)
-    actions = [{"remove": {"path": a["path"]}} for a in adds] + new_adds
-    return _commit(path, actions)
+    # clustered per-partition OPTIMIZE: the compact(sort_by=...)
+    # contract, scoped to the partition's files; the rewritten files
+    # carry the partition's values
+    return _compact(
+        spark, path, st, [a["path"] for a in adds], target_partitions, sort_by,
+        partition_values=want,
+    )
 
 
 def partition_files(path: str, equals: dict, version: int | None = None) -> list[str]:
@@ -1559,7 +1554,7 @@ def _snapshot(spark: SparkSession, path: str, st: _TableState) -> DataFrame:
         return _to_logical(base, m, dropped)
     if not st.adds:
         raise FileNotFoundError(f"empty txlog table at {path}")
-    base = spark.read.option("mergeSchema", "true").parquet(*st.files(path))
+    base = _read_files(spark, path, st.adds)
     return _to_logical(_with_dvs(spark, path, st, base), m, dropped)
 
 
@@ -1615,7 +1610,7 @@ def _hits(spark: SparkSession, path: str, st: _TableState, predicate) -> DataFra
     ``predicate`` (over LOGICAL names) is TRUE — the scan both delete
     faces share. Rows where it is FALSE or NULL are not hits."""
     m, dropped = st.fold_schema()
-    base = spark.read.option("mergeSchema", "true").parquet(*st.files(path))
+    base = _read_files(spark, path, st.adds)
     return (
         _to_logical(_tag_positions(base), m, dropped)
         .filter(predicate)
@@ -1650,9 +1645,7 @@ def _read_subset(
     if not adds:
         return _snapshot(spark, path, st).filter(F.lit(False))
     m, dropped = st.fold_schema()
-    base = spark.read.option("mergeSchema", "true").parquet(
-        *[_abs(path, a["path"]) for a in adds]
-    )
+    base = _read_files(spark, path, [a["path"] for a in adds])
     return _to_logical(_with_dvs(spark, path, st, base).filter(cond), m, dropped)
 
 
@@ -1690,9 +1683,7 @@ def delete_where(spark: SparkSession, path: str, predicate) -> int:
     if not touched:
         return st.version
     m, dropped = st.fold_schema()
-    part = spark.read.option("mergeSchema", "true").parquet(
-        *[_abs(path, r) for r in touched]
-    )
+    part = _read_files(spark, path, touched)
     # predicate binds LOGICAL names; files carry physical ones.
     # NOTE: the rewrite drops tombstoned physical columns, so a
     # pre-drop time travel over rewritten rows reads them as NULL
@@ -1700,9 +1691,7 @@ def delete_where(spark: SparkSession, path: str, predicate) -> int:
     keep = _to_physical(
         _to_logical(part, m, dropped).filter(~F.coalesce(predicate, F.lit(False))), m
     )
-    actions: list[dict] = [{"remove": {"path": r}} for r in touched]
-    actions.extend(_write_data_files(keep, path))
-    return _commit(path, actions)
+    return _rewrite(path, touched, keep)
 
 
 def merge_upsert(
@@ -1733,7 +1722,7 @@ def merge_upsert(
     source = _to_physical(source, m)
     key_cols = [m.get(k, k) for k in key_cols]
     src = materialize(source)  # read twice: key probe + data write
-    snap = spark.read.option("mergeSchema", "true").parquet(*st.files(path))
+    snap = _read_files(spark, path, st.adds)
     # touched files are mapped back to the LOG-FORM paths of the live
     # set by file name: remove actions must string-match their adds,
     # which may be legacy ABSOLUTE paths
@@ -1745,45 +1734,13 @@ def merge_upsert(
     # the source batch cannot carry them, and rewritten survivors drop
     # them — same pre-drop time-travel caveat as delete_where's rewrite
     write_cols = [c for c in snap.columns if c not in dropped]
-    actions: list[dict] = []
+    frames = [src.select(*write_cols)]
     if touched:
-        keep = spark.read.option("mergeSchema", "true").parquet(
-            *[_abs(path, t) for t in touched]
-        ).join(F.broadcast(src.select(*key_cols)), key_cols, "leftanti")
-        actions.extend({"remove": {"path": t}} for t in touched)
-        actions.extend(_write_data_files(keep.select(*write_cols), path))
-    actions.extend(_write_data_files(src.select(*write_cols), path))
-    return _commit(path, actions)
-
-
-def _zorder_column(spark: SparkSession, df, cols: list[str], bits: int = 8):
-    """Morton/Z-order key over 2-4 numeric columns: each column is
-    rank-bucketized to ``2**bits`` quantile buckets (equal-population,
-    so skew cannot collapse the curve the way equal-WIDTH buckets
-    would), then the bucket bits are interleaved. Bucket boundaries
-    come from approxQuantile — bounded driver-side model state (2^bits
-    doubles per column, the centroid/seed precedent), computed in one
-    pass. The whole key is a closed-form column expression: the
-    rewrite stays one repartitionByRange + local sort, no UDF."""
-    from pyspark.sql import functions as F
-
-    if not 2 <= len(cols) <= 4:
-        raise ValueError("z-order wants 2-4 columns")
-    n_buckets = 1 << bits
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    z = F.lit(0)
-    for ci, c in enumerate(cols):
-        cuts = df.approxQuantile(c, probs, 0.001)
-        # bucket index = count of cut points <= value (monotone
-        # when-chain would be 255 branches; a literal array + a
-        # filtered size is one vectorized expression)
-        arr = F.array(*[F.lit(float(x)) for x in cuts])
-        bucket = F.size(F.filter(arr, lambda b: b <= F.col(c).cast("double")))
-        for bit in range(bits):
-            z = z + F.shiftright(bucket, bit).bitwiseAND(1).cast("long") * (
-                1 << (bit * len(cols) + ci)
-            )
-    return z
+        keep = _read_files(spark, path, touched).join(
+            F.broadcast(src.select(*key_cols)), key_cols, "leftanti"
+        )
+        frames.insert(0, keep.select(*write_cols))
+    return _rewrite(path, touched, *frames)
 
 
 def compact_small(
@@ -1804,15 +1761,10 @@ def compact_small(
     _require_not_partitioned(path, "compact_small")
     st = _replay(path)
     _require_no_dvs(path, st, "compact_small")
-    small = [rel for rel in st.adds if os.path.getsize(_abs(path, rel)) < min_bytes]
+    small = [r for r, a in st.adds.items() if _add_size(path, a) < min_bytes]
     if len(small) < 2:
         return st.version  # nothing worth packing
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[_abs(path, r) for r in small]
-    )
-    actions: list[dict] = [{"remove": {"path": r}} for r in small]
-    actions.extend(_write_data_files(df.coalesce(target_partitions), path))
-    return _commit(path, actions)
+    return _compact(spark, path, st, small, target_partitions)
 
 
 def compact(
@@ -1838,31 +1790,42 @@ def compact(
     _require_not_partitioned(path, "compact")
     st = _replay(path)
     _require_no_dvs(path, st, "compact")
-    if sort_by is not None and zorder_by is not None:
-        raise ValueError("sort_by and zorder_by are mutually exclusive")
-    m = st.fold_schema()[0]
-    if sort_by is not None:
-        sort_by = m.get(sort_by, sort_by)  # files carry physical names
-    if zorder_by is not None:
-        zorder_by = [m.get(c, c) for c in zorder_by]
-    df = spark.read.option("mergeSchema", "true").parquet(*st.files(path))
-    if zorder_by is not None:
-        zcol = _zorder_column(spark, df, zorder_by)
-        df = (
-            df.withColumn("__z", zcol)
-            .repartitionByRange(target_partitions, "__z")
-            .sortWithinPartitions("__z")
-            .drop("__z")
-        )
-    elif sort_by is not None:
-        df = df.repartitionByRange(target_partitions, sort_by).sortWithinPartitions(
-            sort_by
-        )
-    else:
-        df = df.coalesce(target_partitions)
-    actions: list[dict] = [{"remove": {"path": r}} for r in st.adds]
-    actions.extend(_write_data_files(df, path))
-    return _commit(path, actions)
+    return _compact(spark, path, st, list(st.adds), target_partitions, sort_by, zorder_by)
+
+
+def _compact(
+    spark: SparkSession,
+    path: str,
+    st: _TableState,
+    rels: list[str],
+    n: int,
+    sort_by: str | None = None,
+    zorder_by: list[str] | None = None,
+    partition_values: dict | None = None,
+) -> int:
+    """The one compaction body of :func:`compact`, :func:`compact_small`
+    and :func:`compact_partition`: read the live files ``rels`` of
+    ``st``, cluster them into ``n`` files (``sources/io.cluster``) and
+    commit those in their place (:func:`_rewrite`). ``sort_by`` and
+    ``zorder_by`` name LOGICAL columns of ``st`` and map here to the
+    physical names the files carry; a name that is not a current
+    logical column — a retired name after a rename among them, which
+    the files still carry — is refused."""
+    m, dropped = st.fold_schema()
+    df = _read_files(spark, path, rels)
+    names = [sort_by] if sort_by is not None else zorder_by or []
+    if names:
+        logical = _to_logical(df, m, dropped).columns
+        unknown = [c for c in names if c not in logical]
+        if unknown:
+            raise ValueError(f"cannot cluster on {unknown}: not columns of {path} (have {logical})")
+    df = cluster(
+        df,
+        n,
+        sort_by=None if sort_by is None else m.get(sort_by, sort_by),
+        zorder_by=None if zorder_by is None else [m.get(c, c) for c in zorder_by],
+    )
+    return _rewrite(path, rels, df, partition_values=partition_values)
 
 
 def snapshot_pruned_multi(
@@ -1900,6 +1863,95 @@ def snapshot_pruned_multi(
     return _read_subset(spark, path, st, keep, residual)
 
 
+@dataclass
+class _ChangeSpec:
+    """What one commit changed, planned once for both change feeds:
+    :func:`changes` and the stream's read_changes face
+    (``txlog_stream._plan_changes``).
+
+    - ``added`` / ``removed``: absolute paths of the data files the
+      commit added and removed;
+    - ``sidecars``: its ``add_dv`` / ``remove_dv`` entries;
+    - ``before`` / ``after``: the table states either side of it;
+    - ``both``: absolute paths of the files live at both versions that
+      the commit's sidecars target — the only files whose rows a DV
+      commit deletes or resurrects.
+
+    The states and ``both`` are read on first use, so a pure append is
+    planned from its commit file alone."""
+
+    path: str
+    version: int
+    added: list[str]
+    removed: list[str]
+    sidecars: list[dict]
+
+    @cached_property
+    def before(self) -> _TableState:
+        return _replay(self.path, self.version - 1) if self.version > 0 else _TableState()
+
+    @cached_property
+    def after(self) -> _TableState:
+        return _replay(self.path, self.version)
+
+    @cached_property
+    def both(self) -> list[str]:
+        # the sidecars' file-name columns are read driver-side
+        # (deleted-rows-sized), so the feed opens only the data files
+        # they name: O(commit), never O(table)
+        if not self.sidecars:
+            return []
+        import pyarrow.parquet as pq
+
+        targets: set = set()
+        for dv in self.sidecars:
+            sp = _abs(self.path, dv["path"])
+            # fail LOUDLY on a vacuumed sidecar, as restore() does:
+            # skipping it would omit the MOR-deleted/resurrected rows
+            # from a historical feed, and an incremental consumer
+            # would record the commit as applied while missing them
+            if not os.path.exists(sp):
+                raise FileNotFoundError(
+                    f"DV sidecar vacuumed: {dv['path']} (commit "
+                    f"{self.version}); historical change feed for this "
+                    "version is unrecoverable"
+                )
+            targets.update(pq.read_table(sp, columns=["_dv_file"]).column("_dv_file").to_pylist())
+        return [
+            _abs(self.path, p)
+            for p in self.after.adds
+            if p in self.before.adds and os.path.basename(p) in targets
+        ]
+
+
+def _change_spec(path: str, version: int) -> _ChangeSpec:
+    """Plan the change feed of commit ``version`` from its commit FILE
+    (never :func:`_read_log`, which may substitute a synthetic
+    checkpoint commit whose actions are the whole live set). An
+    expired version raises VersionExpired, an uncommitted one
+    ValueError, and a data file of the commit that vacuum reclaimed
+    FileNotFoundError: its rows, and so the feed, are gone."""
+    try:
+        actions = _load_commit(path, version)["actions"]
+    except FileNotFoundError:
+        raise ValueError(f"version {version} not found at {path}")
+    rels = {k: [a[k]["path"] for a in actions if k in a] for k in ("add", "remove")}
+    for rel in rels["add"] + rels["remove"]:
+        if not os.path.exists(_abs(path, rel)):
+            raise FileNotFoundError(
+                f"data file of commit {version} was vacuumed: {rel}; the "
+                "change feed of a commit below the retention window cannot "
+                "be replayed — read from a version past the vacuum"
+            )
+    return _ChangeSpec(
+        path,
+        version,
+        [_abs(path, r) for r in rels["add"]],
+        [_abs(path, r) for r in rels["remove"]],
+        [a.get("add_dv") or a.get("remove_dv") for a in actions if "add_dv" in a or "remove_dv" in a],
+    )
+
+
 def changes(spark: SparkSession, path: str, version: int) -> DataFrame:
     """Row-level change data feed for one commit: what ``version``
     inserted and deleted relative to ``version - 1``.
@@ -1927,110 +1979,57 @@ def changes(spark: SparkSession, path: str, version: int) -> DataFrame:
     ('insert' | 'delete').
     """
     _require_not_partitioned(path, "changes")
-    # read the commit FILE directly: _read_log may substitute a
-    # synthetic checkpoint commit at this version, whose actions are
-    # the full live set, not this commit's delta. Expired versions
-    # raise VersionExpired (their file-level delta is gone for good).
-    try:
-        commit = _load_commit(path, version)
-    except FileNotFoundError:
-        raise ValueError(f"version {version} not found at {path}")
-    added = [_abs(path, a["add"]["path"]) for a in commit["actions"] if "add" in a]
-    removed = [_abs(path, a["remove"]["path"]) for a in commit["actions"] if "remove" in a]
-    has_dv_actions = any(
-        "add_dv" in a or "remove_dv" in a for a in commit["actions"]
-    )
-    if not added and not removed and not has_dv_actions:
+    spec = _change_spec(path, version)
+    if not spec.added and not spec.removed and not spec.sidecars:
         raise ValueError(f"commit {version} touched no files")
 
-    before = _replay(path, version - 1) if version > 0 else _TableState()
-    after = _replay(path, version)
-    dv_before = _dv_pair_df(spark, path, before)
-    dv_after = _dv_pair_df(spark, path, after)
-
-    def _tagged(files: list[str]) -> DataFrame:
-        return _tag_positions(
-            spark.read.option("mergeSchema", "true").parquet(*files)
-        )
+    dv_before = _dv_pair_df(spark, path, spec.before)
+    dv_after = _dv_pair_df(spark, path, spec.after)
 
     def _minus_dvs(files: list[str], dv: DataFrame | None) -> DataFrame | None:
         """Rows of ``files`` as the snapshot at that side saw them —
         raw rows minus the side's active DV pairs."""
         if not files:
             return None
-        t = _tagged(files)
+        t = _tag_positions(_read_files(spark, path, files))
         if dv is not None:
             t = t.join(F.broadcast(dv), ["_dv_file", "_dv_pos"], "left_anti")
         return t.drop("_dv_file", "_dv_pos")
 
     # file-level diff, each side read through ITS version's DVs
-    a_df = _minus_dvs(added, dv_after)
-    r_df = _minus_dvs(removed, dv_before)
+    a_df = _minus_dvs(spec.added, dv_after)
+    r_df = _minus_dvs(spec.removed, dv_before)
     inserts = a_df.exceptAll(r_df) if (a_df is not None and r_df is not None) else a_df
     deletes = r_df.exceptAll(a_df) if (a_df is not None and r_df is not None) else r_df
 
-    # DV-level diff on files live at BOTH versions: pairs newly
-    # active are row deletes, pairs newly retired are row inserts.
-    # Only files the commit's own sidecars TARGET can carry a delta,
-    # so read the sidecars' file names driver-side (sidecars are
-    # deleted-rows-sized) and open just those data files — the CDF
-    # stays O(commit), never O(table).
-    if has_dv_actions:
-        import pyarrow.parquet as pq
+    # DV-level diff on the files live at BOTH versions that the
+    # commit's own sidecars target: pairs newly active are row
+    # deletes, pairs newly retired are row inserts
+    if spec.both:
+        t = _tag_positions(_read_files(spark, path, spec.both))
 
-        touched: set = set()
-        for a in commit["actions"]:
-            dv = a.get("add_dv") or a.get("remove_dv")
-            if dv:
-                # fail LOUDLY on a vacuumed sidecar, mirroring
-                # restore()'s contract: silently skipping it would
-                # omit the MOR-deleted/resurrected rows from a
-                # historical feed — an incremental consumer would
-                # record the commit as applied while missing its
-                # deletes (r9 advisor finding)
-                if not os.path.exists(_abs(path, dv["path"])):
-                    raise FileNotFoundError(
-                        f"DV sidecar vacuumed: {dv['path']} (commit "
-                        f"{version}); historical change feed for this "
-                        "version is unrecoverable"
-                    )
-                names = pq.read_table(
-                    _abs(path, dv["path"]), columns=["_dv_file"]
-                ).column("_dv_file").to_pylist()
-                touched.update(names)
-        both = [
-            p
-            for p in after.adds
-            if p in before.adds and os.path.basename(p) in touched
-        ]
-        if both:
-            empty = None
-            t = _tagged([_abs(path, p) for p in both])
+        def _match(dv_in: DataFrame | None, dv_not: DataFrame | None):
+            if dv_in is None:
+                return None
+            delta = dv_in.exceptAll(dv_not) if dv_not is not None else dv_in
+            return t.join(
+                F.broadcast(delta), ["_dv_file", "_dv_pos"], "semi"
+            ).drop("_dv_file", "_dv_pos")
 
-            def _match(dv_in: DataFrame | None, dv_not: DataFrame | None):
-                if dv_in is None:
-                    return empty
-                delta = (
-                    dv_in.exceptAll(dv_not) if dv_not is not None else dv_in
-                )
-                return t.join(
-                    F.broadcast(delta), ["_dv_file", "_dv_pos"], "semi"
-                ).drop("_dv_file", "_dv_pos")
-
-            new_deletes = _match(dv_after, dv_before)
-            new_inserts = _match(dv_before, dv_after)
-            if new_deletes is not None:
-                deletes = (
-                    deletes.unionByName(new_deletes)
-                    if deletes is not None
-                    else new_deletes
-                )
-            if new_inserts is not None:
-                inserts = (
-                    inserts.unionByName(new_inserts)
-                    if inserts is not None
-                    else new_inserts
-                )
+        new_deletes = _match(dv_after, dv_before)
+        new_inserts = _match(dv_before, dv_after)
+        if new_deletes is not None:
+            deletes = (
+                deletes.unionByName(new_deletes)
+                if deletes is not None
+                else new_deletes
+            )
+        if new_inserts is not None:
+            inserts = (
+                inserts.unionByName(new_inserts)
+                if inserts is not None
+                else new_inserts
+            )
 
     parts = []
     if inserts is not None:
@@ -2041,7 +2040,7 @@ def changes(spark: SparkSession, path: str, version: int) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     # feed rows surface the LOGICAL names active at this version
-    m, dropped = after.fold_schema()
+    m, dropped = spec.after.fold_schema()
     return _to_logical(out, m, dropped)
 
 
@@ -2367,18 +2366,11 @@ def delete_where_dv(spark: SparkSession, path: str, predicate) -> int:
     n = hits.count()
     if n == 0:
         return st.version
-    rel = os.path.join("dv", f"{uuid.uuid4().hex}.parquet")
-    final = _abs(path, rel)
-    os.makedirs(os.path.dirname(final), exist_ok=True)
-    staging = os.path.join(_data_dir(path), f"_staging_{uuid.uuid4().hex}")
-    hits.coalesce(1).write.mode("overwrite").parquet(staging)
-    part = next(
-        name for name in sorted(os.listdir(staging)) if name.endswith(".parquet")
-    )
-    os.rename(os.path.join(staging, part), final)
-    for name in os.listdir(staging):
-        os.remove(os.path.join(staging, name))
-    os.rmdir(staging)
+    # the sidecar is staged like a data file, then moved into dv/
+    (staged,) = _write_files(hits.coalesce(1), path)
+    rel = os.path.join("dv", os.path.basename(staged["add"]["path"]))
+    os.makedirs(_abs(path, "dv"), exist_ok=True)
+    os.rename(_abs(path, staged["add"]["path"]), _abs(path, rel))
     return _commit(path, [{"add_dv": {"path": rel, "n": n}}])
 
 
@@ -2405,15 +2397,8 @@ def materialize_dvs(spark: SparkSession, path: str) -> int:
     # file — the per-file loop cost 16 sequential jobs on a 16-file
     # table (14.7 s in the bench's E2d extra) for work that is a
     # single scan's worth of data. Untouched files are never read.
-    keep = _with_dvs(
-        spark,
-        path,
-        st,
-        spark.read.option("mergeSchema", "true").parquet(*[_abs(path, r) for r in touched]),
-    )
-    actions: list[dict] = [{"remove": {"path": r}} for r in touched]
-    actions.extend(_write_data_files(keep, path))
-    return _commit(path, actions)
+    keep = _with_dvs(spark, path, st, _read_files(spark, path, touched))
+    return _rewrite(path, touched, keep)
 
 
 def _has_active_dvs(path: str, st: _TableState) -> bool:

@@ -315,67 +315,22 @@ def _plan_changes(
     parts: list[InputPartition] = []
     for v in range(start_after + 1, end + 1):
         # expired commits: txlog.VersionExpired (see _plan_commits)
-        try:
-            actions = txlog._load_commit(path, v)["actions"]
-        except FileNotFoundError:
-            raise ValueError(f"version {v} not found at {path}")
-        added = [a["add"]["path"] for a in actions if "add" in a]
-        removed = [a["remove"]["path"] for a in actions if "remove" in a]
-        dv_acts = [
-            (a.get("add_dv") or a.get("remove_dv"))
-            for a in actions
-            if "add_dv" in a or "remove_dv" in a
-        ]
-        for rel in added + removed:
-            if not os.path.exists(txlog._abs(path, rel)):
-                raise FileNotFoundError(
-                    f"data file of commit {v} was vacuumed: {rel}; a "
-                    "change feed starting below the retention window "
-                    "cannot replay it — raise starting_version past the "
-                    "vacuum"
-                )
-        if not removed and not dv_acts:
-            for rel in added:
-                parts.append(
-                    _FilePartition(
-                        txlog._abs(path, rel), v, rename, sorted(dropped)
-                    )
-                )
+        spec = txlog._change_spec(path, v)
+        if not spec.removed and not spec.sidecars:
+            parts.extend(_FilePartition(f, v, rename, sorted(dropped)) for f in spec.added)
             continue
-        # change commit — assemble the diff spec changes() plans:
-        # each side's rows are read through ITS version's active DVs
-        before = txlog._replay(path, v - 1) if v > 0 else txlog._TableState()
-        after = txlog._replay(path, v)
-        dv_before = [txlog._abs(path, p) for p in before.dvs]
-        dv_after = [txlog._abs(path, p) for p in after.dvs]
-        both: list = []
-        if dv_acts:
-            import pyarrow.parquet as pq
-
-            touched: set = set()
-            for dv in dv_acts:
-                sp = txlog._abs(path, dv["path"])
-                if not os.path.exists(sp):
-                    raise FileNotFoundError(
-                        f"DV sidecar vacuumed: {dv['path']} (commit {v}); "
-                        "historical change feed for this version is "
-                        "unrecoverable"
-                    )
-                touched.update(
-                    pq.read_table(sp, columns=["_dv_file"])
-                    .column("_dv_file")
-                    .to_pylist()
-                )
-            both = [
-                txlog._abs(path, p)
-                for p in after.adds
-                if p in before.adds and os.path.basename(p) in touched
-            ]
+        # change commit — the diff spec changes() plans: each side's
+        # rows are read through ITS version's active DVs
         parts.append(
             _CdfCommitPartition(
-                v, [txlog._abs(path, r) for r in added],
-                [txlog._abs(path, r) for r in removed],
-                dv_before, dv_after, both, rename, sorted(dropped),
+                v,
+                spec.added,
+                spec.removed,
+                [txlog._abs(path, p) for p in spec.before.dvs],
+                [txlog._abs(path, p) for p in spec.after.dvs],
+                spec.both,
+                rename,
+                sorted(dropped),
             )
         )
     return parts
@@ -648,24 +603,14 @@ def _resolve_start(options: dict) -> int:
 
 
 def _commit_add_bytes(path: str, version: int) -> int:
-    """Bytes this commit ADDS, from the log alone: sum of the add
-    actions' ``size`` fields (recorded at write time). Legacy
-    commits written before sizes were logged fall back to one local
-    stat per file — a migration path only; new logs never stat."""
+    """Bytes this commit ADDS, from the log alone: the sum of its add
+    actions' sizes (``txlog._add_size``, which stats only a legacy
+    add written before sizes were logged)."""
     try:
         actions = txlog._load_commit(path, version)["actions"]
     except FileNotFoundError:
         raise ValueError(f"version {version} not found at {path}")
-    total = 0
-    for a in actions:
-        add = a.get("add")
-        if add is None:
-            continue
-        sz = add.get("size")
-        if sz is None:
-            sz = os.path.getsize(txlog._abs(path, add["path"]))
-        total += int(sz)
-    return total
+    return sum(txlog._add_size(path, a["add"]) for a in actions if "add" in a)
 
 
 def _bytes_cap_end(path: str, base: int, hi: int, max_bytes: int) -> int:

@@ -48,58 +48,3 @@ def test_rand_deterministic_and_in_range(spark):
     for r in a:
         assert 100 <= r["close"] < 200
         assert 1_000_000 <= r["volume"] < 2_000_000
-
-
-def test_observed_write_counts_without_second_scan(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from stockify_spark.sources.io import load_table, write_parquet_observed
-
-    li = load_table(spark, "/root/testdata/sf0.001", "lineitem")
-    got = write_parquet_observed(
-        li,
-        str(tmp_path / "observed"),
-        metrics={
-            "rows_written": F.count(F.lit(1)),
-            "sum_qty": F.round(F.sum("l_quantity"), 2),
-        },
-    )
-    assert got["rows_written"] == li.count()
-    expected_sum = li.agg(F.round(F.sum("l_quantity"), 2)).collect()[0][0]
-    assert got["sum_qty"] == expected_sum
-
-
-def test_read_jsonl_malformed_record_policies(spark, tmp_path):
-    """r9: the three malformed-line policies of the JSONL ingest
-    surface — quarantine (PERMISSIVE), drop, and abort."""
-    import pytest
-    from pyspark.sql import types as T
-
-    from stockify_spark.sources.io import read_jsonl
-
-    p = tmp_path / "docs.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "alpha"}\n'
-        "{broken json\n"
-        '{"doc_id": 3, "text": "gamma"}\n'
-    )
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), True),
-            T.StructField("text", T.StringType(), True),
-        ]
-    )
-    ok = read_jsonl(spark, str(p), schema)  # PERMISSIVE
-    rows = ok.select("doc_id", "text", "_corrupt_record").collect()
-    assert len(rows) == 3
-    good = {r.doc_id for r in rows if r._corrupt_record is None}
-    bad = [r for r in rows if r._corrupt_record is not None]
-    assert good == {1, 3} and len(bad) == 1
-    assert bad[0]._corrupt_record.startswith("{broken")
-    assert bad[0].doc_id is None  # data columns quarantine to NULL
-
-    dropped = read_jsonl(spark, str(p), schema, mode="DROPMALFORMED")
-    assert {r.doc_id for r in dropped.collect()} == {1, 3}
-
-    with pytest.raises(Exception, match="(?i)malformed|failfast"):
-        read_jsonl(spark, str(p), schema, mode="FAILFAST").collect()

@@ -48,12 +48,8 @@ KEPT: dict[str, str] = {
         "the reference's random table (stockify.cu:647-657) for fixture tests",
     "sources.io.register_views":
         "the spark.sql entry point over every table (tests/test_sql_entry.py)",
-    "sources.io.read_jsonl":
-        "JSON-lines ingest with a malformed-record policy; test-only (ROADMAP Direction 5)",
     "sources.io.write_bucketed":
         "bucketed layout whose exchange-free join tests/test_plans.py pins",
-    "sources.io.write_parquet_observed":
-        "write with metrics observed in the same job; test-only (ROADMAP Direction 5)",
     "sources.io.write_zorder_layout":
         "Z-order layout whose file skipping tests/test_plans.py pins",
     "sources.txlog.foreach_batch_sink":

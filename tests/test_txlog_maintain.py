@@ -126,6 +126,31 @@ class TestMaintain:
         )
         assert d["compact_small"]["triggered"]
 
+    def test_small_file_sizes_come_from_the_log(self, spark, tmp, monkeypatch):
+        """The small-file trigger and compact_small size each live file
+        from its add action's logged size: with os.path.getsize
+        refusing every file live before the call, maintain returns the
+        decisions an unpatched run on a copy of the table returns."""
+        import shutil
+
+        path = os.path.join(tmp, "t")
+        _fragmented(spark, path, n_appends=3)
+        twin = os.path.join(tmp, "twin")
+        shutil.copytree(path, twin)
+        policy = {"small_file_bytes": 512 << 20, "small_file_fraction": 0.5}
+        want = txlog.maintain(spark, twin, policy)
+        assert want[0]["triggered"]
+        live = {os.path.realpath(f) for f in txlog.live_files(path)}
+        real = os.path.getsize
+
+        def getsize(p):
+            if os.path.realpath(p) in live:
+                raise AssertionError(f"stat of a file whose size is logged: {p}")
+            return real(p)
+
+        monkeypatch.setattr(os.path, "getsize", getsize)
+        assert txlog.maintain(spark, path, policy) == want
+
     def test_compact_skipped_while_dvs_active(self, spark, tmp):
         path = os.path.join(tmp, "t")
         _fragmented(spark, path, n_appends=2)

@@ -222,6 +222,36 @@ def test_compact_partition_sort_by_rejects_partition_columns(spark, ptable):
         )
 
 
+def test_compact_partition_sorts_on_renamed_column(spark):
+    """Under column mapping compact_partition clusters on the LOGICAL
+    name, as compact does: after a rename v -> w, sort_by="w" sorts
+    on the physical v the files carry, the retired name is refused,
+    and the rows keep their logical columns."""
+    path = os.path.join(tempfile.mkdtemp(prefix="pren_"), "t")
+    df = spark.range(0, 60).select(
+        "id",
+        (F.col("id") * 7 % 60).alias("v"),
+        (F.col("id") % 3).cast("int").alias("bucket"),
+    )
+    txlog.create_partitioned(df.coalesce(1), path, ["bucket"])
+    for off in (60, 120):
+        txlog.append(df.withColumn("id", F.col("id") + off).coalesce(1), path)
+    exp = sorted((r.id, r.v, r.bucket) for r in txlog.snapshot(spark, path).collect())
+    txlog.rename_column(path, "v", "w")
+    with pytest.raises(ValueError, match="'v'"):
+        txlog.compact_partition(spark, path, {"bucket": 1}, target_partitions=2, sort_by="v")
+    txlog.compact_partition(spark, path, {"bucket": 1}, target_partitions=2, sort_by="w")
+    adds = [
+        a for a in txlog._replay(path).adds.values() if a["partitionValues"] == {"bucket": "1"}
+    ]
+    # two range-sorted files on the physical column: disjoint boxes
+    boxes = sorted((a["stats"]["min"]["v"], a["stats"]["max"]["v"]) for a in adds)
+    assert len(boxes) == 2 and boxes[0][1] < boxes[1][0]
+    snap = txlog.snapshot(spark, path)
+    assert snap.columns == ["id", "w", "bucket"]
+    assert sorted((r.id, r.w, r.bucket) for r in snap.collect()) == exp
+
+
 # ---------------------------------------------------------------------------
 # r13 ADVICE items 1-3: partitioned routing for the idempotent /
 # multi-table writers, and typed partition-value normalization

@@ -458,6 +458,10 @@ class TestColumnMappingStream:
                 .load()
                 .count()
             )
+        # the batch change feed plans commits like the stream does, so
+        # it names the vacuumed file too (not Spark's PATH_NOT_FOUND)
+        with pytest.raises(FileNotFoundError, match="vacuumed"):
+            txlog.changes(spark, path, 1)
 
 
 def test_recover_races_writer_no_double_apply(spark, tmp_path):
