@@ -558,8 +558,9 @@ def txlog_bloom_lookup(spark, sf_dir):
 # remaining execution shapes.
 #
 # The txlog ACID format gains its two Delta-parity metadata features:
-# additive SCHEMA EVOLUTION (mergeSchema snapshots were already the
-# read path — this pins the end-to-end behavior through the log) and
+# additive SCHEMA EVOLUTION (a column added by an append is logged in
+# the table's data schema — this pins the end-to-end behavior through
+# the log) and
 # zero-copy SHALLOW CLONE (a metadata-only commit referencing the
 # source's files, with the vacuum foreign-file guard). The two
 # execution shapes are the depth-2 sequential recursion (biquad IIR
@@ -571,7 +572,7 @@ def txlog_bloom_lookup(spark, sf_dir):
 def _evolution_table(spark, sf_dir: str) -> str:
     """Scratch table: v0 creates WITHOUT o_orderstatus (keys %3==0),
     v1/v2 append WITH it (keys %3==1, %3==2) — old files must read
-    the new column as NULL through the merged-schema snapshot."""
+    the new column as NULL through the widened-schema snapshot."""
     from stockify_spark.sources import txlog
 
     def build(path: str) -> None:
@@ -598,12 +599,11 @@ FROM orders GROUP BY 1
 def txlog_schema_evolution(spark, sf_dir):
     """Additive schema evolution through the commit log: the table
     is created WITHOUT o_orderstatus, later appends carry it, and
-    the merged-schema snapshot must serve the old files' rows with
+    the widened-schema snapshot must serve the old files' rows with
     NULL status while the new files keep their values — the oracle
     states exactly that net effect over the source table (keys
-    %3==0 were written pre-evolution → bucket 'none'). Parquet's
-    per-file footer schema is the source of truth; no rewrite of
-    old data ever happens."""
+    %3==0 were written pre-evolution → bucket 'none'). The widened
+    schema is a log action; no rewrite of old data ever happens."""
     from stockify_spark.sources import txlog
 
     path = _evolution_table(spark, sf_dir)

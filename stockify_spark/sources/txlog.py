@@ -18,9 +18,10 @@ A commit is ``{"version": N, "ts": ms, "actions": [...]}`` whose
 actions are, one key each: ``add`` / ``remove`` (data files, with
 per-file stats), ``add_dv`` / ``remove_dv`` (deletion-vector
 sidecars), ``constraint``, ``rename`` / ``drop_column`` (column
-mapping), ``partitioning``, ``index`` (per-file bloom filters),
-``txn`` (idempotent-append markers) and ``mtxn`` (multi-table
-transaction markers). Paths are stored RELATIVE to the table root
+mapping), ``partitioning``, ``data_schema`` (the physical schema of
+the data files), ``index`` (per-file bloom filters), ``txn``
+(idempotent-append markers) and ``mtxn`` (multi-table transaction
+markers). Paths are stored RELATIVE to the table root
 (like Delta), so a table directory can be renamed or relocated
 wholesale without invalidating its log.
 
@@ -29,11 +30,17 @@ log up to a version into a :class:`_TableState`, and every read and
 write of the current table goes through one replay. A checkpoint is
 that state written back as actions (:func:`_emit`), so replay cost is
 O(commits since the newest checkpoint). A snapshot read is
-``spark.read.parquet(*live_files)`` — file-level pruning for free, no
-directory listing of data/. Faces that need per-commit history
-(history, changes, vacuum, log retention, the stream sources) read the
-commit files themselves; the two change feeds plan each commit with
-one :func:`_change_spec`.
+``spark.read.schema(data_schema).parquet(*live_files)`` — file-level
+pruning for free, no directory listing of data/, and no footer opened
+to plan it. Schema evolution is a log action, not a read policy:
+``create`` logs the data files' schema and an append that adds
+columns logs the widened one, so a column added later reads as NULL
+on older files, and a log without the action (a table written before
+it existed) falls back to a ``mergeSchema`` footer union
+(:func:`_read_files`). Faces that need per-commit history (history,
+changes, vacuum, log retention, the stream sources) read the commit
+files themselves; the two change feeds plan each commit with one
+:func:`_change_spec`.
 
 Writes have one path too. Every face reads table files with
 :func:`_read_files`, stages new ones with :func:`_write_files`
@@ -56,6 +63,7 @@ from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from stockify_spark.functions.scale import materialize
 from stockify_spark.sources.io import cluster
@@ -149,6 +157,9 @@ class _TableState:
     - ``constraints``: CHECK constraints, in registration order.
     - ``schema``: the ordered ``rename`` / ``drop_column`` actions.
     - ``partitioning``: the partition spec, or None.
+    - ``data_schema``: the data files' physical schema as
+      ``StructType.jsonValue()`` (partition columns excluded, every
+      field nullable), or None for a log that predates the action.
     - ``blooms``: (live file, column) -> latest bloom index entry.
     - ``txns``: app id -> highest idempotent-append version.
     - ``mtxns``: multi-table transaction ids applied to this table.
@@ -160,6 +171,7 @@ class _TableState:
     constraints: list = field(default_factory=list)
     schema: list = field(default_factory=list)
     partitioning: dict | None = None
+    data_schema: dict | None = None
     blooms: dict = field(default_factory=dict)
     txns: dict = field(default_factory=dict)
     mtxns: set = field(default_factory=set)
@@ -211,6 +223,9 @@ def _replay(path: str, version: int | None = None) -> _TableState:
       order-sensitive across both kinds, so the list keeps log order.
     - partitioning: a reader must still know to reconstitute the
       partition columns from partitionValues.
+    - data schema: losing it would send every read back to the
+      footer union, and widen a restore-narrowed schema again. The
+      latest action wins.
     - bloom indexes: losing them degrades snapshot_point from
       skip-by-filter to open-every-file (results stay correct).
       Latest entry per (file, column) wins; an index on a removed
@@ -239,6 +254,8 @@ def _replay(path: str, version: int | None = None) -> _TableState:
                 st.schema.append(a)
             elif "partitioning" in a:
                 st.partitioning = a["partitioning"]
+            elif "data_schema" in a:
+                st.data_schema = a["data_schema"]
             elif "index" in a:
                 st.blooms[(a["index"]["path"], a["index"]["column"])] = a["index"]
             elif "txn" in a:
@@ -261,6 +278,7 @@ def _emit(st: _TableState, rebase=lambda p: p) -> list[dict]:
 
     return (
         ([{"partitioning": st.partitioning}] if st.partitioning else [])
+        + ([{"data_schema": st.data_schema}] if st.data_schema else [])
         + [{"constraint": c} for c in st.constraints]
         + [{"add_dv": moved(d)} for d in st.dvs.values()]
         + list(st.schema)
@@ -652,12 +670,41 @@ def live_files(path: str, version: int | None = None) -> list[str]:
     return _replay(path, version).files(path)
 
 
-def _read_files(spark: SparkSession, path: str, rels) -> DataFrame:
-    """The one read of table files, given in log form: ``mergeSchema``
-    unions the file schemas, so a column added by a later append reads
-    as NULL on older files (additive schema evolution; each immutable
-    file's footer schema is the source of truth)."""
-    return spark.read.option("mergeSchema", "true").parquet(*[_abs(path, r) for r in rels])
+def _read_files(spark: SparkSession, path: str, st: _TableState, rels) -> DataFrame:
+    """The one read of table files, given in log form, with the data
+    schema ``st`` logs: Spark plans the scan from the log and opens no
+    footer, and a column added by a later append reads as NULL on
+    older files (additive schema evolution). A log without a
+    ``data_schema`` action, written before the action existed, is read
+    with ``mergeSchema``, which unions the files' footers in a Spark
+    job."""
+    files = [_abs(path, r) for r in rels]
+    if st.data_schema is None:
+        return spark.read.option("mergeSchema", "true").parquet(*files)
+    return spark.read.schema(StructType.fromJson(st.data_schema)).parquet(*files)
+
+
+def _data_schema(df: DataFrame, partition_cols=()) -> dict:
+    """The body of a ``data_schema`` action for files written from
+    ``df``: its schema without the partition columns, which live in
+    the log's partitionValues, with every field nullable, since an
+    older file reads a later-added column as NULL."""
+    return {
+        "type": "struct",
+        "fields": [
+            {**f.jsonValue(), "nullable": True}
+            for f in df.schema.fields
+            if f.name not in partition_cols
+        ],
+    }
+
+
+def _widen(schema: dict, other: dict) -> dict:
+    """``schema`` with the fields of ``other`` that it lacks appended,
+    matched by column name, in ``other``'s order."""
+    have = {f["name"] for f in schema["fields"]}
+    added = [f for f in other["fields"] if f["name"] not in have]
+    return {**schema, "fields": schema["fields"] + added}
 
 
 def _add_size(path: str, add: dict) -> int:
@@ -712,7 +759,8 @@ def _write_files(df: DataFrame, path: str, partition_cols=()) -> list[dict]:
     partitioned write's values move INTO the add (Delta's
     partitionValues), not the file path, so the log stays the single
     source of partition truth and file names stay uniform; an
-    unpartitioned add carries no partitionValues key."""
+    unpartitioned add carries no partitionValues key. 0-row files are
+    dropped (:func:`_drop_empty`)."""
     import shutil
     import urllib.parse
 
@@ -738,7 +786,18 @@ def _write_files(df: DataFrame, path: str, partition_cols=()) -> list[dict]:
                 }
             adds.append({"add": add})
     shutil.rmtree(staging, ignore_errors=True)
-    return adds
+    return _drop_empty(path, adds)
+
+
+def _drop_empty(path: str, adds: list[dict]) -> list[dict]:
+    """``adds`` without their 0-row files, which are deleted: such a
+    file adds a file open to every read and no rows. When every file
+    is empty one is kept, so an empty write still reads back."""
+    keep = [a for a in adds if a["add"]["stats"]["rows"]] or adds[:1]
+    for a in adds:
+        if a not in keep:
+            os.remove(_abs(path, a["add"]["path"]))
+    return keep
 
 
 def _now_ms() -> int:
@@ -803,7 +862,36 @@ class CommitConflict(RuntimeError):
     version-number race alone is NOT sufficient validation."""
 
 
-def _commit(path: str, actions: list[dict]) -> int:
+def _rebase_schema(
+    actions: list[dict], head: _TableState, base: _TableState | None = None
+) -> list[dict]:
+    """``actions`` as they land on ``head``: a ``data_schema`` action
+    among them becomes, by column name, the head's schema followed by
+    the action's fields the head lacks. With ``base``, the state the
+    actions were derived from, a head field that ``base`` had and the
+    action lacks is left out, so a restore still narrows the schema.
+    Two appends that race for one version and each add a column thus
+    both keep it, in commit order."""
+    if head.data_schema is None:
+        return actions
+    known = {f["name"] for f in base.data_schema["fields"]} if base and base.data_schema else set()
+
+    def rebased(schema: dict) -> dict:
+        mine = {f["name"] for f in schema["fields"]}
+        kept = [f for f in head.data_schema["fields"] if f["name"] in mine or f["name"] not in known]
+        return _widen({**schema, "fields": kept}, schema)
+
+    return [
+        {"data_schema": rebased(a["data_schema"])} if a.get("data_schema") is not None else a
+        for a in actions
+    ]
+
+
+def _commit(path: str, actions: list[dict], base: _TableState | None = None) -> int:
+    """Commit ``actions`` at the next version, retrying on a lost race
+    against a fresh replay: remove actions are re-validated and a
+    ``data_schema`` action is merged with the head's
+    (:func:`_rebase_schema`, which ``base`` is passed to)."""
     removes = [a["remove"]["path"] for a in actions if "remove" in a]
     while True:
         # replay afresh on every attempt: a lost race means the state
@@ -822,7 +910,7 @@ def _commit(path: str, actions: list[dict]) -> int:
                     f"transaction also removes (first: {gone[0]}); "
                     "re-derive actions from the current snapshot and retry"
                 )
-        if _try_commit(path, version, actions):
+        if _try_commit(path, version, _rebase_schema(actions, st, base)):
             return version
 
 
@@ -835,7 +923,7 @@ def _rewrite(
     and commit them in place of the log-form paths ``removed``. The
     commit's conflict check refuses it if a concurrent writer removed
     any of those files first."""
-    adds = [a for df in frames for a in _write_files(df, path)]
+    adds = _drop_empty(path, [a for df in frames for a in _write_files(df, path)])
     if partition_values is not None:
         for a in adds:
             a["add"]["partitionValues"] = dict(partition_values)
@@ -845,7 +933,7 @@ def _rewrite(
 def create(df: DataFrame, path: str) -> int:
     os.makedirs(_log_dir(path), exist_ok=True)
     os.makedirs(_data_dir(path), exist_ok=True)
-    return _commit(path, _write_files(df, path))
+    return _commit(path, [{"data_schema": _data_schema(df)}] + _write_files(df, path))
 
 
 def append(df: DataFrame, path: str) -> int:
@@ -854,7 +942,9 @@ def append(df: DataFrame, path: str) -> int:
 
 def _stage_append(df: DataFrame, path: str, st: _TableState, op: str) -> list[dict]:
     """Validate an append batch against the table state and write its
-    data files; returns their add actions. Constraints validate on
+    data files; returns their add actions, after a ``data_schema``
+    action when the batch adds columns to the logged schema (or starts
+    it, on a table with no files yet). Constraints validate on
     the LOGICAL batch (renaming a constrained column is rejected, so
     constraint names are always identity-mapped); files are written
     with PHYSICAL names so every file of the table shares one footer
@@ -870,7 +960,14 @@ def _stage_append(df: DataFrame, path: str, st: _TableState, op: str) -> list[di
     missing = [c for c in cols if c not in df.columns]
     if missing:
         raise ValueError(f"{op} missing partition columns for {path}: {missing}")
-    return _write_files(phys, path, cols)
+    batch = _data_schema(phys, cols)
+    if st.data_schema is not None:
+        schema = _widen(st.data_schema, batch)
+    else:
+        # a log that predates the action keeps its mergeSchema reads
+        schema = None if st.adds else batch
+    logged = [] if schema in (None, st.data_schema) else [{"data_schema": schema}]
+    return logged + _write_files(phys, path, cols)
 
 
 class ConstraintViolation(RuntimeError):
@@ -965,21 +1062,26 @@ def create_partitioned(df: DataFrame, path: str, partition_by: list[str]) -> int
     spec = {"cols": list(partition_by), "types": types}
     with open(_partition_marker(path), "w") as f:
         json.dump(spec, f)  # O(1) presence probe; the log action rules
-    return _commit(path, [{"partitioning": spec}] + _write_files(df, path, partition_by))
+    return _commit(
+        path,
+        [{"partitioning": spec}, {"data_schema": _data_schema(df, partition_by)}]
+        + _write_files(df, path, partition_by),
+    )
 
 
-def _read_partitioned(spark: SparkSession, path: str, adds, part: dict) -> DataFrame:
+def _read_partitioned(spark: SparkSession, path: str, st: _TableState, adds) -> DataFrame:
     """Union-by-name read of add actions grouped by partitionValues,
     with the partition columns re-attached as typed literals — the
     Delta read path for partitioned tables. Group count = partition
     count; each group is ONE multi-file parquet scan, so the plan
     stays a union of scans, not a per-file loop."""
+    part = st.partitioning
     pieces = []
     # nulls (hive default partition) sort last within each column
     order = lambda key: [(c, v is None, v or "") for c, v in key]  # noqa: E731
     groups = _group_adds_by_partition(adds)
     for key, group in sorted(groups.items(), key=lambda kv: order(kv[0])):
-        df = _read_files(spark, path, [a["path"] for a in group])
+        df = _read_files(spark, path, st, [a["path"] for a in group])
         for col, val in key:
             typ = part.get("types", {}).get(col, "string")
             df = df.withColumn(col, F.lit(val).cast(typ))
@@ -1067,7 +1169,7 @@ def snapshot_partition_pruned(
     if not adds:
         return _snapshot(spark, path, st).filter(F.lit(False))
     m, dropped = st.fold_schema()
-    return _to_logical(_read_partitioned(spark, path, adds, st.partitioning), m, dropped)
+    return _to_logical(_read_partitioned(spark, path, st, adds), m, dropped)
 
 
 def compact_partition(
@@ -1271,7 +1373,7 @@ def table_stats(path: str, version: int | None = None) -> dict:
                     "budget and no active SparkSession is available "
                     "for the distributed distinct count"
                 )
-            dv = spark.read.parquet(*abs_rels).where(
+            dv = spark.read.schema(_DV_SCHEMA).parquet(*abs_rels).where(
                 F.col("_dv_file").isin(*sorted(live_names))
             )
             rows -= dv.select("_dv_file", "_dv_pos").distinct().count()
@@ -1383,9 +1485,12 @@ def _schema_change(path: str, name: str, verb: str, refuse) -> _TableState:
     if not st.adds:
         raise FileNotFoundError(f"empty txlog table at {path}")
     m, dropped = st.fold_schema()
-    physical_cols: set = set()
-    for f in st.files(path):
-        physical_cols.update(pq.read_schema(f).names)
+    if st.data_schema is not None:
+        physical_cols = {f["name"] for f in st.data_schema["fields"]}
+    else:
+        physical_cols = set()
+        for f in st.files(path):
+            physical_cols.update(pq.read_schema(f).names)
     rev = {p: lg for lg, p in m.items()}
     logical_cols = {rev.get(p, p) for p in physical_cols if p not in dropped}
     if name not in logical_cols:
@@ -1523,10 +1628,11 @@ def snapshot(
     timestamp_ms: int | None = None,
 ) -> DataFrame:
     """Read the table as of ``version`` (default: latest) — time
-    travel is just replaying less of the log. ``mergeSchema`` unions
-    the file schemas, so columns added by later appends read as NULL
-    on older files (additive schema evolution; parquet's footer
-    schema per immutable file is the source of truth). Active
+    travel is just replaying less of the log. The files are read with
+    the data schema logged as of ``version`` (:func:`_read_files`), so
+    columns added by later appends read as NULL on older files
+    (additive schema evolution), a version before a column was added
+    reads without it, and building the DataFrame opens no footer. Active
     deletion vectors (merge-on-read deletes) are applied as one
     anti-join on (file name, row position). Column renames active at
     ``version`` translate physical file names to logical ones —
@@ -1550,12 +1656,19 @@ def _snapshot(spark: SparkSession, path: str, st: _TableState) -> DataFrame:
             )
         if not st.adds:
             raise FileNotFoundError(f"empty txlog table at {path}")
-        base = _read_partitioned(spark, path, st.adds.values(), st.partitioning)
+        base = _read_partitioned(spark, path, st, st.adds.values())
         return _to_logical(base, m, dropped)
     if not st.adds:
         raise FileNotFoundError(f"empty txlog table at {path}")
-    base = _read_files(spark, path, st.adds)
+    base = _read_files(spark, path, st, st.adds)
     return _to_logical(_with_dvs(spark, path, st, base), m, dropped)
+
+
+# The columns of a deletion-vector sidecar: sidecars are read with
+# this schema, so no read of them infers one.
+_DV_SCHEMA = StructType(
+    [StructField("_dv_file", StringType()), StructField("_dv_pos", LongType())]
+)
 
 
 def _dv_pair_df(spark: SparkSession, path: str, st: _TableState) -> DataFrame | None:
@@ -1573,7 +1686,7 @@ def _dv_pair_df(spark: SparkSession, path: str, st: _TableState) -> DataFrame | 
     if not st.dvs or not live_names:
         return None
     return (
-        spark.read.parquet(*[_abs(path, p) for p in st.dvs])
+        spark.read.schema(_DV_SCHEMA).parquet(*[_abs(path, p) for p in st.dvs])
         .filter(F.col("_dv_file").isin(*sorted(live_names)))
         .select("_dv_file", "_dv_pos")
         .distinct()
@@ -1610,7 +1723,7 @@ def _hits(spark: SparkSession, path: str, st: _TableState, predicate) -> DataFra
     ``predicate`` (over LOGICAL names) is TRUE — the scan both delete
     faces share. Rows where it is FALSE or NULL are not hits."""
     m, dropped = st.fold_schema()
-    base = _read_files(spark, path, st.adds)
+    base = _read_files(spark, path, st, st.adds)
     return (
         _to_logical(_tag_positions(base), m, dropped)
         .filter(predicate)
@@ -1645,7 +1758,7 @@ def _read_subset(
     if not adds:
         return _snapshot(spark, path, st).filter(F.lit(False))
     m, dropped = st.fold_schema()
-    base = _read_files(spark, path, [a["path"] for a in adds])
+    base = _read_files(spark, path, st, [a["path"] for a in adds])
     return _to_logical(_with_dvs(spark, path, st, base).filter(cond), m, dropped)
 
 
@@ -1683,7 +1796,7 @@ def delete_where(spark: SparkSession, path: str, predicate) -> int:
     if not touched:
         return st.version
     m, dropped = st.fold_schema()
-    part = _read_files(spark, path, touched)
+    part = _read_files(spark, path, st, touched)
     # predicate binds LOGICAL names; files carry physical ones.
     # NOTE: the rewrite drops tombstoned physical columns, so a
     # pre-drop time travel over rewritten rows reads them as NULL
@@ -1722,7 +1835,7 @@ def merge_upsert(
     source = _to_physical(source, m)
     key_cols = [m.get(k, k) for k in key_cols]
     src = materialize(source)  # read twice: key probe + data write
-    snap = _read_files(spark, path, st.adds)
+    snap = _read_files(spark, path, st, st.adds)
     # touched files are mapped back to the LOG-FORM paths of the live
     # set by file name: remove actions must string-match their adds,
     # which may be legacy ABSOLUTE paths
@@ -1736,7 +1849,7 @@ def merge_upsert(
     write_cols = [c for c in snap.columns if c not in dropped]
     frames = [src.select(*write_cols)]
     if touched:
-        keep = _read_files(spark, path, touched).join(
+        keep = _read_files(spark, path, st, touched).join(
             F.broadcast(src.select(*key_cols)), key_cols, "leftanti"
         )
         frames.insert(0, keep.select(*write_cols))
@@ -1812,7 +1925,7 @@ def _compact(
     logical column — a retired name after a rename among them, which
     the files still carry — is refused."""
     m, dropped = st.fold_schema()
-    df = _read_files(spark, path, rels)
+    df = _read_files(spark, path, st, rels)
     names = [sort_by] if sort_by is not None else zorder_by or []
     if names:
         logical = _to_logical(df, m, dropped).columns
@@ -1991,7 +2104,7 @@ def changes(spark: SparkSession, path: str, version: int) -> DataFrame:
         raw rows minus the side's active DV pairs."""
         if not files:
             return None
-        t = _tag_positions(_read_files(spark, path, files))
+        t = _tag_positions(_read_files(spark, path, spec.after, files))
         if dv is not None:
             t = t.join(F.broadcast(dv), ["_dv_file", "_dv_pos"], "left_anti")
         return t.drop("_dv_file", "_dv_pos")
@@ -2006,7 +2119,7 @@ def changes(spark: SparkSession, path: str, version: int) -> DataFrame:
     # commit's own sidecars target: pairs newly active are row
     # deletes, pairs newly retired are row inserts
     if spec.both:
-        t = _tag_positions(_read_files(spark, path, spec.both))
+        t = _tag_positions(_read_files(spark, path, spec.after, spec.both))
 
         def _match(dv_in: DataFrame | None, dv_not: DataFrame | None):
             if dv_in is None:
@@ -2088,7 +2201,7 @@ def attach_bloom(
     for rel in st.adds:
         if missing_only and (rel, column) in st.blooms:
             continue
-        df = spark.read.parquet(_abs(path, rel)).select(
+        df = _read_files(spark, path, st, [rel]).select(
             F.col(column).cast("string").alias("_v")
         )
         file_bits = bits
@@ -2268,9 +2381,13 @@ def restore(path: str, version: int) -> int:
     actions += [
         {"add_dv": dv_target[p]} for p in sorted(dv_target) if p not in dv_current
     ]
+    # the schema is part of the snapshot too: a restore to a version
+    # before a column was added reads as narrow as that version did
+    if then.data_schema != now.data_schema:
+        actions.append({"data_schema": then.data_schema})
     if not actions:
         return now.version  # already at that snapshot
-    return _commit(path, actions)
+    return _commit(path, actions, base=now)
 
 
 def vacuum(path: str, keep_last: int = 1) -> list[str]:
@@ -2397,7 +2514,7 @@ def materialize_dvs(spark: SparkSession, path: str) -> int:
     # file — the per-file loop cost 16 sequential jobs on a 16-file
     # table (14.7 s in the bench's E2d extra) for work that is a
     # single scan's worth of data. Untouched files are never read.
-    keep = _with_dvs(spark, path, st, _read_files(spark, path, touched))
+    keep = _with_dvs(spark, path, st, _read_files(spark, path, st, touched))
     return _rewrite(path, touched, keep)
 
 
@@ -2764,7 +2881,7 @@ def _commit_mtxn(path: str, actions: list[dict], mid: str) -> None:
         st = _replay(path)
         if mid in st.mtxns:
             return  # already applied by the writer or another recoverer
-        if _try_commit(path, st.version + 1, actions):
+        if _try_commit(path, st.version + 1, _rebase_schema(actions, st)):
             return
 
 

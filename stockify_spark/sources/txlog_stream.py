@@ -229,8 +229,8 @@ def _reject_unknown_columns(cols, data_names, context: str) -> None:
 def _align_to_schema(table, data_schema, abs_path: str):
     """Align one file's arrow table to the declared data schema BY
     NAME: extra columns raise (see :func:`_reject_unknown_columns`),
-    columns the file predates null-fill at the declared type (the
-    batch CDF's mergeSchema semantics), and the result is reordered
+    columns the file predates null-fill at the declared type (as the
+    batch CDF reads them), and the result is reordered
     and cast to the declared types."""
     import pyarrow as pa
 
@@ -263,7 +263,7 @@ def _read_partition(
     BY NAME against ``data_schema`` (null-filling pre-evolution
     files, raising on unknown names) so a historical change-feed
     range across an additive evolution matches what the batch CDF's
-    mergeSchema read delivers."""
+    read delivers."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -395,8 +395,8 @@ def _read_cdf_commit(partition: _CdfCommitPartition, schema: StructType) -> Iter
     def _tagged(paths: list) -> pd.DataFrame | None:
         """Rows of ``paths`` with (_dv_file, _dv_pos) identity tags,
         physical names translated to logical; by-name alignment
-        null-fills columns a pre-evolution file lacks (the batch
-        CDF's mergeSchema behavior)."""
+        null-fills columns a pre-evolution file lacks (as the batch
+        CDF reads them)."""
         if not paths:
             return None
         frames = []
@@ -527,33 +527,36 @@ def _read_cdf_commit(partition: _CdfCommitPartition, schema: StructType) -> Iter
 def _table_schema(
     path: str, version: int | None = None, changes: bool = False
 ) -> StructType:
-    """Table schema from a live file's parquet footer (the txlog
-    source of truth — parquet footers per immutable file) with the
+    """Table schema from the log's ``data_schema`` action with the
     column mapping applied (logical names, tombstoned columns
-    excluded), plus the stream's ``_commit_version``. One footer
-    read, driver-side. ``version`` (the batch face's end_version)
-    folds names and live files AS OF that version so a historical
-    range read matches ``snapshot(version=...)``; None = head (the
-    streaming face)."""
-    import pyarrow.parquet as pq
-
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    import pyarrow as pa
-
+    excluded), plus the stream's ``_commit_version``: no file is
+    opened. ``version`` (the batch face's end_version) folds the
+    schema and names AS OF that version so a historical range read
+    matches ``snapshot(version=...)``; None = head (the streaming
+    face). A log without the action, written before it existed, takes
+    the union of the live files' parquet footers, read driver-side."""
     st = txlog._replay(path, version)
     files = st.files(path)
     if not files:
         raise FileNotFoundError(f"empty txlog table at {path}")
     m, dropped = st.fold_schema()
     rename = {p: lg for lg, p in m.items()}
-    # UNION of all live footers, not one file's: under additive
-    # schema evolution the live set mixes generations and any single
-    # footer may be the narrow one (snapshot() reads with
-    # mergeSchema; the stream's declared schema must match it).
-    # Footer-only reads, O(live files), driver-side.
-    unified = pa.unify_schemas([pq.read_schema(f) for f in files])
-    spark_schema = from_arrow_schema(unified)
+    if st.data_schema is not None:
+        spark_schema = StructType.fromJson(st.data_schema)
+    else:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        # UNION of all live footers, not one file's: under additive
+        # schema evolution the live set mixes generations and any
+        # single footer may be the narrow one (snapshot() reads such a
+        # log with mergeSchema; the stream's declared schema must
+        # match it).
+        spark_schema = from_arrow_schema(
+            pa.unify_schemas([pq.read_schema(f) for f in files])
+        )
     fields = [
         StructField(rename.get(f.name, f.name), f.dataType, f.nullable)
         for f in spark_schema.fields

@@ -87,3 +87,24 @@ def jobs_of(spark, fn) -> list[int]:
         return list(tracker.getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def legacy_copy(path: str, dst: str) -> str:
+    """A copy of the txlog table at ``path`` whose log has no
+    ``data_schema`` action, as a table written before the action
+    existed."""
+    import json
+    import shutil
+
+    from stockify_spark.sources import txlog
+
+    shutil.copytree(path, dst)
+    for name in os.listdir(txlog._log_dir(dst)):
+        if name.endswith(".json") and name[:-5].isdigit():
+            p = os.path.join(txlog._log_dir(dst), name)
+            with open(p) as f:
+                commit = json.load(f)
+            commit["actions"] = [a for a in commit["actions"] if "data_schema" not in a]
+            with open(p, "w") as f:
+                json.dump(commit, f)
+    return dst

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from stockify_spark.sources import txlog
 from stockify_spark.sources.io import load_table
+from tests.conftest import jobs_of, legacy_copy
 
 SF = "/root/testdata/sf0.001"
 
@@ -295,7 +296,8 @@ def test_merge_upsert_on_legacy_absolute_path_table(spark, tmp_path):
     with open(cp) as f:
         c = json.load(f)
     for a in c["actions"]:
-        a["add"]["path"] = txlog._abs(path, a["add"]["path"])
+        if "add" in a:
+            a["add"]["path"] = txlog._abs(path, a["add"]["path"])
     with open(cp, "w") as f:
         json.dump(c, f)
     src = o.filter(F.col("o_orderkey") < 10).select(
@@ -1035,8 +1037,8 @@ def test_cow_and_dv_deletes_keep_rows_whose_predicate_is_null(spark, tmp_path):
 
 def _every_kind_table(spark, tmp_path) -> str:
     """A small table whose log holds every action kind: add/remove,
-    add_dv/remove_dv, constraint, rename, drop_column, index, txn
-    and mtxn."""
+    add_dv/remove_dv, constraint, rename, drop_column, data_schema,
+    index, txn and mtxn."""
     path = str(tmp_path / "t")
     df = spark.range(8).select(
         F.col("id").alias("k"),
@@ -1075,7 +1077,7 @@ def test_checkpoint_and_clone_round_trip_every_action_kind(spark, tmp_path):
             kinds.update(k for a in json.load(f)["actions"] for k in a)
     assert kinds == {
         "add", "remove", "add_dv", "remove_dv", "constraint", "rename",
-        "drop_column", "index", "txn", "mtxn",
+        "drop_column", "data_schema", "index", "txn", "mtxn",
     }
     # ...and every kind of state is non-empty
     assert st.adds and st.dvs and st.constraints and st.blooms
@@ -1145,3 +1147,160 @@ def test_public_ops_replay_the_log_once(spark, tmp_path, monkeypatch):
     src = o.filter(F.col("o_orderkey") < 20)
     assert count(lambda: txlog.merge_upsert(spark, path, src, ["o_orderkey"])) == 2
     assert count(lambda: txlog.delete_where(spark, path, F.col("o_orderkey") < 10)) == 2
+
+
+# ---------------------------------------------------------------------------
+# The data schema is a log action: reads plan from it, not from footers
+# ---------------------------------------------------------------------------
+
+
+def _evolved_table(spark, path: str):
+    """v0 (id, v); v1 appends c; v2 appends d: two successive added
+    columns."""
+    base = spark.range(40, numPartitions=2).select("id", (F.col("id") * 2).alias("v"))
+    txlog.create(base, path)
+    txlog.append(base.withColumn("c", F.lit("x")), path)
+    txlog.append(base.withColumn("c", F.lit("y")).withColumn("d", F.lit(1.5)), path)
+
+
+def test_snapshot_plans_from_the_logged_schema(spark, tmp_path):
+    """Building a snapshot of a table of at most 32 files starts no
+    Spark job, with or without active deletion vectors: the data files
+    are read with the logged schema and the sidecars with a fixed one.
+    With mergeSchema each read unioned footers in a job."""
+    path = str(tmp_path / "t")
+    _evolved_table(spark, path)
+    assert len(txlog.live_files(path)) <= 32
+    assert jobs_of(spark, lambda: txlog.snapshot(spark, path)) == []
+    txlog.delete_where_dv(spark, path, F.col("id") == 3)
+    assert jobs_of(spark, lambda: txlog.snapshot(spark, path)) == []
+    assert txlog.snapshot(spark, path).count() == 117
+
+
+def test_rewrite_faces_start_no_schema_jobs(spark, tmp_path):
+    """merge_upsert, delete_where and attach_bloom start fewer jobs on
+    a table with a logged schema than on the same table's legacy log,
+    read with mergeSchema: one footer-union job per file-set read (two
+    for each rewrite face, one per file for the bloom build) — and
+    commit the same rows."""
+    logged = str(tmp_path / "t")
+    _evolved_table(spark, logged)
+    legacy = legacy_copy(logged, str(tmp_path / "legacy"))
+    src = spark.range(30, 50).select(
+        "id", F.lit(-1).cast("long").alias("v"), F.lit("z").alias("c"), F.lit(0.5).alias("d")
+    )
+
+    def rows(path):
+        return sorted(map(str, txlog.snapshot(spark, path).collect()))
+
+    faces = [  # reads per face; None: one per live file
+        (2, lambda p: txlog.merge_upsert(spark, p, src, ["id"])),
+        (2, lambda p: txlog.delete_where(spark, p, F.col("id") < 5)),
+        (None, lambda p: txlog.attach_bloom(spark, p, "v", bits=8192)),
+    ]
+    for reads, face in faces:
+        reads = reads or len(txlog.live_files(logged))
+        new = jobs_of(spark, lambda: face(logged))
+        old = jobs_of(spark, lambda: face(legacy))
+        assert len(old) - len(new) == reads
+        assert rows(logged) == rows(legacy)
+
+
+def test_additive_evolution_logs_each_added_column(spark, tmp_path):
+    """Two successive added columns: the head reads both, in the order
+    they were added (the order mergeSchema gave); each earlier version
+    and a restore to it read its narrower schema."""
+    path = str(tmp_path / "t")
+    _evolved_table(spark, path)
+    cols = ["id", "v", "c", "d"]
+    assert txlog.snapshot(spark, path).columns == cols
+    for v, width in ((0, 2), (1, 3), (2, 4)):
+        assert txlog.snapshot(spark, path, version=v).columns == cols[:width]
+    # only the commits that add a column log a schema
+    kinds = []
+    for v in range(3):
+        with open(txlog._commit_path(path, v)) as f:
+            kinds.append(sum("data_schema" in a for a in json.load(f)["actions"]))
+    txlog.append(spark.range(100, 102).select("id"), path)
+    with open(txlog._commit_path(path, 3)) as f:
+        kinds.append(sum("data_schema" in a for a in json.load(f)["actions"]))
+    assert kinds == [1, 1, 1, 0]
+    txlog.restore(path, 0)
+    snap = txlog.snapshot(spark, path)
+    assert snap.columns == ["id", "v"]
+    assert snap.count() == 40
+
+
+def _lose_next_commit_to(monkeypatch, winner: list[dict]) -> None:
+    """Make the next commit attempt lose its version to another writer
+    that commits ``winner`` there first."""
+    real = txlog._try_commit
+
+    def racing(p, version, actions):
+        monkeypatch.setattr(txlog, "_try_commit", real)
+        assert real(p, version, winner)
+        return False
+
+    monkeypatch.setattr(txlog, "_try_commit", racing)
+
+
+def test_racing_appends_both_keep_their_column(spark, tmp_path, monkeypatch):
+    """Two appends staged from the same version, each adding a column,
+    race for one version: the loser replays the log, merges its schema
+    action with the winner's by column name, and commits next, so both
+    columns read back, in commit order. A restore that loses to an
+    append adding a column still narrows, and keeps that column."""
+    path = str(tmp_path / "t")
+    base = spark.range(10).select("id")
+    txlog.create(base, path)
+    st = txlog._replay(path)
+    a = txlog._stage_append(base.withColumn("a", F.lit(1)), path, st, "append")
+    b = txlog._stage_append(base.withColumn("b", F.lit(2)), path, st, "append")
+    _lose_next_commit_to(monkeypatch, a)
+    assert txlog._commit(path, b) == 2
+    snap = txlog.snapshot(spark, path)
+    assert snap.columns == ["id", "a", "b"]
+    assert snap.filter(F.col("a") == 1).count() == 10
+    assert snap.filter(F.col("b") == 2).count() == 10
+    c = txlog._stage_append(base.withColumn("c", F.lit(3)), path, txlog._replay(path), "append")
+    _lose_next_commit_to(monkeypatch, c)
+    assert txlog.restore(path, 0) == 4
+    snap = txlog.snapshot(spark, path)
+    assert snap.columns == ["id", "c"]
+    assert snap.filter(F.col("c") == 3).count() == 10
+    assert snap.count() == 20
+
+
+def test_legacy_log_without_schema_reads_through_merge_schema(spark, tmp_path):
+    """A log with no data_schema action still opens: its reads union the
+    footers with mergeSchema, one job per snapshot, and give the same
+    columns and rows."""
+    path = str(tmp_path / "t")
+    _evolved_table(spark, path)
+    legacy = legacy_copy(path, str(tmp_path / "legacy"))
+    assert txlog._replay(legacy).data_schema is None
+    assert len(jobs_of(spark, lambda: txlog.snapshot(spark, legacy))) == 1
+    for v in (None, 0, 1):
+        a = txlog.snapshot(spark, path, version=v)
+        b = txlog.snapshot(spark, legacy, version=v)
+        assert a.columns == b.columns
+        assert sorted(map(str, a.collect())) == sorted(map(str, b.collect()))
+    # an append that adds no column keeps the legacy log legacy
+    txlog.append(spark.range(100, 102).select("id", F.lit(0).cast("long").alias("v")), legacy)
+    assert txlog._replay(legacy).data_schema is None
+
+
+def test_empty_files_are_not_committed(spark, tmp_path):
+    """A write adds no 0-row file: an 8-partition batch with one row
+    commits one file. A write whose files are all empty keeps one, so
+    an empty create still reads back its schema."""
+    path = str(tmp_path / "t")
+    one = spark.range(1).repartition(8)
+    txlog.create(one, path)
+    assert [a["stats"]["rows"] for a in txlog._replay(path).adds.values()] == [1]
+    assert len(os.listdir(txlog._data_dir(path))) == 1
+    empty = str(tmp_path / "e")
+    txlog.create(spark.range(0).repartition(4).withColumn("v", F.lit("s")), empty)
+    assert len(txlog.live_files(empty)) == 1
+    assert txlog.snapshot(spark, empty).columns == ["id", "v"]
+    assert txlog.snapshot(spark, empty).count() == 0

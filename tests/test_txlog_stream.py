@@ -761,6 +761,31 @@ class TestBatchFaceHistoricalSchema:
         assert head.columns == ["o_orderkey", "price", "_commit_version"]
         assert head.count() == o.count() + 3
 
+    def test_schema_comes_from_the_log(self, spark, tmp, monkeypatch):
+        """The declared schema is the logged data schema with the column
+        mapping applied: no footer is opened. A log without the action
+        gets the same columns and types from the footer union."""
+        import pyarrow.parquet as pq
+
+        from stockify_spark.sources.txlog_stream import _table_schema
+        from tests.conftest import legacy_copy
+
+        path = os.path.join(tmp, "t")
+        _append_history(spark, path)
+        txlog.append(_orders(spark).limit(3).withColumn("tag", F.lit("t")), path)
+        txlog.rename_column(path, "o_totalprice", "price")
+        txlog.drop_column(path, "tag")
+        footers = _table_schema(legacy_copy(path, os.path.join(tmp, "legacy")))
+
+        def no_footer(*a, **k):
+            raise AssertionError("footer opened")
+
+        monkeypatch.setattr(pq, "read_schema", no_footer)
+        logged = _table_schema(path)
+        assert logged.names == ["o_orderkey", "price", "_commit_version"]
+        assert [(f.name, f.dataType) for f in logged] == [(f.name, f.dataType) for f in footers]
+        assert _table_schema(path, 4).names == ["o_orderkey", "o_totalprice", "tag", "_commit_version"]
+
 
 class TestDirectCdf:
     """read_changes=true — Delta's readChangeFeed face, r11."""
