@@ -401,8 +401,8 @@ def layout_experiment(spark, sf_dir: str) -> dict[str, float]:
         # exactly its own partition's files — pruning decided on the
         # driver from the log alone, zero opens elsewhere. Compared
         # against the full snapshot + residual filter on the SAME
-        # partitioned table (same reconstitution cost on both sides,
-        # so the delta is the pruning).
+        # partitioned table (the same read of the same files on both
+        # sides, so the delta is the pruning).
         pt_path = os.path.join(tmp, "ptable")
         txlog.create_partitioned(
             li.repartition(4), pt_path, ["l_returnflag"]

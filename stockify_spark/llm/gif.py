@@ -76,17 +76,17 @@ def lzw_decode(data: bytes, min_code_size: int, n_expected: int) -> bytes:
     r = LsbReader(data)
     out = bytearray()
 
-    table: dict[int, bytes] = {}
-    next_code = eoi + 1
-    width = min_code_size + 1
-    prev: bytes | None = None
+    def fresh() -> tuple[dict[int, bytes], int, int, bytes | None]:
+        """(table, next_code, width, prev) as a Clear code leaves them."""
+        return {i: bytes([i]) for i in range(clear)}, eoi + 1, min_code_size + 1, None
+
+    # a stream starts in the state a Clear code sets, whether or not
+    # the writer emitted one first
+    table, next_code, width, prev = fresh()
     while len(out) < n_expected:
         code = r.read(width)
         if code == clear:
-            table = {i: bytes([i]) for i in range(clear)}
-            next_code = eoi + 1
-            width = min_code_size + 1
-            prev = None
+            table, next_code, width, prev = fresh()
             continue
         if code == eoi:
             break

@@ -535,7 +535,7 @@ def compact_gram(spark, path: str) -> int:
         ],
         "n long, s array<double>, g array<double>",
     )
-    return txlog._rewrite(path, list(st.adds), one.coalesce(1))
+    return txlog._rewrite(path, st, list(st.adds), one.coalesce(1))
 
 
 def pca_outlier_scores(

@@ -1944,10 +1944,11 @@ def txlog_maintain_cluster(spark, sf_dir):
 # Partitioned txlog tables + label
 # propagation.
 #
-# ``txlog_partitioned`` drives the new Hive-style partition-column
+# ``txlog_partitioned`` drives the Hive-style partition-column
 # support (sources/txlog.py create_partitioned / partitionValues /
-# snapshot_partition_pruned — Delta's partition design: values live in
-# the LOG, pruning needs zero file opens). ``graph_label_propagation``
+# snapshot_partition_pruned — Delta's partition design: each add
+# records its file's partition in the LOG, so pruning needs zero file
+# opens). ``graph_label_propagation``
 # adds the community-detection primitive next to graph_pagerank /
 # graph_kcore, with the same bounded-round oracle contract the peel
 # uses.
@@ -1974,20 +1975,20 @@ GROUP BY o_orderpriority
 @register("txlog_partitioned", _PART_SQL)
 def txlog_partitioned(spark, sf_dir):
     """Partitioned txlog table end-to-end: create orders partitioned
-    by priority (partition values recorded in the log's add actions,
-    NOT in the files — Delta's partitionValues), append a second
-    batch, then answer a per-priority aggregate from PARTITION-PRUNED
-    reads. The structural columns pin the pruning contract: each
-    probed priority opens exactly its own 2 files (1 per write) of
-    the table's 10 — counted from the log alone before any scan.
-    The oracle recomputes the aggregates straight from orders, so a
-    partition value mis-parsed from the staging layout, a literal
-    re-attached with the wrong type, or a pruned read that dropped a
-    file changes rows or sums.
+    by priority (each file holds one priority and keeps the column;
+    its add action also records the value — Delta's partitionValues),
+    append a second batch, then answer a per-priority aggregate from
+    PARTITION-PRUNED reads. The structural columns pin the pruning
+    contract: each probed priority opens exactly its own 2 files (1
+    per write) of the table's 10 — counted from the log alone before
+    any scan. The oracle recomputes the aggregates straight from
+    orders, so a partition value mis-parsed from the staging layout,
+    a file holding another partition's rows, or a pruned read that
+    dropped a file changes rows or sums.
 
     Scale shape: pruning cost is O(live add actions) driver-side log
     metadata (the same ledger every snapshot already replays); the
-    read plans one multi-file scan per matching partition. At 100 TB
+    read plans one multi-file scan of the matching files. At 100 TB
     this is the difference between scanning a table and scanning a
     partition — the first lever any warehouse pulls."""
     from stockify_spark.sources import txlog
@@ -2042,9 +2043,8 @@ def txlog_partitioned(spark, sf_dir):
 # Partitioned-table maintenance + the
 # streaming CUSUM detector.
 #
-# ``txlog_partitioned_compact`` closes the maintenance gap
-# ``txlog_partitioned`` opened (partitioned tables refused table-wide compaction; the
-# per-partition OPTIMIZE is the correct unit there).
+# ``txlog_partitioned_compact`` drives the per-partition OPTIMIZE, the
+# unit a trickle-ingested partitioned table fragments in.
 # ``stream_cusum_alarm`` adds an ORDER-SENSITIVE stateful streaming
 # operator next to the order-free running totals: Page's CUSUM with
 # O(1) per-key state, whose batch face turns the sequential recurrence

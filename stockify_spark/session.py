@@ -55,11 +55,8 @@ def get_spark(
         # everywhere). r15 scopes the fix to the verify boundaries
         # themselves (functions/scale.spread_cpu_dense — an explicit
         # repartition where bytes misrepresent CPU) and restores the
-        # default here. Env hook kept for A/B measurement only.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"),
-        )
+        # default here.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
         .config("spark.sql.session.timeZone", "UTC")
         # Explicit LTZ default: under TIMESTAMP_NTZ, cast-to-"timestamp"
         # and timestamp literals silently resolve NTZ, which epoch

@@ -10,6 +10,8 @@ and (b) Experiment 3's in-process ``rand()`` generator
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -151,6 +153,15 @@ def derive_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@functools.cache
+def _writer_digest() -> str:
+    """A digest of the txlog writer's source, ``sources/txlog.py``."""
+    from stockify_spark.sources import txlog
+
+    with open(txlog.__file__, "rb") as f:
+        return hashlib.sha256(f.read()).hexdigest()[:16]
+
+
 def _scratch_table(sf_dir: str, tag: str, build, src_file: str = "orders.parquet") -> str:
     """Deterministic scratch txlog table keyed on (tag, sf_dir,
     source fingerprint), built once and REUSED by later invocations —
@@ -164,9 +175,12 @@ def _scratch_table(sf_dir: str, tag: str, build, src_file: str = "orders.parquet
     place across rounds, and a cache keyed on the
     path alone would keep serving tables built from data that no
     longer exists while the oracle reads the new parquet — every
-    txlog query would hash-mismatch with no local signal. A new
-    vintage gets a new directory; stale vintages and orphaned
-    staging dirs of the same (tag, sf) are swept on the way.
+    txlog query would hash-mismatch with no local signal. It also
+    includes :func:`_writer_digest`, so a table an earlier txlog
+    writer built, in a layout the current reader may not share, is
+    rebuilt rather than served. A new vintage gets a new directory;
+    stale vintages and orphaned staging dirs of the same (tag, sf)
+    are swept on the way.
 
     The build lands in a unique staging dir and is os.rename'd into
     place, so a concurrent build of the same table can't observe a
@@ -186,7 +200,7 @@ def _scratch_table(sf_dir: str, tag: str, build, src_file: str = "orders.parquet
     st = os.stat(src)
     fp = f"{st.st_size:x}.{st.st_mtime_ns:x}"
     base = os.path.join(tempfile.gettempdir(), f"stockify_txlog_{tag}_{key}")
-    path = f"{base}_{fp}"
+    path = f"{base}_{fp}.{_writer_digest()}"
     if os.path.exists(os.path.join(path, "_COMPLETE")):
         return path
     # sweep stale vintages (and their crashed builds' staging

@@ -79,56 +79,39 @@ NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
-def _ensure_nanos_conf(spark: SparkSession) -> None:
-    """Fallback for sessions not built by :mod:`stockify_spark.session`
-    (the verification driver uses a vanilla SparkSession): the nanos
-    conf has no per-read datasource option, so it must be session
-    conf. This set is idempotent (constant value, checked first, never
+def _pin_read_confs(spark: SparkSession, nanos: bool) -> None:
+    """Set the session confs every read assumes, each only where it
+    does not already hold its value: the fallback for sessions not
+    built by :mod:`stockify_spark.session` (the verification driver
+    uses a vanilla SparkSession).
+
+    - ``spark.sql.legacy.parquet.nanosAsLong`` = true, only when
+      ``nanos`` (the read has TIMESTAMP(NANOS) columns, which error
+      without it; the conf has no per-read datasource option);
+    - ``spark.sql.session.timeZone`` = UTC: the NTZ→LTZ normalization
+      in :func:`load_table` and every epoch-valued expression assume
+      the DuckDB-equivalent naive-UTC reading;
+    - ``spark.sql.timestampType`` = TIMESTAMP_LTZ: under a session that
+      defaults it to TIMESTAMP_NTZ, ``cast(x AS TIMESTAMP)`` and
+      string→timestamp literals resolve to NTZ, which makes that
+      normalization a silent no-op and breaks every epoch function
+      downstream (``unix_millis`` & co. reject NTZ) — BENCH_r05 hit
+      exactly this in the harness's session. With the timezone pinned
+      to UTC the LTZ reading is value-identical to DuckDB's naive one.
+
+    Each pin is idempotent and constant-valued (checked first, never
     varied or unset), so concurrent callers all write the same value
-    and nothing order-dependent leaks into other reads — it only
-    changes the handling of TIMESTAMP(NANOS) columns, which error
-    without it."""
-    try:
-        current = spark.conf.get(_NANOS_CONF)
-    except Exception:
-        current = None
-    if current != "true":
-        spark.conf.set(_NANOS_CONF, "true")
-
-
-def _ensure_utc(spark: SparkSession) -> None:
-    """Pin the session timezone to UTC for sessions not built by
-    :mod:`stockify_spark.session` (the verification driver uses a
-    vanilla SparkSession). The NTZ→LTZ normalization in
-    :func:`load_table` and every epoch-valued expression assume the
-    DuckDB-equivalent naive-UTC reading; like :func:`_ensure_nanos_conf`
-    this set is idempotent and constant-valued."""
-    tz_conf = "spark.sql.session.timeZone"
-    try:
-        current = spark.conf.get(tz_conf)
-    except Exception:
-        current = None
-    if current != "UTC":
-        spark.conf.set(tz_conf, "UTC")
-
-
-def _ensure_ltz(spark: SparkSession) -> None:
-    """Pin ``spark.sql.timestampType`` to TIMESTAMP_LTZ. Under a
-    session that defaults the type to TIMESTAMP_NTZ, ``cast(x AS
-    TIMESTAMP)`` and string→timestamp literals resolve to NTZ, which
-    (a) makes the NTZ→LTZ normalization below a silent no-op and
-    (b) breaks every epoch function downstream (``unix_millis`` & co.
-    reject NTZ). BENCH_r05 hit exactly this in the harness's session.
-    Idempotent constant-valued set, same contract as
-    :func:`_ensure_utc`; with the session timezone pinned to UTC the
-    LTZ reading is value-identical to DuckDB's naive reading."""
-    type_conf = "spark.sql.timestampType"
-    try:
-        current = spark.conf.get(type_conf)
-    except Exception:
-        current = None
-    if current != "TIMESTAMP_LTZ":
-        spark.conf.set(type_conf, "TIMESTAMP_LTZ")
+    and nothing order-dependent leaks into other reads."""
+    pins = {"spark.sql.session.timeZone": "UTC", "spark.sql.timestampType": "TIMESTAMP_LTZ"}
+    if nanos:
+        pins = {_NANOS_CONF: "true", **pins}
+    for key, value in pins.items():
+        try:
+            current = spark.conf.get(key)
+        except Exception:
+            current = None
+        if current != value:
+            spark.conf.set(key, value)
 
 
 # Session confs that change the schema Parquet inference returns for
@@ -151,8 +134,9 @@ _SCHEMAS: dict[tuple, T.StructType] = {}
 def _pinned_schema(spark: SparkSession, path: str) -> T.StructType:
     """Spark's inferred schema of the Parquet file at ``path``, inferred
     (one Spark job) only the first time this version of the file is
-    read under these conf values. Callers run the ``_ensure_*`` conf
-    pins first, so the key sees the confs the read will use."""
+    read under these conf values. Callers run the conf pins
+    (:func:`_pin_read_confs`) first, so the key sees the confs the
+    read will use."""
     st = os.stat(path)
     key = (
         os.path.realpath(path),
@@ -188,10 +172,7 @@ def load_table(
     double-not-float32 accumulation is the documented policy."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     nanos_cols = NANOS_TS_COLS.get(name, ())
-    if nanos_cols:
-        _ensure_nanos_conf(spark)
-    _ensure_utc(spark)
-    _ensure_ltz(spark)
+    _pin_read_confs(spark, bool(nanos_cols))
     df = spark.read.schema(_pinned_schema(spark, path)).parquet(path)
     from pyspark.sql import functions as F
 

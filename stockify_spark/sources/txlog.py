@@ -42,13 +42,19 @@ changes, vacuum, log retention, the stream sources) read the commit
 files themselves; the two change feeds plan each commit with one
 :func:`_change_spec`.
 
+There is one table model. A partitioned table's files hold every
+column, its partition columns included, and each file holds one
+partition, whose values its add action also carries
+(``partitionValues``): pruning plans from the log alone, and every
+read, rewrite and change feed treats the files like any other table's.
+
 Writes have one path too. Every face reads table files with
-:func:`_read_files`, stages new ones with :func:`_write_files`
-(partitioned or not), and every face that replaces files — COW delete,
-merge, the compactions, ``materialize_dvs`` and ``llm/pca.
-compact_gram`` — commits through :func:`_rewrite`: remove the old
-files, add the new ones, in one commit. The compactions share one body
-(:func:`_compact`) over a file set, clustered by
+:func:`_read_files`, stages new ones with :func:`_write_files`, split
+by the table's partition columns, and every face that replaces files
+— COW delete, merge, the compactions, ``materialize_dvs`` and
+``llm/pca.compact_gram`` — commits through :func:`_rewrite`: remove
+the old files, add the new ones, in one commit. The compactions share
+one body (:func:`_compact`) over a file set, clustered by
 ``sources/io.cluster``.
 """
 
@@ -158,8 +164,8 @@ class _TableState:
     - ``schema``: the ordered ``rename`` / ``drop_column`` actions.
     - ``partitioning``: the partition spec, or None.
     - ``data_schema``: the data files' physical schema as
-      ``StructType.jsonValue()`` (partition columns excluded, every
-      field nullable), or None for a log that predates the action.
+      ``StructType.jsonValue()`` (every field nullable), or None for a
+      log that predates the action.
     - ``blooms``: (live file, column) -> latest bloom index entry.
     - ``txns``: app id -> highest idempotent-append version.
     - ``mtxns``: multi-table transaction ids applied to this table.
@@ -179,6 +185,11 @@ class _TableState:
     def files(self, path: str) -> list[str]:
         """Absolute paths of the live data files."""
         return [_abs(path, p) for p in self.adds]
+
+    @property
+    def partition_cols(self) -> list[str]:
+        """The partition columns; none for an unpartitioned table."""
+        return [] if self.partitioning is None else self.partitioning["cols"]
 
     def fold_schema(self) -> tuple[dict, set]:
         """Fold the ordered rename/drop stream into (logical ->
@@ -221,8 +232,8 @@ def _replay(path: str, version: int | None = None) -> _TableState:
     - renames/drops: losing them would revert every logical name to
       its physical one (and resurrect dropped columns). The fold is
       order-sensitive across both kinds, so the list keeps log order.
-    - partitioning: a reader must still know to reconstitute the
-      partition columns from partitionValues.
+    - partitioning: losing it would let a later write mix
+      partitions in one file, and leave pruned reads without a spec.
     - data schema: losing it would send every read back to the
       footer union, and widen a restore-narrowed schema again. The
       latest action wins.
@@ -468,8 +479,11 @@ def maintain(spark: SparkSession, path: str, policy: dict) -> list[dict]:
       fragmentation destroys the data-skipping layout, so the repair
       restores clustering, not just file sizes. The rewrite is
       O(live set) where bin-packing is O(fragments) — at 100 TB
-      scope the table (or run this policy per partition of a
-      partitioned layout); the decision row is ``compact_cluster``.
+      scope the table; the decision row is ``compact_cluster``. On a
+      partitioned table either form rewrites, in one commit, the
+      files of every partition that has more than
+      ``compact_target_partitions`` of them, and converges once none
+      has.
     - ``gram_partial_rows``: B — fold the incremental-PCA stats table
       to one row when its partial-row count exceeds B (the table must
       have the gram schema; see llm/pca.compact_gram).
@@ -556,46 +570,24 @@ def maintain(spark: SparkSession, path: str, policy: dict) -> list[dict]:
             # a fixpoint at any scale, incl. toy tables whose
             # compacted files never outgrow small_file_bytes
             trig = trig and len(st.adds) > tp
-        if st.partitioning is not None and "compact_zorder_by" in policy:
-            raise NotImplementedError(
-                "z-ordered compaction on partitioned tables is not supported"
-            )
-        groups = _group_adds_by_partition(st.adds.values())
+        wide = []
         if st.partitioning is not None:
             # a partitioned table converges when no PARTITION is wider
-            # than the target — the table-wide width gate would loop
-            trig = trig and any(len(v) > tp for v in groups.values())
+            # than the target — the table-wide width gate would loop —
+            # and only the files of the wider partitions are rewritten,
+            # so the cost tracks the fragmentation as in the flat case
+            groups = _group_adds_by_partition(st.adds.values()).values()
+            wide = [a["path"] for g in groups if len(g) > tp for a in g]
+            trig = trig and bool(wide)
         res = -1
         if trig:
-            if st.partitioning is not None:
-                # partitioned tables compact PER PARTITION (the unit
-                # compact_partition defines); only fragmented
-                # partitions are rewritten, so the cost tracks the
-                # fragmentation exactly as in the flat case
-                for key, adds in sorted(
-                    groups.items(),
-                    key=lambda kv: [(c, v is None, v or "") for c, v in kv[0]],
-                ):
-                    if len(adds) > tp:
-                        res = compact_partition(
-                            spark,
-                            path,
-                            dict(key),
-                            target_partitions=tp,
-                            sort_by=policy.get("compact_sort_by"),
-                        )
+            sort_by, zorder_by = policy.get("compact_sort_by"), policy.get("compact_zorder_by")
+            if wide:
+                res = _compact(spark, path, st, wide, tp, sort_by, zorder_by)
+            elif clustered:
+                res = compact(spark, path, target_partitions=tp, sort_by=sort_by, zorder_by=zorder_by)
             else:
-                res = (
-                    compact(
-                        spark,
-                        path,
-                        target_partitions=tp,
-                        sort_by=policy.get("compact_sort_by"),
-                        zorder_by=policy.get("compact_zorder_by"),
-                    )
-                    if clustered
-                    else compact_small(spark, path, min_bytes=b, target_partitions=tp)
-                )
+                res = compact_small(spark, path, min_bytes=b, target_partitions=tp)
         record("compact_cluster" if clustered else "compact_small", frac, f_thr, trig, res)
 
     if "gram_partial_rows" in policy:
@@ -686,17 +678,26 @@ def _read_files(spark: SparkSession, path: str, st: _TableState, rels) -> DataFr
 
 def _data_schema(df: DataFrame, partition_cols=()) -> dict:
     """The body of a ``data_schema`` action for files written from
-    ``df``: its schema without the partition columns, which live in
-    the log's partitionValues, with every field nullable, since an
-    older file reads a later-added column as NULL."""
-    return {
-        "type": "struct",
-        "fields": [
-            {**f.jsonValue(), "nullable": True}
-            for f in df.schema.fields
-            if f.name not in partition_cols
-        ],
-    }
+    ``df``: its schema, with every field nullable, since an older file
+    reads a later-added column as NULL, and the partition columns
+    moved last (:func:`_partition_last`)."""
+    fields = [{**f.jsonValue(), "nullable": True} for f in df.schema.fields]
+    return {"type": "struct", "fields": _fields_partition_last(fields, partition_cols)}
+
+
+def _partition_last(names, partition_cols) -> list[str]:
+    """``names`` with the partition columns among them moved to the
+    end, sorted by name: the column order of every file, and so of
+    every read, of a partitioned table."""
+    return [c for c in names if c not in partition_cols] + sorted(
+        c for c in names if c in partition_cols
+    )
+
+
+def _fields_partition_last(fields: list[dict], partition_cols) -> list[dict]:
+    """:func:`_partition_last` over the fields of a logged schema."""
+    by_name = {f["name"]: f for f in fields}
+    return [by_name[c] for c in _partition_last(by_name, partition_cols)]
 
 
 def _widen(schema: dict, other: dict) -> dict:
@@ -749,26 +750,31 @@ def _file_stats(fpath: str) -> dict:
 def _write_files(df: DataFrame, path: str, partition_cols=()) -> list[dict]:
     """The one staged writer: write df's partitions as immutable files
     in data/ and return their add actions. Spark writes into a staging
-    directory (in the hive ``col=value`` layout when ``partition_cols``
-    are given), and each leaf file is then renamed into flat data/
+    directory, and each leaf file is then renamed into flat data/
     under a fresh uuid name, so no reader sees a partial file.
 
     Each add carries the file's byte size (:func:`_add_size`; Delta's
     add.size) and per-file column stats, so stream admission,
-    maintenance planning and data skipping read the commit alone. A
-    partitioned write's values move INTO the add (Delta's
-    partitionValues), not the file path, so the log stays the single
-    source of partition truth and file names stay uniform; an
+    maintenance planning and data skipping read the commit alone.
+    With ``partition_cols``, each file holds one partition and keeps
+    the partition columns, last (:func:`_partition_last`): Spark splits
+    the write by hidden copies of them, in the hive ``col=value``
+    directory layout, and those directory values become the add's
+    partitionValues (Delta's), so pruning plans from the log alone; an
     unpartitioned add carries no partitionValues key. 0-row files are
     dropped (:func:`_drop_empty`)."""
     import shutil
     import urllib.parse
 
     staging = os.path.join(_data_dir(path), f"_staging_{uuid.uuid4().hex}")
-    writer = df.write.mode("overwrite")
+    writer = df.write
     if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(staging)
+        hidden = [f"_txlog_part_{i}" for i in range(len(partition_cols))]
+        writer = df.select(
+            *_partition_last(df.columns, partition_cols),
+            *[F.col(c).alias(h) for c, h in zip(partition_cols, hidden)],
+        ).write.partitionBy(*hidden)
+    writer.mode("overwrite").parquet(staging)
     adds = []
     for root, dirs, files in os.walk(staging):
         dirs.sort()
@@ -780,9 +786,10 @@ def _write_files(df: DataFrame, path: str, partition_cols=()) -> list[dict]:
             os.rename(os.path.join(root, name), final)
             add = {"path": rel, "size": os.path.getsize(final), "stats": _file_stats(final)}
             if partition_cols:
-                segs = (s.partition("=") for s in os.path.relpath(root, staging).split(os.sep))
+                segs = [s.partition("=")[2] for s in os.path.relpath(root, staging).split(os.sep)]
                 add["partitionValues"] = {
-                    k: None if v == _HIVE_NULL else urllib.parse.unquote(v) for k, _, v in segs
+                    c: None if v == _HIVE_NULL else urllib.parse.unquote(v)
+                    for c, v in zip(partition_cols, segs)
                 }
             adds.append({"add": add})
     shutil.rmtree(staging, ignore_errors=True)
@@ -871,7 +878,8 @@ def _rebase_schema(
     actions were derived from, a head field that ``base`` had and the
     action lacks is left out, so a restore still narrows the schema.
     Two appends that race for one version and each add a column thus
-    both keep it, in commit order."""
+    both keep it, in commit order, and before the partition columns,
+    which stay last."""
     if head.data_schema is None:
         return actions
     known = {f["name"] for f in base.data_schema["fields"]} if base and base.data_schema else set()
@@ -879,7 +887,8 @@ def _rebase_schema(
     def rebased(schema: dict) -> dict:
         mine = {f["name"] for f in schema["fields"]}
         kept = [f for f in head.data_schema["fields"] if f["name"] in mine or f["name"] not in known]
-        return _widen({**schema, "fields": kept}, schema)
+        fields = _widen({**schema, "fields": kept}, schema)["fields"]
+        return {**schema, "fields": _fields_partition_last(fields, head.partition_cols)}
 
     return [
         {"data_schema": rebased(a["data_schema"])} if a.get("data_schema") is not None else a
@@ -914,19 +923,14 @@ def _commit(path: str, actions: list[dict], base: _TableState | None = None) -> 
             return version
 
 
-def _rewrite(
-    path: str, removed, *frames: DataFrame, partition_values: dict | None = None
-) -> int:
-    """The one remove-and-add commit of every face that replaces table
-    files: write ``frames`` in order as new files (stamped with
-    ``partition_values`` when the rewrite stays inside one partition)
-    and commit them in place of the log-form paths ``removed``. The
-    commit's conflict check refuses it if a concurrent writer removed
-    any of those files first."""
-    adds = _drop_empty(path, [a for df in frames for a in _write_files(df, path)])
-    if partition_values is not None:
-        for a in adds:
-            a["add"]["partitionValues"] = dict(partition_values)
+def _rewrite(path: str, st: _TableState, removed, *frames: DataFrame) -> int:
+    """The one remove-and-add commit of every face that replaces files
+    of the table ``st``: write ``frames`` in order as new files, split
+    by ``st``'s partition columns, and commit them in place of the
+    log-form paths ``removed``. The commit's conflict check refuses it
+    if a concurrent writer removed any of those files first."""
+    cols = st.partition_cols
+    adds = _drop_empty(path, [a for df in frames for a in _write_files(df, path, cols)])
     return _commit(path, [{"remove": {"path": r}} for r in removed] + adds)
 
 
@@ -956,7 +960,7 @@ def _stage_append(df: DataFrame, path: str, st: _TableState, op: str) -> list[di
     _validate_constraints(df, st)
     _reject_tombstoned(df, st)
     phys = _to_physical(df, st.fold_schema()[0])
-    cols = () if st.partitioning is None else st.partitioning["cols"]
+    cols = st.partition_cols
     missing = [c for c in cols if c not in df.columns]
     if missing:
         raise ValueError(f"{op} missing partition columns for {path}: {missing}")
@@ -1010,34 +1014,9 @@ def _validate_constraints(df: DataFrame, st: _TableState) -> None:
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
-def _partition_marker(path: str) -> str:
-    """Fast-path marker written by create_partitioned next to the
-    commits. The LOG action remains the source of truth (it must
-    survive checkpoint collapse and version replay, and
-    ``_TableState.partitioning`` reads it); the marker is a pure
-    denormalization so the guard on every raw-read face that does
-    not replay the log is one os.path.exists, not an O(commits) log
-    walk. (The first guard draft walked the log; the bench caught it
-    immediately: the ingest sinks call guarded faces per batch, and
-    the near-dup sink doubled its wall-clock on log re-reads
-    alone.)"""
-    return os.path.join(_log_dir(path), "_partitioning.json")
-
-
-def _require_not_partitioned(path: str, op: str) -> None:
-    """Faces that read data files RAW (and would therefore silently
-    drop the partition columns, which live only in the log's
-    partitionValues) or rewrite files without re-deriving those
-    values must refuse partitioned tables until taught about them —
-    a loud NotImplementedError beats a silently narrower schema."""
-    if os.path.exists(_partition_marker(path)):
-        raise NotImplementedError(f"{op} does not support partitioned tables yet")
-
-
 def _group_adds_by_partition(adds) -> dict[tuple, list[dict]]:
-    """Live add actions keyed by their partitionValues tuple — the
-    grouping both the partitioned read path and per-partition
-    maintenance share."""
+    """Live add actions keyed by their partitionValues tuple: the
+    partitions :func:`maintain` measures."""
     groups: dict[tuple, list[dict]] = {}
     for a in adds:
         key = tuple(sorted(a.get("partitionValues", {}).items()))
@@ -1047,12 +1026,13 @@ def _group_adds_by_partition(adds) -> dict[tuple, list[dict]]:
 
 def create_partitioned(df: DataFrame, path: str, partition_by: list[str]) -> int:
     """Create a table partitioned by ``partition_by`` (Delta's
-    partitionValues design): partition column values are stored in
-    the LOG, not in the data files, so a reader prunes partitions
-    from the commit metadata alone — zero file opens for pruned
-    partitions — and reconstitutes the columns as literals per file
-    group at read time. Column types are recorded so the literals
-    come back with the writer's dtypes."""
+    partitionValues design): every write splits its files by those
+    columns, each file keeps them, and each file's add action records
+    its partition's values, so a reader prunes partitions from the
+    commit metadata alone — zero file opens for pruned partitions —
+    and reads the files it keeps like any other table's. Column types
+    are recorded so a pruning predicate is normalized to the strings
+    the log holds (:func:`_partition_adds`)."""
     missing = [c for c in partition_by if c not in df.columns]
     if missing:
         raise ValueError(f"partition columns not in DataFrame: {missing}")
@@ -1060,8 +1040,6 @@ def create_partitioned(df: DataFrame, path: str, partition_by: list[str]) -> int
     os.makedirs(_data_dir(path), exist_ok=True)
     types = {c: df.schema[c].dataType.simpleString() for c in partition_by}
     spec = {"cols": list(partition_by), "types": types}
-    with open(_partition_marker(path), "w") as f:
-        json.dump(spec, f)  # O(1) presence probe; the log action rules
     return _commit(
         path,
         [{"partitioning": spec}, {"data_schema": _data_schema(df, partition_by)}]
@@ -1069,30 +1047,7 @@ def create_partitioned(df: DataFrame, path: str, partition_by: list[str]) -> int
     )
 
 
-def _read_partitioned(spark: SparkSession, path: str, st: _TableState, adds) -> DataFrame:
-    """Union-by-name read of add actions grouped by partitionValues,
-    with the partition columns re-attached as typed literals — the
-    Delta read path for partitioned tables. Group count = partition
-    count; each group is ONE multi-file parquet scan, so the plan
-    stays a union of scans, not a per-file loop."""
-    part = st.partitioning
-    pieces = []
-    # nulls (hive default partition) sort last within each column
-    order = lambda key: [(c, v is None, v or "") for c, v in key]  # noqa: E731
-    groups = _group_adds_by_partition(adds)
-    for key, group in sorted(groups.items(), key=lambda kv: order(kv[0])):
-        df = _read_files(spark, path, st, [a["path"] for a in group])
-        for col, val in key:
-            typ = part.get("types", {}).get(col, "string")
-            df = df.withColumn(col, F.lit(val).cast(typ))
-        pieces.append(df)
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
-
-
-def _partition_adds(path: str, st: _TableState, equals: dict) -> tuple[dict, list[dict]]:
+def _partition_adds(path: str, st: _TableState, equals: dict) -> list[dict]:
     """Caller-supplied partition predicate -> the exact strings
     Spark's hive writer recorded in partitionValues. ``str(v)`` alone
     is wrong for booleans (directories say "true"/"false" while
@@ -1104,7 +1059,7 @@ def _partition_adds(path: str, st: _TableState, equals: dict) -> tuple[dict, lis
     string (take one from :func:`partition_files`) — anything else
     raises loudly instead of matching nothing.
 
-    Returns the normalized key and the live adds in that partition."""
+    Returns the live adds in the partitions ``equals`` selects."""
     part = st.partitioning
     if part is None:
         raise ValueError(f"table at {path} is not partitioned")
@@ -1143,12 +1098,11 @@ def _partition_adds(path: str, st: _TableState, equals: dict) -> tuple[dict, lis
             want[k] = v
         else:
             want[k] = str(v)
-    adds = [
+    return [
         a
         for a in st.adds.values()
         if all(a.get("partitionValues", {}).get(k) == v for k, v in want.items())
     ]
-    return want, adds
 
 
 def snapshot_partition_pruned(
@@ -1165,11 +1119,7 @@ def snapshot_partition_pruned(
     stats-based skipping (which still opens nothing but must keep
     stats-less files; partition pruning is exact by construction)."""
     st = _replay(path, version)
-    _, adds = _partition_adds(path, st, equals)
-    if not adds:
-        return _snapshot(spark, path, st).filter(F.lit(False))
-    m, dropped = st.fold_schema()
-    return _to_logical(_read_partitioned(spark, path, st, adds), m, dropped)
+    return _read_subset(spark, path, st, _partition_adds(path, st, equals), F.lit(True))
 
 
 def compact_partition(
@@ -1179,18 +1129,14 @@ def compact_partition(
     target_partitions: int = 1,
     sort_by: str | None = None,
 ) -> int:
-    """Partition-scoped compaction — the maintenance face partitioned
-    tables need (table-wide compact_small refuses them): rewrite ONE
-    partition's files as ``target_partitions`` new files carrying the
-    SAME partitionValues, in one atomic commit. Files of every other
-    partition are untouched and stay shared with prior snapshots, so
-    the rewrite cost tracks the fragmented partition, never the
-    table — the per-partition OPTIMIZE loop Delta runs after
-    streaming ingest into a partitioned layout.
-
-    ``equals`` must name every partition column: a partial key would
-    merge files whose remaining partition values differ, and the
-    rewrite could no longer carry well-defined partitionValues."""
+    """Partition-scoped compaction: rewrite ONE partition's files as
+    ``target_partitions`` new files of that partition, in one atomic
+    commit (:func:`_compact`). Files of every other partition are
+    untouched and stay shared with prior snapshots, so the rewrite
+    cost tracks the fragmented partition, never the table — the
+    per-partition OPTIMIZE Delta runs after streaming ingest into a
+    partitioned layout. ``equals`` must name every partition column,
+    the key of one partition."""
     st = _replay(path)
     part = st.partitioning
     if part is None:
@@ -1199,7 +1145,7 @@ def compact_partition(
         raise ValueError(
             f"compact_partition needs the FULL partition key {part['cols']}"
         )
-    want, adds = _partition_adds(path, st, equals)
+    adds = _partition_adds(path, st, equals)
     if len(adds) <= target_partitions:
         return st.version
     if sort_by in part["cols"]:
@@ -1207,19 +1153,13 @@ def compact_partition(
             f"sort_by {sort_by!r} is a partition column — it is constant "
             "within the partition; cluster on a data column"
         )
-    # clustered per-partition OPTIMIZE: the compact(sort_by=...)
-    # contract, scoped to the partition's files; the rewritten files
-    # carry the partition's values
-    return _compact(
-        spark, path, st, [a["path"] for a in adds], target_partitions, sort_by,
-        partition_values=want,
-    )
+    return _compact(spark, path, st, [a["path"] for a in adds], target_partitions, sort_by)
 
 
 def partition_files(path: str, equals: dict, version: int | None = None) -> list[str]:
     """The file list a partition-pruned read would open — the
     observability hook tests and benchmarks assert IO bounds on."""
-    return [a["path"] for a in _partition_adds(path, _replay(path, version), equals)[1]]
+    return [a["path"] for a in _partition_adds(path, _replay(path, version), equals)]
 
 
 def history(
@@ -1420,7 +1360,6 @@ def clone(src: str, dst: str, version: int | None = None) -> int:
     files into the CLONE's data dir, leaving the source untouched);
     bloom indexes key on the add's logged path, so they are rebased
     to match."""
-    _require_not_partitioned(src, "clone")
     st = _replay(src, version)
     os.makedirs(_log_dir(dst), exist_ok=True)
     os.makedirs(_data_dir(dst), exist_ok=True)
@@ -1469,10 +1408,11 @@ def _to_physical(df: DataFrame, m: dict) -> DataFrame:
 def _schema_change(path: str, name: str, verb: str, refuse) -> _TableState:
     """Shared checks of :func:`rename_column` and :func:`drop_column`,
     in this order: the table has files, ``name`` is a current logical
-    column, ``refuse(logical columns)`` returns no error message, and
-    no CHECK constraint references ``name`` (Delta's rule —
-    constraints bind by name and a silent retarget would change what
-    they enforce). Returns the state the checks read. Drops are
+    column, ``refuse(logical columns)`` returns no error message,
+    ``name`` is not a partition column (the log keys partitionValues
+    on its name), and no CHECK constraint references ``name``
+    (Delta's rule — constraints bind by name and a silent retarget
+    would change what they enforce). Returns the state the checks read. Drops are
     folded too: a tombstoned physical must neither be renameable (its
     logical name no longer exists) nor block a rename TO its name
     (logical names are free once the column is dropped — the physical
@@ -1497,6 +1437,8 @@ def _schema_change(path: str, name: str, verb: str, refuse) -> _TableState:
         raise ValueError(f"column {name!r} does not exist (have {sorted(logical_cols)})")
     if err := refuse(logical_cols):
         raise ValueError(err)
+    if name in st.partition_cols:
+        raise ValueError(f"cannot {verb} {name!r}: it is a partition column of {path}")
     for c in st.constraints:
         if re.search(rf"\b{re.escape(name)}\b", c["predicate"]):
             raise ValueError(
@@ -1649,15 +1591,6 @@ def snapshot(
 def _snapshot(spark: SparkSession, path: str, st: _TableState) -> DataFrame:
     """:func:`snapshot` of an already replayed state."""
     m, dropped = st.fold_schema()
-    if st.partitioning is not None:
-        if st.dvs:
-            raise NotImplementedError(
-                "deletion vectors on partitioned tables are not supported"
-            )
-        if not st.adds:
-            raise FileNotFoundError(f"empty txlog table at {path}")
-        base = _read_partitioned(spark, path, st, st.adds.values())
-        return _to_logical(base, m, dropped)
     if not st.adds:
         raise FileNotFoundError(f"empty txlog table at {path}")
     base = _read_files(spark, path, st, st.adds)
@@ -1762,6 +1695,27 @@ def _read_subset(
     return _to_logical(_with_dvs(spark, path, st, base).filter(cond), m, dropped)
 
 
+def _stats_disjoint(add: dict, bounds) -> bool:
+    """True iff ``add``'s logged min/max stats prove its file holds no
+    row inside the ranges ``bounds``, (physical column, lower, upper)
+    triples with inclusive bounds: the one data-skipping test of the
+    pruned batch readers and the stream's pushed filters. A column
+    without stats, an open (None) bound, or a bound the stats cannot
+    be compared with proves nothing, so the file is kept."""
+    stats = add.get("stats", {})
+    for column, lower, upper in bounds:
+        mn = stats.get("min", {}).get(column)
+        mx = stats.get("max", {}).get(column)
+        if mn is None or mx is None:
+            continue
+        try:
+            if (upper is not None and mn > upper) or (lower is not None and mx < lower):
+                return True
+        except TypeError:
+            continue
+    return False
+
+
 def snapshot_pruned(
     spark: SparkSession,
     path: str,
@@ -1787,7 +1741,6 @@ def delete_where(spark: SparkSession, path: str, predicate) -> int:
     together in one read and one write. A row is deleted only where
     ``predicate`` is TRUE — rows where it is NULL survive, exactly as
     under :func:`delete_where_dv`."""
-    _require_not_partitioned(path, "delete_where")
     st = _replay(path)
     _require_no_dvs(path, st, "delete_where")
     if not st.adds:
@@ -1804,7 +1757,7 @@ def delete_where(spark: SparkSession, path: str, predicate) -> int:
     keep = _to_physical(
         _to_logical(part, m, dropped).filter(~F.coalesce(predicate, F.lit(False))), m
     )
-    return _rewrite(path, touched, keep)
+    return _rewrite(path, st, touched, keep)
 
 
 def merge_upsert(
@@ -1826,7 +1779,6 @@ def merge_upsert(
     add/remove multiset difference cancels the copy-on-write
     survivors, same as delete_where.
     """
-    _require_not_partitioned(path, "merge_upsert")
     st = _replay(path)
     _require_no_dvs(path, st, "merge_upsert")
     m, dropped = st.fold_schema()
@@ -1853,7 +1805,7 @@ def merge_upsert(
             F.broadcast(src.select(*key_cols)), key_cols, "leftanti"
         )
         frames.insert(0, keep.select(*write_cols))
-    return _rewrite(path, touched, *frames)
+    return _rewrite(path, st, touched, *frames)
 
 
 def compact_small(
@@ -1871,7 +1823,6 @@ def compact_small(
     rewrite 100 TB to fix 100 MB — this rewrites only the fragments,
     so the maintenance cost tracks the fragmentation, not the table.
     Returns the commit version (unchanged if nothing qualifies)."""
-    _require_not_partitioned(path, "compact_small")
     st = _replay(path)
     _require_no_dvs(path, st, "compact_small")
     small = [r for r, a in st.adds.items() if _add_size(path, a) < min_bytes]
@@ -1900,7 +1851,6 @@ def compact(
     while the Z-curve gives every listed column boxes ~sqrt-as-tight
     — the multi-dimensional data-skipping trade, measured in
     bench.py's layout experiment."""
-    _require_not_partitioned(path, "compact")
     st = _replay(path)
     _require_no_dvs(path, st, "compact")
     return _compact(spark, path, st, list(st.adds), target_partitions, sort_by, zorder_by)
@@ -1914,7 +1864,6 @@ def _compact(
     n: int,
     sort_by: str | None = None,
     zorder_by: list[str] | None = None,
-    partition_values: dict | None = None,
 ) -> int:
     """The one compaction body of :func:`compact`, :func:`compact_small`
     and :func:`compact_partition`: read the live files ``rels`` of
@@ -1938,7 +1887,7 @@ def _compact(
         sort_by=None if sort_by is None else m.get(sort_by, sort_by),
         zorder_by=None if zorder_by is None else [m.get(c, c) for c in zorder_by],
     )
-    return _rewrite(path, rels, df, partition_values=partition_values)
+    return _rewrite(path, st, rels, df)
 
 
 def snapshot_pruned_multi(
@@ -1948,31 +1897,24 @@ def snapshot_pruned_multi(
     version: int | None = None,
 ) -> DataFrame:
     """Multi-column log-level data skipping: ``preds`` is a list of
-    (column, lower, upper); a file is opened only if its stored
-    min/max box intersects EVERY range. On a z-ordered table all
-    listed columns prune; on a 1-D-sorted table only the sort column
-    does — same exact result either way (the residual filter runs
-    regardless), different files_read."""
-    _require_not_partitioned(path, "snapshot_pruned_multi")
+    (column, lower, upper), inclusive, where a None bound is open; a
+    file is opened unless its stored min/max box is provably
+    disjoint from some range (:func:`_stats_disjoint`). On a z-ordered
+    table all listed columns prune; on a 1-D-sorted table only the
+    sort column does — same exact result either way (the residual
+    filter runs regardless), different files_read."""
     st = _replay(path, version)
     m, dropped = st.fold_schema()
     preds = [(m.get(c, c), lo, hi) for c, lo, hi in preds]  # physical stats keys
     if any(c in dropped for c, _, _ in preds):
         raise ValueError("predicate references a dropped column")
-
-    def disjoint(stats: dict, column: str, lower, upper) -> bool:
-        mn = stats.get("min", {}).get(column)
-        mx = stats.get("max", {}).get(column)
-        return mn is not None and mx is not None and (mx < lower or mn > upper)
-
-    keep = [  # a file provably disjoint on any range is never opened
-        a
-        for a in st.adds.values()
-        if not any(disjoint(a.get("stats", {}), *p) for p in preds)
-    ]
+    keep = [a for a in st.adds.values() if not _stats_disjoint(a, preds)]
     residual = F.lit(True)
     for column, lower, upper in preds:
-        residual = residual & (F.col(column) >= lower) & (F.col(column) <= upper)
+        if lower is not None:
+            residual = residual & (F.col(column) >= lower)
+        if upper is not None:
+            residual = residual & (F.col(column) <= upper)
     return _read_subset(spark, path, st, keep, residual)
 
 
@@ -2091,7 +2033,6 @@ def changes(spark: SparkSession, path: str, version: int) -> DataFrame:
     Returns the table schema plus a ``_change_type`` column
     ('insert' | 'delete').
     """
-    _require_not_partitioned(path, "changes")
     spec = _change_spec(path, version)
     if not spec.added and not spec.removed and not spec.sidecars:
         raise ValueError(f"commit {version} touched no files")
@@ -2192,7 +2133,6 @@ def attach_bloom(
     (batch-sized work), instead of re-scanning the whole table per
     batch. A compaction's new files are picked up the same way on
     the next call."""
-    _require_not_partitioned(path, "attach_bloom")
     if bits is not None and bits & (bits - 1):
         raise ValueError("bits must be a power of two")
     st = _replay(path)
@@ -2284,7 +2224,6 @@ def snapshot_point_any(
     bitset, O(files × values) with no IO — and the Spark job then
     opens only files that might contain a colliding key. Results are
     exact: the residual IN filter always runs."""
-    _require_not_partitioned(path, "snapshot_point_any")
     import base64
     import hashlib as _hashlib
 
@@ -2468,7 +2407,6 @@ def delete_where_dv(spark: SparkSession, path: str, predicate) -> int:
     into the scan instead of the broadcast anti-join, same contract.
 
     Returns the commit version (unchanged if nothing matched)."""
-    _require_not_partitioned(path, "delete_where_dv")
     st = _replay(path)
     if not st.adds:
         raise FileNotFoundError(f"empty txlog table at {path}")
@@ -2515,7 +2453,7 @@ def materialize_dvs(spark: SparkSession, path: str) -> int:
     # table (14.7 s in the bench's E2d extra) for work that is a
     # single scan's worth of data. Untouched files are never read.
     keep = _with_dvs(spark, path, st, _read_files(spark, path, st, touched))
-    return _rewrite(path, touched, keep)
+    return _rewrite(path, st, touched, keep)
 
 
 def _has_active_dvs(path: str, st: _TableState) -> bool:
@@ -2590,7 +2528,6 @@ def incremental_mv(
     the merge step is merge_upsert keyed on ``keys``; the algebra
     here is identical.
     """
-    _require_not_partitioned(path, "incremental_mv")
     if mv is None:
         mv = (
             snapshot(spark, path, from_version)
@@ -2757,7 +2694,6 @@ def replicate_changes(
     usable inside ``foreachBatch``.
 
     Returns the src version delivered through (= the new marker)."""
-    _require_not_partitioned(src, "replicate_changes")
     if to_version is None:
         to_version = current_version(src)
     done = last_txn_version(dst, app_id)

@@ -98,27 +98,6 @@ class _CdfCommitPartition(InputPartition):
         self.dropped = dropped
 
 
-def _stats_disjoint(add: dict, bounds: dict, m: dict) -> bool:
-    """True iff the file's logged min/max stats PROVE it cannot hold
-    a row satisfying the pushed bounds (per-column closed intervals,
-    logical names). Bounds are relaxed to closed even for strict
-    comparisons and any type mismatch keeps the file — pruning is
-    only ever an optimization, Spark re-applies every filter."""
-    st = add.get("stats", {})
-    for col, (lo, hi) in bounds.items():
-        phys = m.get(col, col)
-        mn = st.get("min", {}).get(phys)
-        mx = st.get("max", {}).get(phys)
-        if mn is None or mx is None:
-            continue  # no stats for this column: conservatively keep
-        try:
-            if (hi is not None and mn > hi) or (lo is not None and mx < lo):
-                return True
-        except TypeError:
-            continue  # incomparable types: keep
-    return False
-
-
 def _plan_commits(
     path: str,
     start_after: int,
@@ -154,7 +133,8 @@ def _plan_commits(
             start_after = max(start_after, int(math.ceil(lo)) - 1)
         if hi is not None:
             end = min(end, int(math.floor(hi)))
-    data_bounds = {c: b for c, b in bounds.items() if c != "_commit_version"}
+    # pushed bounds on the data columns, as physical stats keys
+    data_bounds = [(m.get(c, c), lo, hi) for c, (lo, hi) in bounds.items() if c != "_commit_version"]
     parts: list[_FilePartition] = []
     for v in range(start_after + 1, end + 1):
         # expired commits surface txlog.VersionExpired (a stream
@@ -179,7 +159,7 @@ def _plan_commits(
         for a in actions:
             if "add" not in a:
                 continue
-            if data_bounds and _stats_disjoint(a["add"], data_bounds, m):
+            if txlog._stats_disjoint(a["add"], data_bounds):
                 continue  # provably no qualifying rows — never opened
             f_abs = txlog._abs(path, a["add"]["path"])
             if not os.path.exists(f_abs):
@@ -641,10 +621,6 @@ class _TxlogStreamReader(DataSourceStreamReader):
         if "path" not in options:
             raise ValueError("txlog_stream requires a 'path' option")
         self._path = options["path"]
-        # partitioned tables keep partition values in the LOG, not in
-        # data files — this reader's per-file Arrow path would drop
-        # those columns silently; refuse loudly until taught
-        txlog._require_not_partitioned(self._path, "txlog_stream")
         # starting_version is INCLUSIVE (Delta's startingVersion);
         # default 0 replays the table's whole append history.
         # starting_timestamp (Delta's startingTimestamp) resolves to
@@ -779,7 +755,6 @@ class _TxlogBatchReader(DataSourceReader):
         if "path" not in options:
             raise ValueError("txlog_stream requires a 'path' option")
         self._path = options["path"]
-        txlog._require_not_partitioned(self._path, "txlog_stream batch")
         self._start = _resolve_start(options)
         end = options.get("end_version")
         self._end = int(end) if end is not None else txlog.current_version(options["path"])

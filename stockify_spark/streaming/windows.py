@@ -17,9 +17,7 @@ from pyspark.sql import functions as F
 
 from stockify_spark.sources.io import (
     NANOS_TS_COLS,
-    _ensure_ltz,
-    _ensure_nanos_conf,
-    _ensure_utc,
+    _pin_read_confs,
     _pinned_schema,
 )
 
@@ -27,9 +25,7 @@ from stockify_spark.sources.io import (
 def stream_events(spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1) -> DataFrame:
     """File-source stream over the events parquet (the local stand-in
     for Kafka; same downstream plan either way)."""
-    _ensure_nanos_conf(spark)
-    _ensure_utc(spark)
-    _ensure_ltz(spark)
+    _pin_read_confs(spark, nanos=True)
     # FileStreamSource wants a directory/glob, not a single file
     stream = (
         spark.readStream.schema(_pinned_schema(spark, f"{sf_dir}/events.parquet"))

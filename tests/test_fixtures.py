@@ -48,3 +48,31 @@ def test_rand_deterministic_and_in_range(spark):
     for r in a:
         assert 100 <= r["close"] < 200
         assert 1_000_000 <= r["volume"] < 2_000_000
+
+
+def test_scratch_table_is_rebuilt_when_the_writer_changes(tmp_path, monkeypatch):
+    """A scratch table is reused while the txlog writer's digest holds,
+    and rebuilt, with the old build swept, once the digest changes."""
+    import os
+    import tempfile
+
+    from stockify_spark.sources import fixtures
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "orders.parquet").write_bytes(b"rows")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    builds = []
+
+    def build(path):
+        os.makedirs(path)
+        builds.append(path)
+
+    monkeypatch.setattr(fixtures, "_writer_digest", lambda: "old")
+    first = fixtures._scratch_table(str(sf), "t", build)
+    assert fixtures._scratch_table(str(sf), "t", build) == first
+    assert len(builds) == 1
+    monkeypatch.setattr(fixtures, "_writer_digest", lambda: "new")
+    second = fixtures._scratch_table(str(sf), "t", build)
+    assert second != first and len(builds) == 2
+    assert os.path.exists(os.path.join(second, "_COMPLETE")) and not os.path.exists(first)

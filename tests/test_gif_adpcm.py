@@ -76,6 +76,14 @@ def test_lzw_eoi_at_widen_boundary():
     assert lzw_decode(lzw_encode(b"\x00\x01", 2), 2, 3) == b"\x00\x01"
 
 
+def test_lzw_stream_without_a_leading_clear_code():
+    # the code table starts as a Clear code sets it: 9-bit codes 5
+    # then 0 are literals, and the stream then runs out of bits
+    assert lzw_decode(bytes([5, 0, 0]), 8, 2) == b"\x05\x00"
+    with pytest.raises(ValueError):
+        lzw_decode(bytes([5, 0, 0]), 8, 10)
+
+
 # ---------------------------------------------------------------------------
 # GIF container
 # ---------------------------------------------------------------------------

@@ -148,16 +148,13 @@ def test_aqe_floor_default_and_scoped_verify_spread(spark):
     array_intersect verify (CPU says "every core"). The explicit
     exchange must be visible in the physical plan so AQE cannot
     coalesce the verify back onto one core."""
-    import os
-
     from stockify_spark.llm.dedup import (
         ngram_jaccard_pairs,
         shingle_containment_pairs,
     )
 
-    expect = os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m")
     got = spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
-    assert got == expect
+    assert got == "1m"
 
     docs = spark.createDataFrame(
         [(i, "alpha beta gamma delta epsilon zeta " * 3 + str(i % 7))

@@ -87,24 +87,112 @@ def test_unpartitioned_tables_reject_partition_faces(spark):
         txlog.snapshot_partition_pruned(spark, path, {"id": 1})
 
 
-def test_raw_read_and_rewrite_faces_refuse_partitioned_tables(spark, ptable):
+def _rows(df):
+    return Counter(map(tuple, df.collect()))
+
+
+def _assert_one_partition_per_file(path):
+    """Every live file holds exactly one partition, and its add's
+    partitionValues are the values its rows hold."""
+    import pyarrow.parquet as pq
+
+    st = txlog._replay(path)
+    cols = st.partitioning["cols"]
+    for rel, add in st.adds.items():
+        t = pq.read_table(txlog._abs(path, rel), columns=cols).to_pylist()
+        held = {tuple(None if r[c] is None else str(r[c]) for c in cols) for r in t}
+        assert held == {tuple(add["partitionValues"][c] for c in cols)}, rel
+
+
+def test_partitioned_table_matches_unpartitioned_twin(spark, tmp_path):
+    """Every read, rewrite and change face answers the same rows on a
+    partitioned table as on an unpartitioned twin holding the same
+    rows, and every rewrite keeps one partition per file."""
+    from stockify_spark.sources.txlog_stream import register_txlog_stream
+
+    def rows(lo, hi):
+        return spark.range(lo, hi, numPartitions=2).select(
+            "id",
+            (F.col("id") * 7 % 60).alias("v"),
+            (F.col("id") % 3).cast("int").alias("bucket"),
+            F.when(F.col("id") % 5 == 0, None)
+            .otherwise(F.concat(F.lit("g"), (F.col("id") % 2).cast("string")))
+            .alias("grp"),
+        )
+
+    p, u = str(tmp_path / "p"), str(tmp_path / "u")
+
+    def both(face):
+        """Run ``face`` on both tables; the versions it commits agree."""
+        vp, vu = face(p), face(u)
+        assert vp == vu
+        _assert_one_partition_per_file(p)
+        return vp
+
+    def same(read):
+        got_p, got_u = read(p), read(u)
+        assert got_p.columns == got_u.columns
+        assert _rows(got_p) == _rows(got_u)
+
+    v0 = txlog.create_partitioned(rows(0, 60), p, ["bucket", "grp"])
+    assert v0 == txlog.create(rows(0, 60), u)
+    _assert_one_partition_per_file(p)
+    both(lambda t: txlog.append(rows(60, 90), t))
+    same(lambda t: txlog.snapshot(spark, t))
+    same(lambda t: txlog.snapshot(spark, t, version=v0))
+    same(lambda t: txlog.snapshot_pruned(spark, t, "v", 10, 30))
+    both(lambda t: txlog.attach_bloom(spark, t, "id"))
+    same(lambda t: txlog.snapshot_point(spark, t, "id", 17))
+
+    src = rows(40, 70).withColumn("v", F.col("v") + 100).withColumn(
+        "bucket", (F.col("bucket") + 1) % 3  # updates move rows across partitions
+    )
+    changed = [both(lambda t: txlog.merge_upsert(spark, t, src, ["id"]))]
+    changed.append(both(lambda t: txlog.delete_where(spark, t, F.col("v") < 20)))
+    changed.append(both(lambda t: txlog.delete_where_dv(spark, t, F.col("bucket") == 1)))
+    same(lambda t: txlog.snapshot(spark, t))
+    changed.append(both(lambda t: txlog.materialize_dvs(spark, t)))
+    changed.append(both(lambda t: txlog.compact(spark, t, 2, sort_by="v")))
+    changed.append(both(lambda t: txlog.compact(spark, t, 2, zorder_by=["id", "v"])))
+    both(lambda t: txlog.append(rows(90, 120), t))
+    changed.append(both(lambda t: txlog.compact_small(spark, t, min_bytes=1 << 30)))
+    for v in changed:
+        same(lambda t: txlog.changes(spark, t, v))
+    same(lambda t: txlog.snapshot(spark, t))
+    for t in (p, u):
+        txlog.clone(t, t + "_clone")
+    same(lambda t: txlog.snapshot(spark, t + "_clone"))
+    assert txlog._replay(p + "_clone").partitioning == txlog._replay(p).partitioning
+
+    register_txlog_stream(spark)
+    for opt in ("skip_change_commits", "read_changes"):
+        same(lambda t: spark.read.format("txlog_stream").option("path", t).option(opt, "true").load())
+
+
+def test_snapshot_keeps_the_partition_columns_last(spark, tmp_path):
+    """Partition columns read back last, in name order, with their
+    written types, whatever their place in the created frame."""
+    path = str(tmp_path / "t")
+    df = spark.range(6).select(
+        F.col("id").cast("int").alias("k"), F.lit("x").alias("a"), "id", F.lit(1.5).alias("x")
+    )
+    txlog.create_partitioned(df, path, ["k", "a"])
+    txlog.append(df.withColumn("new", F.lit(True)), path)
+    snap = txlog.snapshot(spark, path)
+    assert snap.dtypes == [
+        ("id", "bigint"), ("x", "double"), ("new", "boolean"), ("a", "string"), ("k", "int")
+    ]
+    assert snap.filter(F.col("new").isNull()).count() == 6
+
+
+def test_rename_and_drop_refuse_partition_columns(spark, ptable):
     path, _, _ = ptable
-    for op, call in [
-        ("compact_small", lambda: txlog.compact_small(spark, path)),
-        ("delete_where", lambda: txlog.delete_where(spark, path, F.col("id") < 5)),
-        (
-            "merge_upsert",
-            lambda: txlog.merge_upsert(spark, path, spark.range(2), ["id"]),
-        ),
-        ("changes", lambda: txlog.changes(spark, path, 1)),
-        (
-            "snapshot_pruned",
-            lambda: txlog.snapshot_pruned(spark, path, "id", 0, 5),
-        ),
-        ("clone", lambda: txlog.clone(path, path + "_c")),
-    ]:
-        with pytest.raises(NotImplementedError, match="partitioned"):
-            call()
+    with pytest.raises(ValueError, match="'bucket': it is a partition column"):
+        txlog.rename_column(path, "bucket", "b")
+    with pytest.raises(ValueError, match="'grp': it is a partition column"):
+        txlog.drop_column(path, "grp")
+    with pytest.raises(ValueError, match="already exists"):
+        txlog.rename_column(path, "id", "bucket")
 
 
 def test_label_propagation_matches_python(spark):
@@ -187,31 +275,28 @@ def test_maintain_compacts_partitioned_tables_per_partition(spark, ptable):
     assert not again["compact_small"]["triggered"]
 
 
-def test_maintain_clustered_sort_runs_per_partition_zorder_refused(spark, ptable):
+def test_maintain_clustered_compaction_runs_per_partition(spark, ptable):
     path, exp, _ = ptable
-    with pytest.raises(NotImplementedError, match="z-ordered"):
-        txlog.maintain(
-            spark,
-            path,
-            {"small_file_bytes": 1, "compact_zorder_by": ["id", "bucket"]},
-        )
-    # sorted per-partition OPTIMIZE: compacts AND clusters on id
-    policy = {
-        "small_file_bytes": 512 << 20,
-        "small_file_fraction": 0.5,
-        "compact_sort_by": "id",
-    }
-    decisions = {d["action"]: d for d in txlog.maintain(spark, path, policy)}
-    assert decisions["compact_cluster"]["triggered"]
-    for key, adds in txlog._group_adds_by_partition(
-        txlog._replay(path).adds.values()
-    ).items():
-        assert len(adds) == 1, key
-        st = adds[0].get("stats", {})
-        assert "id" in st.get("min", {})  # stats present for skipping
-    assert _vals(txlog.snapshot(spark, path)) == _vals(exp)
-    again = {d["action"]: d for d in txlog.maintain(spark, path, policy)}
-    assert not again["compact_cluster"]["triggered"]
+    # sorted and Z-ordered per-partition OPTIMIZE: each compacts every
+    # partition to the 1-file target in one commit, and converges
+    for clustering in ({"compact_sort_by": "id"}, {"compact_zorder_by": ["id", "bucket"]}):
+        txlog.append(exp.coalesce(1), path)
+        exp = exp.union(exp)
+        policy = {"small_file_bytes": 512 << 20, "small_file_fraction": 0.5, **clustering}
+        v = txlog.current_version(path)
+        decisions = {d["action"]: d for d in txlog.maintain(spark, path, policy)}
+        assert decisions["compact_cluster"]["triggered"]
+        assert decisions["compact_cluster"]["result"] == v + 1
+        for key, adds in txlog._group_adds_by_partition(
+            txlog._replay(path).adds.values()
+        ).items():
+            assert len(adds) == 1, key
+            st = adds[0].get("stats", {})
+            assert "id" in st.get("min", {})  # stats present for skipping
+        _assert_one_partition_per_file(path)
+        assert _vals(txlog.snapshot(spark, path)) == _vals(exp)
+        again = {d["action"]: d for d in txlog.maintain(spark, path, policy)}
+        assert not again["compact_cluster"]["triggered"]
 
 
 def test_compact_partition_sort_by_rejects_partition_columns(spark, ptable):

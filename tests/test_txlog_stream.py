@@ -533,6 +533,43 @@ class TestBatchFacePushdown:
         assert len(list(kept)) == 2  # every filter returned for re-evaluation
         assert len(r.partitions()) == 1  # only the [100k,150k) band file
 
+    def test_batch_and_stream_pruning_open_the_same_files(self, spark, tmp):
+        """The pruned batch reader and the batch face with pushed
+        filters share one min/max test: for the same bounds, closed or
+        open, they open the same files."""
+        from pyspark.sql.datasource import GreaterThanOrEqual, LessThanOrEqual
+
+        from stockify_spark.sources.txlog_stream import (
+            _TxlogBatchReaderPushdown,
+            _table_schema,
+        )
+
+        path, o = self._banded(spark, tmp)
+        n_files = len(txlog.live_files(path))
+        seen = set()
+        for lo, hi in [(100000.0, 149000.0), (None, 60000.0), (260000.0, None), (None, None)]:
+            batch = txlog.snapshot_pruned(spark, path, "o_totalprice", lo, hi)
+            r = _TxlogBatchReaderPushdown(_table_schema(path), {"path": path})
+            r.pushFilters(
+                ([] if lo is None else [GreaterThanOrEqual(("o_totalprice",), lo)])
+                + ([] if hi is None else [LessThanOrEqual(("o_totalprice",), hi)])
+            )
+            opened = sorted(os.path.basename(f) for f in batch.inputFiles())
+            assert opened == sorted(os.path.basename(p.abs_path) for p in r.partitions())
+            seen.add(len(opened))
+            # an open bound constrains no row
+            want = o
+            if lo is not None:
+                want = want.filter(F.col("o_totalprice") >= lo)
+            if hi is not None:
+                want = want.filter(F.col("o_totalprice") <= hi)
+            assert batch.count() == want.count()
+        assert min(seen) == 1 and max(seen) == n_files
+        # a bound the stats cannot be compared with proves nothing
+        add = {"stats": {"min": {"k": 1}, "max": {"k": 5}}}
+        assert not txlog._stats_disjoint(add, [("k", "a", None)])
+        assert txlog._stats_disjoint(add, [("k", None, 0)])
+
     def test_commit_version_bound_narrows_commit_loop(self, spark, tmp):
         from pyspark.sql.datasource import GreaterThanOrEqual
 
